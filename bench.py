@@ -317,8 +317,10 @@ def _bench_partitioned_sink(spark, corpus: str = BENCH_CORPUS) -> float:
 
 
 def driver_bench() -> None:
+    from dragnet_spark.session import host_cores
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = host_cores()
     try:
         sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
     except ValueError:
@@ -336,10 +338,6 @@ def driver_bench() -> None:
     # dedisperse_tiny stays in the per-query table (r3 verdict cosmetic:
     # every green CORRECTNESS row should have a bench row); the at-scale
     # flagship number is dedisperse_bench below.
-    # Beyond-the-gate-cap operators (oracle-checked in-suite) get bench
-    # rows too — a correct-but-slow extra is no more done than a gated one.
-    from dragnet_spark.queries import EXTRA_QUERIES
-    qs = {**qs, **EXTRA_QUERIES}
 
     # Session warm-up: JIT the scan/agg/window/Arrow code paths once so
     # per-query numbers measure the query, not first-use compilation.
@@ -549,10 +547,11 @@ def driver_bench() -> None:
 
 
 def main() -> None:
+    from dragnet_spark.session import host_cores
     p = argparse.ArgumentParser()
     p.add_argument("--scaling", action="store_true")
     p.add_argument("--flagship-only", action="store_true")
-    p.add_argument("--cores", type=int, default=32)
+    p.add_argument("--cores", type=int, default=host_cores())
     p.add_argument("--runs", type=int, default=3)
     p.add_argument("--corpus", default=None,
                    help="corpus name (default: bench for the driver "

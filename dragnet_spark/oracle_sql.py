@@ -182,7 +182,8 @@ WHERE n_common / (za.sz + zb.sz - n_common) >= 0.5
 # Connected components of the verified near-dup graph: reachability by
 # a recursive CTE (UNION dedups, so it terminates), then MIN over the
 # reachable labels == lexicographic-min vertex of the component —
-# exactly the fixpoint the Spark min-label propagation converges to.
+# exactly the star forest the Spark large-star/small-star rounds
+# converge to (connected_components).
 ORACLE_SQL["dedup_components"] = "WITH RECURSIVE " + _MINHASH_CTE + """,
 sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
 common AS (
@@ -212,10 +213,6 @@ reach(doc_id, comp) AS (
 )
 SELECT doc_id, MIN(comp) AS component_id FROM reach GROUP BY doc_id
 """
-
-# The star-algorithm variant computes the identical contract, so it
-# shares the reachability oracle verbatim.
-ORACLE_SQL["dedup_components_star"] = ORACLE_SQL["dedup_components"]
 
 ORACLE_SQL["token_topk"] = """
 SELECT tok, COUNT(*) AS n
@@ -1018,927 +1015,3 @@ SELECT doc_id,
          '\+\d[\d -]{7,}\d', '<PHONE>', 'g') AS redacted
 FROM planted
 """
-
-# Oracles for EXTRA_QUERIES (operators beyond the 50-entry driver-gate
-# cap — see queries.EXTRA_QUERIES).  Same determinism rules as
-# ORACLE_SQL; checked in-suite, not by the driver (the driver-contract
-# test pins set(oracle_sql()) == set(queries()), so these must NOT be
-# merged into ORACLE_SQL).
-EXTRA_ORACLE_SQL: dict[str, str] = {}
-
-EXTRA_ORACLE_SQL["dedup_incremental"] = "WITH " + _MINHASH_CTE + """,
-batch AS (
-  SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 5 = 0
-),
-cmin AS (
-  SELECT md5(text) AS fp, MIN(doc_id) AS corpus_match
-  FROM documents WHERE doc_id % 5 <> 0 GROUP BY 1
-),
-bmin AS (SELECT fp, MIN(doc_id) AS batch_min FROM batch GROUP BY fp),
-xc AS (
-  SELECT DISTINCT a.doc_id AS doc_n, c.doc_id AS doc_o
-  FROM bands a JOIN bands c ON a.b = c.b AND a.v = c.v
-  WHERE a.doc_id % 5 = 0 AND c.doc_id % 5 <> 0
-),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-common AS (
-  SELECT xc.doc_n, xc.doc_o, COUNT(*) AS n_common
-  FROM xc
-  JOIN sh sa ON xc.doc_n = sa.doc_id
-  JOIN sh sb ON xc.doc_o = sb.doc_id AND sa.s = sb.s
-  GROUP BY xc.doc_n, xc.doc_o
-),
-near AS (
-  SELECT doc_n, MIN(doc_o) AS near_match
-  FROM common
-  JOIN sizes za ON doc_n = za.doc_id
-  JOIN sizes zb ON doc_o = zb.doc_id
-  WHERE n_common / (za.sz + zb.sz - n_common) >= 0.5
-  GROUP BY doc_n
-)
-SELECT b.doc_id,
-       CASE WHEN corpus_match IS NOT NULL THEN 'dup_exact_corpus'
-            WHEN batch_min < b.doc_id THEN 'dup_exact_batch'
-            WHEN near_match IS NOT NULL THEN 'near_dup_corpus'
-            ELSE 'kept' END AS verdict,
-       CASE WHEN corpus_match IS NOT NULL THEN corpus_match
-            WHEN batch_min < b.doc_id THEN batch_min
-            WHEN near_match IS NOT NULL THEN near_match
-            ELSE -1 END AS matched_doc
-FROM batch b
-LEFT JOIN cmin USING (fp)
-LEFT JOIN bmin USING (fp)
-LEFT JOIN near ON b.doc_id = near.doc_n
-"""
-
-# Quality-aware cluster representative (EXTRA lane): the
-# dedup_components reachability chain, plus per-member quality =
-# COUNT(DISTINCT word) (exact BIGINT both engines) and the
-# representative = min doc_id among the members at the component's
-# max quality (the window-max form of the Spark side's
-# max(struct(quality, -doc_id)) argmax).
-EXTRA_ORACLE_SQL["dedup_keep_best"] = "WITH RECURSIVE " + _MINHASH_CTE + """,
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-common AS (
-  SELECT cand.doc_a, cand.doc_b, COUNT(*) AS n_common
-  FROM cand
-  JOIN sh sa ON cand.doc_a = sa.doc_id
-  JOIN sh sb ON cand.doc_b = sb.doc_id AND sa.s = sb.s
-  GROUP BY cand.doc_a, cand.doc_b
-),
-jpair AS (
-  SELECT doc_a, doc_b
-  FROM common
-  JOIN sizes za ON doc_a = za.doc_id
-  JOIN sizes zb ON doc_b = zb.doc_id
-  WHERE n_common / (za.sz + zb.sz - n_common) >= 0.5
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM jpair
-  UNION ALL
-  SELECT doc_b, doc_a FROM jpair
-),
-verts AS (SELECT DISTINCT src AS doc_id FROM edges),
-reach(doc_id, comp) AS (
-  SELECT doc_id, doc_id FROM verts
-  UNION
-  SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.doc_id
-),
-comp AS (SELECT doc_id, MIN(comp) AS component_id FROM reach GROUP BY doc_id),
-memb AS (
-  SELECT c.doc_id, c.component_id, COUNT(DISTINCT t.tok) AS quality
-  FROM comp c
-  JOIN (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        FROM documents) t ON t.doc_id = c.doc_id
-  GROUP BY c.doc_id, c.component_id
-),
-rep AS (
-  SELECT component_id, MIN(doc_id) AS kept_doc
-  FROM (SELECT *, MAX(quality) OVER (PARTITION BY component_id) AS mq
-        FROM memb)
-  WHERE quality = mq
-  GROUP BY component_id
-)
-SELECT m.doc_id, m.component_id, m.quality,
-       CASE WHEN m.doc_id = r.kept_doc THEN 'keep' ELSE 'drop' END AS action,
-       r.kept_doc
-FROM memb m
-JOIN rep r USING (component_id)
-"""
-
-# Sequence packing (EXTRA lane): DuckDB expresses the same global
-# exclusive token prefix-sum with a single plain window (exactness is
-# engine-trivial at oracle scale — the Spark side's two-level scan is
-# the part under test), then the bin overlap via a lateral
-# generate_series.  All-integer, so cell equality is exact.
-EXTRA_ORACLE_SQL["sequence_pack"] = """
-WITH tok AS (
-  SELECT doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-  FROM documents
-), cum AS (
-  SELECT doc_id, n_tok,
-         CAST(COALESCE(SUM(n_tok) OVER (ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  0) AS BIGINT) AS tok_start
-  FROM tok
-)
-SELECT doc_id, n_tok AS doc_tokens, tok_start, u.bin_id,
-       LEAST(tok_start + n_tok, (u.bin_id + 1) * 128)
-         - GREATEST(tok_start, u.bin_id * 128) AS tok_in_bin
-FROM cum,
-     UNNEST(generate_series(tok_start // 128,
-                            (tok_start + n_tok - 1) // 128)) AS u(bin_id)
-"""
-
-
-def _ln_int_sql(col: str) -> str:
-    """DuckDB twin of queries.ln_portable_int — the SAME fixed-order
-    IEEE-754 expression (bitlength range reduction + sqrt2 fold +
-    11-term atanh Horner series), so both engines produce
-    bit-identical doubles for integer inputs in [1, 2^53).  Matched
-    pair: any edit here must be mirrored in queries.ln_portable_int
-    (test_ln_portable_cross_engine pins the parity)."""
-    ln2 = "0.6931471805599453"
-    sqrt2 = "1.4142135623730951"
-    coefs = [repr(1.0 / (2 * k + 1)) for k in range(1, 12)]
-    p = coefs[-1]
-    for c in reversed(coefs[:-1]):
-        p = f"({p} * __T2 + {c})"
-    e = f"CAST(length(bin({col})) - 1 AS DOUBLE)"
-    m = f"(CAST({col} AS DOUBLE) / power(2.0, {e}))"
-    m2 = f"(CASE WHEN {m} >= {sqrt2} THEN {m} / 2.0 ELSE {m} END)"
-    e2 = f"(CASE WHEN {m} >= {sqrt2} THEN {e} + 1.0 ELSE {e} END)"
-    t = f"(({m2} - 1.0) / ({m2} + 1.0))"
-    body = f"({e2} * {ln2} + 2.0 * __T * (1.0 + __T2 * {p}))"
-    return body.replace("__T2", f"({t} * {t})").replace("__T", t)
-
-
-# Corpus-trained bigram-LM cross-entropy (EXTRA lane).  The per-doc
-# sum folds log-probs in position order (list(... ORDER BY pos) +
-# list_sum — the sequential accumulation the cosine oracles already
-# rely on), and ln comes from _ln_int_sql, so every cell is
-# bit-identical to Spark's before the final ROUND.
-EXTRA_ORACLE_SQL["lm_perplexity"] = f"""
-WITH tok AS (
-  SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-), vocab AS (
-  SELECT COUNT(DISTINCT w) AS v
-  FROM (SELECT unnest(ts) AS w FROM tok)
-), bg AS (
-  SELECT doc_id, u.i AS pos, ts[u.i] AS w1, ts[u.i + 1] AS w2
-  FROM tok, UNNEST(generate_series(1, CAST(len(ts) AS BIGINT) - 1))
-              AS u(i)
-  WHERE len(ts) >= 2
-), c2 AS (
-  SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY 1, 2
-), cctx AS (
-  SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1
-), scored AS (
-  SELECT b.doc_id, b.pos,
-         {_ln_int_sql('(c2.c2 + 1)')}
-           - {_ln_int_sql('(cctx.c1 + vocab.v)')} AS logp
-  FROM bg b
-  JOIN c2 USING (w1, w2)
-  JOIN cctx USING (w1)
-  CROSS JOIN vocab
-)
-SELECT doc_id, COUNT(*) AS n_bigrams,
-       ROUND((-list_sum(list(logp ORDER BY pos)))
-             / CAST(COUNT(*) AS DOUBLE), 6) AS cross_entropy
-FROM scored GROUP BY doc_id
-"""
-
-
-# DSIR importance weights (EXTRA lane): hashed-n-gram (uni+bi, 4096
-# md5 buckets) importance ratio of the lang='en' target slice vs the
-# raw corpus, add-one smoothed, per-doc position-ordered fold.  Every
-# ln goes through _ln_int_sql so the log-space floats are
-# bit-identical to Spark's before the final ROUND.
-EXTRA_ORACLE_SQL["dsir_weights"] = f"""
-WITH tok AS (
-  SELECT doc_id, lang, string_split(text, ' ') AS ts FROM documents
-), g AS (
-  SELECT doc_id, lang,
-         ts || list_transform(range(1, len(ts)),
-                              i -> ts[i] || ' ' || ts[i + 1]) AS grams
-  FROM tok
-), x AS (
-  SELECT doc_id, lang, u.pos,
-         ('0x' || substr(md5(grams[u.pos]), 1, 3))::BIGINT AS bucket
-  FROM g, UNNEST(generate_series(1, CAST(len(grams) AS BIGINT)))
-            AS u(pos)
-), cq AS (
-  SELECT bucket, COUNT(*) AS cq FROM x GROUP BY 1
-), ct AS (
-  SELECT bucket, COUNT(*) AS ct FROM x WHERE lang = 'en' GROUP BY 1
-), tot AS (
-  SELECT (SELECT COALESCE(SUM(cq), 0) FROM cq) AS nq,
-         (SELECT COALESCE(SUM(ct), 0) FROM ct) AS nt
-), scored AS (
-  SELECT x.doc_id, x.pos,
-         (({_ln_int_sql('(COALESCE(ct.ct, 0) + 1)')}
-           - {_ln_int_sql('(tot.nt + 4096)')})
-          - ({_ln_int_sql('(cq.cq + 1)')}
-             - {_ln_int_sql('(tot.nq + 4096)')})) AS lw
-  FROM x
-  JOIN cq USING (bucket)
-  LEFT JOIN ct USING (bucket)
-  CROSS JOIN tot
-)
-SELECT doc_id, COUNT(*) AS n_grams,
-       ROUND(list_sum(list(lw ORDER BY pos)), 6) AS logweight,
-       ROUND(list_sum(list(lw ORDER BY pos))
-             / CAST(COUNT(*) AS DOUBLE), 6) AS avg_logweight,
-       list_sum(list(lw ORDER BY pos)) > 0.0 AS selected
-FROM scored GROUP BY doc_id
-"""
-
-
-# Per-source token-budget sampling (EXTRA lane): DuckDB expresses the
-# grouped prefix-sum with the plain per-source window the Spark side
-# deliberately avoids (skew); all-integer, so cell equality is exact.
-EXTRA_ORACLE_SQL["mixture_budget_sample"] = """
-WITH tok AS (
-  SELECT doc_id, source,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         md5(CAST(doc_id AS VARCHAR)) AS k
-  FROM documents
-), cum AS (
-  SELECT doc_id, source, n_tok,
-         CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY k
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  0) AS BIGINT) AS cum_before
-  FROM tok
-)
-SELECT doc_id, source, n_tok, cum_before,
-       cum_before < 500 AS kept
-FROM cum
-"""
-
-
-def _exp_sql(col: str) -> str:
-    """DuckDB twin of queries.exp_portable — the SAME fixed-order
-    IEEE-754 expression (k = floor(x/ln2 + 1/2) reduction + 14-term
-    Taylor Horner + exact 2^k), bit-identical across engines.
-    Matched pair: edits must be mirrored in queries.exp_portable
-    (test_exp_portable_cross_engine pins the parity)."""
-    import math
-
-    ln2 = "0.6931471805599453"
-    coefs = [repr(1.0 / math.factorial(i)) for i in range(2, 15)]
-    p = coefs[-1]
-    for c in reversed(coefs[:-1]):
-        p = f"({p} * __R + {c})"
-    k = f"FLOOR({col} / {ln2} + 0.5)"
-    r = f"({col} - CAST({k} AS DOUBLE) * {ln2})"
-    body = (f"((1.0 + __R * (1.0 + __R * {p}))"
-            f" * power(2.0, CAST({k} AS DOUBLE)))")
-    return body.replace("__R", r)
-
-
-# DoReMi-style domain reweighting (EXTRA lane): per-source mean
-# bigram-LM cross-entropy via FIXED-POINT exact aggregation (the CE
-# is ROUND(...,6), so micro-unit BIGINT sums are lossless and
-# order-independent), one EG step via the portable exp, normalizer Z
-# through the same fixed-point trick at 1e9.
-EXTRA_ORACLE_SQL["domain_reweight"] = f"""
-WITH ce AS ({EXTRA_ORACLE_SQL['lm_perplexity']}),
-per AS (
-  SELECT d.source, COUNT(*) AS n_docs,
-         CAST(SUM(CAST(ROUND(ce.cross_entropy * 1e6, 0) AS BIGINT))
-              AS BIGINT) AS s_micro
-  FROM ce JOIN documents d USING (doc_id)
-  GROUP BY d.source
-), avg AS (
-  SELECT source, n_docs,
-         CAST(s_micro AS DOUBLE)
-           / (CAST(n_docs AS DOUBLE) * 1e6) AS avg_ce
-  FROM per
-), scored AS (
-  SELECT source, n_docs, avg_ce,
-         ROUND({_exp_sql('avg_ce')}, 9) AS raw9
-  FROM avg
-), z AS (
-  SELECT CAST(SUM(CAST(ROUND(raw9 * 1e9, 0) AS BIGINT)) AS BIGINT)
-           AS z_micro
-  FROM scored
-)
-SELECT source, n_docs, ROUND(avg_ce, 6) AS avg_ce,
-       ROUND(raw9 / (CAST(z_micro AS DOUBLE) / 1e9), 6) AS weight
-FROM scored CROSS JOIN z
-"""
-
-
-# SemDeDup (EXTRA lane): the shared exact-arithmetic Lloyd update
-# (same CTE chain as ann_ivf_kmeans), then within-cluster greedy
-# dedup in the released implementation's order — descending centroid
-# similarity, ties by vec_id; max over ALL earlier members, no
-# recursion.  Every similarity is a _QCOS over exact BIGINT dots, so
-# both engines agree bitwise including the order predicate.
-_QCOS = ("CASE WHEN {na} = 0 AND {nb} = 0 THEN 1.0 "
-         "WHEN {na} = 0 OR {nb} = 0 THEN 0.0 "
-         "ELSE CAST({num} AS DOUBLE) "
-         "/ (SQRT(CAST({na} AS DOUBLE)) * SQRT(CAST({nb} AS DOUBLE))) "
-         "END")
-
-EXTRA_ORACLE_SQL["semantic_dedup"] = """
-WITH eq AS (
-  SELECT vec_id,
-         list_transform(embedding,
-             x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000.0 + 0.5) AS BIGINT))
-             AS qv
-  FROM embeddings
-), c0 AS (
-  SELECT vec_id AS cid, qv AS sv, CAST(1 AS BIGINT) AS cn
-  FROM eq WHERE vec_id < 16
-), d1 AS (
-  SELECT e.vec_id, c.cid,
-         CAST({svsv0} - 2 * c.cn * {xsv0} AS DOUBLE)
-           / CAST(c.cn * c.cn AS DOUBLE) AS score
-  FROM eq e, c0 c
-), a1 AS (
-  SELECT vec_id, cid AS cluster FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY score, cid) AS rn
-    FROM d1) WHERE rn = 1
-), s1 AS (
-  SELECT a1.cluster, r.range AS pos,
-         CAST(SUM(eq.qv[r.range + 1]) AS BIGINT) AS s
-  FROM a1 JOIN eq USING (vec_id), range(64) r
-  GROUP BY 1, 2
-), n1 AS (
-  SELECT cluster, COUNT(*) AS cn FROM a1 GROUP BY 1
-), c1 AS (
-  SELECT s1.cluster AS cid, list(s1.s ORDER BY s1.pos) AS sv,
-         CAST(n1.cn AS BIGINT) AS cn
-  FROM s1 JOIN n1 USING (cluster)
-  GROUP BY s1.cluster, n1.cn
-), d2 AS (
-  SELECT e.vec_id, c.cid,
-         CAST({svsv1} - 2 * c.cn * {xsv1} AS DOUBLE)
-           / CAST(c.cn * c.cn AS DOUBLE) AS score
-  FROM eq e, c1 c
-), a2 AS (
-  SELECT vec_id, cid AS cluster FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY score, cid) AS rn
-    FROM d2) WHERE rn = 1
-), mem AS (
-  SELECT a2.vec_id, a2.cluster, e.qv,
-         {nq} AS nq, {numcs} AS num, {nsv} AS nsv
-  FROM a2 JOIN eq e USING (vec_id) JOIN c1 c ON a2.cluster = c.cid
-), scored AS (
-  SELECT vec_id, cluster, qv, nq, {cs} AS cs
-  FROM mem
-), mp AS (
-  SELECT v.vec_id AS vec_id, MAX({uv}) AS max_prev
-  FROM scored v JOIN scored u
-    ON u.cluster = v.cluster
-   AND (u.cs > v.cs OR (u.cs = v.cs AND u.vec_id < v.vec_id))
-  GROUP BY v.vec_id
-)
-SELECT s.vec_id, CAST(s.cluster AS BIGINT) AS cluster,
-       ROUND(s.cs, 6) AS centroid_sim,
-       ROUND(COALESCE(mp.max_prev, -1.0), 6) AS max_prev_sim,
-       COALESCE(mp.max_prev, -1.0) < 0.8 AS kept
-FROM scored s LEFT JOIN mp USING (vec_id)
-""".format(svsv0=_QDOT.format(a="c.sv", b="c.sv"),
-           xsv0=_QDOT.format(a="e.qv", b="c.sv"),
-           svsv1=_QDOT.format(a="c.sv", b="c.sv"),
-           xsv1=_QDOT.format(a="e.qv", b="c.sv"),
-           nq=_QDOT.format(a="e.qv", b="e.qv"),
-           numcs=_QDOT.format(a="e.qv", b="c.sv"),
-           nsv=_QDOT.format(a="c.sv", b="c.sv"),
-           cs=_QCOS.format(num="num", na="nq", nb="nsv"),
-           uv=_QCOS.format(
-               num=_QDOT.format(a="u.qv", b="v.qv"),
-               na="u.nq", nb="v.nq"))
-
-
-def _bm25_sql() -> str:
-    """BM25 oracle (EXTRA lane), mirroring queries.q_bm25_topk
-    subexpression-by-subexpression: integer tf/df/dl, ONE double
-    division for avgdl, idf as a difference of portable integer lns,
-    contributions summed in fixed written order."""
-    terms = ("spark", "window", "merge")
-    k1, b = 1.2, 0.75
-    tf_cols = ",\n         ".join(
-        f"CAST(len(list_filter(string_split(text, ' '), "
-        f"x -> x = '{t}')) AS BIGINT) AS tf{i}"
-        for i, t in enumerate(terms))
-    df_cols = ",\n         ".join(
-        f"CAST(COALESCE(SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END), 0) "
-        f"AS BIGINT) AS df{i}" for i in range(len(terms)))
-    avgdl = "(CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))"
-    score = "0.0"
-    for i in range(len(terms)):
-        idf = (f"({_ln_int_sql('(2 * n_docs + 2)')}"
-               f" - {_ln_int_sql(f'(2 * df{i} + 1)')})")
-        tf = f"CAST(tf{i} AS DOUBLE)"
-        denom = (f"({tf} + {k1!r} * (1.0 - {b!r} + {b!r}"
-                 f" * CAST(dl AS DOUBLE) / {avgdl}))")
-        score = f"{score} + ({idf} * ({tf} * {k1 + 1.0!r})) / {denom}"
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS dl,
-         {tf_cols}
-  FROM documents
-), stats AS (
-  SELECT COUNT(*) AS n_docs,
-         CAST(COALESCE(SUM(dl), 0) AS BIGINT) AS sum_dl,
-         {df_cols}
-  FROM base
-)
-SELECT doc_id, dl, ROUND({score}, 6) AS score_bm25
-FROM base CROSS JOIN stats
-ORDER BY score_bm25 DESC, doc_id
-LIMIT 10
-"""
-
-
-EXTRA_ORACLE_SQL["bm25_topk"] = _bm25_sql()
-
-
-# Duplicated-substring fraction (EXTRA lane, Lee et al. 2022
-# ExactSubstr criterion): overlapping 5-token windows fingerprinted,
-# duplicated iff the fingerprint occurs > 1x corpus-wide; per-doc
-# fraction is one exact-operand double division; the 0.3 flag is the
-# exact integer comparison 10*n_dup >= 3*n_windows.
-EXTRA_ORACLE_SQL["dedup_substrings"] = """
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS ts,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-), wins AS (
-  SELECT b.doc_id,
-         md5(array_to_string(b.ts[g.g:g.g + 4], ' ')) AS fp
-  FROM base b, UNNEST(generate_series(1, b.n - 4)) AS g(g)
-), cnt AS (
-  SELECT fp, COUNT(*) AS c FROM wins GROUP BY fp
-), per AS (
-  SELECT w.doc_id, COUNT(*) AS n_windows,
-         CAST(SUM(CASE WHEN c.c > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_dup
-  FROM wins w JOIN cnt c USING (fp)
-  GROUP BY w.doc_id
-)
-SELECT b.doc_id,
-       CAST(COALESCE(per.n_windows, 0) AS BIGINT) AS n_windows,
-       CAST(COALESCE(per.n_dup, 0) AS BIGINT) AS n_dup,
-       CASE WHEN COALESCE(per.n_windows, 0) = 0 THEN 0.0
-            ELSE ROUND(CAST(per.n_dup AS DOUBLE)
-                       / CAST(per.n_windows AS DOUBLE), 6) END AS dup_frac,
-       (COALESCE(per.n_dup, 0) * 10 >= COALESCE(per.n_windows, 0) * 3
-        AND COALESCE(per.n_windows, 0) > 0) AS flagged
-FROM base b LEFT JOIN per USING (doc_id)
-"""
-
-
-# Interleaved image-text curation (EXTRA lane, OBELICS/MMC4 filters):
-# the synthetic media stream is the shared md5 PRF — a media element
-# follows token p iff md5('doc_id:p') starts with '0'; all signals
-# are exact integers, the cascade mirrors queries.q_interleaved_filter.
-_MEDIA_SQL = ("substr(md5(CAST(doc_id AS VARCHAR) || ':' "
-              "|| CAST({p} AS VARCHAR)), 1, 1) = '0'")
-
-EXTRA_ORACLE_SQL["interleaved_filter"] = """
-WITH base AS (
-  SELECT doc_id, len(string_split(text, ' ')) AS n FROM documents
-), m AS (
-  SELECT doc_id, n,
-         len(list_filter(generate_series(1, n),
-             p -> {med_p})) AS n_media,
-         CASE WHEN n >= 2 THEN
-           len(list_filter(generate_series(1, n - 1),
-               p -> {med_p} AND {med_p1}))
-         ELSE 0 END AS n_adj
-  FROM base
-)
-SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-       CAST(n_media AS BIGINT) AS n_media,
-       CAST(n_adj AS BIGINT) AS n_adjacent,
-       CASE WHEN n_media = 0 THEN -1.0
-            ELSE ROUND(CAST(n AS DOUBLE) / CAST(n_media AS DOUBLE), 6)
-       END AS tok_per_media,
-       CASE WHEN n < 5 THEN 'no_text'
-            WHEN n_media = 0 THEN 'no_media'
-            WHEN 4 * n_media > n THEN 'media_dense'
-            WHEN n_adj > 0 THEN 'media_adjacent'
-            ELSE 'keep' END AS reason,
-       (CASE WHEN n < 5 THEN 'no_text'
-             WHEN n_media = 0 THEN 'no_media'
-             WHEN 4 * n_media > n THEN 'media_dense'
-             WHEN n_adj > 0 THEN 'media_adjacent'
-             ELSE 'keep' END) = 'keep' AS kept
-FROM m
-""".format(med_p=_MEDIA_SQL.format(p="p"),
-           med_p1=_MEDIA_SQL.format(p="(p + 1)"))
-
-
-# Multimodal sequence packing (EXTRA lane): the per-doc greedy walk is
-# a RECURSIVE CTE over span index (the padding rule is nonlinear in
-# position — no closed-form prefix sum), spans built with the same
-# list ops and md5 PRF as the Spark side; all-integer, cell equality
-# exact.
-EXTRA_ORACLE_SQL["interleaved_pack"] = """
-WITH RECURSIVE base AS (
-  SELECT doc_id, len(string_split(text, ' ')) AS n FROM documents
-), mbt AS (
-  SELECT doc_id, n,
-         list_filter(generate_series(1, n), p -> {med}) AS mb
-  FROM base
-), spans0 AS (
-  SELECT doc_id,
-         flatten(list_transform(range(len(mb)), i -> [
-           {{'kind': 'text',
-             'len': mb[i + 1] - CASE WHEN i = 0 THEN 0 ELSE mb[i] END,
-             'ref': CAST(NULL AS VARCHAR)}},
-           {{'kind': 'media', 'len': 16,
-             'ref': 'img://' || CAST(doc_id AS VARCHAR) || '/'
-                    || CAST(mb[i + 1] AS VARCHAR)}}
-         ]))
-         || [{{'kind': 'text',
-               'len': n - CASE WHEN len(mb) = 0 THEN 0
-                          ELSE mb[len(mb)] END,
-               'ref': CAST(NULL AS VARCHAR)}}] AS sp
-  FROM mbt
-), spansf AS (
-  SELECT doc_id,
-         list_filter(sp, s -> NOT (s.kind = 'text' AND s.len = 0)) AS sp
-  FROM spans0
-), spans AS (
-  SELECT f.doc_id, CAST(g.g AS BIGINT) AS seq,
-         f.sp[g.g].kind AS kind, CAST(f.sp[g.g].len AS BIGINT) AS len,
-         f.sp[g.g].ref AS ref
-  FROM spansf f, UNNEST(generate_series(1, len(f.sp))) AS g(g)
-), walk AS (
-  SELECT doc_id, CAST(0 AS BIGINT) AS seq, CAST(0 AS BIGINT) AS pos_after
-  FROM spansf
-  UNION ALL
-  SELECT s.doc_id, s.seq,
-         CASE WHEN s.kind = 'media' AND (w.pos_after % 64) + s.len > 64
-              THEN w.pos_after + (64 - (w.pos_after % 64)) + s.len
-              ELSE w.pos_after + s.len END
-  FROM walk w JOIN spans s
-    ON s.doc_id = w.doc_id AND s.seq = w.seq + 1
-)
-SELECT s.doc_id, s.seq, s.kind, s.len AS span_len, s.ref AS media_ref,
-       CAST(w.pos_after - s.len - wp.pos_after AS BIGINT) AS pad_before,
-       CAST(w.pos_after - s.len AS BIGINT) AS start_pos,
-       CAST((w.pos_after - s.len) // 64 AS BIGINT) AS ctx_id,
-       CAST((w.pos_after - s.len) % 64 AS BIGINT) AS ctx_offset
-FROM spans s
-JOIN walk w  ON w.doc_id = s.doc_id AND w.seq = s.seq
-JOIN walk wp ON wp.doc_id = s.doc_id AND wp.seq = s.seq - 1
-""".format(med=_MEDIA_SQL.format(p="p"))
-
-
-# Hashed linear quality classifier (EXTRA lane): fastText-style
-# scoring — 101 md5-derived pseudo-weights, position-ordered
-# list_sum fold, portable sigmoid via _exp_sql; label decided on the
-# RAW logit so no float threshold exists.
-EXTRA_ORACLE_SQL["quality_classifier"] = f"""
-WITH tok AS (
-  SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-), zc AS (
-  SELECT doc_id, CAST(len(ts) AS BIGINT) AS n_tokens,
-         (-0.05 + list_sum(list_transform(ts,
-             t -> CAST(('0x' || substr(md5(t), 1, 8))::BIGINT % 101
-                       AS DOUBLE) / 101.0 - 0.5))) AS z
-  FROM tok
-)
-SELECT doc_id, n_tokens, ROUND(z, 6) AS logit,
-       ROUND(1.0 / (1.0 + {_exp_sql('(-z)')}), 6) AS score,
-       CASE WHEN z >= 0 THEN 'content' ELSE 'boilerplate' END AS label
-FROM zc
-"""
-
-
-# Token Shannon entropy (EXTRA lane): token counts grouped per doc,
-# c*ln(c) summed in token-sorted order (list(... ORDER BY w) — the
-# same order as Spark's sorted-array run-length fold), every ln
-# portable; H = ln(n) - s/n, normalized by ln(n) for n >= 2.
-EXTRA_ORACLE_SQL["quality_entropy"] = f"""
-WITH tok AS (
-  SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-), cnt AS (
-  SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS c
-  FROM (SELECT doc_id, unnest(ts) AS w FROM tok)
-  GROUP BY doc_id, w
-), s AS (
-  SELECT doc_id,
-         list_sum(list(CAST(c AS DOUBLE) * {_ln_int_sql('c')}
-                       ORDER BY w)) AS s,
-         CAST(SUM(c) AS BIGINT) AS n,
-         CAST(COUNT(*) AS BIGINT) AS nd
-  FROM cnt GROUP BY doc_id
-), l AS (
-  SELECT doc_id, n, nd, s, {_ln_int_sql('n')} AS lnn FROM s
-), h AS (
-  SELECT doc_id, n, nd, lnn,
-         (lnn - s / CAST(n AS DOUBLE)) AS hr
-  FROM l
-)
-SELECT doc_id, n AS n_tokens, nd AS n_distinct,
-       ROUND(hr, 6) AS entropy,
-       CASE WHEN n >= 2 THEN ROUND(hr / lnn, 6) ELSE 0.0 END
-         AS entropy_norm
-FROM h
-"""
-
-
-# Approximate k-NN graph (EXTRA lane): same banded sign-LSH candidate
-# generation as embedding_near_dup (both directions), per-source
-# ROW_NUMBER top-4 ordered on the RAW pinned-order cosine with
-# neighbor-id ties.
-EXTRA_ORACLE_SQL["ann_graph_knn"] = ("""
-WITH bands AS (
-""" + "\n  UNION ALL\n".join(
-    f"  SELECT vec_id, {b} AS band, {_nd_band_bucket(b)} AS v"
-    f" FROM embeddings"
-    for b in range(4)) + """
-), cand AS (
-  SELECT DISTINCT a.vec_id AS src, c.vec_id AS dst
-  FROM bands a JOIN bands c
-    ON a.band = c.band AND a.v = c.v AND a.vec_id <> c.vec_id
-), scored AS (
-  SELECT src, dst,
-         {ab} / (SQRT({aa}) * SQRT({bb})) AS cos_raw
-  FROM cand
-  JOIN embeddings ea ON src = ea.vec_id
-  JOIN embeddings eb ON dst = eb.vec_id
-), ranked AS (
-  SELECT src, dst, cos_raw,
-         ROW_NUMBER() OVER (PARTITION BY src
-                            ORDER BY cos_raw DESC, dst) AS rank
-  FROM scored
-)
-SELECT src AS vec_id, CAST(rank AS BIGINT) AS rank, dst AS neighbor,
-       ROUND(cos_raw, 6) AS cos_sim
-FROM ranked WHERE rank <= 4
-""").format(ab=_DOTSQL.format(a="ea.embedding", b="eb.embedding"),
-            aa=_DOTSQL.format(a="ea.embedding", b="ea.embedding"),
-            bb=_DOTSQL.format(a="eb.embedding", b="eb.embedding"))
-
-
-# Temperature-scaled mixture weights (EXTRA lane): n^0.3 =
-# exp_portable(0.3 * ln_int(n)); both normalizers fixed-point BIGINT
-# (the domain_reweight pattern).
-EXTRA_ORACLE_SQL["mixture_temperature"] = f"""
-WITH per AS (
-  SELECT source, COUNT(*) AS n_docs,
-         CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY source
-), scored AS (
-  SELECT source, n_docs, n_tokens,
-         ROUND({_exp_sql("(0.3 * " + _ln_int_sql('n_tokens') + ")")}, 9)
-           AS raw9
-  FROM per
-), z AS (
-  SELECT CAST(SUM(n_tokens) AS BIGINT) AS tot,
-         CAST(SUM(CAST(ROUND(raw9 * 1e9, 0) AS BIGINT)) AS BIGINT)
-           AS z_micro
-  FROM scored
-)
-SELECT source, n_docs, n_tokens,
-       ROUND(CAST(n_tokens AS DOUBLE) / CAST(tot AS DOUBLE), 6)
-         AS weight_prop,
-       ROUND(raw9 / (CAST(z_micro AS DOUBLE) / 1e9), 6) AS weight_temp
-FROM scored CROSS JOIN z
-"""
-
-
-# T5 span-corruption length accounting (EXTRA lane): the shared md5
-# PRF drives the ~15% mask; spans are maximal masked runs counted by
-# their starts (masked with unmasked predecessor), all exact ints.
-_MASK_SQL = ("substr(md5('m:' || CAST(doc_id AS VARCHAR) || ':' "
-             "|| CAST({p} AS VARCHAR)), 1, 2) < '28'")
-
-EXTRA_ORACLE_SQL["span_corruption"] = """
-WITH base AS (
-  SELECT doc_id, len(string_split(text, ' ')) AS n FROM documents
-), m AS (
-  SELECT doc_id, n,
-         len(list_filter(generate_series(1, n),
-             p -> {mask})) AS nm,
-         len(list_filter(generate_series(1, n),
-             p -> {mask} AND (p = 1 OR NOT {mask_prev}))) AS ns
-  FROM base
-)
-SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-       CAST(nm AS BIGINT) AS n_masked,
-       CAST(ns AS BIGINT) AS n_spans,
-       ROUND(CAST(nm AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mask_rate,
-       CAST(n - nm + ns AS BIGINT) AS inputs_len,
-       CAST(nm + ns + 1 AS BIGINT) AS targets_len
-FROM m
-""".format(mask=_MASK_SQL.format(p="p"),
-           mask_prev=_MASK_SQL.format(p="(p - 1)"))
-
-
-# Contrastive pair mining (EXTRA lane): same banded candidates and
-# raw-cosine ranking as ann_graph_knn, partitioned by (anchor, kind):
-# top-1 same-label positive, top-2 different-label hard negatives.
-EXTRA_ORACLE_SQL["hard_negatives"] = ("""
-WITH bands AS (
-""" + "\n  UNION ALL\n".join(
-    f"  SELECT vec_id, {b} AS band, {_nd_band_bucket(b)} AS v"
-    f" FROM embeddings"
-    for b in range(4)) + """
-), cand AS (
-  SELECT DISTINCT a.vec_id AS src, c.vec_id AS dst
-  FROM bands a JOIN bands c
-    ON a.band = c.band AND a.v = c.v AND a.vec_id <> c.vec_id
-), scored AS (
-  SELECT src, dst,
-         {ab} / (SQRT({aa}) * SQRT({bb})) AS cos_raw,
-         CASE WHEN ea.label = eb.label THEN 'pos' ELSE 'neg' END AS kind
-  FROM cand
-  JOIN embeddings ea ON src = ea.vec_id
-  JOIN embeddings eb ON dst = eb.vec_id
-), ranked AS (
-  SELECT src, dst, cos_raw, kind,
-         ROW_NUMBER() OVER (PARTITION BY src, kind
-                            ORDER BY cos_raw DESC, dst) AS rank
-  FROM scored
-)
-SELECT src AS vec_id, kind, CAST(rank AS BIGINT) AS rank,
-       dst AS neighbor, ROUND(cos_raw, 6) AS cos_sim
-FROM ranked
-WHERE rank <= CASE WHEN kind = 'pos' THEN 1 ELSE 2 END
-""").format(ab=_DOTSQL.format(a="ea.embedding", b="eb.embedding"),
-            aa=_DOTSQL.format(a="ea.embedding", b="ea.embedding"),
-            bb=_DOTSQL.format(a="eb.embedding", b="eb.embedding"))
-
-
-# Winnowing fingerprints (EXTRA lane): md5 k-gram hashes, per-window
-# VARCHAR minima, distinct + sort + digest — all string ops, no
-# floats; mirrors queries.q_fingerprint_winnow (k=3, w=4).
-EXTRA_ORACLE_SQL["fingerprint_winnow"] = """
-WITH tok AS (
-  SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-), g AS (
-  SELECT doc_id,
-         CASE WHEN len(ts) >= 3 THEN
-           list_transform(generate_series(1, len(ts) - 2),
-               i -> md5(array_to_string(ts[i:i + 2], ' ')))
-         ELSE [] END AS g
-  FROM tok
-), k AS (
-  SELECT doc_id, len(g) AS ng,
-         CASE WHEN len(g) >= 4 THEN
-           list_transform(generate_series(1, len(g) - 3),
-               j -> list_min(g[j:j + 3]))
-         WHEN len(g) >= 1 THEN [list_min(g)]
-         ELSE [] END AS kept
-  FROM g
-)
-SELECT doc_id, CAST(ng AS BIGINT) AS n_grams,
-       CAST(len(list_distinct(kept)) AS BIGINT) AS n_kept,
-       -- array_to_string of an EMPTY list is NULL in DuckDB (not ''):
-       -- coalesce so gram-less docs digest the empty string like the
-       -- Spark side (caught by the random-corpus fuzz).
-       md5(COALESCE(
-           array_to_string(list_sort(list_distinct(kept)), ''), ''))
-         AS fp_digest
-FROM k
-"""
-
-
-# Bloom-filter sketch (EXTRA lane): four 8-hex-digit slices of
-# md5(text) mod 65536, 32-bit words, BIT_OR merge — all integer.
-EXTRA_ORACLE_SQL["dedup_bloom"] = """
-WITH keys AS (
-  SELECT md5(text) AS h FROM documents
-), ex AS (
-  SELECT ('0x' || substr(h, 1 + 8 * i.i, 8))::BIGINT % 65536 AS idx
-  FROM keys, UNNEST([0, 1, 2, 3]) AS i(i)
-)
-SELECT CAST(idx // 32 AS BIGINT) AS word_idx,
-       CAST(bit_or(CAST(power(2.0, idx % 32) AS BIGINT)) AS BIGINT)
-         AS bits
-FROM ex GROUP BY 1
-"""
-
-
-# Per-source curation report (EXTRA lane): the full curate cascade
-# (its recursive CTE nests cleanly) rolled up per (source, reason);
-# frac_docs via an exact-BIGINT window sum.
-EXTRA_ORACLE_SQL["curate_report"] = f"""
-WITH cd AS ({ORACLE_SQL['curate_decisions']}),
-tok AS (
-  SELECT doc_id, source,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
-  FROM documents
-), per AS (
-  SELECT t.source, cd.reason, COUNT(*) AS n_docs,
-         CAST(SUM(t.nt) AS BIGINT) AS n_tokens
-  FROM cd JOIN tok t USING (doc_id)
-  GROUP BY 1, 2
-)
-SELECT source, reason, CAST(n_docs AS BIGINT) AS n_docs, n_tokens,
-       ROUND(CAST(n_docs AS DOUBLE)
-             / CAST(SUM(n_docs) OVER (PARTITION BY source) AS DOUBLE),
-             6) AS frac_docs
-FROM per
-"""
-
-
-# Round-1 BPE merge statistics (EXTRA lane): adjacent char pairs via
-# the shared column-form substr, exact counts, top-10 with pair ties.
-EXTRA_ORACLE_SQL["bpe_merges"] = """
-WITH w AS (
-  SELECT unnest(string_split(text, ' ')) AS w FROM documents
-), p AS (
-  SELECT unnest(list_transform(generate_series(1, len(w) - 1),
-                               i -> substr(w, i, 2))) AS pair
-  FROM w WHERE len(w) >= 2
-)
-SELECT pair, COUNT(*) AS n_occurrences
-FROM p GROUP BY pair
-ORDER BY n_occurrences DESC, pair
-LIMIT 10
-"""
-
-
-# Per-source bottom-k sample (EXTRA lane): the oracle runs the plain
-# ONE-level window — the Spark side's two-level bucket scan must
-# select identically (a source's k smallest hashes occupy at most k
-# buckets, so no true bottom-k row is lost at level 1).
-EXTRA_ORACLE_SQL["sample_bottomk"] = """
-WITH h AS (
-  SELECT source, doc_id, md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM documents
-), r AS (
-  SELECT source, doc_id, h,
-         ROW_NUMBER() OVER (PARTITION BY source
-                            ORDER BY h, doc_id) AS rank
-  FROM h
-)
-SELECT source, CAST(rank AS BIGINT) AS rank, doc_id, h
-FROM r WHERE rank <= 5
-"""
-
-
-# Code-switch detection (EXTRA lane): same marker sets and argmax
-# order as the Spark side (imported — matched by construction), two
-# nested list_transforms, all-integer.
-from .queries import LANG_MARKERS as _LSM, _LANG_ORDER as _LSO  # noqa: E402
-
-
-def _ls_sql() -> str:
-    def inlist(lg):
-        return ", ".join(f"'{t}'" for t in _LSM[lg])
-
-    def score_struct(arr):
-        return "{" + ", ".join(
-            f"'{lg}': len(list_filter({arr}, t -> t IN ({inlist(lg)})))"
-            for lg in _LSO) + "}"
-
-    def pred(acc):
-        cases = []
-        for lg in _LSO[:-1]:
-            conds = " AND ".join(f"{acc}.{lg} >= {acc}.{o}"
-                                 for o in _LSO if o != lg)
-            cases.append(f"WHEN {conds} THEN '{lg}'")
-        return "CASE " + " ".join(cases) + f" ELSE '{_LSO[-1]}' END"
-
-    return f"""
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS ts,
-         CAST((len(string_split(text, ' ')) + 9) // 10 AS INT) AS nw
-  FROM documents
-), sc AS (
-  SELECT doc_id, nw,
-         list_transform(
-           list_transform(generate_series(0, nw - 1),
-                          k -> ts[k * 10 + 1 : k * 10 + 10]),
-           w -> {score_struct('w')}) AS sc,
-         {score_struct('ts')} AS doc_sc
-  FROM base
-), pr AS (
-  SELECT doc_id, nw,
-         list_transform(sc, s -> {pred('s')}) AS preds,
-         {pred('doc_sc')} AS doc_lang
-  FROM sc
-), fl AS (
-  SELECT doc_id, nw, doc_lang,
-         len(list_filter(generate_series(1, nw - 1),
-                         i -> preds[i] <> preds[i + 1])) AS nsw
-  FROM pr
-)
-SELECT doc_id, CAST(nw AS BIGINT) AS n_windows,
-       CAST(nsw AS BIGINT) AS n_switches,
-       CASE WHEN nw <= 1 THEN 0.0
-            ELSE ROUND(CAST(nsw AS DOUBLE) / CAST(nw - 1 AS DOUBLE), 6)
-       END AS switch_frac,
-       doc_lang
-FROM fl
-"""
-
-
-EXTRA_ORACLE_SQL["lang_switches"] = _ls_sql()

@@ -850,7 +850,7 @@ def _kmeans_fit(eq: DataFrame):
     ``(cid, sv, cn)`` where centroid cid is the rational mean sv/cn.
     Updates are posexplode->sum BIGINT aggregations, bit-reproducible
     across engines because the vectors are floor-quantized to integers
-    (shared by q_ann_ivf_kmeans and q_semantic_dedup)."""
+    (used by q_ann_ivf_kmeans)."""
     c0 = (eq.where(F.col("vec_id") < 16)
           .select(F.col("vec_id").alias("cid"), F.col("qv").alias("sv"),
                   F.lit(1).cast("bigint").alias("cn")))
@@ -968,32 +968,24 @@ def q_approx_distinct_hll(spark, sf_dir):
 
 
 def connected_components(edges: DataFrame, max_iters: int = 20,
-                         checkpoint_dir: str | None = None,
-                         algorithm: str = "minlabel") -> DataFrame:
+                         checkpoint_dir: str | None = None) -> DataFrame:
     """Connected components over an undirected edge list
     ``(doc_a, doc_b)`` -> ``(doc_id, component_id)`` with
     ``component_id`` = the lexicographic-min vertex of the component.
     Vertices are the edge endpoints (singletons are their own trivial
     component and are omitted — callers can left-join them back).
 
-    Two algorithms, same contract (parity-tested on the random-graph
-    differential suite):
+    The alternating large-star/small-star algorithm (Kiveris et al.
+    2014, "Connected Components in MapReduce and Beyond"): converges in
+    O(log n) rounds independent of graph diameter.  Each round rewrites
+    the edge set, one groupBy per phase over the current edges:
 
-    * ``minlabel`` (default): Pregel-style min-label propagation —
-      each round every vertex takes the min of its own label and its
-      neighbours' labels; converges in graph-diameter rounds.  ONE
-      Spark job per round: the step carries a changed flag, so the
-      convergence check is a sum over the round's cached result, not a
-      separate join (r3 verdict).  Right shape for dedup graphs, whose
-      diameter is tiny (clusters of near-identical documents).
-    * ``star``: the alternating large-star/small-star algorithm
-      (Kiveris et al. 2014, "Connected Components in MapReduce and
-      Beyond") — converges in O(log n) rounds independent of diameter,
-      the scale path for billion-vertex/high-diameter general graphs.
-      Each round rewrites the edge set (large-star hooks every vertex's
-      larger neighbours onto its neighbourhood min, small-star hooks
-      the smaller ones); at the fixpoint the edges form stars whose
-      centre is the component min.
+    large-star(E): per vertex u (over the symmetrized edges), hook
+    every STRICTLY LARGER neighbour v onto m = min(N(u) + {u}).
+    small-star(E): direct edges large->small, per vertex u hook u and
+    all its (smaller) neighbours onto m = min(N(u)).  Both preserve
+    connectivity; the fixpoint is a forest of depth-1 stars rooted at
+    each component's min vertex (thm 1-3).
 
     Non-convergence within ``max_iters`` RAISES (returning partial —
     hence wrong — labels silently was the r3 advice bug).
@@ -1006,87 +998,7 @@ def connected_components(edges: DataFrame, max_iters: int = 20,
     iterative graph algorithms (GraphFrames requires the same),
     avoiding k recomputations of the edge subplan at every downstream
     action.  Without it, the RETURNED DataFrame is a pure recomputable
-    plan (k nested joins)."""
-    if algorithm == "star":
-        return _cc_star(edges, max_iters, checkpoint_dir)
-    if algorithm != "minlabel":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-
-    sym = (edges.selectExpr("doc_a AS src", "doc_b AS dst")
-           .unionByName(edges.selectExpr("doc_b AS src", "doc_a AS dst")))
-
-    def step(lbl: DataFrame, e: DataFrame) -> DataFrame:
-        neigh = (e.join(lbl.select(F.col("doc_id").alias("src"), "comp"),
-                        "src")
-                 .groupBy(F.col("dst").alias("doc_id"))
-                 .agg(F.min("comp").alias("ncomp")))
-        nc = F.coalesce("ncomp", "comp")
-        return (lbl.join(neigh, "doc_id", "left")
-                .select("doc_id", F.least("comp", nc).alias("comp"),
-                        (nc < F.col("comp")).cast("int").alias("chg")))
-
-    edges_c = sym.persist()
-    verts = (edges_c.select(F.col("src").alias("doc_id")).distinct()
-             .select("doc_id", F.col("doc_id").alias("comp")))
-    labels, cached, iters, converged = verts, None, 0, False
-    try:
-        for _ in range(max_iters):
-            nxt = step(labels, edges_c).persist()
-            # ONE job per round: the changed count folds into the
-            # step's own aggregation over the freshly-cached result.
-            # If the action dies (executor loss, cancellation), the
-            # just-persisted nxt is not yet `cached` and the finally
-            # below would miss it — unpersist on the way out.
-            try:
-                changed = nxt.agg(F.sum("chg")).collect()[0][0] or 0
-            except BaseException:
-                nxt.unpersist()
-                raise
-            if cached is not None:
-                cached.unpersist()
-            labels, cached = nxt.select("doc_id", "comp"), nxt
-            iters += 1
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"connected_components(minlabel) did not converge in "
-                f"{max_iters} rounds (graph diameter exceeds max_iters; "
-                f"raise max_iters or use algorithm='star')")
-        if checkpoint_dir is not None:
-            # Materialize the converged (tiny) labels once, while the
-            # per-round caches are still warm; the returned scan never
-            # re-runs the loop or the edge subplan.
-            (labels.select("doc_id", F.col("comp").alias("component_id"))
-             .write.mode("overwrite").parquet(checkpoint_dir))
-            return labels.sparkSession.read.parquet(checkpoint_dir)
-    finally:
-        if cached is not None:
-            cached.unpersist()
-        edges_c.unpersist()
-    # Pure-plan fallback: replay the propagation uncached.  The
-    # converged round changed no label, so the fixpoint needs only
-    # iters-1 steps.
-    plan = verts
-    for _ in range(iters - 1):
-        plan = step(plan, sym).select("doc_id", "comp")
-    return plan.select("doc_id", F.col("comp").alias("component_id"))
-
-
-def _cc_star(edges: DataFrame, max_iters: int,
-             checkpoint_dir: str | None) -> DataFrame:
-    """Alternating large-star/small-star rounds to the edge-set
-    fixpoint; returns the label DataFrame (doc_id, component_id).
-
-    large-star(E): per vertex u (over the symmetrized edges), hook
-    every STRICTLY LARGER neighbour v onto m = min(N(u) + {u}).
-    small-star(E): direct edges large->small, per vertex u hook u and
-    all its (smaller) neighbours onto m = min(N(u)).  Both preserve
-    connectivity; the fixpoint is a forest of depth-1 stars rooted at
-    each component's min vertex (Kiveris et al. 2014, thm 1-3).  At
-    scale each round is one groupBy per phase over the current edge
-    set — no dependence on graph diameter."""
+    plan (k nested rounds)."""
 
     def large_star(e: DataFrame) -> DataFrame:
         sym = e.unionByName(e.select(F.col("v").alias("u"),
@@ -1145,8 +1057,8 @@ def _cc_star(edges: DataFrame, max_iters: int,
                 break
         if not converged:
             raise RuntimeError(
-                f"connected_components(star) did not converge in "
-                f"{max_iters} rounds")
+                f"connected_components did not converge in {max_iters} "
+                "rounds")
         if checkpoint_dir is not None:
             labels_of(cur).write.mode("overwrite").parquet(checkpoint_dir)
             return cur.sparkSession.read.parquet(checkpoint_dir)
@@ -1185,18 +1097,6 @@ def q_dedup_components(spark, sf_dir):
     return connected_components(
         edges,
         checkpoint_dir=f"{cc_checkpoint_base(spark)}/{slug}.parquet")
-
-
-def q_dedup_components_star(spark, sf_dir):
-    """The same dedup-components contract computed by the alternating
-    large-star/small-star algorithm — the O(log n)-round scale path for
-    high-diameter graphs (same DuckDB reachability oracle; the two
-    algorithms must agree exactly)."""
-    edges = q_dedup_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    slug = sf_dir.strip("/").replace("/", "_")
-    return connected_components(
-        edges, algorithm="star",
-        checkpoint_dir=f"{cc_checkpoint_base(spark)}/{slug}_star.parquet")
 
 
 def q_token_topk(spark, sf_dir):
@@ -1611,8 +1511,8 @@ def q_curate_decisions(spark, sf_dir):
 
     Scale shape: the exact-dup rank is one md5-fingerprint window
     shuffle; the near-dup labels come from the banded minhash self-join
-    plus O(diameter) min-label rounds over the (tiny) verified edge
-    set, never an all-pairs pass; contamination hits re-use the
+    plus O(log n) large-star/small-star rounds over the (tiny)
+    verified edge set, never an all-pairs pass; contamination hits re-use the
     broadcast eval n-gram set (never a shuffle of the corpus against
     the benchmark suite) and come back to the document axis via one
     doc_id aggregation; the rule cascade itself is a pure projection.
@@ -1737,1624 +1637,9 @@ def q_pii_redact(spark, sf_dir):
         red.alias("redacted"))
 
 
-def q_dedup_incremental(spark, sf_dir):
-    """Incremental (cross-snapshot) dedup: classify each NEW-batch
-    document — ``doc_id % 5 == 0``, the deterministic stand-in for
-    "today's crawl increment" — against the EXISTING corpus (the other
-    80%) without ever comparing corpus docs to each other.
-
-    Verdict precedence per batch doc:
-      ``dup_exact_corpus``  md5(text) already present in the corpus
-      ``dup_exact_batch``   an earlier batch doc has the same
-                            fingerprint (within-increment exact dup)
-      ``near_dup_corpus``   LSH band-bucket candidate vs the corpus
-                            whose exact 3-shingle Jaccard >= 0.5
-      ``kept``              none of the above
-    ``matched_doc`` = the minimal matching doc_id under the decided
-    rule (-1 for kept — engine-portable instead of NULL).
-
-    Scale shape (the production reason this operator exists): a daily
-    increment is ~0.1-1% of the corpus, so re-running full-corpus
-    dedup per snapshot is 100-1000x wasted work.  Unlike the
-    full-corpus chain (``_minhash_df``: explode shingles -> groupBy —
-    a shuffle of the exploded shingle stream, ~2-3x the text volume),
-    the signatures here are PER-ROW expressions: ``array_min`` over a
-    ``transform`` of the shingle array gives each of the 8 minhashes
-    with ZERO shuffle, and no exchange anywhere carries a shingle
-    array (pinned in ``test_dedup_incremental_plan``) — what shuffles
-    is narrow fingerprint projections, band/bucket rows (the BATCH
-    band side broadcasts, so corpus bands never move), candidate
-    pairs, and the increment itself for the final verdict assembly.
-    The batch/corpus split predicate is pushed into every parquet scan
-    (pinned), corpus x corpus pairs are never formed, and only buckets
-    containing a batch doc ever reach Jaccard verification.  At a real
-    deployment the corpus-side projections (fingerprint, signature)
-    are precomputed once at ingest and stored next to the bucketed
-    layout (``io.write_documents_bucketed``), so the per-increment run
-    scans only the increment plus two small stored index tables;
-    within-batch NEAR-dup (batch x batch) is deliberately left to the
-    full-corpus chain (minhash -> jaccard -> components) the next
-    compaction runs.
-
-    Gate note: the driver cap is 50 and fully allocated, so this entry
-    ships in EXTRA_QUERIES — same DuckDB-oracle discipline
-    (EXTRA_ORACLE_SQL), checked in-suite (test_training_ops +
-    the random-corpus fuzz) instead of by the driver."""
-    d = _t(spark, sf_dir, "documents")
-    is_new = (F.col("doc_id") % 5) == 0
-    base = d.select("doc_id", F.md5("text").alias("fp"),
-                    _shingles().alias("sh0"))
-    # Per-row minhash: min over the shingle multiset == min over the
-    # set.  sh0 is referenced by all 8 mins from a separate projection
-    # step — CollapseProject keeps multiply-referenced expensive
-    # expressions in their own project, so the shingle split runs once.
-    # The salt must be bound via a closure factory: a 2-parameter
-    # lambda (even with a default) makes F.transform pass the array
-    # INDEX as the second argument, silently shadowing the salt.
-    def _salted_min(k):
-        salt = F.lit(f":{k}")
-        return F.array_min(F.transform(
-            F.col("sh0"), lambda s: F.md5(F.concat(s, salt))))
-
-    mins = [_salted_min(k).alias(f"h{k}") for k in range(_N_MINHASH)]
-    mh = base.select("doc_id", "fp", *mins)
-    batch_fp = mh.select("doc_id", "fp").where(is_new)
-    corpus_min = (mh.select("doc_id", "fp").where(~is_new).groupBy("fp")
-                  .agg(F.min("doc_id").alias("corpus_match")))
-    batch_min = (batch_fp.groupBy("fp")
-                 .agg(F.min("doc_id").alias("batch_min")))
-    bands = _band_rows(mh)
-    cand = (bands.where(is_new).alias("a")
-            .join(bands.where(~is_new).alias("c"),
-                  (F.col("a.b") == F.col("c.b"))
-                  & (F.col("a.v") == F.col("c.v")))
-            .select(F.col("a.doc_id").alias("doc_n"),
-                    F.col("c.doc_id").alias("doc_o"))
-            .distinct())
-    sets = d.select("doc_id", F.array_distinct(_shingles()).alias("ss"))
-    pairs = (cand
-             .join(sets.alias("sa"), F.col("doc_n") == F.col("sa.doc_id"))
-             .join(sets.alias("sb"), F.col("doc_o") == F.col("sb.doc_id")))
-    n_common = F.size(F.array_intersect(F.col("sa.ss"), F.col("sb.ss")))
-    sz_union = (F.size(F.col("sa.ss")) + F.size(F.col("sb.ss"))
-                - n_common)
-    near = (pairs.where((n_common / sz_union) >= 0.5)
-            .groupBy("doc_n").agg(F.min("doc_o").alias("near_match")))
-    row = (batch_fp
-           .join(corpus_min, "fp", "left")
-           .join(batch_min, "fp", "left")
-           .join(near, batch_fp["doc_id"] == near["doc_n"], "left"))
-    exact_c = F.col("corpus_match").isNotNull()
-    exact_b = F.col("batch_min") < F.col("doc_id")
-    near_c = F.col("near_match").isNotNull()
-    verdict = (F.when(exact_c, F.lit("dup_exact_corpus"))
-               .when(exact_b, F.lit("dup_exact_batch"))
-               .when(near_c, F.lit("near_dup_corpus"))
-               .otherwise(F.lit("kept")))
-    matched = (F.when(exact_c, F.col("corpus_match"))
-               .when(exact_b, F.col("batch_min"))
-               .when(near_c, F.col("near_match"))
-               .otherwise(F.lit(-1)))
-    return row.select("doc_id", verdict.alias("verdict"),
-                      matched.alias("matched_doc"))
-
-
-def q_dedup_keep_best(spark, sf_dir):
-    """Quality-aware cluster representative selection: within each
-    verified near-dup component (the dedup_components contract),
-    KEEP the member with the highest quality score instead of the
-    first-seen/min-id copy — the production refinement of
-    "keep one representative per duplicate cluster" (a crawl's best
-    copy of a page is rarely its first copy: mirrors truncate,
-    re-crawls gain content).  Quality = number of DISTINCT
-    whitespace words (exact BIGINT — engine-portable, no float
-    thresholds), ties broken toward the smaller doc_id.  Output is
-    one row per cluster MEMBER: (doc_id, component_id, quality,
-    action keep|drop, kept_doc).
-
-    Scale shape: cluster labels come from the existing banded-minhash
-    -> exact-Jaccard -> connected-components chain (never all-pairs);
-    the label set is tiny relative to the corpus (only near-dup
-    members carry labels), so it BROADCASTS against the per-row
-    quality projection — the corpus never shuffles.  The
-    representative choice is one map-side-combinable
-    ``max(struct(quality, -doc_id))`` per component — an argmax
-    aggregation, NOT a window sort over members (no
-    per-component row_number ordering pass), and the one-row-per-
-    cluster result broadcasts back for the keep/drop verdict.  Zero
-    exchanges carry text or shingle arrays beyond the candidate
-    chain already audited in dedup_components.
-
-    Gate note: the driver cap is 50 and fully allocated, so this
-    entry ships in EXTRA_QUERIES — same DuckDB-oracle discipline
-    (EXTRA_ORACLE_SQL: the dedup_components reachability CTE + a
-    window-max rep), checked in-suite (test_training_ops + the
-    random-corpus fuzz)."""
-    d = _t(spark, sf_dir, "documents")
-    edges = q_dedup_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    slug = sf_dir.strip("/").replace("/", "_")
-    comps = connected_components(
-        edges,
-        checkpoint_dir=f"{cc_checkpoint_base(spark)}/{slug}_best.parquet")
-    qual = d.select(
-        "doc_id",
-        F.size(F.array_distinct(F.split(F.col("text"), " ")))
-         .cast("bigint").alias("quality"))
-    memb = qual.join(F.broadcast(comps), "doc_id")
-    rep = (memb.groupBy("component_id")
-           .agg(F.max(F.struct(F.col("quality").alias("q"),
-                               (-F.col("doc_id")).alias("neg_id")))
-                .alias("best"))
-           .select("component_id",
-                   (-F.col("best.neg_id")).alias("kept_doc")))
-    return (memb.join(F.broadcast(rep), "component_id")
-            .select("doc_id", "component_id", "quality",
-                    F.when(F.col("doc_id") == F.col("kept_doc"),
-                           F.lit("keep"))
-                     .otherwise(F.lit("drop")).alias("action"),
-                    "kept_doc"))
-
-
-# Context length and scan-bucket width for q_sequence_pack.  L is a
-# power of two so the double division tok_start/L inside floor() is
-# IEEE-exact (no truncation hazard); B is a power of two for the same
-# reason and small enough that the pytest corpora exercise multi-
-# bucket offsets.  At web scale B would be ~2^20 (the per-bucket
-# Window then sorts <= 2^20 rows per task and the bucket-offsets
-# relation is corpus/2^20 rows — 10^6 at 10^12 docs).
-_PACK_L = 128
-_PACK_B = 64
-
-
-def q_sequence_pack(spark, sf_dir):
-    """GPT-style sequence packing: concatenate every document's
-    whitespace tokens in doc_id order into one global token stream and
-    chunk it into fixed-size training contexts of L=128 tokens —
-    emitting one row per (document, context bin) overlap:
-    (doc_id, doc_tokens, tok_start, bin_id, tok_in_bin).  This is the
-    concat-and-chunk data layout step of an LM training pipeline
-    (documents straddle bin boundaries; a doc longer than L spans
-    multiple bins).  All-integer arithmetic — exact in both engines.
-
-    Scale shape: the global exclusive prefix-sum is the textbook
-    scale-killer (a naive Window over ORDER BY doc_id with no
-    partition spec collapses the corpus into ONE task via an Exchange
-    SinglePartition).  Instead it is computed HIERARCHICALLY, the
-    two-level scan: bucket g = floor(doc_id/B) -> (1) per-bucket token
-    sums via one partial agg (corpus/B rows), (2) exclusive running
-    total OVER the tiny bucket relation (the only SinglePartition
-    exchange in the plan — corpus/B rows, ~10^6 at 10^12 docs; a third
-    level repeats the trick if that ever matters), (3) broadcast the
-    bucket offsets back and add a PER-BUCKET exclusive cumsum
-    (Window partitionBy(g) — parallel in g, each task sorts <= B
-    rows).  Bin membership = explode(sequence(bin_lo, bin_hi)) —
-    rows-out bounded by 1 + doc_tokens/L per doc, never a cartesian.
-    Plan pins (pytest + plan_audit): exactly one SinglePartition
-    exchange, sitting above the bucket HashAggregate, never the
-    corpus scan; the corpus-side Window is partitioned by g.
-
-    Gate note: ships in EXTRA_QUERIES (the 50-entry driver cap is
-    fully allocated — see the QUERIES comment); same dual-engine
-    discipline via EXTRA_ORACLE_SQL (DuckDB computes the same prefix
-    sum with a plain window, exactness is engine-trivial there) and
-    the random-corpus fuzz."""
-    L, B = _PACK_L, _PACK_B
-    d = _t(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tok"),
-        F.floor(F.col("doc_id") / F.lit(B)).cast("bigint").alias("g"))
-    # (1) per-bucket sums; (2) exclusive running offset over the tiny
-    # bucket relation (this Window is the plan's one SinglePartition).
-    bs = tok.groupBy("g").agg(F.sum("n_tok").alias("b_tok"))
-    w_b = (Window.orderBy("g")
-           .rowsBetween(Window.unboundedPreceding, -1))
-    boff = bs.select(
-        "g", F.coalesce(F.sum("b_tok").over(w_b), F.lit(0)).alias("b_off"))
-    # (3) per-bucket exclusive cumsum (parallel in g) + bucket offset.
-    w_g = (Window.partitionBy("g").orderBy("doc_id")
-           .rowsBetween(Window.unboundedPreceding, -1))
-    cum = (tok.join(F.broadcast(boff), "g")
-           .select("doc_id", "n_tok",
-                   (F.col("b_off")
-                    + F.coalesce(F.sum("n_tok").over(w_g), F.lit(0)))
-                   .alias("tok_start")))
-    bin_lo = F.floor(F.col("tok_start") / F.lit(L)).cast("bigint")
-    bin_hi = (F.floor((F.col("tok_start") + F.col("n_tok") - 1) / F.lit(L))
-              .cast("bigint"))
-    return (cum.select("doc_id", F.col("n_tok").alias("doc_tokens"),
-                       "tok_start",
-                       F.explode(F.sequence(bin_lo, bin_hi)).alias("bin_id"))
-            .select("doc_id", "doc_tokens", "tok_start", "bin_id",
-                    (F.least(F.col("tok_start") + F.col("doc_tokens"),
-                             (F.col("bin_id") + 1) * L)
-                     - F.greatest(F.col("tok_start"),
-                                  F.col("bin_id") * L)).alias("tok_in_bin")))
-
-
-# Portable natural log: ln() differs by ULPs between libms (Java
-# Math.log vs DuckDB's C log produce different last bits for the same
-# double — measured, not hypothetical), so any cross-engine oracle in
-# log space would be flaky at ROUND midpoints.  ln_portable_int
-# instead evaluates a FIXED-ORDER IEEE-754 expression both engines
-# run identically (same spirit as plan.py's hand-rolled Lanczos
-# lngamma): for integer n in [1, 2^53), reduce n = m * 2^e with
-# e = bitlength(n)-1 (exact via length(bin(n)); the division by 2^e
-# only shifts the exponent, so m in [1,2) is exact), fold m into
-# [1/sqrt2, sqrt2) (one exact compare + halving), then
-# ln(m) = 2*atanh(t), t = (m-1)/(m+1) in [-0.172, 0.172], via an
-# 11-term odd series in Horner order.  Every op is +,-,*,/ on doubles
-# — IEEE-exact rounding, so both engines produce bit-identical
-# results (pinned over 1..5000 and 2^40-scale ints in pytest);
-# accuracy vs true ln is ~1 ulp (2.3e-16 relative, measured).  The
-# DuckDB twin is oracle_sql._ln_int_sql — a matched pair: any edit
-# here must be mirrored there (the parity test fails loudly if not).
-_LN2 = 0.6931471805599453        # nearest double to ln 2
-_SQRT2 = 1.4142135623730951      # nearest double to sqrt 2
-_ATANH_COEFS = tuple(1.0 / (2 * k + 1) for k in range(1, 12))
-
-
-def ln_portable_int(n):
-    """Bit-portable ln of an integer column n >= 1 (< 2^53)."""
-    e = (F.length(F.bin(n)) - F.lit(1)).cast("double")
-    m = n.cast("double") / F.pow(F.lit(2.0), e)
-    big = m >= F.lit(_SQRT2)
-    m2 = F.when(big, m / F.lit(2.0)).otherwise(m)
-    e2 = F.when(big, e + F.lit(1.0)).otherwise(e)
-    t = (m2 - F.lit(1.0)) / (m2 + F.lit(1.0))
-    t2 = t * t
-    p = F.lit(_ATANH_COEFS[-1])
-    for c in reversed(_ATANH_COEFS[:-1]):
-        p = p * t2 + F.lit(c)
-    return e2 * F.lit(_LN2) + F.lit(2.0) * t * (F.lit(1.0) + t2 * p)
-
-
-def q_lm_perplexity(spark, sf_dir):
-    """CCNet-style n-gram language-model quality scoring: train an
-    add-one-smoothed bigram LM on the corpus itself, then score every
-    document's per-bigram cross-entropy under it —
-    -mean(ln p(w_i | w_{i-1})), low = fluent/in-distribution, high =
-    gibberish/boilerplate (the classic perplexity filter of a
-    training-data pipeline; Wenzek et al. 2020 filter Common Crawl
-    exactly this way, with KenLM in place of the corpus-trained
-    counts).  p(w2|w1) = (c(w1 w2)+1) / (ctx(w1)+V) with ctx(w1) =
-    bigram-context occurrences of w1 and V = corpus vocabulary size.
-    Output: (doc_id, n_bigrams, cross_entropy) for every doc with
-    >= 2 tokens (singleton docs carry no bigram evidence).
-
-    Determinism: ln is deliberately NOT the engine's — libm ULP skew
-    would break the bit-exact gate — but ln_portable_int (above),
-    bit-identical on both engines; the per-doc sum folds the bigram
-    log-probs in position order (sort_array over (pos, logp) structs
-    + F.aggregate — the ann_cosine sequential-accumulation pattern),
-    so even float addition order is pinned.
-
-    Scale shape: ONE exploded-bigram scan feeds both count
-    aggregations (bigram counts and w1 context counts — partial aggs,
-    map-side combinable) and the scoring join; both count relations
-    join back UNJOINTED-by-hint on their term keys (the tfidf lesson:
-    under autoBroadcastJoinThreshold the optimizer broadcasts the
-    vocab-sized sides — plan-pinned — and a 1e8-term web vocab falls
-    back to a shuffle join of pre-aggregated sides instead of a
-    forced driver-OOM broadcast); only the one-row V scalar keeps an
-    explicit broadcast.  The per-doc reassembly groups (doc_id, pos,
-    logp) rows — bounded by document length, the same bound every
-    per-doc relation in this file already carries.  The ln evaluates
-    JVM-side in whole-stage codegen (~40 float ops/row, no UDF).
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    ts = d.select("doc_id", F.split(F.col("text"), " ").alias("ts"))
-    n = F.size(F.col("ts"))
-    bg = (ts.where(n >= 2)
-          .select("doc_id",
-                  F.posexplode(
-                      F.zip_with(F.slice(F.col("ts"), 1, n - 1),
-                                 F.slice(F.col("ts"), 2, n - 1),
-                                 lambda a, b: F.struct(a.alias("w1"),
-                                                       b.alias("w2"))))
-                  .alias("pos", "bgram"))
-          .select("doc_id", "pos", "bgram.w1", "bgram.w2"))
-    c2 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    cctx = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    vocab = (ts.select(F.explode("ts").alias("w"))
-             .agg(F.countDistinct("w").alias("v")))
-    logp = (ln_portable_int(F.col("c2") + 1)
-            - ln_portable_int(F.col("c1") + F.col("v")))
-    scored = (bg.join(c2, ["w1", "w2"]).join(cctx, ["w1"])
-              .crossJoin(F.broadcast(vocab))
-              .select("doc_id", "pos", logp.alias("logp")))
-    folded = F.aggregate(
-        F.transform(F.sort_array(F.collect_list(F.struct("pos", "logp"))),
-                    lambda x: x["logp"]),
-        F.lit(0.0).cast("double"), lambda acc, x: acc + x)
-    return (scored.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_bigrams"),
-                 F.round((-folded) / F.col("n_bigrams").cast("double"), 6)
-                  .alias("cross_entropy")))
-
-
-# Hashed-n-gram bucket count for q_dsir_weights: 3 hex chars of the
-# md5 = 4096 buckets.  FIXED size by construction — that is DSIR's
-# design point (the "model" never grows with the corpus), and why
-# the broadcast hints below are safe at ANY scale, unlike the
-# vocab-sized tfidf relation the r4 ADVICE de-hinted.
-_DSIR_K = 4096
-
-
-def q_dsir_weights(spark, sf_dir):
-    """Data Selection via Importance Resampling (Xie et al. 2023,
-    NeurIPS — the DSIR pretraining-data filter): score every document
-    by the log importance ratio of a hashed-n-gram bag model of a
-    TARGET distribution (here: the corpus's lang='en' slice, standing
-    in for the high-quality reference corpus) against the raw corpus
-    distribution.  Features = unigrams + bigrams hashed into K=4096
-    md5 buckets; per-gram term = ln p_target(b) - ln p_raw(b) with
-    add-one smoothing; doc score = sum over the doc's gram instances.
-    Output: (doc_id, n_grams, logweight, avg_logweight, selected)
-    with selected = (raw sum > 0), i.e. the doc leans target.
-
-    Determinism: every ln argument is an integer (count+1 or
-    total+K), so both engines evaluate the bit-portable
-    ln_portable_int; per-doc sums fold in gram-position order
-    (unigrams first, then bigrams — one concatenated array drives
-    posexplode), so even the float columns are bit-exact.
-
-    Scale shape: ONE exploded-gram scan feeds both bucket-count
-    aggregations (map-side-combinable partial counts into at most
-    4096 groups) and the scoring join.  Because the bucket relations
-    are CONSTANT-SIZE (K rows regardless of corpus size), the
-    explicit F.broadcast hints are safe at 10^12 docs — this is
-    exactly the case where a hint is correct, in contrast to the
-    vocab-sized tfidf join where a hint would force a driver OOM at
-    web scale (r4 ADVICE).  The two totals are one-row scalars.  The
-    per-doc reassembly is bounded by document length.  No target-side
-    docs? nt=0 degrades smoothly (add-one smoothing keeps every ln
-    argument >= 1).
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    K = _DSIR_K
-    d = _t(spark, sf_dir, "documents")
-    ts = F.split(F.col("text"), " ")
-    n = F.size(ts)
-    grams = F.concat(
-        ts, F.zip_with(F.slice(ts, 1, n - 1), F.slice(ts, 2, n - 1),
-                       lambda a, b: F.concat_ws(" ", a, b)))
-    x = (d.select("doc_id", "lang",
-                  F.posexplode(grams).alias("pos", "gram"))
-         .select("doc_id", "lang", "pos",
-                 F.conv(F.substring(F.md5(F.col("gram")), 1, 3), 16, 10)
-                  .cast("bigint").alias("bucket")))
-    cq = x.groupBy("bucket").agg(F.count(F.lit(1)).alias("cq"))
-    ct = (x.where(F.col("lang") == "en")
-          .groupBy("bucket").agg(F.count(F.lit(1)).alias("ct")))
-    tot = cq.agg(F.coalesce(F.sum("cq"), F.lit(0)).alias("nq")).crossJoin(
-        ct.agg(F.coalesce(F.sum("ct"), F.lit(0)).alias("nt")))
-    lw = ((ln_portable_int(F.coalesce(F.col("ct"), F.lit(0)) + 1)
-           - ln_portable_int(F.col("nt") + K))
-          - (ln_portable_int(F.col("cq") + 1)
-             - ln_portable_int(F.col("nq") + K)))
-    scored = (x.join(F.broadcast(cq), "bucket")
-              .join(F.broadcast(ct), "bucket", "left")
-              .crossJoin(F.broadcast(tot))
-              .select("doc_id", "pos", lw.alias("lw")))
-    folded = F.aggregate(
-        F.transform(F.sort_array(F.collect_list(F.struct("pos", "lw"))),
-                    lambda s: s["lw"]),
-        F.lit(0.0).cast("double"), lambda acc, v: acc + v)
-    return (scored.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_grams"),
-                 F.round(folded, 6).alias("logweight"),
-                 F.round(folded / F.count(F.lit(1)).cast("double"), 6)
-                  .alias("avg_logweight"),
-                 (folded > F.lit(0.0)).alias("selected")))
-
-
-# Per-source token budget for q_mixture_budget_sample, sized so the
-# fixed 500-doc corpus (~1100 tokens/source) genuinely splits into
-# kept and dropped docs.
-_MIX_BUDGET = 500
-
-
-def q_mixture_budget_sample(spark, sf_dir):
-    """Deterministic mixture sampling under per-source token budgets:
-    every training-data pipeline caps each source's contribution
-    (DoReMi-style mixture weights realized as token budgets).  Docs
-    are visited in a deterministic pseudo-random order within their
-    source (shuffle key = md5(doc_id) — reproducible across runs and
-    engines), and a doc is kept iff the tokens accumulated BEFORE it
-    are still under the budget (overshoot bounded by one document, so
-    the kept set is exactly a prefix of the shuffled order).  Output:
-    (doc_id, source, n_tok, cum_before, kept) for every doc.
-
-    Scale shape: the naive form is a Window partitionBy(source) — a
-    per-source sort, i.e. ONE task per source, and a 10^12-doc corpus
-    with 20 sources is a 20-task skew disaster.  Instead the keyed
-    two-level scan (the q_sequence_pack pattern, generalized to a
-    grouped prefix-sum): the shuffle key's FIRST BYTE is the bucket,
-    and because the bucket is a PREFIX of the key, ordering by
-    (bucket, key) equals ordering by key — so per-(source, bucket)
-    partial sums (256 buckets/source; 4 hex chars at web scale),
-    per-source bucket offsets via a Window over the tiny
-    sources x 256 relation PARTITIONED BY SOURCE (no SinglePartition
-    anywhere in this plan — unlike sequence_pack's global scan, the
-    keyed scan parallelizes the offset level too), broadcast back,
-    and a within-bucket cumsum partitioned by (source, bucket).
-    Per-source parallelism is 256 tasks regardless of source skew.
-    Pinned: zero SinglePartition exchanges in the executed plan.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL (DuckDB uses the plain
-    per-source window — exactness is engine-trivial there) + the
-    random-corpus fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", "source",
-        F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tok"),
-        F.md5(F.col("doc_id").cast("string")).alias("k"))
-    tok = tok.withColumn("b", F.substring("k", 1, 2))
-    bs = tok.groupBy("source", "b").agg(F.sum("n_tok").alias("b_tok"))
-    w_off = (Window.partitionBy("source").orderBy("b")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    boff = bs.select("source", "b",
-                     F.coalesce(F.sum("b_tok").over(w_off), F.lit(0))
-                      .alias("b_off"))
-    w_in = (Window.partitionBy("source", "b").orderBy("k")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    cum = (tok.join(F.broadcast(boff), ["source", "b"])
-           .select("doc_id", "source", "n_tok",
-                   (F.col("b_off")
-                    + F.coalesce(F.sum("n_tok").over(w_in), F.lit(0)))
-                   .alias("cum_before")))
-    return cum.select("doc_id", "source", "n_tok", "cum_before",
-                      (F.col("cum_before") < F.lit(_MIX_BUDGET))
-                      .alias("kept"))
-
-
-# Portable exp — the twin of ln_portable_int, for the same reason
-# (engine libms disagree in the last ulp): k = floor(x/ln2 + 1/2)
-# (identical double ops -> identical k on both engines), r = x - k*ln2
-# in [-ln2/2, ln2/2], exp(r) via a 14-term Taylor Horner, times the
-# exact 2^k.  Matched pair with oracle_sql._exp_sql; bit parity
-# pinned in test_exp_portable_cross_engine (~4 ulp accuracy
-# measured).  Valid for |x| <~ 700 (double overflow), far beyond the
-# loss magnitudes it is used on.
-_INV_FACT = (0.5,
-             0.16666666666666666, 0.041666666666666664,
-             0.008333333333333333, 0.001388888888888889,
-             0.0001984126984126984, 2.48015873015873e-05,
-             2.7557319223985893e-06, 2.755731922398589e-07,
-             2.505210838544172e-08, 2.08767569878681e-09,
-             1.6059043836821613e-10, 1.1470745597729725e-11)
-
-
-def exp_portable(x):
-    """Bit-portable exp of a double column (|x| <~ 700)."""
-    k = F.floor(x / F.lit(_LN2) + F.lit(0.5))
-    r = x - k.cast("double") * F.lit(_LN2)
-    p = F.lit(_INV_FACT[-1])
-    for c in reversed(_INV_FACT[:-1]):
-        p = p * r + F.lit(c)
-    er = F.lit(1.0) + r * (F.lit(1.0) + r * p)
-    return er * F.pow(F.lit(2.0), k.cast("double"))
-
-
-def q_domain_reweight(spark, sf_dir):
-    """DoReMi-style domain reweighting (Xie, Pham et al. 2023): one
-    exponentiated-gradient step over per-domain loss — each source's
-    mixture weight w_d proportional to exp(eta * L_d) (uniform prior,
-    eta = 1), where L_d is the source's mean bigram-LM cross-entropy
-    from q_lm_perplexity (high-loss domains get UPweighted so the
-    model trains where it is weakest — DoReMi's excess-loss signal,
-    with this corpus-trained LM standing in for the proxy/reference
-    model pair).  Output: (source, n_docs, avg_ce, weight), weights
-    summing to 1.
-
-    Determinism — two portable pieces beyond the ln story:
-    (1) FIXED-POINT EXACT AGGREGATION: the per-source mean of the
-    per-doc CE doubles would be order-dependent under float SUM (and
-    an ordered collect_list fold is unbounded at web per-source doc
-    counts).  The CE values are already ROUND(..., 6), so
-    CAST(ROUND(ce * 1e6) AS BIGINT) is lossless; BIGINT sums are
-    associative-exact, so ANY aggregation order gives the same sum —
-    the scalable alternative to the ordered-fold pattern (headroom:
-    2^53 / 1e6 ~ 9e9 CE units per source before overflow; at larger
-    scale, sum into DECIMAL).  (2) exp_portable (above) for the EG
-    step, and the tiny normalizer Z re-uses the same fixed-point
-    trick at 1e9 resolution over ROUND(raw, 9) so the final division
-    is identical on both engines.
-
-    Scale shape: the heavy part is lm_perplexity (audited
-    separately); on top of it sits one doc_id join against the
-    (doc_id, source) projection and a partial-aggregated rollup to
-    #domains rows — everything after that is constant-size.
-
-    Gate note: ships in EXTRA_QUERIES; dual-engine checked via
-    EXTRA_ORACLE_SQL + the random-corpus fuzz."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    ce = q_lm_perplexity(spark, sf_dir)
-    per = (ce.join(d, "doc_id")
-           .groupBy("source")
-           .agg(F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.round(F.col("cross_entropy") * 1e6, 0)
-                      .cast("bigint")).alias("s_micro")))
-    avg = (per.select(
-        "source", "n_docs",
-        (F.col("s_micro").cast("double")
-         / (F.col("n_docs").cast("double") * F.lit(1e6))).alias("avg_ce")))
-    raw9 = F.round(exp_portable(F.col("avg_ce")), 9)
-    scored = avg.select("source", "n_docs", "avg_ce",
-                        raw9.alias("raw9"))
-    z = scored.agg(F.sum(F.round(F.col("raw9") * 1e9, 0).cast("bigint"))
-                   .alias("z_micro"))
-    return (scored.crossJoin(F.broadcast(z))
-            .select("source", "n_docs",
-                    F.round(F.col("avg_ce"), 6).alias("avg_ce"),
-                    F.round(F.col("raw9")
-                            / (F.col("z_micro").cast("double") / F.lit(1e9)),
-                            6).alias("weight")))
-
-
-def _media_after(p):
-    """Deterministic synthetic media slot: a media element follows
-    token position p of doc_id iff the first hex digit of
-    md5('doc_id:p') is '0' (~1/16 of positions).  md5 is the one
-    corpus-independent PRF both engines share bit-for-bit; an
-    arithmetic mod rule would place media at a FIXED residue (gap
-    exactly m apart — no adjacency to filter on)."""
-    return F.substring(
-        F.md5(F.concat_ws(":", F.col("doc_id").cast("string"),
-                          p.cast("string"))), 1, 1) == "0"
-
-
-def q_interleaved_filter(spark, sf_dir):
-    """Interleaved image-text document curation (the OBELICS
-    [Laurencon et al. 2023] / MMC4 [Zhu et al. 2023] filters): for
-    documents carrying an interleaved media stream, compute the
-    media-side quality signals — media count, media density, adjacent
-    media runs, tokens-per-media — and one keep/drop decision with the
-    first failing rule as the reason (the curate_decisions cascade
-    pattern): no_text (< 5 tokens) > no_media (interleaved training
-    needs >= 1 image) > media_dense (over 1 media per 4 tokens — the
-    image-stuffed-gallery shape MMC4 drops) > media_adjacent (images
-    with no text between them — OBELICS collapses/drops these) > keep.
-    Output: (doc_id, n_tokens, n_media, n_adjacent, tok_per_media
-    [-1 when no media], kept, reason).
-
-    The documents table carries no media column, so the media stream
-    is synthesized deterministically per (doc_id, position) via
-    _media_after — the same interleaving contract the flagship span
-    pipeline materializes for real (pipeline.py threads media_refs
-    through the block walk in document order); this operator is the
-    curation pass that would sit in front of it.
-
-    Determinism: every signal is an exact integer off the md5 PRF;
-    tok_per_media is one double division of exact BIGINTs, round(6).
-
-    Scale shape: ZERO shuffles — one narrow per-row scan-project
-    (positions are a bounded per-doc sequence expression, the hash
-    work is O(tokens) exactly like every tokenizing operator here);
-    at 10^12 docs this is the embarrassingly-parallel shape.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    n = F.size(F.split(F.col("text"), " "))
-    base = d.select("doc_id", n.alias("n"))
-    n_media = F.size(F.filter(F.sequence(F.lit(1), F.col("n")),
-                              _media_after))
-    # sequence(1, 0) runs DESCENDING in Spark — guard the n == 1 case.
-    n_adj = F.when(F.col("n") >= 2, F.size(F.filter(
-        F.sequence(F.lit(1), F.col("n") - 1),
-        lambda p: _media_after(p) & _media_after(p + F.lit(1))))) \
-        .otherwise(F.lit(0))
-    m = base.select("doc_id", "n", n_media.alias("n_media"),
-                    n_adj.alias("n_adj"))
-    reason = (F.when(F.col("n") < 5, "no_text")
-              .when(F.col("n_media") == 0, "no_media")
-              .when(4 * F.col("n_media") > F.col("n"), "media_dense")
-              .when(F.col("n_adj") > 0, "media_adjacent")
-              .otherwise("keep"))
-    tpm = F.when(F.col("n_media") == 0, F.lit(-1.0)).otherwise(
-        F.round(F.col("n").cast("double")
-                / F.col("n_media").cast("double"), 6))
-    return m.select(
-        "doc_id", F.col("n").cast("bigint").alias("n_tokens"),
-        F.col("n_media").cast("bigint").alias("n_media"),
-        F.col("n_adj").cast("bigint").alias("n_adjacent"),
-        tpm.alias("tok_per_media"), reason.alias("reason"),
-        (reason == "keep").alias("kept"))
-
-
-def _masked_at(p):
-    """Deterministic corruption mask: token position p of doc_id is
-    masked iff the first TWO hex digits of md5('m:doc_id:p') land
-    below 0x28 (= 40/256 ~ 15.6%, the T5 corruption-rate
-    neighborhood).  Same PRF family as _media_after, different
-    prefix so the two streams are independent."""
-    return F.substring(
-        F.md5(F.concat_ws(":", F.lit("m"),
-                          F.col("doc_id").cast("string"),
-                          p.cast("string"))), 1, 2) < "28"
-
-
-def q_span_corruption(spark, sf_dir):
-    """T5 span-corruption length accounting (Raffel et al. 2020):
-    given the deterministic ~15% token mask, masked positions
-    coalesce into SPANS (maximal masked runs), each span is replaced
-    by one sentinel in the encoder input and reproduced after its
-    sentinel in the decoder target — so inputs_len = n_tokens -
-    n_masked + n_spans and targets_len = n_masked + n_spans + 1 (the
-    final EOS).  Pipelines precompute exactly these two lengths to
-    choose packed batch geometry (the T5 codebase's
-    random_spans_helper solves for them in closed form); this
-    operator materializes them per document.  Output: (doc_id,
-    n_tokens, n_masked, n_spans, mask_rate, inputs_len, targets_len).
-
-    Determinism: the mask is the shared md5 PRF — every count is an
-    exact integer; mask_rate is one exact-operand division, round(6).
-
-    Scale shape: ZERO shuffles — per-row position arithmetic (a span
-    START is a masked position whose predecessor is unmasked, so
-    n_spans needs no sequential walk, just two PRF evaluations per
-    position).
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    n = F.size(F.split(F.col("text"), " "))
-    base = d.select("doc_id", n.alias("n"))
-    n_masked = F.size(F.filter(F.sequence(F.lit(1), F.col("n")),
-                               _masked_at))
-    n_spans = F.size(F.filter(
-        F.sequence(F.lit(1), F.col("n")),
-        lambda p: _masked_at(p)
-        & ((p == 1) | ~_masked_at(p - F.lit(1)))))
-    m = base.select("doc_id", "n", n_masked.alias("nm"),
-                    n_spans.alias("ns"))
-    return m.select(
-        "doc_id", F.col("n").cast("bigint").alias("n_tokens"),
-        F.col("nm").cast("bigint").alias("n_masked"),
-        F.col("ns").cast("bigint").alias("n_spans"),
-        F.round(F.col("nm").cast("double") / F.col("n").cast("double"), 6)
-         .alias("mask_rate"),
-        (F.col("n") - F.col("nm") + F.col("ns")).cast("bigint")
-         .alias("inputs_len"),
-        (F.col("nm") + F.col("ns") + 1).cast("bigint")
-         .alias("targets_len"))
-
-
-# Code-switch detection window (tokens).
-_LS_W = 10
-
-
-def q_lang_switches(spark, sf_dir):
-    """Code-switching / language-consistency detection — multilingual
-    curation drops or splits documents whose language flips
-    mid-document (mixed-language pages defeat both the doc-level
-    language filter and downstream tokenization): the document is cut
-    into fixed _LS_W-token windows, each window is classified with
-    the SAME marker-argmax rule as the doc-level language ID
-    (first language in _LANG_ORDER whose marker score >= every
-    other's — shared semantics, so a 1-window doc always agrees with
-    q_lang_id), and adjacent windows with different predictions count
-    as switches.  Output: (doc_id, n_windows, n_switches,
-    switch_frac [switches / (n_windows - 1), 0 for 1-window docs],
-    doc_lang).
-
-    Determinism: all integer counts and string comparisons; the one
-    division is exact-operand, round(6).
-
-    Scale shape: ZERO shuffles — two nested per-row transforms (the
-    window score structs computed ONCE per window in their own
-    transform, the argmax chain over cheap field references in a
-    second — the multiply-referenced-tree rule).
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    ts = F.split(F.col("text"), " ")
-    n = F.size(ts)
-    nw = F.floor((n + F.lit(_LS_W - 1)) / F.lit(_LS_W)).cast("int")
-
-    def member(lg):
-        # closure factory: a two-parameter lambda would receive the
-        # element INDEX as the second argument (the F.filter trap).
-        return lambda t: t.isin(*LANG_MARKERS[lg])
-
-    def scores_of(arr):
-        return F.struct(*[F.size(F.filter(arr, member(lg))).alias(lg)
-                          for lg in _LANG_ORDER])
-
-    def pred_of(s):
-        out = F.lit(_LANG_ORDER[-1])
-        for lg in reversed(_LANG_ORDER[:-1]):
-            cond = None
-            for other in _LANG_ORDER:
-                if other == lg:
-                    continue
-                c = s[lg] >= s[other]
-                cond = c if cond is None else (cond & c)
-            out = F.when(cond, lg).otherwise(out)
-        return out
-
-    wins = F.transform(F.sequence(F.lit(0), nw - 1),
-                       lambda k: F.slice(ts, k * _LS_W + 1, _LS_W))
-    b1 = d.select("doc_id", nw.alias("nw"),
-                  F.transform(wins, scores_of).alias("sc"),
-                  scores_of(ts).alias("doc_sc"))
-    b2 = b1.select("doc_id", "nw",
-                   F.transform(F.col("sc"), pred_of).alias("preds"),
-                   pred_of(F.col("doc_sc")).alias("doc_lang"))
-    flips = F.zip_with(
-        F.slice(F.col("preds"), 1, F.col("nw") - 1),
-        F.slice(F.col("preds"), 2, F.col("nw") - 1),
-        lambda a, b: a != b)
-    b3 = b2.select("doc_id", "nw", "doc_lang",
-                   F.size(F.filter(flips, lambda x: x)).alias("nsw"))
-    frac = F.when(F.col("nw") <= 1, F.lit(0.0)).otherwise(
-        F.round(F.col("nsw").cast("double")
-                / (F.col("nw") - 1).cast("double"), 6))
-    return b3.select("doc_id", F.col("nw").cast("bigint")
-                     .alias("n_windows"),
-                     F.col("nsw").cast("bigint").alias("n_switches"),
-                     frac.alias("switch_frac"), "doc_lang")
-
-
-# Bottom-k sample size per source.
-_BK_K = 5
-
-
-def q_sample_bottomk(spark, sf_dir):
-    """Deterministic per-source bottom-k sample — k uniform documents
-    without replacement per source, reproducible across runs and
-    engines: keep each source's _BK_K docs with the smallest
-    md5(doc_id) (the bottom-k sketch; because md5 is a fixed PRF the
-    sample is simultaneously a random sample AND a stable one —
-    reruns, resumes and the oracle all select the same docs; contrast
-    sample_stratified's fixed-RATE predicate, which cannot promise a
-    fixed SIZE).  Output: (source, rank, doc_id, h).
-
-    Scale shape: the naive per-source window is one task per source
-    (the mixture_budget_sample skew lesson), so the selection is
-    TWO-LEVEL — per (source, first-hex-digit-bucket) bottom-k first
-    (parallelism 16x sources; 256x with a 2-hex bucket at web
-    scale), then bottom-k over the tiny source x 16 x k candidate
-    relation.  Both levels are rank-limited windows, which Spark
-    executes as WindowGroupLimit (plan-pinned): partial per-partition
-    top-k BEFORE the sort materializes — the window-shaped
-    TakeOrdered.  Each level's filter keeps every true bottom-k row
-    (a source's k smallest hashes occupy at most k buckets), so the
-    two-level result provably equals the one-level window the oracle
-    runs.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    base = d.select("source", "doc_id",
-                    F.md5(F.col("doc_id").cast("string")).alias("h"))
-    lvl1 = base.withColumn("bucket", F.substring(F.col("h"), 1, 1))
-    w1 = Window.partitionBy("source", "bucket").orderBy("h", "doc_id")
-    cand = (lvl1.withColumn("r1", F.row_number().over(w1))
-            .where(F.col("r1") <= _BK_K))
-    w2 = Window.partitionBy("source").orderBy("h", "doc_id")
-    return (cand.withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= _BK_K)
-            .select("source", F.col("rank").cast("bigint").alias("rank"),
-                    "doc_id", "h"))
-
-
-def q_bpe_merges(spark, sf_dir):
-    """Round-1 BPE merge statistics (Sennrich, Haddow & Birch 2016):
-    the top-10 adjacent character pairs by corpus frequency — the
-    argmax of this table IS the first merge a BPE tokenizer trainer
-    performs, and the full ranking is the merge candidate list
-    (successive rounds re-tokenize and recount; at corpus scale each
-    round is exactly this distributed job over the current symbol
-    sequences, driver-looped like connected components).  Output:
-    (pair, n_occurrences), ties by pair.
-
-    Determinism: pure string/integer — pair extraction via the
-    column-form substr both engines share, counts exact.
-
-    Scale shape: one exploded char-pair scan into a map-side partial
-    count, then TakeOrderedAndProject for the top-10 — token_topk's
-    audited shape one level down the tokenization stack (~5 chars/
-    token => ~5x the rows of a token count, same plan).
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    w = d.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
-    n = F.length(F.col("w"))
-    pairs = (w.where(n >= 2)
-             .select(F.explode(F.transform(
-                 F.sequence(F.lit(1), n - 1),
-                 lambda i: F.substr(F.col("w"), i, F.lit(2))))
-                 .alias("pair")))
-    return (pairs.groupBy("pair")
-            .agg(F.count(F.lit(1)).alias("n_occurrences"))
-            .orderBy(F.desc("n_occurrences"), F.asc("pair"))
-            .limit(10))
-
-
-def q_curate_report(spark, sf_dir):
-    """Per-source curation report — the dashboard every production
-    pipeline publishes after a curation run (what did each source
-    lose, and to which rule?): the full curate_decisions cascade
-    joined back to the document axis and rolled up per
-    (source, reason) with document/token counts and each reason's
-    within-source document fraction.  Output: (source, reason,
-    n_docs, n_tokens, frac_docs).
-
-    Determinism: counts/token sums are exact BIGINTs; frac_docs is
-    one exact-operand division (the within-source total is an exact
-    window SUM over BIGINTs), round(6).
-
-    Scale shape: everything heavy is the separately-audited
-    curate_decisions chain; on top sit one doc_id join against the
-    (doc_id, source, n_tokens) projection, a partial-aggregated
-    rollup to #sources x #reasons rows, and a window over that TINY
-    relation (per-source partitions — never SinglePartition).  The
-    composition proves the gate's decisions aggregate without any
-    extra pass over the text.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    cd = q_curate_decisions(spark, sf_dir).select("doc_id", "reason")
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source",
-        F.size(F.split(F.col("text"), " ")).cast("bigint").alias("nt"))
-    per = (cd.join(d, "doc_id")
-           .groupBy("source", "reason")
-           .agg(F.count(F.lit(1)).alias("n_docs"),
-                F.sum("nt").alias("n_tokens")))
-    w = Window.partitionBy("source")
-    return per.select(
-        "source", "reason", F.col("n_docs").cast("bigint").alias("n_docs"),
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.round(F.col("n_docs").cast("double")
-                / F.sum("n_docs").over(w).cast("double"), 6)
-         .alias("frac_docs"))
-
-
-# Bloom geometry: m bits in 32-bit words, k hash functions.
-_BLOOM_M = 65536
-_BLOOM_K = 4
-
-
-def q_dedup_bloom(spark, sf_dir):
-    """Deterministic Bloom-filter sketch of the corpus's exact-dedup
-    fingerprints — the memory-bounded membership structure every
-    incremental web-crawl dedup keeps between snapshots (a new
-    crawl's docs probe the standing filter before any shuffle; false
-    positives only cost a recheck, never a lost doc): k = 4 bit
-    positions per md5(text) key (four disjoint 8-hex-digit slices of
-    the SAME md5, each mod m = 65536), bits packed into 32-bit words.
-    Output: one row per NON-EMPTY word — (word_idx, bits) — the
-    sparse filter; the consumer ORs snapshots together (BIT_OR is the
-    merge, exactly like the HLL register MAX).
-
-    Determinism: bit values are exact powers of two below 2^32
-    (pow(2.0, bit) is integer-exact in a double; 32-bit words keep
-    the sign bit untouched so BIGINT BIT_OR agrees across engines);
-    everything else is md5 + integer arithmetic.
-
-    Scale shape: ONE map-side-combinable BIT_OR aggregation from the
-    key scan to at most m/32 = 2048 rows — the classic mergeable
-    -sketch shape (partial filters OR per partition before the
-    exchange); the filter itself broadcasts for probing.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    h = F.md5(F.col("text"))
-    idxs = F.array(*[
-        (F.conv(F.substring(h, 1 + 8 * i, 8), 16, 10).cast("bigint")
-         % _BLOOM_M)
-        for i in range(_BLOOM_K)])
-    ex = d.select(F.explode(idxs).alias("idx"))
-    bit = (F.col("idx") % 32).cast("int")
-    word = (F.col("idx") - F.col("idx") % 32) / F.lit(32)
-    wb = ex.select(word.cast("bigint").alias("word_idx"),
-                   F.pow(F.lit(2.0), bit).cast("bigint").alias("b"))
-    return (wb.groupBy("word_idx")
-            .agg(F.bit_or("b").alias("bits")))
-
-
-# Winnowing geometry: k-gram size and winnow window (guarantee: any
-# shared run of >= _WIN_W + _WIN_K - 1 tokens shares a fingerprint).
-_WIN_K = 3
-_WIN_W = 4
-
-
-def q_fingerprint_winnow(spark, sf_dir):
-    """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken
-    2003 — the MOSS algorithm; the storage-efficient local
-    fingerprinting used for code/plagiarism dedup in LLM data
-    pipelines): hash every _WIN_K-token gram, slide a _WIN_W-hash
-    window and keep each window's MINIMUM hash — the guarantee is
-    that any match of >= _WIN_W + _WIN_K - 1 tokens between two
-    documents shares at least one kept fingerprint, while storage
-    drops to ~2/(_WIN_W+1) of the gram count.  Output: (doc_id,
-    n_grams, n_kept [distinct winnowed hashes], fp_digest [md5 over
-    the sorted kept set — a comparable whole-document fingerprint]).
-    Docs with fewer grams than the window keep their global minimum
-    (the standard short-doc degeneration); docs shorter than one gram
-    keep nothing (digest of the empty string).
-
-    Determinism: hashes are md5 hex strings — minima and sorts are
-    plain VARCHAR comparisons, identical in both engines; no floats
-    anywhere.
-
-    Scale shape: ZERO shuffles — per-row array arithmetic (the
-    winnow is O(n * w) string compares; the classic deque O(n) form
-    is an imperative micro-optimization the JVM expression wins on
-    anyway at w = 4).  The kept-set digest makes corpus-level dedup a
-    plain exact groupBy on fp_digest downstream.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    ts = F.split(F.col("text"), " ")
-    n = F.size(ts)
-    grams = F.when(n >= _WIN_K, F.transform(
-        F.sequence(F.lit(1), n - F.lit(_WIN_K - 1)),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(ts, i, _WIN_K))))) \
-        .otherwise(F.array().cast("array<string>"))
-    g1 = d.select("doc_id", grams.alias("g"))
-    ng = F.size(F.col("g"))
-    kept = (F.when(ng >= _WIN_W, F.transform(
-                F.sequence(F.lit(1), ng - F.lit(_WIN_W - 1)),
-                lambda j: F.array_min(F.slice(F.col("g"), j, _WIN_W))))
-            .when(ng >= 1, F.array(F.array_min(F.col("g"))))
-            .otherwise(F.array().cast("array<string>")))
-    g2 = g1.select("doc_id", ng.cast("bigint").alias("n_grams"),
-                   F.array_sort(F.array_distinct(kept)).alias("kept"))
-    return g2.select(
-        "doc_id", "n_grams",
-        F.size(F.col("kept")).cast("bigint").alias("n_kept"),
-        F.md5(F.concat_ws("", F.col("kept"))).alias("fp_digest"))
-
-
-def q_hard_negatives(spark, sf_dir):
-    """Contrastive training-pair mining over the LSH candidate
-    structure — the data-side half of dense-retriever / embedding
-    training (ANCE [Xiong et al. 2021] mines hard negatives from the
-    current index exactly like this; DPR/SimCSE consume the pairs):
-    for every anchor vector, its top-1 most-similar SAME-label
-    bucket-mate (the positive) and its top-2 most-similar
-    DIFFERENT-label bucket-mates (the hard negatives — similar
-    embeddings the model must learn to separate).  Output: (vec_id,
-    kind ['pos'|'neg'], rank, neighbor, cos_sim); anchors with no
-    same-label (resp. different-label) candidate emit no rows of that
-    kind (the LSH-recall contract).
-
-    Determinism: identical candidate generation and raw-cosine
-    ranking as q_ann_graph_knn, partitioned by (anchor, kind).
-
-    Scale shape: same as the kNN graph — per-(band, bucket) self-join
-    over ONE reused banding subplan, label lookup rides the existing
-    embedding joins (no extra shuffle), per-(src, kind) row_number
-    top-k.  This is how production retriever refreshes mine negatives
-    at billion-passage scale: block with ANN, rank exactly within
-    blocks.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding",
-                                               "label")
-    band_arr = F.array(*[_band_bucket(b) for b in range(_ND_BANDS)])
-    bands = (e.select("vec_id", "embedding")
-             .select("vec_id", F.posexplode(band_arr).alias("band", "v")))
-    a = bands.alias("a")
-    c = bands.alias("c")
-    cand = (a.join(c, (F.col("a.band") == F.col("c.band"))
-                   & (F.col("a.v") == F.col("c.v"))
-                   & (F.col("a.vec_id") != F.col("c.vec_id")))
-            .select(F.col("a.vec_id").alias("src"),
-                    F.col("c.vec_id").alias("dst"))
-            .distinct())
-    es = e.select(F.col("vec_id").alias("src"),
-                  F.col("embedding").cast("array<double>").alias("es"),
-                  F.col("label").alias("ls"))
-    ed = e.select(F.col("vec_id").alias("dst"),
-                  F.col("embedding").cast("array<double>").alias("ed"),
-                  F.col("label").alias("ld"))
-    cos = _cosine(F.col("es"), F.col("ed"))   # sequential fold = oracle
-    scored = (cand.join(es, "src").join(ed, "dst")
-              .select("src", "dst", cos.alias("cos_raw"),
-                      F.when(F.col("ls") == F.col("ld"), "pos")
-                       .otherwise("neg").alias("kind")))
-    w = Window.partitionBy("src", "kind").orderBy(F.desc("cos_raw"),
-                                                  F.asc("dst"))
-    keep = F.when(F.col("kind") == "pos", 1).otherwise(2)
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= keep)
-            .select(F.col("src").alias("vec_id"), "kind",
-                    F.col("rank").cast("bigint").alias("rank"),
-                    F.col("dst").alias("neighbor"),
-                    F.round(F.col("cos_raw"), 6).alias("cos_sim")))
-
-
-# Temperature exponent for source-mixture sampling (XLM-R's alpha).
-_TEMP_ALPHA = 0.3
-
-
-def q_mixture_temperature(spark, sf_dir):
-    """Temperature-scaled source sampling weights (Conneau et al.
-    2020 / XLM-R, mT5): w_d proportional to (n_tokens_d)^alpha with
-    alpha = 0.3 — the standard fix for low-resource sources being
-    drowned out by proportional sampling (the third mixture lever
-    next to mixture_budget_sample's hard budgets and domain_reweight's
-    loss-driven DoReMi step).  Output: (source, n_docs, n_tokens,
-    weight_prop, weight_temp) — proportional vs temperature-flattened
-    weights, each summing to 1.
-
-    Determinism: n^alpha = exp_portable(alpha * ln_portable_int(n)) —
-    one multiply between two portable fixed-order expressions;
-    weight_prop is a division of exact BIGINTs; both normalizers ride
-    the fixed-point BIGINT trick (ROUND(raw, 9) * 1e9 sums — the
-    domain_reweight pattern, associative-exact in any aggregation
-    order).
-
-    Scale shape: one map-side-combinable groupBy(source) to #sources
-    rows, a one-row fixed-point normalizer broadcast back — constant
-    work after the partial agg at any corpus size.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    per = (d.select("source",
-                    F.size(F.split(F.col("text"), " "))
-                     .cast("bigint").alias("nt"))
-           .groupBy("source")
-           .agg(F.count(F.lit(1)).alias("n_docs"),
-                F.sum("nt").alias("n_tokens")))
-    # exp_portable re-references its argument ~15x (range reduction +
-    # Horner), so the ln tree must land in its OWN projection first —
-    # inlining it at every use bloats the task binary ~15x (measured
-    # 13.6 MiB; CollapseProject keeps multiply-referenced non-cheap
-    # columns separate).
-    al = per.select("source", "n_docs", "n_tokens",
-                    (F.lit(_TEMP_ALPHA)
-                     * ln_portable_int(F.col("n_tokens"))).alias("al"))
-    scored = al.select("source", "n_docs", "n_tokens",
-                       F.round(exp_portable(F.col("al")), 9)
-                        .alias("raw9"))
-    z = scored.agg(
-        F.sum("n_tokens").alias("tot"),
-        F.sum(F.round(F.col("raw9") * 1e9, 0).cast("bigint"))
-         .alias("z_micro"))
-    return (scored.crossJoin(F.broadcast(z))
-            .select("source", "n_docs", "n_tokens",
-                    F.round(F.col("n_tokens").cast("double")
-                            / F.col("tot").cast("double"), 6)
-                     .alias("weight_prop"),
-                    F.round(F.col("raw9")
-                            / (F.col("z_micro").cast("double")
-                               / F.lit(1e9)), 6).alias("weight_temp")))
-
-
-# k-NN graph degree (neighbors kept per vector).
-_KNN_K = 4
-
-
-def q_ann_graph_knn(spark, sf_dir):
-    """Approximate k-NN GRAPH construction over the banded sign-LSH
-    candidate structure — the seed graph of NN-Descent / HNSW-style
-    index builds and the neighbor graph that graph-clustering dedup
-    pipelines consume: for EVERY vector, its top-_KNN_K bucket-mates
-    by exact cosine (vs embedding_near_dup, which emits only
-    threshold-crossing PAIRS — a graph needs per-node top-k whatever
-    the similarity).  Output: (vec_id, rank, neighbor, cos_sim), rank
-    1.._KNN_K by (cosine desc, neighbor id asc); vectors whose buckets
-    hold no other vector emit no rows (the LSH-recall contract, same
-    as near-dup: candidates are DEFINED by the banding).
-
-    Determinism: candidates from the same one-scan banding as
-    embedding_near_dup (both directions here, src != dst); ranking
-    orders on the RAW pinned-order cosine (bit-identical across
-    engines) with neighbor-id ties.
-
-    Scale shape: the self-join is per (band, bucket) — each task
-    touches one bucket's vectors, never the corpus, and both join
-    sides reuse ONE banding subplan/exchange; the per-source top-k is
-    a row_number window riding the src key (bounded by bucket sizes,
-    the banding's selectivity knob).  At 10^12 vectors this is the
-    standard LSH-blocked kNN-graph build; hot buckets salt exactly
-    like the near-dup join.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    band_arr = F.array(*[_band_bucket(b) for b in range(_ND_BANDS)])
-    bands = e.select("vec_id", F.posexplode(band_arr).alias("band", "v"))
-    a = bands.alias("a")
-    c = bands.alias("c")
-    cand = (a.join(c, (F.col("a.band") == F.col("c.band"))
-                   & (F.col("a.v") == F.col("c.v"))
-                   & (F.col("a.vec_id") != F.col("c.vec_id")))
-            .select(F.col("a.vec_id").alias("src"),
-                    F.col("c.vec_id").alias("dst"))
-            .distinct())
-    es = e.select(F.col("vec_id").alias("src"),
-                  F.col("embedding").cast("array<double>").alias("es"))
-    ed = e.select(F.col("vec_id").alias("dst"),
-                  F.col("embedding").cast("array<double>").alias("ed"))
-    cos = _cosine(F.col("es"), F.col("ed"))   # sequential fold = oracle
-    scored = (cand.join(es, "src").join(ed, "dst")
-              .select("src", "dst", cos.alias("cos_raw")))
-    w = Window.partitionBy("src").orderBy(F.desc("cos_raw"),
-                                          F.asc("dst"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= _KNN_K)
-            .select(F.col("src").alias("vec_id"),
-                    F.col("rank").cast("bigint").alias("rank"),
-                    F.col("dst").alias("neighbor"),
-                    F.round(F.col("cos_raw"), 6).alias("cos_sim")))
-
-
-def q_quality_entropy(spark, sf_dir):
-    """Per-document token Shannon entropy — the classic repetition /
-    boilerplate signal (low entropy = a few tokens dominate; used
-    alongside the Gopher repetition rules in web-corpus quality
-    filtering): H = ln(n) - (1/n) * sum_w c_w ln(c_w) over the
-    document's token counts, plus the normalized H / ln(n) in [0, 1].
-    Output: (doc_id, n_tokens, n_distinct, entropy, entropy_norm
-    [0 for single-token docs, where ln(n) = 0]).
-
-    Determinism: token counts come from run-boundary differencing
-    over the SORTED token array (see the in-body comment), so the
-    c*ln(c) float sum runs in token-sorted order on both engines
-    (array_sort here == list(... ORDER BY w) in DuckDB, both binary
-    collation on the ASCII corpus); every ln is ln_portable_int;
-    c = 1 contributes an exact +0.0 so the list_sum-vs-0.0-seed
-    conventions agree.
-
-    Scale shape: ZERO shuffles — per-row sort + O(len) array
-    arithmetic; the alternative explode -> groupBy(doc, w) -> regroup
-    would shuffle the entire token stream twice for a per-doc-local
-    quantity.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    ts = F.split(F.col("text"), " ")
-    # Run lengths WITHOUT a fold: over the sorted array, a run ends at
-    # every 0-based index i where st[i] != st[i+1] (F.get returns NULL
-    # past the end — element_at would raise under ANSI mode — and the
-    # explicit i == n-1 arm closes the last run), and the count array
-    # is the first difference of those boundary indexes.  Everything
-    # is O(len) array arithmetic; the fold alternative re-allocates
-    # the counts array per element (O(d^2) copies, measured 5x
-    # slower), and inlining the 40-op portable-ln tree into a fold
-    # body additionally blows the JVM method limit (measured: ERROR
-    # CodeGenerator + interpreted fallback).  The ln terms evaluate in
-    # one flat transform over the counts, in run order == token-sorted
-    # order (the oracle's list(... ORDER BY w)).
-    s0 = d.select("doc_id", F.array_sort(ts).alias("st"),
-                  F.size(ts).cast("bigint").alias("n"),
-                  F.size(F.array_distinct(ts)).cast("bigint").alias("nd"))
-    ends = F.filter(
-        F.sequence(F.lit(0).cast("bigint"), F.col("n") - 1),
-        lambda i: (i == F.col("n") - 1)
-        | (F.get(F.col("st"), i) != F.get(F.col("st"), i + 1)))
-    sb = s0.select("doc_id", "n", "nd", ends.alias("ends"))
-    counts = F.transform(
-        F.col("ends"),
-        lambda e, k: (e - F.when(k == 0, F.lit(-1).cast("bigint"))
-                      .otherwise(F.element_at(F.col("ends"), k)))
-        .cast("bigint"))
-    s1 = sb.select("doc_id", "n", "nd", counts.alias("cs"))
-    s2 = s1.select(
-        "doc_id", "n", "nd",
-        F.aggregate(
-            F.transform(F.col("cs"),
-                        lambda c: c.cast("double") * ln_portable_int(c)),
-            F.lit(0.0), lambda acc, x: acc + x).alias("s0"))
-    s3 = s2.select("doc_id", "n", "nd", F.col("s0").alias("s"),
-                   ln_portable_int(F.col("n")).alias("lnn"))
-    s4 = s3.select("doc_id", "n", "nd", "lnn",
-                   (F.col("lnn") - F.col("s")
-                    / F.col("n").cast("double")).alias("hr"))
-    return s4.select(
-        "doc_id", F.col("n").alias("n_tokens"),
-        F.col("nd").alias("n_distinct"),
-        F.round(F.col("hr"), 6).alias("entropy"),
-        F.when(F.col("n") >= 2,
-               F.round(F.col("hr") / F.col("lnn"), 6))
-         .otherwise(F.lit(0.0)).alias("entropy_norm"))
-
-
-def q_quality_classifier(spark, sf_dir):
-    """Linear content-vs-boilerplate classifier scoring — the
-    classifier stage of the reference architecture (a pretrained
-    model scoring each unit, here fastText-style [Joulin et al. 2017]
-    hashed bag-of-words; GPT-3/CCNet run exactly this shape as their
-    corpus quality filter).  Each token hashes to one of 101 fixed
-    pseudo-weights in [-0.5, 0.5) (md5-derived — a deterministic
-    stand-in for trained coefficients: the operator under test is the
-    scoring plumbing, not the fit), the document logit is intercept +
-    the position-ordered weight sum, and the score is a portable
-    sigmoid.  Output: (doc_id, n_tokens, logit, score, label) with
-    label = 'content' iff the RAW logit >= 0 (no float-threshold
-    ambiguity).
-
-    Determinism: the weight sum folds in position order (the
-    ann_cosine sequential-accumulation pattern — list_sum's order on
-    the DuckDB side); weights are single divisions of exact integers
-    (101 odd, so no weight is ever an exact +-0.0 to trip the
-    zero-sign convention); sigmoid = 1/(1 + exp_portable(-z)) — the
-    same fixed-order IEEE expression on both engines.
-
-    Scale shape: ZERO shuffles — per-row array hash + fold, O(tokens)
-    per doc like every tokenizing operator here; a real trained
-    weight vector arrives as a broadcast map without changing the
-    plan (the fastText production deployment shape).
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    ts = F.split(F.col("text"), " ")
-
-    def w(tok):
-        return (F.conv(F.substring(F.md5(tok), 1, 8), 16, 10)
-                .cast("bigint") % 101).cast("double") / 101.0 - 0.5
-
-    z = F.lit(-0.05) + F.aggregate(
-        F.transform(ts, w), F.lit(0.0),
-        lambda acc, x: acc + x)
-    s1 = d.select("doc_id", F.size(ts).cast("bigint").alias("n_tokens"),
-                  z.alias("z"))
-    score = F.lit(1.0) / (F.lit(1.0) + exp_portable(-F.col("z")))
-    return s1.select(
-        "doc_id", "n_tokens", F.round(F.col("z"), 6).alias("logit"),
-        F.round(score, 6).alias("score"),
-        F.when(F.col("z") >= 0, "content").otherwise("boilerplate")
-         .alias("label"))
-
-
-# Multimodal packing geometry: context capacity and the fixed token
-# cost of one media element (the vision-encoder patch budget).
-_PACK_C = 64
-_PACK_MCOST = 16
-
-
-def q_interleaved_pack(spark, sf_dir):
-    """Multimodal sequence packing over the interleaved text+media
-    stream — the sample-assembly stage of interleaved training
-    pipelines (Flamingo/OBELICS-style): each document's ordered spans
-    (maximal text runs between media slots, media elements at a fixed
-    _PACK_MCOST-token cost) are packed greedily into _PACK_C-token
-    contexts where TEXT spans split freely across context boundaries
-    but MEDIA spans are ATOMIC — a media element that would straddle a
-    boundary pads the current context and starts in the next (an image
-    cannot be half-fed to the vision encoder).  The media stream is
-    the shared deterministic _media_after PRF (see
-    q_interleaved_filter).  Output: one row per span — (doc_id, seq,
-    kind, span_len, media_ref, pad_before, start_pos, ctx_id,
-    ctx_offset), positions in the document's packed token stream.
-
-    Determinism: all integers off the md5 PRF; no floats anywhere.
-
-    Scale shape: packing is per-document sequential BY DEFINITION
-    (each span's placement depends on the fill state before it), so
-    it runs as a bounded per-doc JVM fold — O(spans) per document, no
-    shuffle, no UDF; documents pack independently (embarrassingly
-    parallel across the corpus), and the giant-doc escape hatch is
-    the same chunked/halo path the flagship uses (sequence_pack's
-    two-level scan does not apply: the padding rule is nonlinear in
-    position, there is no closed-form prefix-sum).  The fold
-    accumulates a plain BIGINT array of positions-after (sentinel 0),
-    so each step's expression references only O(1) array-tail
-    accesses of the lambda accumulator — the run-once fold rule
-    quality_repetition documents; start/pad/ctx derive POST-explode
-    from the emitted positions via layered selects, never by
-    re-referencing the fold Column.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked (recursive-CTE DuckDB walk) via
-    EXTRA_ORACLE_SQL + the random-corpus fuzz."""
-    C = F.lit(_PACK_C).cast("bigint")
-    d = _t(spark, sf_dir, "documents")
-    n = F.size(F.split(F.col("text"), " "))
-    base = d.select(
-        "doc_id", n.alias("n"),
-        F.filter(F.sequence(F.lit(1), n), _media_after).alias("mb"))
-
-    def _prev(i):
-        # element_at is 1-based, i is the 0-based transform index, so
-        # element_at(mb, i) IS the previous media position.
-        return F.when(i == 0, F.lit(0)).otherwise(
-            F.element_at(F.col("mb"), i)).cast("bigint")
-
-    pairs = F.flatten(F.transform(
-        F.col("mb"),
-        lambda p, i: F.array(
-            F.struct(F.lit("text").alias("kind"),
-                     (p - _prev(i)).cast("bigint").alias("len"),
-                     F.lit(None).cast("string").alias("ref")),
-            F.struct(F.lit("media").alias("kind"),
-                     F.lit(_PACK_MCOST).cast("bigint").alias("len"),
-                     F.concat(F.lit("img://"),
-                              F.col("doc_id").cast("string"),
-                              F.lit("/"), p.cast("string"))
-                     .alias("ref")))))
-    tail = F.when(F.size(F.col("mb")) == 0, F.col("n")).otherwise(
-        F.col("n") - F.element_at(F.col("mb"), F.size(F.col("mb"))))
-    spans = F.filter(
-        F.concat(pairs, F.array(F.struct(
-            F.lit("text").alias("kind"),
-            tail.cast("bigint").alias("len"),
-            F.lit(None).cast("string").alias("ref")))),
-        lambda s: ~((s.kind == "text") & (s.len == 0)))
-    sp = base.select("doc_id", spans.alias("sp"))
-    folded = F.aggregate(
-        F.col("sp"), F.array(F.lit(0).cast("bigint")),
-        lambda acc, s: F.concat(acc, F.array(
-            F.when((s.kind == "media")
-                   & (F.element_at(acc, -1) % C + s.len > C),
-                   F.element_at(acc, -1)
-                   + (C - F.element_at(acc, -1) % C) + s.len)
-            .otherwise(F.element_at(acc, -1) + s.len))),
-        lambda acc: F.slice(acc, 2, F.size(acc) - 1))
-    w = sp.select("doc_id", "sp", folded.alias("pa"))
-    ex = w.select("doc_id", "pa",
-                  F.posexplode(F.arrays_zip("sp", "pa")).alias("i", "z"))
-    s1 = ex.select(
-        "doc_id", (F.col("i") + 1).cast("bigint").alias("seq"),
-        F.col("z.sp.kind").alias("kind"),
-        F.col("z.sp.len").alias("span_len"),
-        F.col("z.sp.ref").alias("media_ref"),
-        (F.col("z.pa") - F.col("z.sp.len")).alias("start_pos"),
-        F.when(F.col("i") == 0, F.lit(0).cast("bigint"))
-         .otherwise(F.element_at(F.col("pa"), F.col("i")))
-         .alias("prev_after"))
-    return s1.select(
-        "doc_id", "seq", "kind", "span_len", "media_ref",
-        (F.col("start_pos") - F.col("prev_after")).alias("pad_before"),
-        "start_pos",
-        F.floor(F.col("start_pos") / C).cast("bigint").alias("ctx_id"),
-        (F.col("start_pos") % C).alias("ctx_offset"))
-
-
-# Overlapping-window substring-dedup window length (tokens).  Lee et
-# al. use 50-token windows on BPE streams; 5 fits the toy corpus's
-# 1-120-word documents while exercising the identical plan shape.
-_SUB_W = 5
-
-
-def q_dedup_substrings(spark, sf_dir):
-    """Duplicated-substring fraction (Lee et al. 2022, 'Deduplicating
-    Training Data Makes Language Models Better' — the ExactSubstr
-    criterion): every OVERLAPPING _SUB_W-token window is fingerprinted,
-    a window is duplicated iff its fingerprint occurs more than once in
-    the corpus (across documents or repeated within one), and each
-    document reports its duplicated-window fraction — the signal the
-    paper cuts on.  Output: (doc_id, n_windows, n_dup, dup_frac,
-    flagged), flagged iff dup_frac >= 0.3 (evaluated as the exact
-    integer comparison 10*n_dup >= 3*n_windows) with docs shorter than
-    the window never flagged.  Distinct from dedup_segments: that pass
-    dedups fixed NON-overlapping segments first-occurrence-wins; this
-    one measures how much of a document is duplicated text at every
-    alignment, the paper's substring-level criterion.
-
-    Determinism: counts are exact BIGINTs; dup_frac is one double
-    division of exact operands, then round(6).
-
-    Scale shape: the paper's suffix array is inherently sequential —
-    the distributed re-expression is fingerprint-partitioned: ONE
-    exploded-window scan (bounded fan-out: n-W+1 windows/doc) shuffles
-    on the fingerprint for the global count, the count joins back on
-    the same key (exchange reuse — the window relation shuffles once),
-    and the per-doc rollup rides the doc_id key.  Giant documents fan
-    out across the fingerprint space instead of hot-spotting — the
-    dedup_segments/contamination shape exactly.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    ts = F.split(F.col("text"), " ")
-    base = d.select("doc_id", ts.alias("ts"), F.size(ts).alias("n"))
-    wins = (base.where(F.col("n") >= _SUB_W)
-            .select("doc_id", F.explode(F.transform(
-                F.sequence(F.lit(1), F.col("n") - F.lit(_SUB_W - 1)),
-                lambda i: F.md5(F.concat_ws(
-                    " ", F.slice(F.col("ts"), i, _SUB_W))))).alias("fp")))
-    cnt = wins.groupBy("fp").agg(F.count(F.lit(1)).alias("c"))
-    per = (wins.join(cnt, "fp")
-           .groupBy("doc_id")
-           .agg(F.count(F.lit(1)).alias("n_windows"),
-                F.sum((F.col("c") > 1).cast("bigint")).alias("n_dup")))
-    nw = F.coalesce(F.col("n_windows"), F.lit(0)).cast("bigint")
-    nd = F.coalesce(F.col("n_dup"), F.lit(0)).cast("bigint")
-    frac = F.when(nw == 0, F.lit(0.0)).otherwise(
-        F.round(nd.cast("double") / nw.cast("double"), 6))
-    return (base.select("doc_id").join(per, "doc_id", "left")
-            .select("doc_id", nw.alias("n_windows"), nd.alias("n_dup"),
-                    frac.alias("dup_frac"),
-                    ((nd * 10 >= nw * 3) & (nw > 0)).alias("flagged")))
-
-
-# BM25 constants (Robertson & Zaragoza 2009 defaults) and the fixed
-# keyword query.  The idf is Lucene's non-negative variant
-# ln(1 + (N - df + 0.5)/(df + 0.5)) = ln((2N+2)/(2df+1)) — a ratio of
-# INTEGERS, so it evaluates as a difference of two portable integer
-# lns (no float ln anywhere).
-_BM25_TERMS = ("spark", "window", "merge")
-_BM25_K1 = 1.2
-_BM25_B = 0.75
-
-
-def q_bm25_topk(spark, sf_dir):
-    """BM25 keyword retrieval (Robertson & Zaragoza 2009; the Lucene
-    practical-scoring variant): score every document against the fixed
-    keyword query and return the top-10 — the lexical twin of the ANN
-    suite's dense retrieval (production retrieval stacks run BOTH and
-    fuse).  score = sum_t idf_t * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))
-    with k1 = 1.2, b = 0.75, dl = document token length, avgdl the
-    corpus mean.
-
-    Determinism: idf_t = ln((2N+2)/(2df_t+1)) is a difference of two
-    ln_portable_int values (bit-identical across engines); tf/df/dl
-    are exact BIGINTs; avgdl is ONE double division of exact BIGINTs;
-    the per-term contributions are summed in fixed written order
-    (3 terms), and every float subexpression is written with the same
-    association on both engines.  Ties in the top-10 break by doc_id.
-
-    Scale shape: per-document tf/dl are per-row array expressions (no
-    explode — the query has 3 terms, not the corpus vocabulary), the
-    corpus statistics (N, sum dl, per-term df) collapse to ONE row via
-    a map-side partial aggregation broadcast back, and the top-10 is a
-    TakeOrderedAndProject — no global sort, no shuffle of the corpus
-    anywhere.  At a 10^12-doc corpus this is one narrow scan + one
-    scalar broadcast; a longer query adds columns, not shuffles.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    d = _t(spark, sf_dir, "documents")
-    ts = F.split(F.col("text"), " ")
-    def _eq(term):
-        # NB: a two-arg lambda would be read by F.filter as
-        # (element, index) — close over the term instead.
-        return lambda x: x == F.lit(term)
-
-    tf_cols = [F.size(F.filter(ts, _eq(t))).cast("bigint").alias(f"tf{i}")
-               for i, t in enumerate(_BM25_TERMS)]
-    base = d.select("doc_id", F.size(ts).cast("bigint").alias("dl"),
-                    *tf_cols)
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("sum_dl"),
-        *[F.sum((F.col(f"tf{i}") > 0).cast("bigint")).alias(f"df{i}")
-          for i in range(len(_BM25_TERMS))])
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
-    score = F.lit(0.0)
-    for i in range(len(_BM25_TERMS)):
-        idf = ln_portable_int(F.lit(2) * F.col("n_docs") + F.lit(2)) \
-            - ln_portable_int(F.lit(2) * F.col(f"df{i}") + F.lit(1))
-        tf = F.col(f"tf{i}").cast("double")
-        denom = tf + F.lit(_BM25_K1) * (F.lit(1.0) - F.lit(_BM25_B)
-                                        + F.lit(_BM25_B)
-                                        * F.col("dl").cast("double")
-                                        / avgdl)
-        score = score + idf * (tf * F.lit(_BM25_K1 + 1.0)) / denom
-    return (base.crossJoin(F.broadcast(stats))
-            .select("doc_id", "dl", F.round(score, 6).alias("score_bm25"))
-            .orderBy(F.desc("score_bm25"), F.asc("doc_id"))
-            .limit(10))
-
-
-# SemDeDup similarity threshold: members whose max cosine to any
-# earlier-ordered cluster member reaches tau are dropped (1 - eps in
-# the paper's notation, eps = 0.2).
-_SEM_TAU = 0.8
-
-
-def _qcos(num, na, nb):
-    """Bit-portable cosine from exact BIGINT dot products: one double
-    cast per operand (exact below 2^53), two IEEE sqrts, one multiply,
-    one division — no accumulation order anywhere, so Spark and DuckDB
-    agree to the last bit.  Zero-norm guards: two zero vectors are
-    identical (sim 1), one zero vector is similar to nothing (sim 0)."""
-    return (F.when((na == 0) & (nb == 0), F.lit(1.0))
-            .when((na == 0) | (nb == 0), F.lit(0.0))
-            .otherwise(num.cast("double")
-                       / (F.sqrt(na.cast("double"))
-                          * F.sqrt(nb.cast("double")))))
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    deduplication of the embedding table — cluster with k-means, then
-    within each cluster drop every member whose cosine similarity to
-    an EARLIER-ordered member reaches tau = 0.8.  The order is the
-    released implementation's: descending similarity to the cluster
-    centroid (most-typical first), ties by vec_id; like that
-    implementation the max is taken over ALL earlier members (kept or
-    not), which needs no recursion.  Output: (vec_id, cluster,
-    centroid_sim, max_prev_sim [-1 when the member is first in its
-    cluster], kept).
-
-    Determinism: clustering is the shared exact-arithmetic Lloyd
-    update (_kmeans_fit); every similarity is computed on the
-    floor-quantized integer vectors via _qcos — exact BIGINT dot
-    products (fuzz bound: |q| <= 301, n <= 2000 => qdot(sv, sv) <
-    6e14 < 2^53), so no float accumulation order exists anywhere and
-    both engines agree bitwise, including the order predicate's raw
-    float comparisons.
-
-    Scale shape: the pairwise comparison is confined WITHIN clusters —
-    the paper's whole point (k ~ sqrt(N) keeps expected cluster size
-    ~ sqrt(N), so cluster-pairwise is O(N^1.5) not O(N^2) — at 10^12
-    docs k ~ 10^6 and the per-cluster work is bounded); it is ONE
-    self-join shuffled on the cluster key, partial-agg MAX per member
-    (no pair materialization past the join), and a hot cluster
-    fans out over the join's salt-able key, the same lever every
-    bucket self-join in this file documents.  Centroids (<= 16 rows
-    here, ~10^6 at web scale: still a broadcast table) are broadcast
-    into both the assignment and the member-similarity joins.
-
-    Gate note: ships in EXTRA_QUERIES (driver cap fully allocated);
-    dual-engine checked via EXTRA_ORACLE_SQL + the random-corpus
-    fuzz."""
-    e = _t(spark, sf_dir, "embeddings")
-    eq = e.select("vec_id", _quantize(F.col("embedding")).alias("qv"))
-    a2, c1 = _kmeans_fit(eq)
-    m = (a2.join(eq, "vec_id")
-         .join(F.broadcast(c1), a2.cluster == c1.cid)
-         .select("vec_id", "cluster", "qv",
-                 _qdot(F.col("qv"), F.col("qv")).alias("nq"),
-                 _qcos(_qdot(F.col("qv"), F.col("sv")),
-                       _qdot(F.col("qv"), F.col("qv")),
-                       _qdot(F.col("sv"), F.col("sv"))).alias("cs")))
-    u = m.select(F.col("vec_id").alias("u_id"),
-                 F.col("cluster").alias("u_cl"),
-                 F.col("qv").alias("u_qv"), F.col("nq").alias("u_nq"),
-                 F.col("cs").alias("u_cs"))
-    v = m.select(F.col("vec_id").alias("v_id"),
-                 F.col("cluster").alias("v_cl"),
-                 F.col("qv").alias("v_qv"), F.col("nq").alias("v_nq"),
-                 F.col("cs").alias("v_cs"))
-    prior = (F.col("u_cs") > F.col("v_cs")) | \
-            ((F.col("u_cs") == F.col("v_cs"))
-             & (F.col("u_id") < F.col("v_id")))
-    sim = _qcos(_qdot(F.col("u_qv"), F.col("v_qv")),
-                F.col("u_nq"), F.col("v_nq"))
-    mp = (u.join(v, (F.col("u_cl") == F.col("v_cl")) & prior)
-          .groupBy("v_id").agg(F.max(sim).alias("max_prev")))
-    prev = F.coalesce(F.col("max_prev"), F.lit(-1.0))
-    return (m.join(mp, m.vec_id == mp.v_id, "left")
-            .select(m.vec_id,
-                    F.col("cluster").cast("bigint").alias("cluster"),
-                    F.round(F.col("cs"), 6).alias("centroid_sim"),
-                    F.round(prev, 6).alias("max_prev_sim"),
-                    (prev < F.lit(_SEM_TAU)).alias("kept")))
-
-
 # Driver-gate registry.  The driver's correctness gate caps at 50
 # queries (CORRECTNESS_r04 silently dropped entries 51-55 — r4
-# verdict #1), so this dict is kept at <= 41 entries and
+# verdict #1), so this dict is kept at <= 41 entries (40 today) and
 # __spark_entry__.queries() prepends the 9 flagship/metrics entries
 # FIRST; near-duplicate operator variants are merged into single
 # multi-column/tagged relations (token_counts, doc_fingerprint,
@@ -3387,7 +1672,6 @@ QUERIES = {
     "media_features": _q_media_features,
     "windowed_stats": q_windowed_stats,
     "dedup_components": q_dedup_components,
-    "dedup_components_star": q_dedup_components_star,
     "token_topk": q_token_topk,
     "sample_stratified": q_sample_stratified,
     "media_frame_sample": _q_media_frame_sample,
@@ -3403,36 +1687,4 @@ QUERIES = {
     "events_sessionize": q_events_sessionize,
     "curate_decisions": q_curate_decisions,
     "pii_redact": q_pii_redact,
-}
-
-# Operators beyond the 50-entry driver-gate cap: identical dual-engine
-# discipline (DuckDB oracle in oracle_sql.EXTRA_ORACLE_SQL, fixed-
-# corpus cell-exact check + random-corpus fuzz in the suite), just not
-# driver-exposed — the cap is fully allocated and every merge slot is
-# spent (see the QUERIES comment above).
-EXTRA_QUERIES = {
-    "dedup_incremental": q_dedup_incremental,
-    "dedup_keep_best": q_dedup_keep_best,
-    "sequence_pack": q_sequence_pack,
-    "lm_perplexity": q_lm_perplexity,
-    "dsir_weights": q_dsir_weights,
-    "mixture_budget_sample": q_mixture_budget_sample,
-    "domain_reweight": q_domain_reweight,
-    "semantic_dedup": q_semantic_dedup,
-    "bm25_topk": q_bm25_topk,
-    "dedup_substrings": q_dedup_substrings,
-    "interleaved_filter": q_interleaved_filter,
-    "interleaved_pack": q_interleaved_pack,
-    "quality_classifier": q_quality_classifier,
-    "quality_entropy": q_quality_entropy,
-    "ann_graph_knn": q_ann_graph_knn,
-    "mixture_temperature": q_mixture_temperature,
-    "span_corruption": q_span_corruption,
-    "hard_negatives": q_hard_negatives,
-    "fingerprint_winnow": q_fingerprint_winnow,
-    "dedup_bloom": q_dedup_bloom,
-    "curate_report": q_curate_report,
-    "bpe_merges": q_bpe_merges,
-    "sample_bottomk": q_sample_bottomk,
-    "lang_switches": q_lang_switches,
 }

@@ -45,11 +45,31 @@ def find_iceberg_jar() -> str | None:
     return None
 
 
+def host_cores() -> int:
+    """Default ``local[N]``: ``$SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on (honours taskset/cgroup pinning)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+
+
+def driver_mem() -> str:
+    """Default driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else half of
+    MemTotal capped at 16g.  The heap is pinned (-Xms), so a fixed
+    default larger than the host's RAM kills the JVM at startup."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f
+                        if line.startswith("MemTotal:"))
+    return f"{min(16 * 1024, total_kb // 2048)}m"
+
+
 def get_spark(app_name: str = "dragnet-spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               arrow_batch_rows: int = 64) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = host_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     # Large transient buffers (strip decode, series encode) otherwise
@@ -58,7 +78,7 @@ def get_spark(app_name: str = "dragnet-spark", cores: int | None = None,
     # the JVM forks the Python workers (they inherit the env).
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "536870912")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "536870912")
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = driver_mem()
     builder = (
         SparkSession.builder
         .master(f"local[{cores}]")

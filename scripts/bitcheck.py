@@ -49,17 +49,9 @@ def bits(x):
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", *names: str) -> int:
-    # Beyond-the-gate-cap operators (EXTRA lane) ride the same
-    # bit-pattern check: merged after the driver dicts so a name
-    # collision would resolve to the gate entry, never shadow it.
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL  # noqa: E402
-    from dragnet_spark.queries import EXTRA_QUERIES  # noqa: E402
-
-    queries = {**entry_mod.queries(), **EXTRA_QUERIES}
-    oracles = {**entry_mod.oracle_sql(), **EXTRA_ORACLE_SQL}
+    queries = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
     names = list(names) or ["dedisperse_sk_full", "dedisperse_clipped"]
-    if names == ["--extra"]:
-        names = list(EXTRA_QUERIES)
     spark = get_spark(app_name="bitcheck", cores=8, shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:

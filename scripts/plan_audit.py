@@ -127,160 +127,6 @@ CHECKS: dict[str, tuple[list[str], list[str]]] = {
     # PII scrub: a single narrow scan-projection — regex count/replace
     # are JVM codegen expressions; zero shuffles, zero joins.
     "pii_redact": ([r"ReadSchema[^\n]*text"], [r"Exchange", r"Join"]),
-    # Incremental dedup (EXTRA_QUERIES — beyond the gate cap): the
-    # batch x corpus band join is a hash join, never all-pairs, and
-    # nothing materializes driver-side; the executed-plan pins (split
-    # predicate pushed into every scan, no shingle array on any
-    # exchange) live in tests/test_training_ops.py.
-    "dedup_incremental": ([r"HashJoin|SortMergeJoin"],
-                          [r"CartesianProduct",
-                           r"BroadcastNestedLoopJoin",
-                           r"LocalTableScan", r"InMemoryTableScan"]),
-    # Keep-best representative (EXTRA_QUERIES): the per-cluster argmax
-    # is an AGGREGATION over a (quality, -doc_id) struct (partial/map-
-    # side combinable), never a per-component window sort; the tiny
-    # label and one-row-per-cluster rep relations broadcast back
-    # against the corpus.
-    "dedup_keep_best": ([r"BroadcastHashJoin", r"partial_max"],
-                        [r"CartesianProduct",
-                         r"BroadcastNestedLoopJoin", r"Window"]),
-    # Sequence packing (EXTRA_QUERIES): the global token prefix-sum is
-    # the two-level scan — per-bucket partial sums, bucket offsets
-    # broadcast back, per-bucket Window partitioned by g; bin fan-out
-    # is a bounded sequence-explode, never a cartesian.  The
-    # exactly-one-SinglePartition pin (the tiny bucket relation) lives
-    # in tests/test_training_ops.py.
-    "sequence_pack": ([r"partial_sum", r"BroadcastHashJoin",
-                       r"windowspecdefinition\(g#"],
-                      [r"CartesianProduct",
-                       r"BroadcastNestedLoopJoin", r"LocalTableScan"]),
-    # Bigram-LM cross-entropy (EXTRA_QUERIES): both count relations
-    # are map-side-combinable partial aggs joined back WITHOUT hints
-    # (broadcast below the threshold, pre-aggregated shuffle join at
-    # web vocab); the per-doc position-ordered fold reassembles via a
-    # partial collect_list, and the portable-ln stays in codegen (no
-    # BatchEvalPython anywhere).  The only nested-loop join is the
-    # benign broadcast cross of the ONE-ROW vocabulary scalar (the
-    # same allowance approx_distinct_hll's final cross carries).
-    "lm_perplexity": ([r"partial_count", r"partial_collect_list"],
-                      [r"CartesianProduct",
-                       r"BatchEvalPython", r"LocalTableScan"]),
-    # DSIR importance weights (EXTRA_QUERIES): both bucket-count
-    # relations are CONSTANT-size (4096 rows), so the explicit
-    # broadcast hints are safe at any corpus scale (the opposite of
-    # the vocab-sized tfidf case); counts are map-side partials, the
-    # per-doc fold reassembles via partial collect_list, the portable
-    # ln stays in codegen.  The one-row totals cross is the benign
-    # scalar broadcast.
-    "dsir_weights": ([r"partial_count", r"partial_collect_list",
-                      r"BroadcastHashJoin"],
-                     [r"CartesianProduct",
-                      r"BatchEvalPython", r"LocalTableScan"]),
-    # Mixture budget sampling (EXTRA_QUERIES): the keyed two-level
-    # scan — per-(source, key-prefix-bucket) partial sums, per-source
-    # offsets window over the tiny bucket relation, broadcast back —
-    # leaves NO SinglePartition exchange anywhere (the naive
-    # per-source Window is a one-task-per-source skew disaster).
-    "mixture_budget_sample": ([r"partial_sum", r"BroadcastHashJoin",
-                               r"windowspecdefinition\(source#"],
-                              [r"CartesianProduct", r"SinglePartition",
-                               r"BroadcastNestedLoopJoin",
-                               r"LocalTableScan"]),
-    # DoReMi domain reweighting (EXTRA_QUERIES): the rollup above the
-    # separately-audited lm_perplexity chain is one partial-agg to
-    # #domains rows; the portable exp stays in codegen; only
-    # nested-loop joins are the benign one-row scalar broadcasts
-    # (vocab V and normalizer Z).
-    "domain_reweight": ([r"partial_sum", r"partial_count"],
-                        [r"CartesianProduct", r"BatchEvalPython",
-                         r"LocalTableScan"]),
-    # SemDeDup (EXTRA_QUERIES): clustering is the shared exact Lloyd
-    # update (its <= 16-row centroid broadcasts are the only
-    # nested-loop joins); the pairwise stage is ONE equi-join on the
-    # cluster key with a map-side partial MAX — cluster-confined,
-    # never a corpus-level cartesian.
-    "semantic_dedup": ([r"partial_max"],
-                       [r"CartesianProduct", r"BatchEvalPython",
-                        r"LocalTableScan"]),
-    # BM25 (EXTRA_QUERIES): per-doc tf/dl are per-row array exprs (no
-    # explode), the corpus stats collapse to ONE broadcast row, and
-    # the top-10 is a TakeOrdered — the corpus never shuffles.
-    "bm25_topk": ([r"TakeOrderedAndProject", r"partial_count"],
-                  [r"SortMergeJoin", r"CartesianProduct",
-                   r"BatchEvalPython", r"LocalTableScan"]),
-    # ExactSubstr duplicated-window fraction (EXTRA_QUERIES): one
-    # exploded-window scan shuffles on the fingerprint (map-side
-    # partial count), the count joins back on the same key, the
-    # per-doc rollup rides doc_id — giant docs fan out across the
-    # fingerprint space instead of hot-spotting.
-    "dedup_substrings": ([r"partial_count"],
-                         [r"CartesianProduct", r"BatchEvalPython",
-                          r"LocalTableScan"]),
-    # Interleaved media-text curation (EXTRA_QUERIES): embarrassingly
-    # parallel — ZERO shuffles/joins, one narrow scan-project.
-    "interleaved_filter": ([], [r"Exchange", r"Join",
-                                r"BatchEvalPython", r"LocalTableScan"]),
-    # Multimodal packing (EXTRA_QUERIES): the greedy walk is a bounded
-    # per-doc JVM fold — zero shuffles/joins, docs pack independently.
-    "interleaved_pack": ([], [r"Exchange", r"Join",
-                              r"BatchEvalPython", r"LocalTableScan"]),
-    # Hashed linear classifier (EXTRA_QUERIES): per-row hash + fold,
-    # zero shuffles/joins — the fastText-scoring production shape.
-    "quality_classifier": ([], [r"Exchange", r"Join",
-                                r"BatchEvalPython", r"LocalTableScan"]),
-    # Token entropy (EXTRA_QUERIES): per-row sort + boundary
-    # differencing + flat ln transform — zero shuffles/joins.
-    "quality_entropy": ([], [r"Exchange", r"Join",
-                             r"BatchEvalPython", r"LocalTableScan"]),
-    # LSH-blocked kNN graph (EXTRA_QUERIES): per-(band, bucket)
-    # candidate self-join + per-src row_number top-k — never a
-    # corpus-level cartesian, nothing Python.
-    "ann_graph_knn": ([r"Window"],
-                      [r"CartesianProduct", r"BatchEvalPython",
-                       r"LocalTableScan"]),
-    # Temperature mixture weights (EXTRA_QUERIES): partial-agg rollup
-    # to #sources rows + one-row fixed-point normalizer broadcast.
-    "mixture_temperature": ([r"partial_count"],
-                            [r"CartesianProduct", r"BatchEvalPython",
-                             r"LocalTableScan"]),
-    # T5 span-corruption accounting (EXTRA_QUERIES): per-row PRF
-    # arithmetic, zero shuffles/joins.
-    "span_corruption": ([], [r"Exchange", r"Join",
-                             r"BatchEvalPython", r"LocalTableScan"]),
-    # Contrastive pair mining (EXTRA_QUERIES): the kNN-graph shape
-    # with a (src, kind) window — per-(band, bucket), never cartesian.
-    "hard_negatives": ([r"Window"],
-                       [r"CartesianProduct", r"BatchEvalPython",
-                        r"LocalTableScan"]),
-    # Winnowing fingerprints (EXTRA_QUERIES): per-row string/array
-    # arithmetic, zero shuffles/joins.
-    "fingerprint_winnow": ([], [r"Exchange", r"Join",
-                                r"BatchEvalPython", r"LocalTableScan"]),
-    # Bloom sketch (EXTRA_QUERIES): one map-side-combinable BIT_OR
-    # aggregation to <= 2048 rows — the mergeable-sketch shape.
-    "dedup_bloom": ([r"partial_bit_or"],
-                    [r"Join", r"CartesianProduct",
-                     r"BatchEvalPython", r"LocalTableScan"]),
-    # Per-source curation report (EXTRA_QUERIES): the audited curate
-    # chain + one doc_id join + a rollup + a per-source window over
-    # the tiny (source, reason) relation.
-    "curate_report": ([r"partial_count",
-                       r"windowspecdefinition\(source#"],
-                      [r"CartesianProduct", r"BatchEvalPython"]),
-    # BPE round-1 merge stats (EXTRA_QUERIES): token_topk's shape one
-    # level down — partial count + TakeOrdered.
-    "bpe_merges": ([r"TakeOrderedAndProject", r"partial_count"],
-                   [r"Join", r"CartesianProduct",
-                    r"BatchEvalPython", r"LocalTableScan"]),
-    # Per-source bottom-k sample (EXTRA_QUERIES): both rank-limited
-    # windows run as WindowGroupLimit (partial top-k before the sort).
-    "sample_bottomk": ([r"WindowGroupLimit"],
-                       [r"Join", r"CartesianProduct",
-                        r"BatchEvalPython", r"LocalTableScan"]),
-    # Code-switch detection (EXTRA_QUERIES): nested per-row
-    # transforms, zero shuffles/joins.
-    "lang_switches": ([], [r"Exchange", r"Join",
-                           r"BatchEvalPython", r"LocalTableScan"]),
 }
 
 
@@ -300,9 +146,7 @@ def _audit(spark) -> int:
         # regenerated PLANS.md, not abort the audit and leave a stale
         # file still claiming "All invariants hold".
         try:
-            from dragnet_spark.queries import EXTRA_QUERIES
-            fn = QUERIES.get(name) or EXTRA_QUERIES[name]
-            df = fn(spark, SF)
+            df = QUERIES[name](spark, SF)
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
                      .fromString("formatted"))

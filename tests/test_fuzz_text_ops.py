@@ -2,7 +2,7 @@
 surface: every documents/events/embeddings-backed ``queries()`` entry
 vs its DuckDB oracle over RANDOM (but deterministic) corpora.
 
-The driver gate and ``scripts/selfcheck.py`` verify the 50 queries
+The driver gate and ``scripts/selfcheck.py`` verify the 49 queries
 cell-exact on the FIXED ``/root/testdata`` distribution; this file
 re-draws the corpus geometry per seed so distribution-dependent bugs
 can't hide behind that one shape.  Each random corpus deliberately
@@ -50,13 +50,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL, ORACLE_SQL
-from dragnet_spark.queries import EXTRA_QUERIES, QUERIES
-
-# Beyond-the-gate-cap operators (EXTRA_QUERIES) ride the same fuzz:
-# their oracles live in EXTRA_ORACLE_SQL instead of the driver dict.
-QUERIES = {**QUERIES, **EXTRA_QUERIES}
-ORACLE_SQL = {**ORACLE_SQL, **EXTRA_ORACLE_SQL}
+from dragnet_spark.oracle_sql import ORACLE_SQL
+from dragnet_spark.queries import QUERIES
 
 N_SEEDS = int(os.environ.get("DRAGNET_FUZZ_TEXT_SEEDS", "3"))
 # Sweep entropy shift: seeds [BASE, BASE+N) — lets successive sweep

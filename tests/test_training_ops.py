@@ -291,11 +291,10 @@ def test_embedding_near_dup_production_threshold_recall(spark):
     assert len(got) == 40                # pinned: 40/40 on this fixture
 
 
-@pytest.mark.parametrize("algorithm", ["minlabel", "star"])
-def test_connected_components_toy_graph(spark, algorithm):
-    """Both CC algorithms on a known graph: chain a-b-c-d (diameter 3),
-    triangle e-f-g, pair h-i => three components labelled by their min
-    vertex; convergence needs multiple rounds for the chain."""
+def test_connected_components_toy_graph(spark):
+    """CC on a known graph: chain a-b-c-d (diameter 3), triangle
+    e-f-g, pair h-i => three components labelled by their min vertex;
+    convergence needs multiple rounds for the chain."""
     from dragnet_spark.queries import connected_components
 
     edges = spark.createDataFrame(
@@ -303,8 +302,7 @@ def test_connected_components_toy_graph(spark, algorithm):
          ("e", "f"), ("f", "g"), ("e", "g"),
          ("i", "h")], ["doc_a", "doc_b"])
     got = {(r.doc_id, r.component_id)
-           for r in connected_components(edges,
-                                         algorithm=algorithm).collect()}
+           for r in connected_components(edges).collect()}
     assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"),
                    ("e", "e"), ("f", "e"), ("g", "e"),
                    ("h", "h"), ("i", "h")}
@@ -315,18 +313,18 @@ def test_connected_components_toy_graph(spark, algorithm):
 
 def test_connected_components_nonconvergence_raises(spark):
     """Exhausting max_iters must RAISE, not return partial (wrong)
-    labels (r3 advice): a 7-vertex path has diameter 6 > 3 rounds."""
+    labels (r3 advice).  The star rounds converge a 7-vertex path in 4
+    rounds (incl. the stability-detection round), so 3 rounds must
+    raise, and nothing cached may leak on the way out."""
     from dragnet_spark.queries import connected_components
 
     edges = spark.createDataFrame(
         [(f"v{i}", f"v{i + 1}") for i in range(6)], ["doc_a", "doc_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iters=3)
-    # the star algorithm converges the same path in O(log n) rounds
-    # (4 here incl. the stability-detection round, vs 7 for minlabel)
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().isEmpty()
     got = {(r.doc_id, r.component_id)
-           for r in connected_components(edges, max_iters=4,
-                                         algorithm="star").collect()}
+           for r in connected_components(edges, max_iters=4).collect()}
     assert got == {(f"v{i}", "v0") for i in range(7)}
 
 
@@ -347,35 +345,6 @@ def test_cc_checkpoint_dirs_cannot_collide(spark, tmp_path):
         assert len(ckpts) == 1
     finally:
         spark.conf.unset("spark.dragnet.cc.checkpointDir")
-
-
-def test_cc_minlabel_one_job_per_round(spark):
-    """Each minlabel round is ONE Spark job (the changed-count folds
-    into the round's cached aggregation instead of a separate
-    join+count action — r3 verdict).  Chain a-b-c-d converges in 4
-    rounds; the final collect replays the (iters-1)-step pure plan in
-    one more job => exactly 5 jobs.  AQE is disabled for the count
-    (with AQE each action can spawn per-stage jobs)."""
-    from dragnet_spark.queries import connected_components
-
-    sc = spark.sparkContext
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # broadcast-join builds are their own jobs; force SMJ so the count
-    # below sees exactly one job per action
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sc.setJobGroup("cc-jobcount", "cc one-job-per-round")
-    try:
-        edges = spark.createDataFrame(
-            [("b", "a"), ("b", "c"), ("c", "d")], ["doc_a", "doc_b"])
-        got = {(r.doc_id, r.component_id)
-               for r in connected_components(edges).collect()}
-        assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("d", "a")}
-        jobs = sc.statusTracker().getJobIdsForGroup("cc-jobcount")
-        assert len(jobs) == 5, sorted(jobs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_media_frame_sample_stride(spark):
@@ -403,11 +372,9 @@ def test_streaming_dedup_matches_batch(spark):
     assert got == want and len(got) > 0
 
 
-@pytest.mark.parametrize("algorithm", ["minlabel", "star"])
-def test_connected_components_random_graphs(spark, algorithm):
+def test_connected_components_random_graphs(spark):
     """Differential test vs a pure-Python union-find on seeded random
-    graphs (multi-round convergence, multiple cluster shapes), for
-    BOTH algorithms — the star variant must agree exactly."""
+    graphs (multi-round convergence, multiple cluster shapes)."""
     import numpy as np
     from dragnet_spark.queries import connected_components
 
@@ -439,8 +406,8 @@ def test_connected_components_random_graphs(spark, algorithm):
         [(f"v{a:03d}", f"v{b:03d}") for a, b in sorted(pairs)],
         ["doc_a", "doc_b"])
     got = {r.doc_id: r.component_id
-           for r in connected_components(df, algorithm=algorithm).collect()}
-    assert got == want, (n, m, algorithm)
+           for r in connected_components(df).collect()}
+    assert got == want, (n, m)
 
 
 def test_hll_rank_arithmetic_vs_python():
@@ -1100,2059 +1067,3 @@ def test_pii_redact_is_shuffle_free(spark):
     assert not re.search(r"\(\d+\) Exchange\b", plan), plan
     assert "Join" not in plan, plan
     assert "Python" not in plan, plan
-
-
-def _canon_frames(got, exp):
-    """Canonicalize two DataFrames the way scripts/selfcheck.py does:
-    sorted column order, object columns stringified, row-sorted."""
-    import numpy as np
-
-    def canon(d):
-        d = d[sorted(d.columns)].copy()
-        for c in d.columns:
-            if d[c].dtype == object:
-                d[c] = d[c].astype(str)
-        return d.sort_values(by=list(d.columns)).reset_index(drop=True)
-
-    g, e = canon(got), canon(exp)
-    assert g.shape == e.shape, (g.shape, e.shape)
-    for c in g.columns:
-        if g[c].dtype == object:
-            assert (g[c].values == e[c].values).all(), c
-        else:
-            assert np.array_equal(g[c].values, e[c].values), c
-
-
-def test_dedup_incremental_vs_duckdb(spark):
-    """Beyond-the-gate-cap operator: same dual-engine discipline as
-    the 50 driver queries, enforced in-suite — cell-exact vs the
-    DuckDB oracle on the fixed corpus (the random-corpus fuzz re-draws
-    the geometry in test_fuzz_text_ops)."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_dedup_incremental
-
-    got = q_dedup_incremental(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["dedup_incremental"]).df()
-    assert len(got) > 0
-    assert (got.verdict == "near_dup_corpus").any()   # non-degenerate
-    _canon_frames(got, exp)
-
-
-def test_dedup_incremental_verdicts_planted(spark, tmp_path):
-    """Every verdict + the precedence order on a planted increment:
-    corpus = ids not divisible by 5, batch = the rest."""
-    from dragnet_spark.queries import q_dedup_incremental
-
-    text_a = "alpha beta gamma delta epsilon zeta"
-    text_b = "one two three four five six seven eight nine ten"
-    text_d = "red green blue yellow purple orange"
-    sf = _write_docs(spark, tmp_path, [
-        (1, text_a),                     # corpus
-        (2, text_b),                     # corpus
-        (3, "cherry apple banana mango papaya lime"),   # corpus
-        (6, "tiny pair"),                # corpus, < 3 words (no shingles)
-        (0, text_a),                     # exact corpus dup (also an LSH
-                                         #   candidate — precedence)
-        (5, text_d),                     # first occurrence -> kept
-        (10, text_d),                    # exact dup of batch doc 5
-        (15, text_b.replace("ten", "zzz")),   # near dup of corpus doc 2
-        (20, "dog cat bird fish horse goat"),  # unique -> kept
-        (25, "tiny pair"),               # exact dup of a shingle-less doc
-        (30, "solo"),                    # 1 word, unique -> kept
-    ])
-    got = {r.doc_id: (r.verdict, r.matched_doc)
-           for r in q_dedup_incremental(spark, sf).collect()}
-    assert got == {
-        0: ("dup_exact_corpus", 1),
-        5: ("kept", -1),
-        10: ("dup_exact_batch", 5),
-        15: ("near_dup_corpus", 2),
-        20: ("kept", -1),
-        25: ("dup_exact_corpus", 6),
-        30: ("kept", -1),
-    }
-
-
-def test_dedup_incremental_plan(spark):
-    """The scale pins from the docstring: the batch/corpus split is
-    pushed into every parquet scan, no exchange ever carries a shingle
-    array (per-row minhash — the exploded-shingle shuffle of the
-    full-corpus chain must NOT appear), and no join degenerates to a
-    cartesian product."""
-    from dragnet_spark.queries import q_dedup_incremental
-
-    df = q_dedup_incremental(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "Generate explode(" not in plan     # no exploded shingles
-    scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
-    assert scans and all("% 5" in l for l in scans), scans
-    shuffles = [l for l in plan.splitlines()
-                if "Exchange hashpartitioning" in l]
-    assert shuffles     # the fingerprint/candidate exchanges exist
-    assert not any("ss#" in l or "sh0#" in l for l in shuffles), shuffles
-
-
-def test_dedup_keep_best_vs_duckdb(spark):
-    """Second EXTRA-lane operator: cell-exact vs the DuckDB oracle on
-    the fixed corpus, and non-degenerate in the way that matters —
-    at least one cluster keeps a member that is NOT the min doc_id
-    (otherwise the operator would be indistinguishable from
-    keep-first)."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_dedup_keep_best
-
-    got = q_dedup_keep_best(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["dedup_keep_best"]).df()
-    assert len(got) > 0
-    assert (got.action == "drop").any()
-    assert (got.kept_doc != got.component_id).any()   # best != first
-    # exactly one keep per cluster, and it is a member of the cluster
-    keeps = got[got.action == "keep"]
-    assert keeps.groupby("component_id").size().eq(1).all()
-    assert (keeps.doc_id == keeps.kept_doc).all()
-    _canon_frames(got, exp)
-
-
-def test_dedup_keep_best_planted(spark, tmp_path):
-    """Planted clusters pin the semantics: the higher-quality member
-    wins even when it is not the min doc_id; exact-dup ties fall back
-    to the min doc_id; singletons never appear.  The near-dup pair is
-    deterministic: jaccard 8/11 = 0.727 with 3 of 4 minhash bands
-    colliding (md5 is seed-free, so this holds forever)."""
-    from dragnet_spark.queries import q_dedup_keep_best
-
-    base = "quick brown fox jumps over the lazy sleeping dog tonight"
-    rich = base + " alpha beta gamma"          # +3 distinct words
-    tie = "cherry apple banana mango papaya lime"
-    sf = _write_docs(spark, tmp_path, [
-        (3, base),                 # cluster {3,11}: quality 10
-        (11, rich),                #   quality 13 -> kept despite id
-        (4, tie),                  # cluster {4,9}: identical text,
-        (9, tie),                  #   equal quality -> min id kept
-        (20, "dog cat bird fish horse goat"),  # singleton -> absent
-    ])
-    got = {r.doc_id: (r.component_id, r.quality, r.action, r.kept_doc)
-           for r in q_dedup_keep_best(spark, sf).collect()}
-    assert got == {
-        3: (3, 10, "drop", 11),
-        11: (3, 13, "keep", 11),
-        4: (4, 6, "keep", 4),
-        9: (4, 6, "drop", 4),
-    }
-
-
-def test_dedup_keep_best_plan(spark):
-    """Scale pins from the docstring: the representative choice is an
-    argmax AGGREGATION, never a per-component window sort (no Window
-    node anywhere); the tiny label and rep relations broadcast back
-    against the corpus (two BroadcastHashJoins); nothing degenerates
-    to a cartesian product."""
-    from dragnet_spark.queries import q_dedup_keep_best
-
-    df = q_dedup_keep_best(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "Window" not in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-
-
-def test_sequence_pack_vs_duckdb(spark):
-    """Third EXTRA-lane operator: cell-exact vs the DuckDB oracle on
-    the fixed corpus, plus the packing invariants that make the
-    result meaningful — every bin except the last is exactly full
-    (L=128 tokens), the per-doc contributions reassemble each doc's
-    full token count, and documents genuinely straddle bins (the
-    geometry the operator exists for)."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_sequence_pack
-
-    got = q_sequence_pack(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["sequence_pack"]).df()
-    _canon_frames(got, exp)
-    per_bin = got.groupby("bin_id").tok_in_bin.sum().sort_index()
-    assert (per_bin.iloc[:-1] == 128).all()
-    assert 0 < per_bin.iloc[-1] <= 128
-    per_doc = got.groupby("doc_id").agg(
-        total=("tok_in_bin", "sum"), n_tok=("doc_tokens", "first"))
-    assert (per_doc.total == per_doc.n_tok).all()
-    assert (got.groupby("doc_id").size() > 1).any()   # straddlers
-
-
-def test_sequence_pack_planted(spark, tmp_path):
-    """Pinned packing arithmetic on a hand-checkable corpus, including
-    a doc that spans three bins and ids that cross the B=64 bucket
-    boundary (so the bucket-offset broadcast path is actually
-    exercised, not just bucket 0)."""
-    from dragnet_spark.queries import q_sequence_pack
-
-    w = lambda k: " ".join(["w"] * k)
-    sf = _write_docs(spark, tmp_path, [
-        (3, w(100)),     # tokens [0, 100)   -> bin 0
-        (10, w(60)),     # tokens [100, 160) -> bins 0, 1
-        (70, w(300)),    # tokens [160, 460) -> bins 1, 2, 3  (bucket 1)
-        (130, w(4)),     # tokens [460, 464) -> bin 3         (bucket 2)
-    ])
-    got = sorted(
-        (r.doc_id, r.bin_id, r.tok_start, r.doc_tokens, r.tok_in_bin)
-        for r in q_sequence_pack(spark, sf).collect())
-    assert got == [
-        (3, 0, 0, 100, 100),
-        (10, 0, 100, 60, 28), (10, 1, 100, 60, 32),
-        (70, 1, 160, 300, 96), (70, 2, 160, 300, 128),
-        (70, 3, 160, 300, 76),
-        (130, 3, 460, 4, 4),
-    ]
-
-
-def test_sequence_pack_plan(spark):
-    """Scale pins: the ONLY SinglePartition exchange in the executed
-    plan is the tiny bucket-offsets relation (fed by a map-side
-    partial_sum), the corpus-side prefix Window is PARTITIONED by the
-    bucket key (a global unpartitioned window over the corpus is the
-    scale-killer this operator exists to avoid), and the bucket
-    offsets come back via broadcast."""
-    from dragnet_spark.queries import q_sequence_pack
-
-    df = q_sequence_pack(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange SinglePartition") == 1, final
-    assert "windowspecdefinition(g#" in final
-    assert "BroadcastHashJoin" in final
-    assert "CartesianProduct" not in final
-
-
-def test_ln_portable_cross_engine(spark):
-    """The matched pair queries.ln_portable_int / oracle_sql._ln_int_sql
-    must produce BIT-IDENTICAL doubles on both engines (that is the
-    whole reason they exist: the engines' native ln differ by ULPs),
-    and track the true ln to ~1 ulp.  Grid: all of 1..4000 plus
-    2^40-scale and 1e12-scale ints (the count magnitudes a web corpus
-    produces)."""
-    import duckdb
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from dragnet_spark.oracle_sql import _ln_int_sql
-    from dragnet_spark.queries import ln_portable_int
-
-    vals = list(range(1, 4001)) + [10**6 + 7, 10**9 + 9, 10**12 + 3,
-                                   2**40, 2**41 - 1, 2**52]
-    df = spark.createDataFrame([(v,) for v in vals], "n bigint")
-    ps = df.select("n", ln_portable_int(F.col("n")).alias("l")).toPandas()
-    con = duckdb.connect()
-    con.register("t", ps[["n"]])
-    pdk = con.sql(f"SELECT n, {_ln_int_sql('n')} AS l FROM t").df()
-    m = ps.merge(pdk, on="n", suffixes=("_s", "_d"))
-    assert len(m) == len(vals)
-    mism = m[m.l_s != m.l_d]
-    assert mism.empty, mism.head().to_string()
-    true = np.log(m.n.values.astype(np.float64))
-    rel = np.abs(m.l_s.values - true) / np.maximum(np.abs(true), 1e-300)
-    assert rel[m.n.values > 1].max() < 1e-15   # ~4 ulp headroom
-
-
-def test_lm_perplexity_vs_duckdb(spark):
-    """Fourth EXTRA-lane operator: cell-exact (bit-exact, float column
-    included) vs the DuckDB oracle on the fixed corpus — the portable
-    ln plus the position-ordered fold make even the log-space float
-    agree bit-for-bit before the final ROUND."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_lm_perplexity
-
-    got = q_lm_perplexity(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["lm_perplexity"]).df()
-    assert len(got) > 0
-    _canon_frames(got, exp)
-
-
-def test_lm_perplexity_planted(spark, tmp_path):
-    """Semantics pinned against an independent pure-Python reference
-    (math.log, tolerance covers the portable ln's ~1 ulp): add-one
-    bigram LM trained on the corpus itself.  The duplicated fluent
-    text must score LOWER cross-entropy than the all-unique-bigrams
-    gibberish doc (the filter's discriminating direction), and the
-    singleton doc is excluded (no bigram evidence)."""
-    import math
-
-    from dragnet_spark.queries import q_lm_perplexity
-
-    docs = {
-        1: "the cat sat on the mat",
-        2: "the cat sat on the mat",
-        3: "zx qy wv ut",
-        4: "word",
-    }
-    sf = _write_docs(spark, tmp_path, list(docs.items()))
-    got = {r.doc_id: (r.n_bigrams, r.cross_entropy)
-           for r in q_lm_perplexity(spark, sf).collect()}
-
-    toks = {i: t.split(" ") for i, t in docs.items()}
-    c2: dict = {}
-    ctx: dict = {}
-    for ts in toks.values():
-        for a, b in zip(ts, ts[1:]):
-            c2[(a, b)] = c2.get((a, b), 0) + 1
-            ctx[a] = ctx.get(a, 0) + 1
-    v = len({w for ts in toks.values() for w in ts})
-    exp = {}
-    for i, ts in toks.items():
-        lps = [math.log((c2[(a, b)] + 1) / (ctx[a] + v))
-               for a, b in zip(ts, ts[1:])]
-        if lps:
-            exp[i] = (len(lps), round(-sum(lps) / len(lps), 6))
-    assert set(got) == {1, 2, 3}          # singleton excluded
-    for i in exp:
-        assert got[i][0] == exp[i][0]
-        assert abs(got[i][1] - exp[i][1]) <= 2e-6, (i, got[i], exp[i])
-    assert got[1] == got[2]               # identical docs, same score
-    assert got[1][1] < got[3][1]          # fluent < gibberish
-
-
-def _write_docs_lang(spark, tmp_path, docs):
-    """Like _write_docs but with an explicit lang per row — the DSIR
-    target slice needs a mixed-language corpus."""
-    rows = [(int(i), t, lang, "src0", len(t)) for i, lang, t in docs]
-    spark.createDataFrame(
-        rows, "doc_id bigint, text string, lang string, source string, "
-              "n_chars bigint"
-    ).coalesce(1).write.mode("overwrite") \
-     .parquet(f"{tmp_path}/documents.parquet")
-    return str(tmp_path)
-
-
-def test_dsir_weights_vs_duckdb(spark):
-    """Fifth EXTRA-lane operator: cell-exact (float columns bit-exact
-    via the portable ln + ordered fold) vs the DuckDB oracle on the
-    fixed corpus, plus the model's discriminating direction — target
-    (en) docs must score a higher mean importance weight than non-en
-    docs even on this near-homogeneous corpus (their own grams feed
-    the target counts)."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_dsir_weights
-
-    got = q_dsir_weights(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["dsir_weights"]).df()
-    docs = con.sql("SELECT doc_id, lang FROM documents").df()
-    _canon_frames(got, exp)
-    m = got.merge(docs, on="doc_id")
-    assert len(m) == len(docs)            # every doc scored
-    by = m.groupby(m.lang == "en").avg_logweight.mean()
-    assert by[True] > by[False]
-
-
-def test_dsir_weights_planted(spark, tmp_path):
-    """Semantics pinned against an independent pure-Python port of the
-    hashed-bucket model (hashlib md5, math.log; tolerance covers the
-    portable ln's ~1 ulp): a doc written in the target's vocabulary
-    gets selected even though its OWN lang label is not 'en' (DSIR
-    scores content, not labels), and a raw-leaning doc does not."""
-    import hashlib
-    import math
-
-    from dragnet_spark.queries import q_dsir_weights
-
-    # Counts must be commensurate with the K=4096 smoothing mass for
-    # a positive weight to be reachable (at toy counts the add-one
-    # prior flattens both models toward uniform and every weight goes
-    # slightly negative — the same reason the fixed 500-doc corpus
-    # selects nothing): replicate the target and raw-only base texts
-    # so nt=550, nq=2514, making ln((nq+K)/(nt+K)) ~ 0.35 per gram.
-    docs = ([(100 + i, "en", "alpha beta gamma delta alpha beta")
-             for i in range(25)]
-            + [(150 + i, "en", "alpha gamma beta delta beta alpha")
-               for i in range(25)]
-            + [(200 + i, "es", "uno dos tres cuatro cinco uno dos")
-               for i in range(150)]
-            + [(4, "de", "alpha beta gamma delta"),   # en-like content
-               (5, "fr", "uno dos tres cuatro")])     # raw-leaning
-    sf = _write_docs_lang(spark, tmp_path, docs)
-    got = {r.doc_id: r for r in q_dsir_weights(spark, sf).collect()}
-
-    def grams(t):
-        ts = t.split(" ")
-        return ts + [f"{a} {b}" for a, b in zip(ts, ts[1:])]
-
-    def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:3], 16)
-
-    K = 4096
-    cq: dict = {}
-    ct: dict = {}
-    for _, lang, t in docs:
-        for g in grams(t):
-            b = bucket(g)
-            cq[b] = cq.get(b, 0) + 1
-            if lang == "en":
-                ct[b] = ct.get(b, 0) + 1
-    nq, nt = sum(cq.values()), sum(ct.values())
-    for i, _, t in docs:
-        gs = grams(t)
-        lw = sum((math.log(ct.get(bucket(g), 0) + 1) - math.log(nt + K))
-                 - (math.log(cq[bucket(g)] + 1) - math.log(nq + K))
-                 for g in gs)
-        assert got[i].n_grams == len(gs)
-        assert abs(got[i].logweight - round(lw, 6)) <= 2e-6, (i, lw)
-        assert got[i].selected == (lw > 0.0)
-    assert got[4].selected and got[4].avg_logweight > 0
-    assert not got[5].selected and got[5].avg_logweight < 0
-
-
-def test_dsir_weights_plan(spark):
-    """Scale pins: the constant-size (<=4096-row) bucket relations
-    come back via BROADCAST hash joins (the hint is safe precisely
-    because K is a constant — the distinction the tfidf de-hinting
-    lesson drew), counts and the per-doc fold are map-side partials,
-    and the portable ln runs in codegen (no Python eval anywhere)."""
-    from dragnet_spark.queries import q_dsir_weights
-
-    df = q_dsir_weights(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("BroadcastHashJoin") >= 2, final
-    assert "partial_collect_list" in final
-    assert "CartesianProduct" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_mixture_budget_sample_vs_duckdb(spark):
-    """Sixth EXTRA-lane operator: cell-exact vs the DuckDB oracle on
-    the fixed corpus, and the budget genuinely bites — every source
-    keeps some docs and drops some — plus the prefix property that
-    makes greedy budget sampling well-defined: within each source,
-    sorted by the shuffle key, the kept set is exactly the docs whose
-    preceding-token count is under budget (never a hole)."""
-    import duckdb
-    import hashlib
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_mixture_budget_sample
-
-    got = q_mixture_budget_sample(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["mixture_budget_sample"]).df()
-    _canon_frames(got, exp)
-    ks = got.groupby("source").kept.agg(["sum", "count"])
-    assert (ks["sum"] > 0).all() and (ks["sum"] < ks["count"]).all()
-    got["k"] = [hashlib.md5(str(i).encode()).hexdigest()
-                for i in got.doc_id]
-    for _, grp in got.groupby("source"):
-        grp = grp.sort_values("k")
-        run = 0
-        for _, r in grp.iterrows():
-            assert r.cum_before == run
-            assert r.kept == (run < 500)
-            run += r.n_tok
-
-
-def test_mixture_budget_sample_planted(spark, tmp_path):
-    """Pinned semantics on a hand-built two-source corpus, including
-    the overshoot-by-one rule: a doc LARGER than the whole budget is
-    still kept when it lands first in shuffle order (cum_before=0),
-    and everything after the budget point is dropped.  Expected rows
-    computed by an independent hashlib/python reference."""
-    import hashlib
-
-    from dragnet_spark.queries import q_mixture_budget_sample
-
-    rows = [(i, " ".join(["w"] * n), "en", src, n)
-            for i, n, src in [
-                (1, 600, "big"),     # alone exceeds the 500 budget
-                (2, 30, "big"),
-                (3, 40, "big"),
-                (10, 200, "small"), (11, 200, "small"),
-                (12, 200, "small"), (13, 200, "small")]]
-    spark.createDataFrame(
-        rows, "doc_id bigint, text string, lang string, source string, "
-              "n_chars bigint"
-    ).coalesce(1).write.mode("overwrite") \
-     .parquet(f"{tmp_path}/documents.parquet")
-
-    got = {r.doc_id: (r.cum_before, r.kept)
-           for r in q_mixture_budget_sample(spark, str(tmp_path)).collect()}
-
-    exp = {}
-    for src in ("big", "small"):
-        docs = [(hashlib.md5(str(i).encode()).hexdigest(), i, n)
-                for i, n, s in [(1, 600, "big"), (2, 30, "big"),
-                                (3, 40, "big"), (10, 200, "small"),
-                                (11, 200, "small"), (12, 200, "small"),
-                                (13, 200, "small")] if s == src]
-        run = 0
-        for _, i, n in sorted(docs):
-            exp[i] = (run, run < 500)
-            run += n
-    assert got == exp
-    # the source whose giant doc came first must show the overshoot
-    # rule somewhere: at least one kept doc with cum_before + n_tok
-    # over budget, or the giant itself kept at cum_before 0.
-    assert got[1][1] == (exp[1][0] < 500)
-
-
-def test_mixture_budget_sample_plan(spark):
-    """Scale pins: the keyed two-level scan leaves ZERO SinglePartition
-    exchanges in the executed plan (the offsets window is partitioned
-    by source; the corpus window by (source, bucket)) — the naive
-    per-source Window would be a one-task-per-source skew disaster —
-    and the tiny offsets relation comes back via broadcast."""
-    from dragnet_spark.queries import q_mixture_budget_sample
-
-    df = q_mixture_budget_sample(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange SinglePartition") == 0, final
-    assert "BroadcastHashJoin" in final
-    assert "windowspecdefinition(source#" in final
-    assert "CartesianProduct" not in final
-
-
-def test_exp_portable_cross_engine(spark):
-    """The matched pair queries.exp_portable / oracle_sql._exp_sql must
-    be BIT-IDENTICAL across engines (same reason the portable ln
-    exists: libm exp differs in the last ulp) and track numpy's exp
-    to a few ulps over the loss-magnitude range it is used on."""
-    import duckdb
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from dragnet_spark.oracle_sql import _exp_sql
-    from dragnet_spark.queries import exp_portable
-
-    vals = sorted(set([i / 1e5 for i in range(0, 1200000, 7919)]
-                      + [-x / 1e4 for x in range(1, 90000, 997)]
-                      + [0.0, 1.0, -1.0, 12.5, -12.5]))
-    df = spark.createDataFrame([(float(v),) for v in vals], "x double")
-    ps = df.select("x", exp_portable(F.col("x")).alias("e")).toPandas()
-    con = duckdb.connect()
-    con.register("t", ps[["x"]])
-    pdk = con.sql(f"SELECT x, {_exp_sql('x')} AS e FROM t").df()
-    m = ps.merge(pdk, on="x", suffixes=("_s", "_d"))
-    assert len(m) == len(vals)
-    mism = m[m.e_s != m.e_d]
-    assert mism.empty, mism.head().to_string()
-    rel = np.abs(m.e_s.values - np.exp(m.x.values)) / np.exp(m.x.values)
-    assert rel.max() < 1e-14
-
-
-def test_domain_reweight_vs_duckdb(spark):
-    """Seventh EXTRA-lane operator: cell-exact vs the DuckDB oracle
-    (fixed-point aggregation + portable exp make even the float
-    columns bit-exact), weights a valid distribution, and the EG
-    direction holds: the per-source weight ordering IS the avg-CE
-    ordering (higher loss, higher weight)."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_domain_reweight
-
-    got = q_domain_reweight(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["domain_reweight"]).df()
-    _canon_frames(got, exp)
-    assert abs(got.weight.sum() - 1.0) < 2e-5
-    s = got.sort_values(["avg_ce", "source"])
-    assert s.weight.is_monotonic_increasing
-
-
-def test_domain_reweight_planted(spark, tmp_path):
-    """A gibberish domain (every bigram unique -> high cross-entropy)
-    must be UPweighted relative to a fluent domain of repeated text
-    (DoReMi's direction: train more where loss is high), and the
-    weight ratio must match exp(ce_noise - ce_fluent) to rounding
-    tolerance (eta = 1)."""
-    import math
-
-    from dragnet_spark.queries import q_domain_reweight
-
-    fluent = "the cat sat on the mat and the dog sat on the rug"
-    rows = ([(i, fluent, "en", "fluent", len(fluent)) for i in range(8)]
-            + [(100 + i,
-                " ".join(f"z{100 * i + j}" for j in range(12)),
-                "en", "noise", 60) for i in range(8)])
-    spark.createDataFrame(
-        rows, "doc_id bigint, text string, lang string, source string, "
-              "n_chars bigint"
-    ).coalesce(1).write.mode("overwrite") \
-     .parquet(f"{tmp_path}/documents.parquet")
-
-    got = {r.source: r for r in
-           q_domain_reweight(spark, str(tmp_path)).collect()}
-    assert set(got) == {"fluent", "noise"}
-    assert got["noise"].avg_ce > got["fluent"].avg_ce
-    assert got["noise"].weight > got["fluent"].weight
-    assert abs(got["noise"].weight + got["fluent"].weight - 1.0) < 2e-6
-    expected_ratio = math.exp(got["noise"].avg_ce - got["fluent"].avg_ce)
-    assert abs(got["noise"].weight / got["fluent"].weight
-               - expected_ratio) < 1e-4
-
-
-def test_domain_reweight_plan(spark):
-    """The rollup on top of lm_perplexity stays partial-aggregated and
-    Python-free; the only nested-loop join is the benign one-row Z
-    broadcast."""
-    from dragnet_spark.queries import q_domain_reweight
-
-    df = q_domain_reweight(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "partial_sum" in final
-    assert "CartesianProduct" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_semantic_dedup_vs_duckdb(spark):
-    """Eighth EXTRA-lane operator (SemDeDup): cell-exact vs the DuckDB
-    oracle (every similarity rides exact BIGINT dot products, so even
-    the order predicate's raw float comparisons agree bitwise), and
-    the greedy contract holds: per cluster, the first-ordered member
-    (max centroid_sim, ties by vec_id) has no predecessor and is
-    kept."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_semantic_dedup
-
-    got = q_semantic_dedup(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW embeddings AS "
-            f"SELECT * FROM '{SF}/embeddings.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["semantic_dedup"]).df()
-    _canon_frames(got, exp)
-    firsts = (got.sort_values(["centroid_sim", "vec_id"],
-                              ascending=[False, True])
-              .groupby("cluster").head(1))
-    assert (firsts.max_prev_sim == -1.0).all()
-    assert firsts.kept.all()
-
-
-def test_semantic_dedup_planted(spark, tmp_path):
-    """Planted geometry pins the SemDeDup semantics: 16 orthogonal
-    initializer directions, then a trio of near-identical vectors in
-    direction 0 (one exact duplicate, one noise-perturbed) and an
-    exact duplicate of initializer 1.  The trio + its initializer
-    collapse to ONE kept member; the duplicated initializer's cluster
-    keeps only the earlier copy; untouched orthogonal directions stay
-    kept (cluster confinement: nothing is ever compared across
-    clusters)."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_semantic_dedup
-
-    dim = 64
-    vecs = []
-    for i in range(16):                     # orthogonal initializers
-        v = np.zeros(dim, dtype=np.float32)
-        v[i] = 0.3
-        vecs.append(v)
-    v16 = vecs[0].copy()
-    v16[40] = 0.01                          # cos to e0 ~ 0.9994
-    vecs.append(v16)
-    vecs.append(v16.copy())                 # 17: exact duplicate
-    v18 = v16.copy()
-    v18[41] = 0.02                          # still cos > 0.99 to v16
-    vecs.append(v18)
-    vecs.append(vecs[1].copy())             # 19: duplicate of init 1
-    pq.write_table(pa.Table.from_pydict({
-        "vec_id": pa.array(np.arange(len(vecs), dtype=np.int64)),
-        "embedding": pa.array([list(map(float, v)) for v in vecs],
-                              pa.list_(pa.float32())),
-        "label": pa.array(np.zeros(len(vecs), dtype=np.int32)),
-    }), f"{tmp_path}/embeddings.parquet")
-
-    out = q_semantic_dedup(spark, str(tmp_path)).toPandas()
-    assert len(out) == 20
-    by_id = out.set_index("vec_id")
-    # direction-0 cluster: {0, 16, 17, 18} mutually cos > 0.8 -> one
-    # survivor only; the exact-duplicate pair can never both survive.
-    c0 = by_id.loc[0, "cluster"]
-    trio = by_id.loc[[0, 16, 17, 18]]
-    assert (trio.cluster == c0).all()
-    assert int(trio.kept.sum()) == 1
-    # duplicated initializer: same cluster, tie on centroid_sim broken
-    # by vec_id -> 1 kept, 19 dropped with max_prev_sim == 1.
-    assert by_id.loc[19, "cluster"] == by_id.loc[1, "cluster"]
-    assert bool(by_id.loc[1, "kept"]) and not bool(by_id.loc[19, "kept"])
-    assert by_id.loc[19, "max_prev_sim"] == 1.0
-    # orthogonal singletons untouched (cross-cluster cos = 0 anyway).
-    rest = by_id.loc[list(range(2, 16))]
-    assert rest.kept.all()
-    assert (rest.max_prev_sim == -1.0).all()
-
-
-def test_semantic_dedup_plan(spark):
-    """The pairwise stage stays cluster-confined and distributed: the
-    member self-join is an equi-join on the cluster key (never a
-    CartesianProduct over the corpus), its MAX collapses map-side
-    (partial_max), and everything stays in codegen (no
-    BatchEvalPython).  The only nested-loop joins are the kmeans
-    assignment's benign <= 16-row centroid broadcasts."""
-    from dragnet_spark.queries import q_semantic_dedup
-
-    df = q_semantic_dedup(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "partial_max" in final
-    assert "CartesianProduct" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_bm25_topk_vs_duckdb(spark):
-    """Ninth EXTRA-lane operator (BM25): cell-exact vs the DuckDB
-    oracle (portable integer-ln idf, exact BIGINT tf/df/dl, fixed
-    summation order), scores non-negative and non-increasing down the
-    top-10."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_bm25_topk
-
-    got = q_bm25_topk(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["bm25_topk"]).df()
-    assert got.values.tolist() == exp.values.tolist()  # ordered relation
-    assert (got.score_bm25 >= 0).all()
-    assert (got.score_bm25.diff().dropna() <= 0).all()
-
-
-def test_bm25_topk_planted(spark, tmp_path):
-    """Pure-Python BM25 over a planted corpus must agree with the
-    operator to float tolerance, and the ranking semantics hold: a doc
-    matching more query terms outranks fewer terms; between two docs
-    with identical tf, the SHORTER doc scores higher (the length
-    normalization b = 0.75)."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_bm25_topk
-
-    texts = {
-        0: "spark window merge agg",          # all 3 terms, short
-        1: "spark window table scan row key", # 2 terms
-        2: "spark " + "filler "*20 + "end",   # 1 term, long
-        3: "spark end",                       # 1 term, short
-        4: "table scan row",                  # 0 terms
-    }
-    rows = [(i, t, "en", "src0", len(t)) for i, t in texts.items()]
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-        "text": pa.array([r[1] for r in rows], pa.string()),
-        "lang": pa.array([r[2] for r in rows], pa.string()),
-        "source": pa.array([r[3] for r in rows], pa.string()),
-        "n_chars": pa.array([r[4] for r in rows], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    got = {int(r.doc_id): r for r in
-           q_bm25_topk(spark, str(tmp_path)).collect()}
-    toks = {i: t.split(" ") for i, t in texts.items()}
-    n = len(texts)
-    avgdl = sum(len(v) for v in toks.values()) / n
-    k1, b = 1.2, 0.75
-
-    def ref_score(i):
-        s = 0.0
-        for term in ("spark", "window", "merge"):
-            tf = toks[i].count(term)
-            df = sum(1 for v in toks.values() if term in v)
-            idf = math.log((2 * n + 2) / (2 * df + 1))
-            dl = len(toks[i])
-            s += idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
-        return s
-
-    assert set(got) == set(texts)             # 5 docs -> all in top-10
-    for i in texts:
-        assert abs(got[i].score_bm25 - ref_score(i)) < 1e-6, i
-    assert got[0].score_bm25 > got[1].score_bm25 > got[2].score_bm25
-    assert got[3].score_bm25 > got[2].score_bm25   # same tf, shorter doc
-    assert got[4].score_bm25 == 0.0
-
-
-def test_bm25_topk_plan(spark):
-    """The top-10 is a TakeOrderedAndProject (map-side partial top-k,
-    no global sort); the corpus never shuffles (the only exchange is
-    the one-row stats aggregation, broadcast back); no Python
-    anywhere."""
-    from dragnet_spark.queries import q_bm25_topk
-
-    df = q_bm25_topk(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "TakeOrderedAndProject" in final
-    assert "SortMergeJoin" not in final
-    assert "CartesianProduct" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_dedup_substrings_vs_duckdb(spark):
-    """Tenth EXTRA-lane operator (Lee et al. ExactSubstr fraction):
-    cell-exact vs the DuckDB oracle; every doc appears exactly once
-    (docs shorter than the window included with zero windows) and
-    flagged implies dup_frac >= 0.3."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_dedup_substrings
-
-    got = q_dedup_substrings(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["dedup_substrings"]).df()
-    _canon_frames(got, exp)
-    assert got.doc_id.is_unique
-    assert (got[got.flagged].dup_frac >= 0.3).all()
-    assert (got[got.n_windows == 0].dup_frac == 0.0).all()
-    assert not got[got.n_windows == 0].flagged.any()
-
-
-def test_dedup_substrings_planted(spark, tmp_path):
-    """Planted corpus pins the criterion at every alignment: an exact
-    duplicate pair is 100% duplicated; a doc sharing ONE 5-token
-    window with them is 50% duplicated (flagged at the 0.3 bar); a
-    WITHIN-document repeat duplicates a window with no cross-doc
-    partner (2/6 windows = 1/3 >= 0.3, flagged via the exact integer
-    rule 10*2 >= 3*6 — within-doc repetition counts, the paper's
-    self-similarity case); short and unique docs report zero."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_dedup_substrings
-
-    texts = {
-        0: "a b c d e f",                  # 2 windows, dup of doc 1
-        1: "a b c d e f",                  # exact duplicate
-        2: "a b c d e zzz",                # shares window "a b c d e"
-        3: "q w e r",                      # too short: 0 windows
-        4: "x y z w v x y z w v",          # self-repeat: win1 == win6
-        5: "p1 p2 p3 p4 p5 p6 p7",         # unique
-    }
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array(list(texts), pa.int64()),
-        "text": pa.array(list(texts.values()), pa.string()),
-        "lang": pa.array(["en"] * len(texts), pa.string()),
-        "source": pa.array(["src0"] * len(texts), pa.string()),
-        "n_chars": pa.array([len(t) for t in texts.values()], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    out = {int(r.doc_id): r for r in
-           q_dedup_substrings(spark, str(tmp_path)).collect()}
-    assert len(out) == 6
-    for i in (0, 1):
-        assert (out[i].n_windows, out[i].n_dup) == (2, 2)
-        assert out[i].dup_frac == 1.0 and out[i].flagged
-    assert (out[2].n_windows, out[2].n_dup) == (2, 1)
-    assert out[2].dup_frac == 0.5 and out[2].flagged
-    assert (out[3].n_windows, out[3].n_dup) == (0, 0)
-    assert out[3].dup_frac == 0.0 and not out[3].flagged
-    assert (out[4].n_windows, out[4].n_dup) == (6, 2)
-    assert out[4].dup_frac == 0.333333 and out[4].flagged
-    assert (out[5].n_windows, out[5].n_dup) == (3, 0)
-    assert out[5].dup_frac == 0.0 and not out[5].flagged
-
-
-def test_dedup_substrings_plan(spark):
-    """Fingerprint-partitioned all the way: the exploded-window scan
-    feeds a map-side partial count, the join back is on the same key,
-    and nothing leaves codegen."""
-    from dragnet_spark.queries import q_dedup_substrings
-
-    df = q_dedup_substrings(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "partial_count" in final
-    assert "CartesianProduct" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_interleaved_filter_vs_duckdb(spark):
-    """Eleventh EXTRA-lane operator (interleaved curation): cell-exact
-    vs the DuckDB oracle; kept iff reason == 'keep', and the cascade
-    invariants hold on every row."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_interleaved_filter
-
-    got = q_interleaved_filter(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["interleaved_filter"]).df()
-    _canon_frames(got, exp)
-    assert (got.kept == (got.reason == "keep")).all()
-    assert (got[got.reason == "no_media"].n_media == 0).all()
-    assert (got[got.reason == "media_adjacent"].n_adjacent > 0).all()
-    assert (got[got.kept].n_tokens >= 5).all()
-
-
-def test_interleaved_filter_planted(spark, tmp_path):
-    """A pure-Python md5 walk over a 120-doc sweep of lengths 1..40
-    must reproduce every count and every cascade reason; the sweep is
-    wide enough that no_text, no_media, media_adjacent and keep all
-    occur (media_dense asserted separately with a hand-found dense
-    doc)."""
-    import hashlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_interleaved_filter
-
-    def med(doc_id, p):
-        h = hashlib.md5(f"{doc_id}:{p}".encode()).hexdigest()
-        return h[0] == "0"
-
-    n_docs = 120
-    lens = [(i % 40) + 1 for i in range(n_docs)]
-    # doc_id 123 at 6 tokens has 2 media slots (md5-checked):
-    # 4*2 > 6 -> the media_dense rule fires.
-    ids = list(range(n_docs)) + [123]
-    lens.append(6)
-    texts = [" ".join(f"w{j}" for j in range(L)) for L in lens]
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array(ids, pa.int64()),
-        "text": pa.array(texts, pa.string()),
-        "lang": pa.array(["en"] * len(ids), pa.string()),
-        "source": pa.array(["src0"] * len(ids), pa.string()),
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    got = {int(r.doc_id): r for r in
-           q_interleaved_filter(spark, str(tmp_path)).collect()}
-    seen = set()
-    for i, n in zip(ids, lens):
-        n_media = sum(med(i, p) for p in range(1, n + 1))
-        n_adj = sum(med(i, p) and med(i, p + 1) for p in range(1, n))
-        if n < 5:
-            reason = "no_text"
-        elif n_media == 0:
-            reason = "no_media"
-        elif 4 * n_media > n:
-            reason = "media_dense"
-        elif n_adj > 0:
-            reason = "media_adjacent"
-        else:
-            reason = "keep"
-        r = got[i]
-        assert (r.n_tokens, r.n_media, r.n_adjacent, r.reason) == \
-            (n, n_media, n_adj, reason), i
-        if n_media:
-            assert abs(r.tok_per_media - round(n / n_media, 6)) < 1e-9
-        else:
-            assert r.tok_per_media == -1.0
-        seen.add(reason)
-    assert {"no_text", "no_media", "media_dense",
-            "media_adjacent", "keep"} <= seen
-    assert got[123].reason == "media_dense"
-
-
-def test_interleaved_filter_plan(spark):
-    """Embarrassingly parallel: ZERO shuffles, zero joins — one
-    narrow per-row scan-project, nothing leaves codegen."""
-    from dragnet_spark.queries import q_interleaved_filter
-
-    df = q_interleaved_filter(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Exchange" not in final
-    assert "Join" not in final
-    assert "BatchEvalPython" not in final
-
-
-def _pack_ref(doc_id, n, C=64, mcost=16):
-    """Pure-Python reference packing for q_interleaved_pack."""
-    import hashlib
-
-    def med(p):
-        return hashlib.md5(
-            f"{doc_id}:{p}".encode()).hexdigest()[0] == "0"
-
-    mb = [p for p in range(1, n + 1) if med(p)]
-    spans, prev = [], 0
-    for p in mb:
-        if p - prev > 0:
-            spans.append(("text", p - prev, None))
-        spans.append(("media", mcost, f"img://{doc_id}/{p}"))
-        prev = p
-    if n - prev > 0:
-        spans.append(("text", n - prev, None))
-    rows, pos = [], 0
-    for seq, (kind, ln, ref) in enumerate(spans, 1):
-        pad = 0
-        if kind == "media" and pos % C + ln > C:
-            pad = C - pos % C
-        start = pos + pad
-        rows.append((doc_id, seq, kind, ln, ref, pad, start,
-                     start // C, start % C))
-        pos = start + ln
-    return rows
-
-
-def test_interleaved_pack_vs_duckdb(spark):
-    """Twelfth EXTRA-lane operator (multimodal packing): cell-exact vs
-    the recursive-CTE DuckDB walk, and the packing invariants hold on
-    every row: padding only ever precedes a media span, media spans
-    never straddle a context boundary, and each span starts exactly
-    where the previous one ended plus its padding."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_interleaved_pack
-
-    got = q_interleaved_pack(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["interleaved_pack"]).df()
-    _canon_frames(got, exp)
-    assert (got[got.kind == "text"].pad_before == 0).all()
-    media = got[got.kind == "media"]
-    assert (media.ctx_offset + 16 <= 64).all()
-    assert media.media_ref.notna().all()
-    g = got.sort_values(["doc_id", "seq"])
-    prev_end = (g.start_pos + g.span_len).shift()
-    same_doc = g.doc_id.eq(g.doc_id.shift())
-    assert (g.start_pos[same_doc]
-            == (prev_end + g.pad_before)[same_doc]).all()
-    assert (g.start_pos[~same_doc] == 0).all()
-
-
-def test_interleaved_pack_planted(spark, tmp_path):
-    """A pure-Python replica of the greedy walk must reproduce every
-    row over a 60-doc sweep, and the sweep must actually exercise a
-    non-trivial pad (a media span pushed to the next context)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_interleaved_pack
-
-    n_docs, L = 60, 100
-    texts = [" ".join(f"w{j}" for j in range(L))] * n_docs
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array(range(n_docs), pa.int64()),
-        "text": pa.array(texts, pa.string()),
-        "lang": pa.array(["en"] * n_docs, pa.string()),
-        "source": pa.array(["src0"] * n_docs, pa.string()),
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    got = sorted(
-        (tuple(r) for r in
-         q_interleaved_pack(spark, str(tmp_path)).collect()))
-    ref = sorted(r for i in range(n_docs) for r in _pack_ref(i, L))
-    assert got == [tuple(r) for r in ref]
-    assert any(r[5] > 0 for r in ref)       # a pad fired somewhere
-
-
-def test_interleaved_pack_plan(spark):
-    """Packing is per-document and embarrassingly parallel across the
-    corpus: ZERO shuffles, zero joins, everything in one
-    scan-project fold."""
-    from dragnet_spark.queries import q_interleaved_pack
-
-    df = q_interleaved_pack(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Exchange" not in final
-    assert "Join" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_quality_classifier_vs_duckdb(spark):
-    """Thirteenth EXTRA-lane operator (hashed linear classifier):
-    cell-exact vs the DuckDB oracle; scores are valid probabilities
-    and the label matches the logit sign wherever the rounded logit
-    is unambiguous."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_quality_classifier
-
-    got = q_quality_classifier(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["quality_classifier"]).df()
-    _canon_frames(got, exp)
-    assert ((got.score > 0) & (got.score < 1)).all()
-    clear = got[got.logit.abs() > 1e-5]
-    assert (clear.label.eq("content") == (clear.logit > 0)).all()
-    assert set(got.label) == {"content", "boilerplate"}
-
-
-def test_quality_classifier_planted(spark, tmp_path):
-    """A pure-Python replica (hashlib weights + math.exp sigmoid) must
-    reproduce logit and score to rounding tolerance on hand-built
-    docs, and the linearity holds: appending one fixed token shifts
-    the logit by exactly that token's weight."""
-    import hashlib
-    import math
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_quality_classifier
-
-    def w(tok):
-        return (int(hashlib.md5(tok.encode()).hexdigest()[:8], 16)
-                % 101) / 101.0 - 0.5
-
-    texts = {0: "spark table merge", 1: "spark table merge filler",
-             2: "a", 3: "the the the the the the"}
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array(list(texts), pa.int64()),
-        "text": pa.array(list(texts.values()), pa.string()),
-        "lang": pa.array(["en"] * 4, pa.string()),
-        "source": pa.array(["src0"] * 4, pa.string()),
-        "n_chars": pa.array([len(t) for t in texts.values()], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    got = {int(r.doc_id): r for r in
-           q_quality_classifier(spark, str(tmp_path)).collect()}
-    for i, t in texts.items():
-        z = -0.05 + sum(w(tok) for tok in t.split(" "))
-        assert abs(got[i].logit - z) < 2e-6, i
-        assert abs(got[i].score - 1 / (1 + math.exp(-z))) < 2e-6, i
-        assert got[i].label == ("content" if z >= 0 else "boilerplate")
-    assert abs((got[1].logit - got[0].logit) - w("filler")) < 2e-6
-    assert abs(got[3].logit - (-0.05 + 6 * w("the"))) < 2e-6
-
-
-def test_quality_classifier_plan(spark):
-    """Zero shuffles, zero joins — per-row hash + fold, all codegen."""
-    from dragnet_spark.queries import q_quality_classifier
-
-    df = q_quality_classifier(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Exchange" not in final
-    assert "Join" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_quality_entropy_vs_duckdb(spark):
-    """Fourteenth EXTRA-lane operator (token entropy): cell-exact vs
-    the DuckDB oracle; entropy bounded by [0, ln(n_distinct)] and the
-    normalized form in [0, 1]."""
-    import duckdb
-    import numpy as np
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_quality_entropy
-
-    got = q_quality_entropy(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["quality_entropy"]).df()
-    _canon_frames(got, exp)
-    # round(6) can push a uniform doc's entropy up to 5e-7 past the
-    # exact ln(n_distinct) bound.
-    assert ((got.entropy >= -1e-6)
-            & (got.entropy <= np.log(got.n_distinct) + 1e-6)).all()
-    assert ((got.entropy_norm >= 0) & (got.entropy_norm <= 1)).all()
-
-
-def test_quality_entropy_planted(spark, tmp_path):
-    """Hand-built docs pin the signal: an all-distinct doc has maximal
-    entropy (norm exactly 1), an all-same doc has entropy exactly 0,
-    and a skewed doc matches the pure-Python H to rounding tolerance
-    and sits strictly between."""
-    import math
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_quality_entropy
-
-    texts = {0: "a b c d e f g h",            # uniform: norm = 1
-             1: "x x x x x x",                # degenerate: H = 0
-             2: "a a a a a a a b c d",        # skewed
-             3: "solo"}                       # 1 token: H = 0, norm 0
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array(list(texts), pa.int64()),
-        "text": pa.array(list(texts.values()), pa.string()),
-        "lang": pa.array(["en"] * 4, pa.string()),
-        "source": pa.array(["src0"] * 4, pa.string()),
-        "n_chars": pa.array([len(t) for t in texts.values()], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    got = {int(r.doc_id): r for r in
-           q_quality_entropy(spark, str(tmp_path)).collect()}
-
-    def ref_h(t):
-        toks = t.split(" ")
-        n = len(toks)
-        s = sum(toks.count(w) * math.log(toks.count(w))
-                for w in set(toks))
-        return math.log(n) - s / n
-
-    assert got[0].entropy_norm == 1.0
-    assert abs(got[0].entropy - math.log(8)) < 2e-6
-    assert got[1].entropy == 0.0 and got[1].entropy_norm == 0.0
-    assert abs(got[2].entropy - ref_h(texts[2])) < 2e-6
-    assert 0.0 < got[2].entropy_norm < 1.0
-    assert got[3].entropy == 0.0 and got[3].entropy_norm == 0.0
-    assert got[3].n_tokens == 1 and got[3].n_distinct == 1
-
-
-def test_quality_entropy_plan(spark):
-    """Zero shuffles — per-row sort + run-length fold; the explode ->
-    double-shuffle alternative is exactly what this plan avoids."""
-    from dragnet_spark.queries import q_quality_entropy
-
-    df = q_quality_entropy(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Exchange" not in final
-    assert "Join" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_ann_graph_knn_vs_duckdb(spark):
-    """Fifteenth EXTRA-lane operator (LSH-blocked kNN graph):
-    cell-exact vs the DuckDB oracle; per-source ranks are contiguous
-    from 1, capped at 4, and cosines are non-increasing down each
-    source's list."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_ann_graph_knn
-
-    got = q_ann_graph_knn(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW embeddings AS "
-            f"SELECT * FROM '{SF}/embeddings.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["ann_graph_knn"]).df()
-    _canon_frames(got, exp)
-    g = got.sort_values(["vec_id", "rank"])
-    per = g.groupby("vec_id")
-    assert (per["rank"].min() == 1).all()
-    assert (per["rank"].max() <= 4).all()
-    assert (per["rank"].count() == per["rank"].max()).all()
-    assert (per.cos_sim.apply(lambda s: s.is_monotonic_decreasing)).all()
-    assert (g.vec_id != g.neighbor).all()
-
-
-def test_ann_graph_knn_planted(spark, tmp_path):
-    """A pure-Python replica of the whole operator (rational
-    hyperplane banding, bucket candidate generation, sequential-fold
-    cosine, rank by cos desc / neighbor asc) must reproduce the graph
-    exactly on a planted corpus of duplicate clusters; the 6-clone
-    cluster's nodes neighbor the 4 smallest other clone ids at
-    cos_sim exactly 1."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_ann_graph_knn
-
-    rng = np.random.default_rng(424242)
-    dim = 64
-    u = rng.uniform(-0.3, 0.3, dim).astype(np.float32)
-    v = rng.uniform(-0.3, 0.3, dim).astype(np.float32)
-    w = rng.uniform(-0.3, 0.3, dim).astype(np.float32)
-    vecs = {i: u.copy() for i in range(6)}
-    vecs.update({10 + i: v.copy() for i in range(3)})
-    vecs[20] = w
-    ids = sorted(vecs)
-    pq.write_table(pa.Table.from_pydict({
-        "vec_id": pa.array(ids, pa.int64()),
-        "embedding": pa.array([list(map(float, vecs[i])) for i in ids],
-                              pa.list_(pa.float32())),
-        "label": pa.array([0] * len(ids), pa.int32()),
-    }), f"{tmp_path}/embeddings.parquet")
-
-    def bucket(x, band):
-        b = 0
-        for k in range(8):
-            i = band * 8 + k
-            dot = 0.0
-            for j in range(dim):
-                dot += float(x[j]) * (((j + i * 64) * 37 % 101)
-                                      / 101.0 - 0.5)
-            if dot > 0.0:
-                b += 2 ** k
-        return b
-
-    def cos(x, y):
-        num = ss_x = ss_y = 0.0
-        for j in range(dim):
-            num += float(x[j]) * float(y[j])
-            ss_x += float(x[j]) * float(x[j])
-            ss_y += float(y[j]) * float(y[j])
-        return num / (ss_x ** 0.5 * ss_y ** 0.5)
-
-    buckets = {i: [bucket(vecs[i], b) for b in range(4)] for i in ids}
-    expect = []
-    for s in ids:
-        cands = [d for d in ids if d != s
-                 and any(buckets[s][b] == buckets[d][b]
-                         for b in range(4))]
-        ranked = sorted(cands, key=lambda d: (-cos(vecs[s], vecs[d]), d))
-        for r, d in enumerate(ranked[:4], 1):
-            expect.append((s, r, d, round(cos(vecs[s], vecs[d]), 6)))
-
-    got = sorted(tuple(r) for r in
-                 q_ann_graph_knn(spark, str(tmp_path)).collect())
-    assert got == sorted(expect)
-    for i in range(6):
-        mine = [r for r in got if r[0] == i]
-        assert [(r[2], r[3]) for r in mine] == \
-            [(d, 1.0) for d in sorted(set(range(6)) - {i})[:4]]
-
-
-def test_ann_graph_knn_plan(spark):
-    """The candidate self-join is per (band, bucket) with BOTH sides
-    reusing one banding subplan; the per-source top-k is a window on
-    the src key; nothing cartesian, nothing Python."""
-    from dragnet_spark.queries import q_ann_graph_knn
-
-    df = q_ann_graph_knn(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "RunningWindowFunction" in final or "Window" in final
-    assert "CartesianProduct" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_mixture_temperature_vs_duckdb(spark):
-    """Sixteenth EXTRA-lane operator (temperature sampling): cell-exact
-    vs the DuckDB oracle; both weight columns are valid distributions
-    and the flattening direction holds — temperature weights are
-    closer to uniform than proportional weights for every source (the
-    alpha = 0.3 contract)."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_mixture_temperature
-
-    got = q_mixture_temperature(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["mixture_temperature"]).df()
-    _canon_frames(got, exp)
-    assert abs(got.weight_prop.sum() - 1) < 2e-5
-    assert abs(got.weight_temp.sum() - 1) < 2e-5
-    u = 1.0 / len(got)
-    assert ((got.weight_temp - u).abs()
-            <= (got.weight_prop - u).abs() + 1e-9).all()
-
-
-def test_mixture_temperature_planted(spark, tmp_path):
-    """A 100:1 token imbalance must flatten to ~100^0.3 ~ 3.98 under
-    temperature while staying ~100x under proportional sampling, and
-    both match the pure-Python computation to rounding tolerance."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_mixture_temperature
-
-    texts = ([(i, " ".join(["w"] * 100), "big") for i in range(10)]
-             + [(100, " ".join(["w"] * 10), "small")])
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array([t[0] for t in texts], pa.int64()),
-        "text": pa.array([t[1] for t in texts], pa.string()),
-        "lang": pa.array(["en"] * len(texts), pa.string()),
-        "source": pa.array([t[2] for t in texts], pa.string()),
-        "n_chars": pa.array([len(t[1]) for t in texts], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    got = {r.source: r for r in
-           q_mixture_temperature(spark, str(tmp_path)).collect()}
-    assert got["big"].n_tokens == 1000 and got["small"].n_tokens == 10
-    assert abs(got["big"].weight_prop / got["small"].weight_prop
-               - 100.0) < 1e-3
-    ratio = got["big"].weight_temp / got["small"].weight_temp
-    assert abs(ratio - 100 ** 0.3) < 1e-4
-    assert abs(got["big"].weight_temp + got["small"].weight_temp
-               - 1.0) < 2e-6
-
-
-def test_mixture_temperature_plan(spark):
-    """One partial-aggregated rollup to #sources rows + a one-row
-    normalizer broadcast; nothing cartesian beyond that benign scalar
-    cross, nothing Python."""
-    from dragnet_spark.queries import q_mixture_temperature
-
-    df = q_mixture_temperature(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "partial_count" in final
-    assert "CartesianProduct" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_span_corruption_vs_duckdb(spark):
-    """Seventeenth EXTRA-lane operator (T5 length accounting):
-    cell-exact vs the DuckDB oracle; the sentinel arithmetic holds on
-    every row (inputs_len + targets_len == n_tokens + 2*n_spans + 1),
-    spans never exceed masked tokens, and the corpus-mean mask rate
-    sits in the designed ~15.6% neighborhood."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_span_corruption
-
-    got = q_span_corruption(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["span_corruption"]).df()
-    _canon_frames(got, exp)
-    assert (got.inputs_len + got.targets_len
-            == got.n_tokens + 2 * got.n_spans + 1).all()
-    assert (got.n_spans <= got.n_masked).all()
-    assert ((got.n_spans == 0) == (got.n_masked == 0)).all()
-    assert 0.10 < got.mask_rate.mean() < 0.22
-
-
-def test_span_corruption_planted(spark, tmp_path):
-    """A pure-Python md5 walk must reproduce every count over a
-    120-doc sweep, spans counted exactly as maximal masked runs."""
-    import hashlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_span_corruption
-
-    def masked(doc_id, p):
-        return hashlib.md5(
-            f"m:{doc_id}:{p}".encode()).hexdigest()[:2] < "28"
-
-    n_docs = 120
-    lens = [(i % 40) + 1 for i in range(n_docs)]
-    texts = [" ".join(f"w{j}" for j in range(L)) for L in lens]
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array(range(n_docs), pa.int64()),
-        "text": pa.array(texts, pa.string()),
-        "lang": pa.array(["en"] * n_docs, pa.string()),
-        "source": pa.array(["src0"] * n_docs, pa.string()),
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    got = {int(r.doc_id): r for r in
-           q_span_corruption(spark, str(tmp_path)).collect()}
-    for i in range(n_docs):
-        n = lens[i]
-        mask = [masked(i, p) for p in range(1, n + 1)]
-        nm = sum(mask)
-        ns = sum(1 for k, m in enumerate(mask)
-                 if m and (k == 0 or not mask[k - 1]))
-        r = got[i]
-        assert (r.n_tokens, r.n_masked, r.n_spans) == (n, nm, ns), i
-        assert r.inputs_len == n - nm + ns
-        assert r.targets_len == nm + ns + 1
-
-
-def test_span_corruption_plan(spark):
-    """Zero shuffles — span starts need no sequential walk, just two
-    PRF evaluations per position in one scan-project."""
-    from dragnet_spark.queries import q_span_corruption
-
-    df = q_span_corruption(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Exchange" not in final
-    assert "Join" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_hard_negatives_vs_duckdb(spark):
-    """Eighteenth EXTRA-lane operator (contrastive pair mining):
-    cell-exact vs the DuckDB oracle; at most 1 positive and 2
-    negatives per anchor, ranks contiguous within each (anchor, kind),
-    and no anchor is its own neighbor."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_hard_negatives
-
-    got = q_hard_negatives(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW embeddings AS "
-            f"SELECT * FROM '{SF}/embeddings.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["hard_negatives"]).df()
-    _canon_frames(got, exp)
-    per = got.groupby(["vec_id", "kind"])["rank"]
-    assert (per.min() == 1).all()
-    caps = got.kind.map({"pos": 1, "neg": 2})
-    assert (got["rank"] <= caps).all()
-    assert (got.vec_id != got.neighbor).all()
-
-
-def test_hard_negatives_planted(spark, tmp_path):
-    """Planted clusters pin the mining semantics: among co-bucketed
-    exact clones, an anchor's positive is its smallest same-label
-    clone id at cos exactly 1, and its hard negatives are the two
-    smallest different-label clone ids at cos exactly 1 (id
-    tie-break); a label-unique vector sharing buckets emits negatives
-    but no positive."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_hard_negatives
-
-    rng = np.random.default_rng(777)
-    u = rng.uniform(-0.3, 0.3, 64).astype(np.float32)
-    # 6 clones of one direction: ids 0,1,2 label 0; ids 3,4 label 1;
-    # id 5 label 2 (unique label).  Identical vectors share every
-    # bucket, so all are mutual candidates with cos exactly 1.
-    ids = list(range(6))
-    labels = [0, 0, 0, 1, 1, 2]
-    pq.write_table(pa.Table.from_pydict({
-        "vec_id": pa.array(ids, pa.int64()),
-        "embedding": pa.array([list(map(float, u))] * 6,
-                              pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32()),
-    }), f"{tmp_path}/embeddings.parquet")
-
-    rows = q_hard_negatives(spark, str(tmp_path)).collect()
-    got = {}
-    for r in rows:
-        got.setdefault(int(r.vec_id), {}).setdefault(r.kind, []).append(
-            (r.rank, r.neighbor, r.cos_sim))
-    for v in got.values():
-        for k in v:
-            v[k].sort()
-    assert got[0]["pos"] == [(1, 1, 1.0)]
-    assert got[0]["neg"] == [(1, 3, 1.0), (2, 4, 1.0)]
-    assert got[3]["pos"] == [(1, 4, 1.0)]
-    assert got[3]["neg"] == [(1, 0, 1.0), (2, 1, 1.0)]
-    assert "pos" not in got[5]              # unique label: no positive
-    assert got[5]["neg"] == [(1, 0, 1.0), (2, 1, 1.0)]
-
-
-def test_hard_negatives_plan(spark):
-    """Same shape as the kNN graph: per-(band, bucket) self-join,
-    per-(src, kind) window, nothing cartesian, nothing Python."""
-    from dragnet_spark.queries import q_hard_negatives
-
-    df = q_hard_negatives(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Window" in final
-    assert "CartesianProduct" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_fingerprint_winnow_vs_duckdb(spark):
-    """Nineteenth EXTRA-lane operator (MOSS winnowing): cell-exact vs
-    the DuckDB oracle; kept counts are bounded by the gram count,
-    exact-duplicate texts share a digest, and the corpus-mean kept
-    fraction sits at the theoretical ~2/(w+1) = 0.4 density."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_fingerprint_winnow
-
-    got = q_fingerprint_winnow(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["fingerprint_winnow"]).df()
-    _canon_frames(got, exp)
-    assert (got.n_kept <= got.n_grams.clip(lower=1)).all()
-    assert ((got.n_kept >= 1) == (got.n_grams >= 1)).all()
-    frac = (got.n_kept / got.n_grams.clip(lower=1)).mean()
-    assert 0.25 < frac < 0.55
-
-
-def test_fingerprint_winnow_planted(spark, tmp_path):
-    """A pure-Python winnow must reproduce every digest, and the MOSS
-    guarantee holds: two documents sharing a >= w+k-1 = 6-token run
-    share at least one winnowed fingerprint, while disjoint documents
-    share none."""
-    import hashlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_fingerprint_winnow
-
-    shared = "alpha beta gamma delta epsilon zeta"      # 6-token run
-    texts = {
-        0: shared + " one two three",
-        1: "nine eight " + shared,                       # shares the run
-        2: "p q r s t u v w",                            # disjoint
-        3: "x y",                                        # < k tokens
-        4: "a b c",                                      # 1 gram
-        5: shared + " one two three",                    # exact dup of 0
-    }
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array(list(texts), pa.int64()),
-        "text": pa.array(list(texts.values()), pa.string()),
-        "lang": pa.array(["en"] * len(texts), pa.string()),
-        "source": pa.array(["src0"] * len(texts), pa.string()),
-        "n_chars": pa.array([len(t) for t in texts.values()], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    def winnow(t):
-        toks = t.split(" ")
-        g = [hashlib.md5(" ".join(toks[i:i + 3]).encode()).hexdigest()
-             for i in range(len(toks) - 2)]
-        if len(g) >= 4:
-            kept = [min(g[j:j + 4]) for j in range(len(g) - 3)]
-        elif g:
-            kept = [min(g)]
-        else:
-            kept = []
-        ks = sorted(set(kept))
-        return (len(g), len(ks),
-                hashlib.md5("".join(ks).encode()).hexdigest(), set(ks))
-
-    got = {int(r.doc_id): r for r in
-           q_fingerprint_winnow(spark, str(tmp_path)).collect()}
-    sets = {}
-    for i, t in texts.items():
-        ng, nk, dig, ks = winnow(t)
-        assert (got[i].n_grams, got[i].n_kept, got[i].fp_digest) == \
-            (ng, nk, dig), i
-        sets[i] = ks
-    assert sets[0] & sets[1]                 # the MOSS guarantee
-    assert not (sets[0] & sets[2])
-    assert got[0].fp_digest == got[5].fp_digest
-    assert got[3].n_grams == 0 and got[3].n_kept == 0
-    assert got[4].n_grams == 1 and got[4].n_kept == 1
-
-
-def test_fingerprint_winnow_plan(spark):
-    """Zero shuffles — per-row string/array arithmetic only."""
-    from dragnet_spark.queries import q_fingerprint_winnow
-
-    df = q_fingerprint_winnow(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Exchange" not in final
-    assert "Join" not in final
-    assert "BatchEvalPython" not in final
-
-
-def _bloom_ref(texts, m=65536, k=4):
-    """Pure-Python replica of q_dedup_bloom: word_idx -> 32-bit word."""
-    import hashlib
-
-    words = {}
-    for t in texts:
-        h = hashlib.md5(t.encode()).hexdigest()
-        for i in range(k):
-            idx = int(h[8 * i:8 * i + 8], 16) % m
-            words[idx // 32] = words.get(idx // 32, 0) | (1 << (idx % 32))
-    return words
-
-
-def test_dedup_bloom_vs_duckdb(spark):
-    """Twentieth EXTRA-lane operator (Bloom sketch): cell-exact vs the
-    DuckDB oracle; words are in range, fit 32 bits, and are
-    non-empty (the sparse contract)."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_dedup_bloom
-
-    got = q_dedup_bloom(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["dedup_bloom"]).df()
-    _canon_frames(got, exp)
-    assert ((got.word_idx >= 0) & (got.word_idx < 2048)).all()
-    assert ((got.bits > 0) & (got.bits < 2 ** 32)).all()
-
-
-def test_dedup_bloom_planted(spark, tmp_path):
-    """The pure-Python replica must match word-for-word; every
-    inserted key probes positive; 2000 random non-keys measure zero
-    false positives at this fill (theory ~1e-10); and the filter of a
-    union equals the OR of the parts' filters (the snapshot-merge
-    contract)."""
-    import hashlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_dedup_bloom
-
-    def write(texts, path):
-        pq.write_table(pa.Table.from_pydict({
-            "doc_id": pa.array(range(len(texts)), pa.int64()),
-            "text": pa.array(texts, pa.string()),
-            "lang": pa.array(["en"] * len(texts), pa.string()),
-            "source": pa.array(["src0"] * len(texts), pa.string()),
-            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-        }), f"{path}/documents.parquet")
-
-    texts_a = [f"doc a number {i}" for i in range(30)]
-    texts_b = [f"doc b number {i}" for i in range(20)]
-    for sub, txts in (("a", texts_a), ("b", texts_b),
-                      ("ab", texts_a + texts_b)):
-        (tmp_path / sub).mkdir()
-        write(txts, tmp_path / sub)
-
-    filt = {}
-    for sub in ("a", "b", "ab"):
-        filt[sub] = {int(r.word_idx): int(r.bits) for r in
-                     q_dedup_bloom(spark, str(tmp_path / sub)).collect()}
-    assert filt["ab"] == _bloom_ref(texts_a + texts_b)
-    merged = dict(filt["a"])
-    for wi, b in filt["b"].items():
-        merged[wi] = merged.get(wi, 0) | b
-    assert merged == filt["ab"]
-
-    def probe(f, t):
-        h = hashlib.md5(t.encode()).hexdigest()
-        return all(
-            f.get(int(h[8 * i:8 * i + 8], 16) % 65536 // 32, 0)
-            >> (int(h[8 * i:8 * i + 8], 16) % 65536 % 32) & 1
-            for i in range(4))
-
-    assert all(probe(filt["ab"], t) for t in texts_a + texts_b)
-    fp = sum(probe(filt["ab"], f"absent {j}") for j in range(2000))
-    assert fp == 0
-
-
-def test_dedup_bloom_plan(spark):
-    """One map-side-combinable BIT_OR aggregation — the mergeable
-    -sketch shape (partial ORs before the exchange), nothing else."""
-    from dragnet_spark.queries import q_dedup_bloom
-
-    df = q_dedup_bloom(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "partial_bit_or" in final
-    assert "Join" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_curate_report_vs_duckdb(spark):
-    """Twenty-first EXTRA-lane operator (curation dashboard):
-    cell-exact vs the DuckDB oracle (the recursive curate CTE nests
-    cleanly); per-source fractions sum to 1 and the per-(source,
-    reason) doc counts reconcile exactly with the standalone
-    curate_decisions relation."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_curate_decisions, q_curate_report
-
-    got = q_curate_report(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["curate_report"]).df()
-    _canon_frames(got, exp)
-    sums = got.groupby("source").frac_docs.sum()
-    assert ((sums - 1).abs() < 2e-5).all()
-    cd = q_curate_decisions(spark, SF).toPandas()
-    assert got.n_docs.sum() == len(cd)
-    by_reason = got.groupby("reason").n_docs.sum().to_dict()
-    assert by_reason == cd.reason.value_counts().to_dict()
-
-
-def test_curate_report_planted(spark, tmp_path):
-    """A corpus engineered so each source concentrates one rule (a
-    duplicate-heavy source, a too-short source, a clean source) must
-    report exactly those losses per source."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_curate_report
-
-    rows = []
-    # dup-heavy source: 4 identical docs (1 kept + 3 'duplicate').
-    for i in range(4):
-        rows.append((200 + i, "alpha beta gamma delta epsilon zeta eta",
-                     "dupsrc"))
-    # short source: 3 docs under 5 words ('too_short').
-    for i in range(3):
-        rows.append((300 + i, f"tiny doc {i}", "shortsrc"))
-    # clean source: distinct 8-word docs.
-    for i in range(5):
-        rows.append((400 + i,
-                     " ".join(f"c{i}w{j}" for j in range(8)), "clean"))
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-        "text": pa.array([r[1] for r in rows], pa.string()),
-        "lang": pa.array(["en"] * len(rows), pa.string()),
-        "source": pa.array([r[2] for r in rows], pa.string()),
-        "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    got = {(r.source, r.reason): r for r in
-           q_curate_report(spark, str(tmp_path)).collect()}
-    assert got[("dupsrc", "duplicate")].n_docs == 3
-    assert got[("dupsrc", "keep")].n_docs == 1
-    assert got[("dupsrc", "duplicate")].frac_docs == 0.75
-    assert got[("shortsrc", "too_short")].n_docs == 3
-    assert got[("shortsrc", "too_short")].frac_docs == 1.0
-    assert got[("clean", "keep")].n_docs == 5
-    assert got[("clean", "keep")].frac_docs == 1.0
-    assert got[("dupsrc", "duplicate")].n_tokens == 21
-
-
-def test_curate_report_plan(spark):
-    """On top of the audited curate chain: one doc_id join, one
-    partial-agg rollup, and a per-source window over the tiny
-    (source, reason) relation — never SinglePartition for it."""
-    from dragnet_spark.queries import q_curate_report
-
-    df = q_curate_report(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "partial_count" in final
-    assert "windowspecdefinition(source#" in final
-    assert "BatchEvalPython" not in final
-
-
-def test_bpe_merges_vs_duckdb(spark):
-    """Twenty-second EXTRA-lane operator (BPE round-1 statistics):
-    ordered-relation exact vs the DuckDB oracle; counts
-    non-increasing and pairs are 2 chars."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_bpe_merges
-
-    got = q_bpe_merges(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["bpe_merges"]).df()
-    assert got.values.tolist() == exp.values.tolist()
-    assert (got.n_occurrences.diff().dropna() <= 0).all()
-    assert got.pair.str.len().eq(2).all()
-
-
-def test_bpe_merges_planted(spark, tmp_path):
-    """A pure-Python pair count over a crafted corpus must match
-    exactly, including the overlapping-pair semantics ('aaa' yields
-    two 'aa' pairs) and the tie-break on pair text."""
-    from collections import Counter
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_bpe_merges
-
-    texts = ["aaa bb low lower lowest", "low low newer newest",
-             "x ab ab ba"]
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array(range(len(texts)), pa.int64()),
-        "text": pa.array(texts, pa.string()),
-        "lang": pa.array(["en"] * len(texts), pa.string()),
-        "source": pa.array(["src0"] * len(texts), pa.string()),
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    c = Counter()
-    for t in texts:
-        for w in t.split(" "):
-            for i in range(len(w) - 1):
-                c[w[i:i + 2]] += 1
-    expect = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    got = [(r.pair, r.n_occurrences) for r in
-           q_bpe_merges(spark, str(tmp_path)).collect()]
-    assert got == expect
-    assert c["aa"] == 2                       # overlap inside 'aaa'
-
-
-def test_bpe_merges_plan(spark):
-    """token_topk's audited shape one level down: partial count +
-    TakeOrderedAndProject, nothing Python."""
-    from dragnet_spark.queries import q_bpe_merges
-
-    df = q_bpe_merges(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "TakeOrderedAndProject" in final
-    assert "partial_count" in final
-    assert "BatchEvalPython" not in final
-
-
-def test_sample_bottomk_vs_duckdb(spark):
-    """Twenty-third EXTRA-lane operator (bottom-k sample): cell-exact
-    vs the ONE-level-window DuckDB oracle (proving the two-level
-    bucket scan loses nothing); exactly min(5, source size) rows per
-    source with hashes ascending by rank."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import q_sample_bottomk
-
-    got = q_sample_bottomk(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["sample_bottomk"]).df()
-    _canon_frames(got, exp)
-    per = got.sort_values(["source", "rank"]).groupby("source")
-    assert (per["rank"].apply(lambda s: list(s)
-                              == list(range(1, len(s) + 1)))).all()
-    assert (per["h"].apply(lambda s: s.is_monotonic_increasing)).all()
-    assert (per.size() <= 5).all()
-
-
-def test_sample_bottomk_planted(spark, tmp_path):
-    """A pure-Python bottom-k over a skewed corpus (one source with
-    400 docs, one with 3) must match exactly — including the
-    short-source case (all 3 docs kept) — and a rerun returns the
-    identical sample (the reproducibility contract)."""
-    import hashlib
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_sample_bottomk
-
-    rows = [(i, "w " * 5, "big") for i in range(400)] \
-        + [(1000 + i, "w " * 5, "tiny") for i in range(3)]
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-        "text": pa.array([r[1] for r in rows], pa.string()),
-        "lang": pa.array(["en"] * len(rows), pa.string()),
-        "source": pa.array([r[2] for r in rows], pa.string()),
-        "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    def ref(src_ids):
-        keyed = sorted((hashlib.md5(str(i).encode()).hexdigest(), i)
-                       for i in src_ids)
-        return [(r + 1, i, h) for r, (h, i) in enumerate(keyed[:5])]
-
-    expect = {"big": ref(range(400)), "tiny": ref(range(1000, 1003))}
-    for _ in range(2):                       # identical on rerun
-        got = {}
-        for r in q_sample_bottomk(spark, str(tmp_path)).collect():
-            got.setdefault(r.source, []).append(
-                (r.rank, r.doc_id, r.h))
-        for s in got:
-            got[s].sort()
-        assert got == expect
-    assert len(expect["big"]) == 5 and len(expect["tiny"]) == 3
-
-
-def test_sample_bottomk_plan(spark):
-    """Both rank-limited windows execute as WindowGroupLimit (partial
-    per-partition top-k BEFORE the sort materializes — the
-    window-shaped TakeOrdered); nothing cartesian, nothing Python."""
-    from dragnet_spark.queries import q_sample_bottomk
-
-    df = q_sample_bottomk(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "WindowGroupLimit" in final
-    assert "CartesianProduct" not in final
-    assert "BatchEvalPython" not in final
-
-
-def test_lang_switches_vs_duckdb(spark):
-    """Twenty-fourth EXTRA-lane operator (code-switch detection):
-    cell-exact vs the DuckDB oracle; switches bounded by
-    n_windows - 1, single-window docs report frac 0, predictions stay
-    in the language set."""
-    import duckdb
-    from dragnet_spark.oracle_sql import EXTRA_ORACLE_SQL
-    from dragnet_spark.queries import _LANG_ORDER, q_lang_switches
-
-    got = q_lang_switches(spark, SF).toPandas()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS "
-            f"SELECT * FROM '{SF}/documents.parquet'")
-    exp = con.sql(EXTRA_ORACLE_SQL["lang_switches"]).df()
-    _canon_frames(got, exp)
-    assert (got.n_switches <= (got.n_windows - 1).clip(lower=0)).all()
-    assert (got[got.n_windows == 1].switch_frac == 0.0).all()
-    assert got.doc_lang.isin(_LANG_ORDER).all()
-
-
-def test_lang_switches_planted(spark, tmp_path):
-    """Engineered documents pin the semantics: a pure-English doc
-    never switches; a doc alternating English and German marker
-    windows switches at EVERY boundary (frac exactly 1); a
-    single-window doc reports zero; and the window classifier agrees
-    with the doc-level argmax on homogeneous docs."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dragnet_spark.queries import q_lang_switches
-
-    en = "the a table row the a table row the a"       # 10 en tokens
-    de = "hash join key big hash join key big hash join"
-    texts = {
-        0: " ".join([en] * 4),               # 4 windows, 0 switches
-        1: " ".join([en, de, en, de]),       # alternating: 3 switches
-        2: "the a table",                    # 1 window
-        3: " ".join([en, en, de]),           # one switch
-    }
-    pq.write_table(pa.Table.from_pydict({
-        "doc_id": pa.array(list(texts), pa.int64()),
-        "text": pa.array(list(texts.values()), pa.string()),
-        "lang": pa.array(["en"] * len(texts), pa.string()),
-        "source": pa.array(["src0"] * len(texts), pa.string()),
-        "n_chars": pa.array([len(t) for t in texts.values()], pa.int64()),
-    }), f"{tmp_path}/documents.parquet")
-
-    got = {int(r.doc_id): r for r in
-           q_lang_switches(spark, str(tmp_path)).collect()}
-    assert (got[0].n_windows, got[0].n_switches) == (4, 0)
-    assert got[0].switch_frac == 0.0 and got[0].doc_lang == "en"
-    assert (got[1].n_windows, got[1].n_switches) == (4, 3)
-    assert got[1].switch_frac == 1.0
-    assert (got[2].n_windows, got[2].n_switches) == (1, 0)
-    assert got[2].switch_frac == 0.0 and got[2].doc_lang == "en"
-    assert (got[3].n_windows, got[3].n_switches) == (3, 1)
-    assert got[3].switch_frac == 0.5
-
-
-def test_lang_switches_plan(spark):
-    """Zero shuffles — two nested per-row transforms (window score
-    structs once, argmax over field references)."""
-    from dragnet_spark.queries import q_lang_switches
-
-    df = q_lang_switches(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Exchange" not in final
-    assert "Join" not in final
-    assert "BatchEvalPython" not in final
