@@ -54,7 +54,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     flagship dedispersion entries, DuckDB-checkable via the band-join
     identity (dragnet_spark/flagship_oracle.py).
 
-    The FLAGSHIP entries come FIRST and the total (49: 9 flagship +
+    The FLAGSHIP entries come FIRST and the total (48: 8 flagship +
     40 relational, one implementation per relation) is capped at 50:
     the driver's correctness gate checks at most 50 queries, and in
     round 4 the five highest-value rows (chunked path, SK fill,

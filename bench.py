@@ -437,12 +437,10 @@ def driver_bench() -> None:
     # dimension lookup jump 1.1 -> 6.8 s on unchanged code); the second
     # run of an identical plan is the cheapest honest deflake — same
     # treatment the flagship gets below.  The flagship-shaped rows get
-    # best-of-3: the mapInPandas block loop and the streaming state
-    # store are the most kernel-jitter-prone paths in the repo (an
-    # in-bench dedisperse_stream measured 18.3 s in one session and
-    # 3.3-3.7 s standalone-warm the same hour, identical code), and
-    # one extra sample per heavy query is the cheapest way to keep the
-    # minimum — the only stable observable here — honest.
+    # best-of-3: the mapInPandas block loop is the most
+    # kernel-jitter-prone path in the repo, and one extra sample per
+    # heavy query is the cheapest way to keep the minimum — the only
+    # stable observable here — honest.
     try:
         flagship_names = set(FLAGSHIP_QUERIES)
     except NameError:  # flagship import failed above

@@ -120,9 +120,7 @@ def export_samples(corpus: str) -> str:
         "value": pa.array(np.concatenate(vals), pa.int64()),
     })
     # pid-scoped temp + atomic rename: two sessions racing this shared
-    # /tmp cache must never let a reader observe a half-written file
-    # (the stream-strip dir in this module is app-scoped for the same
-    # reason).
+    # /tmp cache must never let a reader observe a half-written file.
     tmp = f"{path}.{os.getpid()}.tmp"
     pq.write_table(table, tmp)
     os.replace(tmp, path)
@@ -467,7 +465,7 @@ cpi(intv, ch) AS (VALUES {cpi_rows}),
 padv(chan, pv) AS (VALUES {padv}),
 blocks(isamp) AS (
   -- max_delay is on the DECIMATED grid; the raw halo shift is
-  -- max_delay * ndec (kernels.block_loop_setup shift_back_raw).
+  -- max_delay * ndec (kernels.process_document shift_back_raw).
   SELECT CAST(0 AS BIGINT)
   UNION ALL
   SELECT isamp + LEAST({blocksize}, {t} - isamp) - md.max_delay * {ndec}
@@ -1196,27 +1194,6 @@ def q_dedisperse_optimal_dm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SERIES_SCHEMA = "doc_id string, dm_index bigint, t_out bigint, value double"
-
-
-def _explode_frames(items) -> pd.DataFrame:
-    """(doc_id, dm_index, t0, float32 array) items -> the canonical
-    exploded ``_SERIES_SCHEMA`` frame.  ONE definition shared by the
-    batch text decoder (:func:`_decode_series`) and the streaming
-    chunk decoder (q_dedisperse_stream) — the two frame builders were
-    near-identical copies that could silently drift on a schema
-    change."""
-    frames = [pd.DataFrame({
-        "doc_id": doc_id,
-        "dm_index": np.int64(dm_index),
-        "t_out": np.int64(t0) + np.arange(arr.size, dtype=np.int64),
-        "value": arr.astype(np.float64),
-    }) for doc_id, dm_index, t0, arr in items]
-    return (pd.concat(frames, ignore_index=True) if frames
-            else pd.DataFrame({"doc_id": pd.Series(dtype=object),
-                               "dm_index": pd.Series(dtype=np.int64),
-                               "t_out": pd.Series(dtype=np.int64),
-                               "value": pd.Series(dtype=np.float64)}))
-
 _CHECKSUM_SCHEMA = ("doc_id string, dm_index bigint, n bigint, "
                     "sum_value double, wsum_value double")
 
@@ -1228,11 +1205,22 @@ def _decode_series(rows: DataFrame) -> DataFrame:
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield _explode_frames(
-                (doc_id, dm_index, 0,
-                 np.frombuffer(base64.b64decode(text), dtype="<f4"))
-                for doc_id, dm_index, text in zip(
-                    pdf["doc_id"], pdf["dm_index"], pdf["text"]))
+            frames = []
+            for doc_id, dm_index, text in zip(
+                    pdf["doc_id"], pdf["dm_index"], pdf["text"]):
+                arr = np.frombuffer(base64.b64decode(text), dtype="<f4")
+                frames.append(pd.DataFrame({
+                    "doc_id": doc_id,
+                    "dm_index": np.int64(dm_index),
+                    "t_out": np.arange(arr.size, dtype=np.int64),
+                    "value": arr.astype(np.float64),
+                }))
+            yield (pd.concat(frames, ignore_index=True) if frames
+                   else pd.DataFrame({
+                       "doc_id": pd.Series(dtype=object),
+                       "dm_index": pd.Series(dtype=np.int64),
+                       "t_out": pd.Series(dtype=np.int64),
+                       "value": pd.Series(dtype=np.float64)}))
 
     return ts.mapInPandas(explode, _SERIES_SCHEMA)
 
@@ -1331,95 +1319,6 @@ SELECT 'clip', doc_id, 'n_clipped_samples',
 """
 
 
-# ----- stateful streaming dedisperse under the driver gate ------------------
-
-_STREAM_CUTS = (0, 100, 128, 300, 512)   # uneven, off block boundaries
-_stream_run_seq = [0]                    # unique memory-sink names per call
-
-
-def _stream_strip_dir(spark: SparkSession) -> str:
-    """Write the tiny corpus as raw-sample strip files, split so the
-    halo tail AND the clipper EWMA must cross a micro-batch boundary:
-    file 000 carries each document's first two strips, file 001 the
-    rest, with mtimes ordered so maxFilesPerTrigger=1 streams them as
-    two triggers.  App-id-scoped path: concurrent sessions never race
-    (and a session reuses its own export)."""
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .generate import make_corpus
-    from .spans import decode_document
-
-    base = (f"/tmp/dragnet_stream_strips/"
-            f"{spark.sparkContext.applicationId}")
-    if os.path.exists(f"{base}/.done"):
-        return base
-    os.makedirs(base, exist_ok=True)
-    first, rest = [], []
-    for doc in make_corpus("tiny"):
-        header, data, _media = decode_document(doc["spans"])
-        for i in range(len(_STREAM_CUTS) - 1):
-            lo, hi = _STREAM_CUTS[i], _STREAM_CUTS[i + 1]
-            strip = (doc["doc_id"], header.to_json(), lo,
-                     np.ascontiguousarray(data[lo:hi]).tobytes())
-            (first if i < 2 else rest).append(strip)
-    for fname, strips in (("000.parquet", first), ("001.parquet", rest)):
-        table = pa.table({
-            "doc_id": pa.array([s[0] for s in strips], pa.string()),
-            "header": pa.array([s[1] for s in strips], pa.string()),
-            "strip_offset": pa.array([s[2] for s in strips], pa.int64()),
-            "payload": pa.array([s[3] for s in strips], pa.binary()),
-        })
-        pq.write_table(table, f"{base}/{fname}")
-    now = _time.time()
-    os.utime(f"{base}/000.parquet", (now - 10, now - 10))
-    os.utime(f"{base}/001.parquet", (now + 5, now + 5))
-    with open(f"{base}/.done", "w") as fh:
-        fh.write("ok")
-    return base
-
-
-def q_dedisperse_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL stateful streaming dedisperse (W3 streaming form,
-    ``streaming.streaming_dedisperse``) under the driver gate: the tiny
-    corpus arrives as uneven raw strips across two file-source
-    micro-batches — the halo tail and the clipper EWMA statics live in
-    the state store between triggers — with the CLIPPER ACTIVE (the
-    config the chunked batch path cannot run), and the emitted per-DM
-    chunks, exploded by their absolute output offsets, are verified
-    cell-exactly against the SAME DuckDB EWMA-unrolled reconstruction
-    as the batch ``dedisperse_clipped`` query (``clip_full_oracle_sql``
-    — stream == batch == independent SQL)."""
-    from .streaming import STRIP_SCHEMA, streaming_dedisperse
-
-    export_samples("tiny")
-    base = _stream_strip_dir(spark)
-    _stream_run_seq[0] += 1
-    qname = f"dedisp_stream_gate_{_stream_run_seq[0]}"
-    stream = (spark.readStream.schema(STRIP_SCHEMA)
-              .option("maxFilesPerTrigger", 1).parquet(base))
-    q = (streaming_dedisperse(stream, _clip_full_cfg(), _clip_mask())
-         .writeStream.format("memory").queryName(qname)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    chunks = (spark.table(qname)
-              .where(F.col("dm_index") >= 0)
-              .select("doc_id", "dm_index", "out_offset", "series"))
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _explode_frames(
-                (doc_id, dm_index, off,
-                 np.frombuffer(bytes(series), dtype="<f4"))
-                for doc_id, dm_index, off, series in zip(
-                    pdf["doc_id"], pdf["dm_index"], pdf["out_offset"],
-                    pdf["series"]))
-
-    return chunks.mapInPandas(explode, _SERIES_SCHEMA)
-
-
 # Flagship/metrics entries come FIRST in __spark_entry__.queries():
 # CORRECTNESS_r04 capped at 50 rows and silently dropped the LAST five
 # queries — the chunked path, the SK fill and the clipper EWMA chain
@@ -1433,7 +1332,6 @@ FLAGSHIP_QUERIES = {
     "dedisperse_skew_chunked": q_dedisperse_skew_chunked,
     "dedisperse_sk_full": q_dedisperse_sk_full,
     "dedisperse_clipped": q_dedisperse_clipped,
-    "dedisperse_stream": q_dedisperse_stream,
     "pipeline_metrics": q_pipeline_metrics,
 }
 
@@ -1452,6 +1350,5 @@ def flagship_oracle_sql() -> dict[str, str]:
         "dedisperse_skew_chunked": skew_oracle_sql(),
         "dedisperse_sk_full": sk_full_oracle_sql(),
         "dedisperse_clipped": clip_full_oracle_sql(),
-        "dedisperse_stream": clip_full_oracle_sql(),
         "pipeline_metrics": pipeline_metrics_oracle_sql(),
     }

@@ -490,12 +490,10 @@ def process_block(block_u8: np.ndarray, plan, offset_abs: int,
                   use_mask: bool) -> tuple[np.ndarray, int, int]:
     """ONE iteration of the reference block-loop body
     (``dragnet.cu:241-302``): zap -> widen -> mask/clip -> SK ->
-    decimate -> dedisperse.  Shared verbatim by the batch loop
-    (:func:`process_document`) and the stateful-streaming form
-    (:mod:`dragnet_spark.streaming`), so stream == batch equality holds
-    by construction.  ``block_u8`` is copied internally (the reference
-    re-reads the overlapping tail from disk, ``sigproc.cxx:146``, so
-    in-place edits must not leak into the next block's view).
+    decimate -> dedisperse, driven by :func:`process_document`.
+    ``block_u8`` is copied internally (the reference re-reads the
+    overlapping tail from disk, ``sigproc.cxx:146``, so in-place edits
+    must not leak into the next block's view).
     Returns (out_block, n_clipped_delta, n_sk_masked_delta)."""
     cfg = plan.cfg
     # P2: user channel zap on the byte buffer (dragnet.cu:249-261).
@@ -534,27 +532,6 @@ def process_block(block_u8: np.ndarray, plan, offset_abs: int,
     return dedisperse(fbuf, plan.delays, plan.max_delay), n_clipped, n_sk
 
 
-def block_loop_setup(plan) -> tuple[bool, int, np.ndarray, dict | None]:
-    """Shared preamble of the batch (:func:`process_document`) and
-    streaming (:mod:`dragnet_spark.streaming`) block loops: mask
-    gating, halo shift (raw samples), the padvals scratch vector, and
-    the rfifind-mask kwargs.  ONE definition so the stream == batch
-    bit-parity argument covers the setup, not just the shared block
-    body — a drift here would be invisible to the shared-kernel
-    argument."""
-    cfg = plan.cfg
-    use_mask = cfg.use_mask and plan.mask is not None
-    shift_back_raw = plan.max_delay * cfg.ndec
-    padvals = (plan.padvals.copy() if use_mask and plan.padvals.size
-               else np.zeros(plan.header.nchan, dtype=np.float32))
-    mask_args = dict(dtint=plan.mask.dtint, numint=plan.mask.numint,
-                     zap_ints=plan.mask_zap_ints,
-                     zap_chans=plan.mask_zap_chans,
-                     chans_per_int=plan.mask_chans_per_int) \
-        if use_mask else None
-    return use_mask, shift_back_raw, padvals, mask_args
-
-
 def process_document(data: np.ndarray, plan,
                      offset0: int = 0) -> tuple[np.ndarray, dict]:
     """Run the full cleaning+dedispersion block loop on one document's
@@ -578,7 +555,15 @@ def process_document(data: np.ndarray, plan,
     if nsamp_raw % ndec != 0:
         raise ValueError(f"nsamp {nsamp_raw} not a multiple of ndec {ndec}")
 
-    use_mask, shift_back_raw, padvals, mask_args = block_loop_setup(plan)
+    use_mask = cfg.use_mask and plan.mask is not None
+    shift_back_raw = plan.max_delay * ndec
+    padvals = (plan.padvals.copy() if use_mask and plan.padvals.size
+               else np.zeros(nchan, dtype=np.float32))
+    mask_args = dict(dtint=plan.mask.dtint, numint=plan.mask.numint,
+                     zap_ints=plan.mask_zap_ints,
+                     zap_chans=plan.mask_zap_chans,
+                     chans_per_int=plan.mask_chans_per_int) \
+        if use_mask else None
     clip_state = ClipState()
 
     ndm = plan.dmlist.shape[0]

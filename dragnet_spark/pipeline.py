@@ -43,7 +43,7 @@ from . import __version__
 from .kernels import process_document, scrunch_series
 from .params import Header, MaskSpec, RunConfig
 from .plan import DedispPlan, build_plan
-from .spans import build_output_spans, writeinf_text
+from .spans import build_output_spans, inf_media_spans
 
 
 class LedgerValidationError(RuntimeError):
@@ -131,9 +131,8 @@ def _cached_plan(header_json: str, cfg: RunConfig,
             # chunked path adds per-chunk-length sub-plans, so on a
             # long-lived executor an unbounded cache accumulates one
             # (ndm x nchan) delay table per distinct key — gigabytes
-            # over 10^5+ docs.  Wholesale clear, same policy as
-            # streaming._PLAN_MEMO: far above any per-task variety,
-            # and rebuilding a plan is milliseconds.
+            # over 10^5+ docs.  Wholesale clear: far above any
+            # per-task variety, and rebuilding a plan is milliseconds.
             _PLAN_CACHE.clear()
         plan = build_plan(Header.from_json(header_json), cfg, mask)
         _PLAN_CACHE[key] = plan
@@ -452,16 +451,8 @@ def process_chunk_rows(chunks: DataFrame, cfg_json: str,
                 doc_plan = _cached_plan(r.header, cfg_l, mask_l)
                 h = doc_plan.header
                 # Chunk-relative strips, already sliced at chunk edges
-                # JVM-side; reorder by the (tiny) offset array and join.
-                order = np.argsort(np.asarray(r.strip_offsets,
-                                              dtype=np.int64), kind="stable")
-                raw = b"".join(bytes(r.strip_bins[i]) for i in order)
-                data = np.frombuffer(raw, dtype=np.uint8).reshape(
-                    -1, h.nchan)
-                if h.chan_order == "low":
-                    # LOFAR low-first -> SIGPROC high-first, as in
-                    # _decode_payload (lofarhdf5.cxx:325-335).
-                    data = data[:, ::-1]
+                # JVM-side.
+                data = _decode_payload(r.strip_bins, r.strip_offsets, h)
                 sub_h = Header(**{**json.loads(r.header),
                                   "nsamp": data.shape[0]})
                 sub_plan = _cached_plan(sub_h.to_json(), cfg_l, mask_l)
@@ -481,14 +472,10 @@ def process_chunk_rows(chunks: DataFrame, cfg_json: str,
                         sk_mint=doc_plan.sk_mint)
                 fvec = (doc_plan.dt_factors
                         if cfg_l.use_dt and len(doc_plan.dt_factors) else None)
-                # Mask offsets are absolute: shift the sub-plan's view by
-                # processing with offset-aware mask windows.  check_mask
-                # uses starttime = offset*tsamp with offset relative to
-                # document start, so we process with a data-level offset
-                # by temporarily translating: the block loop's `isamp` is
-                # chunk-relative; chunk_start is added via mask shim.
-                out, metrics = _process_chunk(data, sub_plan,
-                                              int(r.chunk_start))
+                # The rfifind-mask interval lookup needs absolute
+                # document time (mask.c:690): offset0 shifts it.
+                out, metrics = process_document(
+                    data, sub_plan, offset0=int(r.chunk_start))
                 for d in range(out.shape[0]):
                     rows.append({
                         "doc_id": r.doc_id, "chunk_id": int(r.chunk_id),
@@ -501,42 +488,17 @@ def process_chunk_rows(chunks: DataFrame, cfg_json: str,
                         "offset": d})
                 if int(r.chunk_id) == 0:
                     ndm = len(sub_plan.dmlist)
-                    for d, dm in enumerate(sub_plan.dmlist):
-                        dmv = float(np.float32(dm))
-                        if fvec is not None and int(fvec[d]) > 1:
-                            # Adaptive-dt .inf: scrunched bin count /
-                            # width, as build_output_spans writes them
-                            # (nbins = len of the scrunched full series).
-                            fd = int(fvec[d])
-                            inf_text = writeinf_text(
-                                h, cfg_l.prefix, dmv,
-                                nsamp_dec=doc_plan.nsamp_computed // fd,
-                                tsamp_dec=doc_plan.tsamp_dec * fd,
-                                shift_back=0)
-                        else:
-                            inf_text = writeinf_text(
-                                h, cfg_l.prefix, dmv,
-                                nsamp_dec=doc_plan.nsamp_dec,
-                                tsamp_dec=doc_plan.tsamp_dec,
-                                shift_back=doc_plan.max_delay)
+                    tail = inf_media_spans(
+                        sub_plan.dmlist, h, nsamp_dec=doc_plan.nsamp_dec,
+                        tsamp_dec=doc_plan.tsamp_dec,
+                        max_delay=doc_plan.max_delay, prefix=cfg_l.prefix,
+                        media=_media_list(r.media), dt_factors=fvec)
+                    for i, s in enumerate(tail):
                         rows.append({
                             "doc_id": r.doc_id, "chunk_id": 0,
                             "n_chunks": int(r.n_chunks),
-                            "dm_index": ndm + d, "dt_factor": 1,
-                            "series": None, "kind": "inf",
-                            "text": inf_text,
-                            "media_ref": "inf://%s_DM%.3f.inf"
-                                         % (cfg_l.prefix, dmv),
-                            "offset": d})
-                    for mi, m in enumerate(_media_list(r.media)):
-                        rows.append({
-                            "doc_id": r.doc_id, "chunk_id": 0,
-                            "n_chunks": int(r.n_chunks),
-                            "dm_index": 2 * ndm + mi, "dt_factor": 1,
-                            "series": None,
-                            "kind": "media", "text": m.get("text", ""),
-                            "media_ref": m["media_ref"],
-                            "offset": int(m["offset"])})
+                            "dm_index": ndm + i, "dt_factor": 1,
+                            "series": None, **s})
                 # n_spans_out: spans emitted for this chunk (matches
                 # the per-document path's len(spans) semantics).
                 n_emitted = len(rows) - n_rows_before
@@ -628,19 +590,6 @@ def run_pipeline_chunked(df: DataFrame, cfg: RunConfig,
     parts = process_chunk_rows(chunks, cfg_json, mask_json, run_id=run_id,
                                parallelism=parallelism)
     return reassemble_parts(parts, cfg.use_dt)
-
-
-def _process_chunk(data: np.ndarray, sub_plan: DedispPlan,
-                   chunk_start: int) -> tuple[np.ndarray, dict]:
-    """Run the block loop on a chunk.  The rfifind-mask interval lookup
-    uses absolute document time (``offset*tsamp``), so translate the
-    chunk's offsets by processing with a shifted-plan shim."""
-    if chunk_start == 0 or sub_plan.mask is None or not sub_plan.cfg.use_mask:
-        return process_document(data, sub_plan)
-    # Shift mask windows: wrap process_document with an offset by running
-    # it manually — simplest correct route: temporarily extend the data
-    # coordinates via a plan whose apply_mask sees absolute offsets.
-    return process_document(data, sub_plan, offset0=chunk_start)
 
 
 def nest_spans(rows: DataFrame) -> DataFrame:

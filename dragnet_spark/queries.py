@@ -25,6 +25,7 @@ column.
 
 from __future__ import annotations
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -892,11 +893,43 @@ def q_ann_ivf_kmeans(spark, sf_dir):
             .limit(5))
 
 
+NDEG = 12.0  # SK degrees-of-freedom factor (skz.c nd)
+
+
+def windowed_stats(events: DataFrame, window: str = "1 hour") -> DataFrame:
+    """Tumbling event-time window stats: zero-DM sum + SK estimator per
+    (window, channel=user_id)."""
+    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
+    # Exact decimal sums: engine- and plan-independent (Spark == DuckDB
+    # oracle regardless of float association order).
+    dec = F.col("value").cast("decimal(18,2)")
+    g = (events.groupBy(F.window("ts", window).alias("w"),
+                        F.col("user_id").alias("chan"))
+         .agg(F.sum(dec).cast("double").alias("s1"),
+              F.sum(dec * dec).cast("double").alias("s2"),
+              F.count(F.lit(1)).alias("m")))
+    md = F.col("m").cast("double")
+    # Guard m=1 / s1=0 groups (skz.c masks those as NaN; SQL NULL here).
+    sk = F.when(
+        (F.col("m") > 1) & (F.col("s1") != 0.0),
+        (md * NDEG + 1.0) / (md - 1.0) * (md * F.col("s2")
+                                          / (F.col("s1") * F.col("s1"))
+                                          - 1.0))
+    # `+ 0.0` normalizes a -0.0 to +0.0 (IEEE round-to-nearest; NULLs
+    # pass through): ROUND of a tiny negative double keeps the sign in
+    # DuckDB (C round) but not in Spark (BigDecimal HALF_UP), so a
+    # window whose sk lands at -1e-15 would bit-mismatch the oracle on
+    # the zero's sign alone (first seen at sf0.1).  Both sides apply
+    # the same normalization.
+    return g.select(F.col("w.start").alias("window_start"), "chan", "m",
+                    (F.round("s1", 6) + F.lit(0.0)).alias("zero_dm"),
+                    (F.round(sk, 6) + F.lit(0.0)).alias("sk"))
+
+
 def q_windowed_stats(spark, sf_dir):
-    """Event-time tumbling-window zero-DM + SK stats (streaming.py,
-    batch form; the stream==batch parity is tested separately).  Window
-    start formatted as a string for engine-portable comparison."""
-    from .streaming import windowed_stats
+    """Event-time tumbling-window zero-DM + SK stats
+    (:func:`windowed_stats`).  Window start formatted as a string for
+    engine-portable comparison."""
     e = _t(spark, sf_dir, "events")
     w = windowed_stats(e)
     return w.select(
@@ -1075,15 +1108,17 @@ def connected_components(edges: DataFrame, max_iters: int = 20,
 def cc_checkpoint_base(spark) -> str:
     """Per-session-unique checkpoint root for connected-components
     label tables: configurable via ``spark.dragnet.cc.checkpointDir``
-    (set it to the job's out_dir on a real cluster — /tmp is NOT a
-    shared filesystem there); the default embeds the Spark application
-    id, so concurrent sessions benching the same sf_dir can never race
-    on one path (r3 verdict/advice)."""
+    (set it to the job's out_dir on a real cluster — the default is
+    driver-local).  The default lies under the session's SparkFiles
+    root, which ``spark.stop()`` deletes, so no run leaves checkpoints
+    behind; it also embeds the Spark application id, so concurrent
+    sessions benching the same sf_dir can never race on one path."""
     try:
         base = spark.conf.get("spark.dragnet.cc.checkpointDir")
     except Exception:
         base = None
-    return base or f"/tmp/dragnet_cc/{spark.sparkContext.applicationId}"
+    return base or (f"{SparkFiles.getRootDirectory()}/"
+                    f"cc_{spark.sparkContext.applicationId}")
 
 
 def q_dedup_components(spark, sf_dir):
@@ -1455,8 +1490,8 @@ def q_events_sessionize(spark, sf_dir):
     session_window form ONE session; the half-open-window reading that
     previously justified a ``>=`` predicate here was wrong, caught by
     the random-event-corpus fuzz whose gap mixture plants exact-gap
-    same-user pairs).  So the batch predicate is STRICT >: stream ==
-    batch row-for-row including the exact-gap edge.
+    same-user pairs).  So the predicate is STRICT >, matching
+    session_window row-for-row including the exact-gap edge.
 
     Determinism: gaps are compared in EXACT integer microseconds
     (unix_micros / epoch_us), the running session index is an integer

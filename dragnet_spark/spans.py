@@ -209,13 +209,31 @@ def build_output_spans(out, dmlist: np.ndarray, header: Header,
             "media_ref": "dm://%.3f" % float(np.float32(dm)),
             "offset": d,
         })
+    return spans + inf_media_spans(
+        dmlist, header, nsamp_dec=nsamp_dec, tsamp_dec=tsamp_dec,
+        max_delay=max_delay, prefix=prefix, media=media,
+        dt_factors=dt_factors)
+
+
+def inf_media_spans(dmlist: np.ndarray, header: Header, *, nsamp_dec: int,
+                    tsamp_dec: float, max_delay: int, prefix: str,
+                    media: list[dict],
+                    dt_factors: np.ndarray | None = None) -> list[dict]:
+    """The document-level tail of :func:`build_output_spans`: per DM an
+    ``inf`` span (``dragnet.cu:325``), then the pass-through media
+    spans.  Shared with the chunked path, which emits it on chunk 0.
+    A DM whose ``dt_factors`` entry f > 1 carries the bin count and
+    width of its scrunched series: ``(nsamp_dec - max_delay) // f``
+    bins (the length :func:`kernels.scrunch_series` leaves) of
+    ``tsamp_dec * f``."""
+    spans: list[dict] = []
     for d, dm in enumerate(dmlist):
         dmv = float(np.float32(dm))
         if dt_factors is not None and int(dt_factors[d]) > 1:
             f = int(dt_factors[d])
-            nbins = len(out[d])
-            inf_text = writeinf_text(header, prefix, dmv, nsamp_dec=nbins,
-                                     tsamp_dec=tsamp_dec * f, shift_back=0)
+            inf_text = writeinf_text(
+                header, prefix, dmv, nsamp_dec=(nsamp_dec - max_delay) // f,
+                tsamp_dec=tsamp_dec * f, shift_back=0)
         else:
             inf_text = writeinf_text(header, prefix, dmv,
                                      nsamp_dec=nsamp_dec,

@@ -25,14 +25,12 @@ def test_oracles_cover_every_query():
     # every query is SQL-checked (no rows-only weak checks left)
     assert set(qs) == set(oracles), set(qs) - set(oracles)
     assert all(isinstance(s, str) and s.strip() for s in oracles.values())
-    # one implementation per relation: no two rows share an oracle.  The
-    # one exception is the streaming engine re-deriving the batch
-    # clipped relation (stream == batch == the same SQL).
+    # one implementation per relation: no two rows share an oracle.
     by_sql: dict[str, list[str]] = {}
     for name, sql in oracles.items():
         by_sql.setdefault(sql, []).append(name)
     shared = sorted(sorted(ns) for ns in by_sql.values() if len(ns) > 1)
-    assert shared == [["dedisperse_clipped", "dedisperse_stream"]], shared
+    assert shared == [], shared
 
 
 def test_entry_returns_stable_nonempty_relation(spark):

@@ -499,9 +499,9 @@ def _draw_composition(seed: int):
 
     Truth is the plain ``run_pipeline`` path — itself
     differential-tested against DuckDB above and against the NumPy
-    oracle in test_extractor — so the draw space is UNRESTRICTED like
-    the streaming fuzz (no dyadic-exactness guards needed; both paths
-    run the same float32 kernels and must agree bit-for-bit).  The one
+    oracle in test_extractor — so the draw space is UNRESTRICTED (no
+    dyadic-exactness guards needed; both paths run the same float32
+    kernels and must agree bit-for-bit).  The one
     contractual exclusion is a RUNNING clipper (EWMA is sequential per
     document, so the chunked path refuses ``clip_sigma > 0`` WITH a
     mask); a clip-enabled cfg WITHOUT a mask never clips and is drawn

@@ -2,7 +2,7 @@
 surface: every documents/events/embeddings-backed ``queries()`` entry
 vs its DuckDB oracle over RANDOM (but deterministic) corpora.
 
-The driver gate and ``scripts/selfcheck.py`` verify the 49 queries
+The driver gate and ``scripts/selfcheck.py`` verify the 48 queries
 cell-exact on the FIXED ``/root/testdata`` distribution; this file
 re-draws the corpus geometry per seed so distribution-dependent bugs
 can't hide behind that one shape.  Each random corpus deliberately
@@ -15,7 +15,7 @@ plants the hazards the fixed tables never exercise:
   vs the fixed corpus's uniform 9+ words, and PII-shaped hazard tokens
   (boundary emails/IPs/phones) for the pii_redact regex differential;
 - events: per-user gaps straddling the 4-hour sessionize boundary,
-  including exact-boundary gaps (the stream==batch parity edge), and
+  including exact-boundary gaps (the exact-gap session edge), and
   a random channel count so per-channel aggregates see groups of
   size 1 (ddof=1 guards) up to thousands;
 - embeddings: exact duplicate vectors and noise-perturbed copies
@@ -30,8 +30,8 @@ accumulation), and text is single-space-joined ASCII words.
 
 Query set = ``__spark_entry__.queries()`` minus the TPC-H join/agg
 relations (their tables keep the fixed shape) and the flagship
-dedispersion entries (fuzzed end-to-end in test_fuzz_differential.py /
-test_streaming_state.py on their own corpora); ``approx_distinct_hll``
+dedispersion entries (fuzzed end-to-end in test_fuzz_differential.py
+on their own corpora); ``approx_distinct_hll``
 stays in, over a random-key orders table (random key domains walk the
 HLL register ranks the fixed keyspace never reaches).
 ``DRAGNET_FUZZ_TEXT_SEEDS`` widens the sweep.
@@ -361,33 +361,3 @@ def test_training_ops_extreme_corpus(spark, tmp_path, kind):
     _write_extreme(kind, str(tmp_path))
     failures = check_corpus(spark, str(tmp_path))
     assert not failures, f"{kind}: {failures}"
-
-
-@pytest.mark.parametrize("seed",
-                         range(SEED_BASE, SEED_BASE + min(N_SEEDS, 2)))
-def test_streaming_sessions_match_batch_on_random_events(
-        spark, tmp_path, seed):
-    """session_window streaming vs the batch lag/running-sum form on
-    the RANDOM event tables — whose gap mixture plants exact-4-hour
-    same-user gaps, the boundary where the two forms historically
-    disagreed (r4 ADVICE: batch '>' vs session_window's half-open
-    window; both now use >= gap semantics)."""
-    from pyspark.sql import functions as F
-
-    from dragnet_spark.queries import q_events_sessionize
-    from dragnet_spark.streaming import run_streaming_sessions
-
-    write_fuzz_corpus(seed, str(tmp_path))
-    batch = {(r.user_id, r.start_us): (r.n_events, r.end_us, r.sum_value)
-             for r in q_events_sessionize(spark, str(tmp_path)).collect()}
-    got = run_streaming_sessions(spark, str(tmp_path),
-                                 table=f"t_sess_fuzz_{seed}")
-    stream = {(r.user_id, r.su): (r.n_events, r.eu, r.sum_value)
-              for r in got.select(
-                  "user_id", "n_events", "sum_value",
-                  F.unix_micros(F.col("first_ts").cast("timestamp"))
-                   .alias("su"),
-                  F.unix_micros(F.col("last_ts").cast("timestamp"))
-                   .alias("eu")).collect()}
-    assert len(batch) > 0
-    assert stream == batch
