@@ -9,12 +9,13 @@ on ``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line::
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": 0.1, ...}
 
-``--scaling`` mode: run the identical flagship job at three pinned
-parallelism levels (local[2], local[8], local[32]) and report BOTH
-N-vs-4N pairs — 2 vs 8 and 8 vs 32 — with median throughput and
+``--scaling`` mode: run the identical flagship job at every level of
+the host's N -> 4N chain (:func:`scaling_levels`: 1, 4 on 4 cores;
+2, 8, 32 on 32) and report each adjacent pair's median throughput and
 scaling efficiency eff = tput(4N)/(4*tput(N)) (target >= 0.8), writing
-``BENCH/BASELINE.md``.  Each level is CPU-pinned (taskset) so local[N]
-really gets N cores, as N single-core executors would.  Scaling runs
+``BENCH/BASELINE.md`` with the host's cores and MemTotal.  Each level
+is CPU-pinned (taskset) so local[N] really gets N cores, as N
+single-core executors would.  Scaling runs
 default to the 4096-doc ``scale`` corpus (identical input at every
 level is what the efficiency ratio requires; the 4x work per run
 amortizes fixed per-run overhead the way a real long job does — see
@@ -46,12 +47,6 @@ SCALING_CORPUS = "scale"    # --scaling: 4096 docs, ~5.3 GB.  The 4x
 # that dominates a 6-second local[8] run on the 1024-doc corpus but is
 # noise on a real multi-hour job — the large corpus is the faithful
 # regime for the N->4N efficiency ratio.
-
-
-def _timed(fn) -> float:
-    t0 = time.perf_counter()
-    fn()
-    return time.perf_counter() - t0
 
 
 def get_session(cores: int):
@@ -132,140 +127,121 @@ def _carry_history(baseline_path: Path) -> list[str]:
     return [ln for ln in lines[start:] if ln.startswith("| 20")]
 
 
+def scaling_levels(cores: int) -> list[int]:
+    """The ``--scaling`` levels for a host with ``cores`` CPUs:
+    c * 4**i for i = 0..k, where 4**k is the largest power of four
+    <= cores and c = cores // 4**k, so each adjacent pair is an
+    N -> 4N pair (32 cores -> 2, 8, 32; 4 cores -> 1, 4).  Under 4
+    cores no pair fits, and this raises ValueError."""
+    if cores < 4:
+        raise ValueError(f"--scaling needs at least 4 cores for one "
+                         f"N -> 4N pair; this host has {cores}")
+    k = 1
+    while 4 ** (k + 1) <= cores:
+        k += 1
+    return [cores // 4 ** k * 4 ** i for i in range(k + 1)]
+
+
 def scaling(runs: int, corpus: str = BENCH_CORPUS, warmups: int = 4) -> None:
+    from dragnet_spark.generate import CORPORA
+    from dragnet_spark.session import host_cores, mem_total_kb
+
+    cores = host_cores()
+    try:
+        levels = scaling_levels(cores)
+    except ValueError as exc:
+        sys.exit(str(exc))
+    mem_gib = mem_total_kb() / 2 ** 20
+    cpus = sorted(os.sched_getaffinity(0))
     results = {}
-    for cores in (2, 8, 32):
+    for n in levels:
         # Pin the whole process tree (JVM + Python workers) to exactly
-        # `cores` CPUs: plain local[N] on a 32-core box lets the Python
-        # workers overflow onto the idle cores, inflating the N-core
-        # baseline — a real N-core executor has no spare cores.
+        # n CPUs: plain local[N] lets the Python workers overflow onto
+        # the host's idle cores, inflating the N-core baseline — a real
+        # N-core executor has no spare cores.
         cmd = [sys.executable, __file__, "--flagship-only",
-               "--cores", str(cores), "--runs", str(runs),
+               "--cores", str(n), "--runs", str(runs),
                "--corpus", corpus, "--warmups", str(warmups)]
         if shutil.which("taskset"):
-            cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
+            cmd = ["taskset", "-c", ",".join(map(str, cpus[:n]))] + cmd
         out = subprocess.run(cmd, capture_output=True, text=True,
                              check=True, cwd=REPO)
-        results[cores] = json.loads(out.stdout.strip().splitlines()[-1])
-    tput = {c: results[c]["docs_per_sec"] for c in results}
-    eff28 = tput[8] / (4.0 * tput[2])
-    eff832 = tput[32] / (4.0 * tput[8])
-    # Supplementary min-based efficiencies: on this VM the timed runs
-    # keep drifting downward after the nominal warm-ups (late JIT) and
-    # show bimodal kernel-jitter outliers, so the per-level MINIMUM is
-    # the closest observable to the noise-free capability; report both.
-    ndocs = results[8]["ndocs"]
-    tmin = {c: ndocs / min(results[c]["runs"]) for c in results}
-    eff28_min = tmin[8] / (4.0 * tmin[2])
-    eff832_min = tmin[32] / (4.0 * tmin[8])
+        results[n] = json.loads(out.stdout.strip().splitlines()[-1])
+    tput = {n: results[n]["docs_per_sec"] for n in levels}
+    eff = {(n, 4 * n): tput[4 * n] / (4.0 * tput[n]) for n in levels[:-1]}
     bench_dir = REPO / "BENCH"
     bench_dir.mkdir(exist_ok=True)
     history = _carry_history(bench_dir / "BASELINE.md")
-    new_row = (f"| {time.strftime('%Y-%m-%d')} | {corpus} | {runs} "
-               f"| {eff28:.3f} | {eff832:.3f} |")
-
-    def row(c, label):
-        r = results[c]
-        return (f"| {label} | {', '.join(f'{t:.2f}' for t in r['runs'])} "
-                f"| {r['median_sec']:.2f} | {tput[c]:.1f} |")
+    host = f"{cores} cores, {mem_gib:.1f} GiB"
+    new_row = (f"| {time.strftime('%Y-%m-%d')} ({host}) | {corpus} "
+               f"| {runs} | "
+               + " | ".join(f"{n}->{m}: {e:.3f}" for (n, m), e in eff.items())
+               + " |")
+    level_rows = "\n".join(
+        f"| local[{n}] ({f'{4 ** i}N' if i else 'N'}) "
+        f"| {', '.join(f'{t:.2f}' for t in results[n]['runs'])} "
+        f"| {results[n]['median_sec']:.2f} | {tput[n]:.1f} |"
+        for i, n in enumerate(levels))
+    pair_rows = "\n".join(
+        f"| N={n} -> 4N={m} | **{e:.3f}** "
+        f"| {'MET' if e >= 0.8 else 'NOT MET'} |"
+        for (n, m), e in eff.items())
+    ndocs, nchan, nsamp, _ = CORPORA[corpus]
 
     md = f"""# BENCH/BASELINE.md — measured throughput & scaling efficiency
 
 Flagship job: fused dedispersion pipeline (zap -> SK zap -> decimate ->
 dedisperse, scenario `s3`) over the deterministic `{corpus}` corpus
-({results[8]['ndocs']} documents x 128 chan x 8192 samples,
+({ndocs} documents x {nchan} chan x {nsamp} samples,
 seed 42; `dragnet_spark/generate.py`), identical input at every
-parallelism level.  Per the driver instruction, pinned local[N] levels
-on the same 32-core host are the sandbox proxy for N-executor
-clusters: each run is CPU-pinned (`taskset -c 0-(N-1)`) so the JVM +
-Python workers of a local[N] job really share N cores, exactly as N
-single-core executors would.  {runs} timed runs per level after {warmups}
-JIT/Arrow warm-up runs; median reported.
+parallelism level.  Host: {host} MemTotal.
+Pinned local[N] levels on this one host are the sandbox proxy for
+N-executor clusters: each run is CPU-pinned (`taskset -c`) so the JVM
++ Python workers of a local[N] job really share N cores, exactly as N
+single-core executors would.  The levels are c x 4^i for i = 0..k,
+where 4^k is the largest power of four <= the host's cores and
+c = cores // 4^k, so each adjacent pair is an N -> 4N pair.  {runs}
+timed runs per level after {warmups} JIT/Arrow warm-up runs; median
+reported.
 
 | parallelism | runs (sec) | median sec | docs/sec |
 |---|---|---|---|
-{row(2, 'local[2]  (N)   ')}
-{row(8, 'local[8]  (4N)  ')}
-{row(32, 'local[32] (16N) ')}
+{level_rows}
 
-**Scaling efficiency** (eff = docs_per_sec(4N) / (4 x docs_per_sec(N))):
+**Scaling efficiency** (eff = docs_per_sec(4N) / (4 x docs_per_sec(N))),
+from the per-level medians:
 
-| pair | eff (median) | eff (per-level min, informational) | target >= 0.8 |
-|---|---|---|---|
-| N=2 -> 4N=8 | **{eff28:.3f}** | {eff28_min:.3f} | {'MET' if eff28 >= 0.8 else 'NOT MET'} |
-| N=8 -> 4N=32 | **{eff832:.3f}** | {eff832_min:.3f} | {'MET' if eff832 >= 0.8 else 'NOT MET'} |
+| pair | eff (median) | target >= 0.8 |
+|---|---|---|
+{pair_rows}
 
-The MET/NOT MET verdict is decided by the MEDIAN alone (r3 advice: the
-min-based estimator is the more favorable one, so letting either
-metric pass weakened the gate); the per-level-minimum column is
-informational only.
-
-Median is the headline; the per-level-minimum column is supplementary
-(on this VM the timed runs keep drifting faster after the nominal
-warm-ups — late JIT — and local[32] shows bimodal 3-4x kernel-jitter
-outliers, so the minimum is the closest observable to the noise-free
-capability of each level).  Cross-session context: the same committed
-code has measured 2->8 medians from 0.73 to 1.05 on different days
-(run-to-run VM jitter documented below); single-session values near
-the 0.8 boundary should be read with that spread in mind.
+Cross-session context: on a 32-core host the same committed code
+measured 2->8 medians from 0.73 to 1.05 on different days (run-to-run
+VM jitter, see the history below); single-session values near the 0.8
+boundary should be read with that spread in mind.
 
 Corpus-size note: the sweep defaults to the 4096-doc `scale` corpus
 because a ~2 s parallelism-independent per-run cost (driver planning,
-scheduling and result aggregation sharing the pinned cores) is ~31%
-of a local[8] run on the 1024-doc corpus — mechanically capping the
-measurable 2->8 ratio at ~0.77 — but only ~5% at 4x the work.  A real
-job over the north rule's 10^12-document table runs for hours, so the
-amortized regime is the faithful one.
+scheduling and result aggregation sharing the pinned cores) was ~31%
+of a local[8] run on the 1024-doc corpus on the 32-core host —
+mechanically capping the measurable 2->8 ratio at ~0.77 — but only
+~5% at 4x the work.  A real job over the north rule's 10^12-document
+table runs for hours, so the amortized regime is the faithful one.
 
-Single-box caveat (documented for honesty): all local[N] levels share
-ONE kernel, one loopback network and one memory bus.  Profiling shows
-the per-document Arrow boundary (JVM <-> Python worker sockets + page
-management) saturates kernel-side well before 32 threads — vmstat
-records 50-95% *system* CPU at local[32] while user time stays under
-10%, and raw CPU scaling of pure user-space work on this box is 0.93
+Single-box caveat: all local[N] levels share ONE kernel, one loopback
+network and one memory bus.  On the 32-core host, profiling showed the
+per-document Arrow boundary (JVM <-> Python worker sockets + page
+management) saturating kernel-side well before 32 threads — vmstat
+recorded 50-95% *system* CPU at local[32] while user time stayed under
+10%, and raw CPU scaling of pure user-space work there was 0.93
 (8 -> 32 spinning processes).  A real 4N-executor cluster multiplies
-kernels, NICs and memory buses along with the cores, so the 2 -> 8
-pair (where the shared-kernel contention is not yet binding) is the
-faithful proxy for executor scaling; the 8 -> 32 pair is reported
+kernels, NICs and memory buses along with the cores, so the lower
+pairs (where the shared-kernel contention is not yet binding) are the
+faithful proxy for executor scaling; the top pair is reported
 unvarnished with this confound.  JVM mitigations applied for all
 levels (see session.py): Xms=Xmx pinned heap + 32m G1 regions (stops
 heap uncommit page churn), glibc MALLOC_MMAP_THRESHOLD_ raised so MB
 strip buffers stop mmap/munmap-ing per document.
-
-Per-query latency pin: `BENCH/PINNED.json` commits the full driver
-bench (every `queries()` entry + flagship + partitioned sink) from the
-round's representative run; `python bench.py` compares each query
-against it and reports `regressions_vs_pin` (informational, given the
-documented jitter).  Flagging is SLOW-DAY NORMALIZED (r4 verdict:
-every r4 row ran ~20% over pin on a slow VM window and the bench
-cried wolf on four phantom regressions): THREE fixed calibration rows
-are timed every run and pinned alongside the queries, one per
-measured jitter mode of this VM — a lineitem scan-agg (JVM
-small-row path), an identity `mapInPandas` pass over the skew
-corpus's MB-wide span rows (Python-worker/Arrow path: one session
-measured the JVM calibration FAST while the mapInPandas flagship ran
-2.4x its pin; a small-row identity pass failed to co-move with that
-mode too, so the yardstick carries the flagship's payload shape), and a
-documents sum-length agg (wide-binary-row vectorized-reader path:
-another window ran every text-processing query uniformly ~1.76x its
-pin while the lineitem row sat at 1.05x).  A row is flagged only
-when `now/pin > 2 x max(1, cal_now/cal_pin)` AND
-`now - pin > 1 s` (the VM's single-collect noise floor — a 0.3 s
-query measuring 0.9 s is a normal sample here, and for pins >= 1 s
-the 2x ratio already implies a >= 1 s delta), where the calibration
-used is the Arrow row for the mapInPandas-heavy queries (flagship
-family + partitioned sink) and the slower of the two scan rows for
-everything else — i.e. the query must be slow relative to how the
-MACHINE's matching execution path is running that day, not just
-slower than a number measured on a faster day.  Each ratio floors
-at 1: calibration may only loosen the 2x bar, never tighten it.
-The Arrow and docs calibration pins were measured in-bench in
-windows where the paired flagship/text-query rows sat at their
-pins, so all three ratios are self-consistent with the query pins.
-One-time fixture costs (flagship-oracle sample exports, corpus
-caches, first Arrow/codegen run of each flagship query) are paid in
-the warm-up phase before any timing, so per-query rows measure the
-query.  Re-pin with `python bench.py --pin <bench-output.json>`.
 
 Reproduce: `python bench.py --scaling`.
 
@@ -274,15 +250,19 @@ Reproduce: `python bench.py --scaling`.
 Per-run timings of past sweeps live in git history of this file.
 The same committed flagship code produced every row; the spread is
 VM-condition jitter, which is why the verdict reads the whole table,
-not one day's sweep.
+not one day's sweep.  The first nine rows were all taken on one
+32-core host at levels 2, 8 and 32: their last two cells are the
+2->8 and 8->32 efficiencies.  Later rows name their host's cores and
+MemTotal after the date, and each efficiency cell names its pair.
 
-| date | corpus | runs/level | eff 2->8 (median) | eff 8->32 (median) |
+| date | corpus | runs/level | eff N->4N (median) | eff, next pair (median) |
 |---|---|---|---|---|
 {chr(10).join(history + [new_row])}
 """
     (bench_dir / "BASELINE.md").write_text(md)
-    print(json.dumps({"docs_per_sec": tput, "eff_2_to_8": eff28,
-                      "eff_8_to_32": eff832}))
+    print(json.dumps({"cores": cores, "mem_total_gib": round(mem_gib, 1),
+                      "docs_per_sec": tput,
+                      **{f"eff_{n}_to_{m}": e for (n, m), e in eff.items()}}))
 
 
 def _bench_partitioned_sink(spark, corpus: str = BENCH_CORPUS) -> float:
@@ -377,61 +357,6 @@ def driver_bench() -> None:
                 fn(spark, sf_dir).collect()
     except Exception as exc:  # noqa: BLE001
         errors["_flagship_warmup"] = f"{type(exc).__name__}: {exc}"[:200]
-    # Calibration row (r4 verdict #7): a fixed cheap query timed every
-    # run; regression detection normalizes each query's pin ratio by
-    # the calibration ratio so a whole-VM slow day (every row ~20%
-    # over pin, 2026-08-17) stops flagging everything.
-    cal = None
-    try:
-        # Best-of-2 like the rows it normalizes: a single-shot sample
-        # on this VM can land 2-6x over true cost, and a spiked
-        # calibration LOOSENS the bar for every row it normalizes
-        # (false negatives, the inverse of the crying-wolf problem).
-        cal_q = warm.groupBy("l_returnflag", "l_linestatus") \
-            .agg(F.sum("l_quantity"), F.avg("l_extendedprice"))
-        cal = round(min(_timed(cal_q.collect) for _ in range(2)), 3)
-    except Exception as exc:  # noqa: BLE001
-        errors["_calibration"] = f"{type(exc).__name__}: {exc}"[:200]
-    # Second calibration row, ARROW PATH: the JVM scan-agg above cannot
-    # see Python-worker/Arrow-socket jitter, which is where this VM's
-    # worst windows live (same session: JVM calibration 0.57 s — FAST —
-    # while the mapInPandas flagship ran 2.4x its pin).  The yardstick
-    # must carry the flagship's PAYLOAD SHAPE, not just its operator:
-    # an identity mapInPandas over 20k small event rows sat at 1.04x
-    # its pin in a window where the flagship ran 2.4x (2026-08-18) —
-    # the slow mode lives in MB-sized span batches crossing the
-    # worker sockets, which small rows never exercise.  So the row is
-    # an identity mapInPandas over the SKEW corpus spans (8 wide docs
-    # incl. the 65536-sample giant, ~50 MB through Arrow both ways,
-    # several workers touched; the cache is built in the warm-up
-    # above).  Best-of-2 like the heavy rows it normalizes, after one
-    # untimed run of this exact plan.
-    cal_arrow = None
-    try:
-        from dragnet_spark.pipeline import DOCS_SCHEMA
-        skew_docs = spark.read.parquet(corpus_cache("skew"))
-        arrow_q = skew_docs.mapInPandas(lambda it: it, DOCS_SCHEMA)
-        arrow_q.count()                      # warm this exact plan
-        cal_arrow = round(min(
-            _timed(arrow_q.count) for _ in range(2)), 3)
-    except Exception as exc:  # noqa: BLE001
-        errors["_calibration_arrow"] = f"{type(exc).__name__}: {exc}"[:200]
-    # Third calibration row, WIDE-ROW SCAN PATH: the documents table's
-    # ~1.4 MB text rows go through the vectorized reader at batch size
-    # 8 and are page-cache-sensitive — a window where every
-    # text-processing query uniformly ran ~1.76x its pin left the
-    # lineitem calibration at 1.05x (small rows, different mode).
-    # Most operator rows scan documents/embeddings, so they normalize
-    # by this yardstick below.
-    cal_docs = None
-    try:
-        docs_t = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        docs_agg = docs_t.agg(F.sum(F.length("text")), F.count(F.lit(1)))
-        docs_agg.collect()  # warm
-        cal_docs = round(min(
-            _timed(lambda: docs_agg.collect()) for _ in range(2)), 3)
-    except Exception as exc:  # noqa: BLE001
-        errors["_calibration_docs"] = f"{type(exc).__name__}: {exc}"[:200]
     # Best-of-2 per query: single-shot numbers on this Firecracker VM
     # can land 2-6x over their true cost (the r2 round saw a 15-row
     # dimension lookup jump 1.1 -> 6.8 s on unchanged code); the second
@@ -471,58 +396,10 @@ def driver_bench() -> None:
     # Per-DM partitioned sink (S9 at file scale): flagship output
     # written partitionBy(dm) + a pruned single-DM read-back.
     # Best-of-2 like every other row — it runs the whole pipeline, the
-    # shape this VM jitters hardest on (single-shot flagged 2x spuriously).
+    # shape this VM jitters hardest on (single shots ran 2x the best).
     timings["partitioned_sink"] = round(
         min(_bench_partitioned_sink(spark) for _ in range(2)), 3)
     spark.stop()
-
-    # Regression detection vs the committed per-query pin
-    # (BENCH/PINNED.json, written by `--pin`): informational — this VM
-    # jitters 2-5x run-to-run (BENCH/BASELINE.md caveat), so flagged
-    # rows mean "look here", not "bench invalid".  Ratios are
-    # NORMALIZED by the calibration query's own pin ratio (slow-day
-    # normalizer, r4 verdict #7): a whole-VM slowdown moves the
-    # calibration row too, so only queries slow RELATIVE to the
-    # machine's condition that day are flagged.
-    regressions = {}
-    pin_path = REPO / "BENCH" / "PINNED.json"
-    if pin_path.exists():
-        pin_doc = json.loads(pin_path.read_text())
-        pinned = pin_doc["queries"]
-        # The calibration ratio may only LOOSEN the documented 2x bar
-        # (excuse whole-VM slowness), never tighten it: a calibration
-        # row that happens to run faster than its pin says nothing
-        # about the other rows' jitter mode, so both ratios floor at 1.
-        def _ratio(now_v, pin_key):
-            pin_v = pin_doc.get(pin_key)
-            return (max(1.0, now_v / pin_v)
-                    if now_v and pin_v and pin_v > 0 else 1.0)
-        cal_ratio = _ratio(cal, "calibration_sec")
-        arrow_ratio = _ratio(cal_arrow, "calibration_arrow_sec")
-        docs_ratio = _ratio(cal_docs, "calibration_docs_sec")
-        # mapInPandas-heavy rows (the flagship family + the sink) jitter
-        # with the Python-worker/Arrow path, so they normalize by the
-        # Arrow calibration; the remaining rows scan the wide-row
-        # documents/embeddings tables (or lineitem for the TPC-H-ish
-        # pair), so they take whichever of the scan yardsticks says
-        # the machine is slower — each mode is measured, never guessed.
-        heavy = flagship_names | {"dedisperse_bench", "partitioned_sink"}
-
-        def _cal_for(q):
-            return (arrow_ratio if q in heavy
-                    else max(cal_ratio, docs_ratio))
-        # The absolute guard is the VM's measured single-collect noise
-        # floor (~1 s): sub-second-pin rows trip a 0.5 s guard on pure
-        # jitter (a 0.3 s query measuring 0.9 s is a normal sample
-        # here), while for pins >= 1 s the 2x ratio already implies a
-        # >= 1 s delta, so nothing real is hidden.
-        regressions = {
-            q: {"now": t, "pinned": pinned[q],
-                "normalized_ratio": round(t / pinned[q] / _cal_for(q), 2)}
-            for q, t in timings.items()
-            if q in pinned and pinned[q] > 0
-            and t / pinned[q] > 2.0 * _cal_for(q)
-            and t - pinned[q] > 1.0}
 
     print(json.dumps({
         "metric": "headline query latency + flagship dedispersion wall",
@@ -532,12 +409,6 @@ def driver_bench() -> None:
         "sf": sf,
         "flagship_docs_per_sec": round(ndocs / fl, 1),
         "cores": cores,
-        **({"calibration_sec": cal} if cal is not None else {}),
-        **({"calibration_arrow_sec": cal_arrow}
-           if cal_arrow is not None else {}),
-        **({"calibration_docs_sec": cal_docs}
-           if cal_docs is not None else {}),
-        **({"regressions_vs_pin": regressions} if regressions else {}),
         # Failed queries are excluded from `value`; flag so a partial
         # sum cannot read as a faster run.
         **({"errors": errors, "valid": False} if errors else {}),
@@ -557,23 +428,8 @@ def main() -> None:
                         "— the 4x-work corpus that amortizes per-run "
                         "fixed overhead the way a real long job does)")
     p.add_argument("--warmups", type=int, default=2)
-    p.add_argument("--pin", metavar="BENCH_JSON",
-                   help="commit a driver-bench output file as the "
-                        "per-query regression pin (BENCH/PINNED.json)")
     a = p.parse_args()
-    if a.pin:
-        d = json.loads(Path(a.pin).read_text())
-        (REPO / "BENCH").mkdir(exist_ok=True)
-        (REPO / "BENCH" / "PINNED.json").write_text(json.dumps({
-            "sf": d.get("sf"), "cores": d.get("cores"),
-            "wall": d["value"], "queries": d["queries"],
-            "flagship_docs_per_sec": d.get("flagship_docs_per_sec"),
-            "calibration_sec": d.get("calibration_sec"),
-            "calibration_arrow_sec": d.get("calibration_arrow_sec"),
-            "calibration_docs_sec": d.get("calibration_docs_sec"),
-        }, indent=1) + "\n")
-        print(f"pinned {len(d['queries'])} queries, wall {d['value']} s")
-    elif a.flagship_only:
+    if a.flagship_only:
         flagship_only(a.cores, a.runs, a.corpus or BENCH_CORPUS,
                       a.warmups)
     elif a.scaling:

@@ -216,14 +216,12 @@ def _metrics_row(doc_id: str, metrics: dict, n_spans_out: int,
 
 
 def run_pipeline(df: DataFrame, cfg: RunConfig,
-                 mask: MaskSpec | None = None, *, run_id: str = "run0",
-                 parallelism: int | None = None) -> DataFrame:
+                 mask: MaskSpec | None = None, *,
+                 run_id: str = "run0") -> DataFrame:
     """Per-document fused pipeline.  Input: (doc_id, spans) DataFrame.
     Output: exploded span rows (SPAN_ROW_SCHEMA) in span-sequence order
     (``seq``), plus one ``kind='metrics'`` row per document."""
     prepared = prepare_documents(df)
-    if parallelism:
-        prepared = prepared.repartition(parallelism, "doc_id")
     cfg_json = cfg.to_json()
     mask_json = mask.to_json() if mask else None
 
@@ -425,8 +423,8 @@ def _require_chunkable(cfg: RunConfig, mask: MaskSpec | None) -> None:
 
 
 def process_chunk_rows(chunks: DataFrame, cfg_json: str,
-                       mask_json: str | None, *, run_id: str = "run0",
-                       parallelism: int | None = None) -> DataFrame:
+                       mask_json: str | None, *,
+                       run_id: str = "run0") -> DataFrame:
     """Chunk stage of the chunked path: halo-extended chunk rows (from
     :func:`build_chunk_rows`) -> per-chunk part rows
     (``_CHUNK_OUT_SCHEMA``: one timeseries row per (chunk, DM), plus
@@ -436,7 +434,7 @@ def process_chunk_rows(chunks: DataFrame, cfg_json: str,
     visible — the metrics row is therefore a safe chunk-done marker
     for chunk-granular resume (:func:`run_job`)."""
     # Explicit salting: giant documents' chunks spread across the cluster.
-    nparts = parallelism or chunks.sparkSession.sparkContext.defaultParallelism
+    nparts = chunks.sparkSession.sparkContext.defaultParallelism
     chunks = chunks.repartition(nparts, "doc_id", "chunk_id")
 
     def proc_chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -569,8 +567,7 @@ def reassemble_parts(parts: DataFrame, use_dt: bool) -> DataFrame:
 def run_pipeline_chunked(df: DataFrame, cfg: RunConfig,
                          mask: MaskSpec | None = None, *,
                          run_id: str = "run0",
-                         blocks_per_chunk: int = 4,
-                         parallelism: int | None = None) -> DataFrame:
+                         blocks_per_chunk: int = 4) -> DataFrame:
     """Skew-safe pipeline: split each document into halo-extended chunk
     rows (JVM-side strip slicing — Python never sees a whole giant
     document, :func:`build_chunk_rows`), process chunks independently
@@ -587,8 +584,7 @@ def run_pipeline_chunked(df: DataFrame, cfg: RunConfig,
     mask_json = mask.to_json() if mask else None
     chunks = build_chunk_rows(prepare_documents(df), cfg_json, mask_json,
                               blocks_per_chunk)
-    parts = process_chunk_rows(chunks, cfg_json, mask_json, run_id=run_id,
-                               parallelism=parallelism)
+    parts = process_chunk_rows(chunks, cfg_json, mask_json, run_id=run_id)
     return reassemble_parts(parts, cfg.use_dt)
 
 
@@ -629,7 +625,7 @@ CHECKPOINT_COLS = ["run_id", "config_id", "doc_id", "chunk_id", "status",
 def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
                      mask: MaskSpec | None, out_dir: str, *, run_id: str,
                      resume: bool, blocks_per_chunk: int,
-                     parallelism: int | None, spans_path: str) -> dict:
+                     spans_path: str) -> dict:
     """Chunk-granular execution of the chunked path for :func:`run_job`.
 
     The chunk stage materializes its part rows into
@@ -683,8 +679,7 @@ def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
             pass                        # no chunks table yet: compute all
     if n_todo is None or n_todo > 0:
         parts_new = process_chunk_rows(todo, cfg_json, mask_json,
-                                       run_id=run_id,
-                                       parallelism=parallelism)
+                                       run_id=run_id)
         # Append extends the ledger ONLY when it was actually read and
         # anti-joined above (n_todo set).  Otherwise — resume=False, or
         # a resume whose ledger read failed — the full chunk set is
@@ -710,8 +705,7 @@ def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
 def run_job(spark: SparkSession, docs: DataFrame | str, cfg: RunConfig,
             mask: MaskSpec | None, out_dir: str, *, run_id: str = "run0",
             resume: bool = True, chunked: bool = False,
-            blocks_per_chunk: int = 4,
-            parallelism: int | None = None) -> dict:
+            blocks_per_chunk: int = 4) -> dict:
     """Execute the pipeline with resume semantics.
 
     Output layout: ``{out_dir}/spans`` parquet (span rows + inline
@@ -841,10 +835,9 @@ def run_job(spark: SparkSession, docs: DataFrame | str, cfg: RunConfig,
             stats.update(_run_job_chunked(
                 spark, docs, cfg, mask, out_dir, run_id=run_id,
                 resume=resume, blocks_per_chunk=blocks_per_chunk,
-                parallelism=parallelism, spans_path=spans_path))
+                spans_path=spans_path))
         else:
-            rows = run_pipeline(docs, cfg, mask, run_id=run_id,
-                                parallelism=parallelism)
+            rows = run_pipeline(docs, cfg, mask, run_id=run_id)
             rows.write.mode("append").parquet(spans_path)
 
     # Derived checkpoint table (FIXTURES.md §5) from the written metrics

@@ -1000,8 +1000,8 @@ def q_approx_distinct_hll(spark, sf_dir):
                     F.round(F.lit(_HLL_NUM) / denom, 6).alias("est_hll")))
 
 
-def connected_components(edges: DataFrame, max_iters: int = 20,
-                         checkpoint_dir: str | None = None) -> DataFrame:
+def connected_components(edges: DataFrame, checkpoint_dir: str,
+                         max_iters: int = 20) -> DataFrame:
     """Connected components over an undirected edge list
     ``(doc_a, doc_b)`` -> ``(doc_id, component_id)`` with
     ``component_id`` = the lexicographic-min vertex of the component.
@@ -1025,13 +1025,12 @@ def connected_components(edges: DataFrame, max_iters: int = 20,
 
     Driver-side state is two scalars per round (iteration count,
     changed count).  Intermediates are cached per round and unpersisted
-    — nothing leaks into the session cache.  With ``checkpoint_dir``
-    the converged (tiny) label table is written there and the returned
+    — nothing leaks into the session cache.  The converged (tiny)
+    label table is written to ``checkpoint_dir`` and the returned
     DataFrame scans it — the standard checkpoint treatment for
     iterative graph algorithms (GraphFrames requires the same),
     avoiding k recomputations of the edge subplan at every downstream
-    action.  Without it, the RETURNED DataFrame is a pure recomputable
-    plan (k nested rounds)."""
+    action."""
 
     def large_star(e: DataFrame) -> DataFrame:
         sym = e.unionByName(e.select(F.col("v").alias("u"),
@@ -1063,10 +1062,8 @@ def connected_components(edges: DataFrame, max_iters: int = 20,
                          F.col("v").alias("component_id"))
                 .unionByName(roots))
 
-    base = (edges.select(F.col("doc_a").alias("u"),
-                         F.col("doc_b").alias("v"))
-            .where(F.col("u") != F.col("v")).distinct())
-    cur, iters, converged = base.persist(), 0, False
+    cur = (edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+           .where(F.col("u") != F.col("v")).distinct().persist())
     try:
         for _ in range(max_iters):
             nxt = small_star(large_star(cur)).persist()
@@ -1084,25 +1081,16 @@ def connected_components(edges: DataFrame, max_iters: int = 20,
                 raise
             cur.unpersist()
             cur = nxt
-            iters += 1
             if changed == 0:
-                converged = True
                 break
-        if not converged:
+        else:
             raise RuntimeError(
                 f"connected_components did not converge in {max_iters} "
                 "rounds")
-        if checkpoint_dir is not None:
-            labels_of(cur).write.mode("overwrite").parquet(checkpoint_dir)
-            return cur.sparkSession.read.parquet(checkpoint_dir)
+        labels_of(cur).write.mode("overwrite").parquet(checkpoint_dir)
     finally:
         cur.unpersist()
-    # Pure-plan fallback (no checkpoint): replay the converged rounds
-    # uncached — the fixpoint is stable, so iters rounds reproduce it.
-    plan = base
-    for _ in range(iters):
-        plan = small_star(large_star(plan))
-    return labels_of(plan)
+    return edges.sparkSession.read.parquet(checkpoint_dir)
 
 
 def cc_checkpoint_base(spark) -> str:

@@ -52,6 +52,13 @@ def host_cores() -> int:
                               len(os.sched_getaffinity(0))))
 
 
+def mem_total_kb() -> int:
+    """The host's MemTotal from ``/proc/meminfo``, in KiB."""
+    with open("/proc/meminfo") as f:
+        return next(int(line.split()[1]) for line in f
+                    if line.startswith("MemTotal:"))
+
+
 def driver_mem() -> str:
     """Default driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else half of
     MemTotal capped at 16g.  The heap is pinned (-Xms), so a fixed
@@ -59,15 +66,11 @@ def driver_mem() -> str:
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if mem:
         return mem
-    with open("/proc/meminfo") as f:
-        total_kb = next(int(line.split()[1]) for line in f
-                        if line.startswith("MemTotal:"))
-    return f"{min(16 * 1024, total_kb // 2048)}m"
+    return f"{min(16 * 1024, mem_total_kb() // 2048)}m"
 
 
 def get_spark(app_name: str = "dragnet-spark", cores: int | None = None,
-              shuffle_partitions: int | None = None,
-              arrow_batch_rows: int = 64) -> SparkSession:
+              shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
         cores = host_cores()
     if shuffle_partitions is None:
@@ -91,8 +94,7 @@ def get_spark(app_name: str = "dragnet-spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Documents are wide rows (MBs of base64); keep Arrow batches
         # small so a batch of giant documents fits executor memory.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         # Same wide-row concern on the scan side: the vectorized parquet
         # reader's default 4096-row columnar batch is multi-GB when one
         # document row is ~1.4 MB of span text — cap it.

@@ -11,14 +11,12 @@ affected (dedisperse_sk_full, dedisperse_clipped).
 
 from __future__ import annotations
 
+import os
 import struct
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-import os
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [HERE, os.path.dirname(HERE)]
 
 import duckdb  # noqa: E402
 import numpy as np  # noqa: E402
@@ -52,7 +50,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", *names: str) -> int:
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     names = list(names) or ["dedisperse_sk_full", "dedisperse_clipped"]
-    spark = get_spark(app_name="bitcheck", cores=8, shuffle_partitions=8)
+    spark = get_spark(app_name="bitcheck")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

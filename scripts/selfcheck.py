@@ -8,9 +8,10 @@ after canonical sorting)."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
@@ -96,7 +97,7 @@ def _check_all(spark, con, sf_dir: str, failures: list,
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01") -> int:
-    spark = get_spark(app_name="selfcheck", cores=8, shuffle_partitions=8)
+    spark = get_spark(app_name="selfcheck")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -3,6 +3,8 @@ a contract breach (queries() grew past the driver's 50-entry
 correctness cap and the LAST five entries, the flagship configs,
 silently fell out of the gate), so the contract is now a test."""
 
+import pytest
+
 import __spark_entry__ as entry_mod
 
 
@@ -69,3 +71,16 @@ def test_scaling_history_carries_across_regeneration(tmp_path):
         real_rows = bench._carry_history(real)
         assert real_rows, "committed BASELINE.md lost its history table"
         assert all(r.startswith("| 20") for r in real_rows)
+
+
+def test_scaling_levels_follow_host():
+    """`bench.py --scaling` sweeps the host's own N -> 4N chain: c * 4^i
+    up to its core count, never a level the host cannot run."""
+    import bench
+    assert bench.scaling_levels(32) == [2, 8, 32]
+    assert bench.scaling_levels(16) == [1, 4, 16]
+    assert bench.scaling_levels(8) == [2, 8]
+    assert bench.scaling_levels(4) == [1, 4]
+    assert bench.scaling_levels(6) == [1, 4]
+    with pytest.raises(ValueError, match="at least 4 cores"):
+        bench.scaling_levels(3)

@@ -273,7 +273,7 @@ def test_embedding_near_dup_production_threshold_recall(spark):
     assert len(got) == 40                # pinned: 40/40 on this fixture
 
 
-def test_connected_components_toy_graph(spark):
+def test_connected_components_toy_graph(spark, tmp_path):
     """CC on a known graph: chain a-b-c-d (diameter 3), triangle
     e-f-g, pair h-i => three components labelled by their min vertex;
     convergence needs multiple rounds for the chain."""
@@ -284,7 +284,8 @@ def test_connected_components_toy_graph(spark):
          ("e", "f"), ("f", "g"), ("e", "g"),
          ("i", "h")], ["doc_a", "doc_b"])
     got = {(r.doc_id, r.component_id)
-           for r in connected_components(edges).collect()}
+           for r in connected_components(
+               edges, checkpoint_dir=str(tmp_path / "cc")).collect()}
     assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"),
                    ("e", "e"), ("f", "e"), ("g", "e"),
                    ("h", "h"), ("i", "h")}
@@ -293,7 +294,7 @@ def test_connected_components_toy_graph(spark):
     assert jsc.getPersistentRDDs().isEmpty()
 
 
-def test_connected_components_nonconvergence_raises(spark):
+def test_connected_components_nonconvergence_raises(spark, tmp_path):
     """Exhausting max_iters must RAISE, not return partial (wrong)
     labels (r3 advice).  The star rounds converge a 7-vertex path in 4
     rounds (incl. the stability-detection round), so 3 rounds must
@@ -302,11 +303,13 @@ def test_connected_components_nonconvergence_raises(spark):
 
     edges = spark.createDataFrame(
         [(f"v{i}", f"v{i + 1}") for i in range(6)], ["doc_a", "doc_b"])
+    ckpt = str(tmp_path / "cc")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iters=3)
+        connected_components(edges, checkpoint_dir=ckpt, max_iters=3)
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().isEmpty()
     got = {(r.doc_id, r.component_id)
-           for r in connected_components(edges, max_iters=4).collect()}
+           for r in connected_components(
+               edges, checkpoint_dir=ckpt, max_iters=4).collect()}
     assert got == {(f"v{i}", "v0") for i in range(7)}
 
 
@@ -346,7 +349,7 @@ def test_media_frame_sample_stride(spark):
     assert rows[0].out_width == (64 + 7 * 7 % 192) // 2
 
 
-def test_connected_components_random_graphs(spark):
+def test_connected_components_random_graphs(spark, tmp_path):
     """Differential test vs a pure-Python union-find on seeded random
     graphs (multi-round convergence, multiple cluster shapes)."""
     import numpy as np
@@ -380,7 +383,8 @@ def test_connected_components_random_graphs(spark):
         [(f"v{a:03d}", f"v{b:03d}") for a, b in sorted(pairs)],
         ["doc_a", "doc_b"])
     got = {r.doc_id: r.component_id
-           for r in connected_components(df).collect()}
+           for r in connected_components(
+               df, checkpoint_dir=str(tmp_path / "cc")).collect()}
     assert got == want, (n, m)
 
 
