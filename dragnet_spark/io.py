@@ -135,30 +135,3 @@ def write_documents(df: DataFrame, sink: str, mode: str = "append") -> None:
         _write_table(df, name, mode)
         return
     df.write.mode(mode).parquet(sink)
-
-
-def write_bucketed(df: DataFrame, name: str, key: str = "doc_id",
-                   n_buckets: int = 16, path: str | None = None,
-                   mode: str = "overwrite") -> None:
-    """Bucketed, bucket-sorted table write — the ingest-time layout
-    that makes every downstream equi-join / aggregation on ``key``
-    exchange-free.
-
-    Spark native bucketing (``bucketBy`` + ``sortBy`` via
-    ``saveAsTable``): a join of two tables bucketed on their join keys
-    with the same bucket count shuffles NEITHER side — the bucketed
-    scan itself satisfies the join's required hash distribution.  At
-    10^12 documents this removes the dominant exchange from the
-    documents |x| embeddings join that every ANN / near-dup pipeline
-    repeats, and from repeated groupBy(doc_id) passes.  On Iceberg the
-    same layout is ``bucket(n, key)`` hidden partitioning with a
-    sorted write order; storage-partitioned joins give the identical
-    exchange-free plan.  ``n_buckets`` sizes one bucket's rows to an
-    executor-memory-friendly task at the target scale (10^12 docs ->
-    O(10^5) buckets); ``path`` places the data outside the session
-    warehouse dir."""
-    w = (df.write.format("parquet").mode(mode)
-         .bucketBy(n_buckets, key).sortBy(key))
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(name)

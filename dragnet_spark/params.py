@@ -85,7 +85,6 @@ class RunConfig:
     dm_step: float = 0.0              # 0 => optimal (Levin) list (dragnet.cu:123)
     pulse_width: float = 4.0          # microseconds        (dragnet.cu:48)
     dm_tol: float = 1.25              # dragnet.cu:49
-    gulp_size: int = 65536            # dragnet.cu:55 (batching hint only)
 
     def to_json(self) -> str:
         return json.dumps(asdict(self), sort_keys=True)

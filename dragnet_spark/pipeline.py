@@ -1,33 +1,38 @@
 """The Spark pipeline: documents table -> fused Arrow kernel -> output
 span rows (+ inline metrics rows for checkpoint/lineage).
 
-Execution shape (Spark-first; cf. SURVEY.md §7):
+Execution shape (Spark-first; cf. SURVEY.md §7): ONE kernel stage,
+two drivers.
 
-* All per-span projection/sorting happens JVM-side
-  (``filter``/``array_sort``/``transform`` on the ``spans`` array) so
-  the Python boundary receives exactly the columns the kernel needs —
-  column pruning reaches the parquet scan.
-* The numeric pipeline is ONE ``mapInPandas`` pass per document
-  (zap -> mask/clip -> SK -> decimate -> dedisperse), i.e. manual
-  operator fusion: zero shuffles on the per-doc path.
-* Giant documents (skew) are split into halo-extended chunks that
-  reproduce the block loop's boundaries exactly.  The split itself is
-  pure JVM expressions (binary ``substr`` slicing of the offset-
-  addressed strips) — Python never materializes a whole giant document,
-  and a chunk row's bytes are bounded by chunk-size + halo.  Chunks are
-  repartitioned by (doc_id, chunk_id) — explicit salting — processed
-  independently, and reassembled with one linear-time ``b"".join`` per
+* All per-span projection happens JVM-side (``filter``/``transform``
+  on the ``spans`` array) so the Python boundary receives exactly the
+  columns the kernel needs — column pruning reaches the parquet scan.
+* The numeric pipeline is ONE ``mapInPandas`` body,
+  :func:`kernel_rows` (zap -> mask/clip -> SK -> decimate ->
+  dedisperse), over chunk rows — manual operator fusion.  Its part
+  rows carry each timeseries as raw bytes; the JVM projects the
+  canonical base64 text (:func:`_span_text`).
+* :func:`run_pipeline` feeds every document as chunk 0 of 1: one
+  narrow stage, zero shuffles.
+* :func:`run_pipeline_chunked` splits giant documents (skew) into
+  halo-extended chunks that reproduce the block loop's boundaries
+  exactly.  The split itself is pure JVM expressions (binary
+  ``substr`` slicing of the offset-addressed strips) — Python never
+  materializes a whole giant document, and a chunk row's bytes are
+  bounded by chunk-size + halo.  Chunks are repartitioned by
+  (doc_id, chunk_id) — explicit salting — run through the same kernel
+  stage, and reassembled with one linear-time ``b"".join`` per
   (doc, dm) group (``applyInPandas``), the only shuffle in the job.
   Chunking requires ``clip_sigma == 0`` (the clipper's EWMA is
   sequential per document, ``mask.c:564-566``); clip-enabled runs use
-  the per-document path.  ``use_dt`` scrunches (D5) after reassembly.
+  the per-document path.  ``use_dt`` scrunches (D5) in the kernel for
+  a whole document and after reassembly for a split one.
 * Plans (DM lists, delay tables, SK thresholds) are built once per
   distinct header on each executor and cached (tiny, pure).
 """
 
 from __future__ import annotations
 
-import base64
 import dataclasses
 import json
 import time
@@ -43,7 +48,7 @@ from . import __version__
 from .kernels import process_document, scrunch_series
 from .params import Header, MaskSpec, RunConfig
 from .plan import DedispPlan, build_plan
-from .spans import build_output_spans, inf_media_spans
+from .spans import inf_media_spans
 
 
 class LedgerValidationError(RuntimeError):
@@ -82,25 +87,16 @@ SPAN_ROW_SCHEMA = StructType([
     StructField("offset", IntegerType(), True),
 ])
 
-# Internal mapInPandas output: timeseries rows carry raw bytes in
-# ``payload`` (text NULL); the JVM projects the canonical base64 text.
-# 25% fewer bytes over the Python->JVM Arrow socket — the measured
-# scale bottleneck on many-core hosts (BENCH/BASELINE.md caveat).
-_RAW_SPAN_SCHEMA = StructType([
-    StructField("doc_id", StringType(), False),
-    StructField("seq", IntegerType(), False),
-    StructField("kind", StringType(), False),
-    StructField("payload", BinaryType(), True),
-    StructField("text", StringType(), True),
-    StructField("media_ref", StringType(), True),
-    StructField("offset", IntegerType(), True),
-])
-
-_CHUNK_OUT_SCHEMA = StructType([
+# The kernel stage's output (:func:`kernel_rows`): timeseries rows
+# carry raw float32-LE bytes in ``series`` (text NULL); the JVM projects
+# the canonical base64 text.  25% fewer bytes over the Python->JVM
+# Arrow socket — the measured scale bottleneck on many-core hosts
+# (BENCH/BASELINE.md caveat).
+_PART_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
     StructField("chunk_id", IntegerType(), False),
     StructField("n_chunks", IntegerType(), False),
-    StructField("dm_index", IntegerType(), False),
+    StructField("seq", IntegerType(), False),
     StructField("dt_factor", IntegerType(), False),
     StructField("series", BinaryType(), True),
     StructField("kind", StringType(), False),
@@ -111,9 +107,9 @@ _CHUNK_OUT_SCHEMA = StructType([
 
 _REASSEMBLE_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
-    StructField("dm_index", IntegerType(), False),
+    StructField("seq", IntegerType(), False),
     StructField("media_ref", StringType(), False),
-    StructField("raw", BinaryType(), False),
+    StructField("series", BinaryType(), False),
 ])
 
 # Per-executor plan cache: (header_json, cfg_json, mask_json) -> DedispPlan
@@ -178,12 +174,6 @@ def _decode_payload(sample_bins, sample_offsets, header) -> np.ndarray:
     return data
 
 
-def _media_list(media_json: str | None) -> list[dict]:
-    if not media_json:
-        return []
-    return json.loads(media_json)
-
-
 def _mask_fingerprint(mask: MaskSpec | None) -> str:
     """Content hash of the mask actually applied, recorded in every
     metrics row: resume's done-marker cannot trust (run_id, config_id)
@@ -196,10 +186,9 @@ def _mask_fingerprint(mask: MaskSpec | None) -> str:
     return hashlib.md5(mask.to_json().encode()).hexdigest()[:12]
 
 
-def _metrics_row(doc_id: str, metrics: dict, n_spans_out: int,
-                 wall_ms: float, run_id: str, cfg: RunConfig,
-                 chunk_id: int = 0, n_chunks: int = 1,
-                 mask_hash: str = "none") -> dict:
+def _metrics_row(doc_id: str, chunk_id: int, n_chunks: int, metrics: dict,
+                 n_spans_out: int, wall_ms: float, run_id: str,
+                 cfg: RunConfig, mask_hash: str) -> dict:
     from pyspark import TaskContext
     tc = TaskContext.get()
     payload = dict(metrics)
@@ -210,31 +199,42 @@ def _metrics_row(doc_id: str, metrics: dict, n_spans_out: int,
         "partition_id": tc.partitionId() if tc else -1,
         "code_version": __version__, "mask_hash": mask_hash,
     })
-    return {"doc_id": doc_id, "seq": -1, "kind": "metrics",
+    return {"doc_id": doc_id, "chunk_id": chunk_id, "n_chunks": n_chunks,
+            "seq": -1, "dt_factor": 1, "series": None, "kind": "metrics",
             "text": json.dumps(payload, sort_keys=True),
             "media_ref": "", "offset": -1}
 
 
-def run_pipeline(df: DataFrame, cfg: RunConfig,
-                 mask: MaskSpec | None = None, *,
-                 run_id: str = "run0") -> DataFrame:
-    """Per-document fused pipeline.  Input: (doc_id, spans) DataFrame.
-    Output: exploded span rows (SPAN_ROW_SCHEMA) in span-sequence order
-    (``seq``), plus one ``kind='metrics'`` row per document."""
-    prepared = prepare_documents(df)
-    cfg_json = cfg.to_json()
-    mask_json = mask.to_json() if mask else None
+def kernel_rows(chunks: DataFrame, cfg_json: str, mask_json: str | None, *,
+                run_id: str) -> DataFrame:
+    """The one kernel stage.  Input: chunk rows ``(doc_id, chunk_id,
+    n_chunks, chunk_start, header, strip_offsets, strip_bins, media)``
+    with chunk-relative strips.  Output: part rows (``_PART_SCHEMA``):
+    per DM a timeseries row (``seq`` = DM index), on chunk 0 the
+    document's inf and media rows (``seq`` after the DMs), and one
+    metrics row per chunk (``seq`` -1).  A chunk's rows are emitted
+    together by one task, so whenever a task's output file commits,
+    every row of its chunks is visible — the metrics row is therefore
+    a safe chunk-done marker for chunk-granular resume (:func:`run_job`).
 
-    def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cfg_l = RunConfig.from_json(cfg_json)
-        mask_l = MaskSpec.from_json(mask_json) if mask_json else None
-        mh = _mask_fingerprint(mask_l)   # fixed per task: hoisted out
-        for pdf in batches:              # of the per-document loop
+    A whole document (``n_chunks == 1``) runs on its document plan and
+    scrunches (D5) here, emitting ``dt_factor`` 1.  A split document's
+    chunks carry each DM's ``dt_factor`` and scrunch after reassembly
+    (:func:`reassemble_parts`)."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cfg = RunConfig.from_json(cfg_json)
+        mask = MaskSpec.from_json(mask_json) if mask_json else None
+        mh = _mask_fingerprint(mask)     # fixed per task: hoisted out
+        for pdf in batches:              # of the per-chunk loop
             rows: list[dict] = []
-            for doc_id, hjson, offsets, bins, media_json in zip(
-                    pdf["doc_id"], pdf["header"], pdf["sample_offsets"],
-                    pdf["sample_bins"], pdf["media"]):
+            for doc_id, cid, nch, start, hjson, offsets, bins, media in zip(
+                    pdf["doc_id"], pdf["chunk_id"], pdf["n_chunks"],
+                    pdf["chunk_start"], pdf["header"], pdf["strip_offsets"],
+                    pdf["strip_bins"], pdf["media"]):
                 t0 = time.perf_counter()
+                n0 = len(rows)
+                cid, nch = int(cid), int(nch)
                 if hjson is None:
                     # Mirror decode_document's validation: without this
                     # a header-less document surfaces as an opaque
@@ -242,42 +242,95 @@ def run_pipeline(df: DataFrame, cfg: RunConfig,
                     # task retries.
                     raise ValueError(
                         f"document {doc_id!r} has no header span")
-                plan = _cached_plan(hjson, cfg_l, mask_l)
-                data = _decode_payload(bins, offsets, plan.header)
-                out, metrics = process_document(data, plan)
-                if cfg_l.use_dt:
-                    out = scrunch_series(out, plan.dt_factors)
-                spans = build_output_spans(
-                    out, plan.dmlist, plan.header,
-                    nsamp_dec=plan.nsamp_dec, tsamp_dec=plan.tsamp_dec,
-                    max_delay=plan.max_delay, prefix=cfg_l.prefix,
-                    media=_media_list(media_json),
-                    dt_factors=plan.dt_factors if cfg_l.use_dt else None,
-                    raw_series=True)
-                for i, s in enumerate(spans):
-                    rows.append({"doc_id": doc_id, "seq": i,
-                                 "payload": s.get("payload"), "kind": s["kind"],
-                                 "text": s["text"], "media_ref": s["media_ref"],
-                                 "offset": s["offset"]})
-                rows.append({**_metrics_row(
-                    doc_id, {**metrics, "n_dms": len(out)},
-                    len(spans),
-                    (time.perf_counter() - t0) * 1e3, run_id, cfg_l,
-                    mask_hash=mh),
-                    "payload": None})
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in _RAW_SPAN_SCHEMA])
+                doc_plan = plan = _cached_plan(hjson, cfg, mask)
+                data = _decode_payload(bins, offsets, doc_plan.header)
+                if nch > 1:
+                    plan = _cached_plan(dataclasses.replace(
+                        doc_plan.header, nsamp=data.shape[0]).to_json(),
+                        cfg, mask)
+                    if plan.blocksize != doc_plan.blocksize:
+                        # build_plan clamps blocksize to nsamp, so a
+                        # final chunk shorter than one block gets a
+                        # smaller sk_mint — but the whole document
+                        # processes that same region as a short block
+                        # of the FULL-blocksize grid, counting the
+                        # past-the-end SK intervals (mact=0 => masked,
+                        # skz.c:464-466) into n_sk_masked_intervals.
+                        # Carry the document grid into the chunk plan
+                        # so split metrics equal whole-document
+                        # metrics (series are identical either way).
+                        plan = dataclasses.replace(
+                            plan, blocksize=doc_plan.blocksize,
+                            sk_mint=doc_plan.sk_mint)
+                # The rfifind-mask interval lookup needs absolute
+                # document time (mask.c:690): offset0 shifts it.
+                out, metrics = process_document(data, plan,
+                                                offset0=int(start))
+                fvec = doc_plan.dt_factors if cfg.use_dt else None
+                if fvec is not None and nch == 1:
+                    out = scrunch_series(out, fvec)
+                dtf = fvec if nch > 1 else None
+                dmlist = doc_plan.dmlist
+                for d in range(len(out)):
+                    rows.append({
+                        "doc_id": doc_id, "chunk_id": cid, "n_chunks": nch,
+                        "seq": d,
+                        "dt_factor": 1 if dtf is None else int(dtf[d]),
+                        "series": np.ascontiguousarray(
+                            out[d], dtype="<f4").tobytes(),
+                        "kind": "timeseries", "text": None,
+                        "media_ref": "dm://%.3f" % float(dmlist[d]),
+                        "offset": d})
+                if cid == 0:
+                    tail = inf_media_spans(
+                        dmlist, doc_plan.header,
+                        nsamp_dec=doc_plan.nsamp_dec,
+                        tsamp_dec=doc_plan.tsamp_dec,
+                        max_delay=doc_plan.max_delay, prefix=cfg.prefix,
+                        media=json.loads(media) if media else [],
+                        dt_factors=fvec)
+                    rows.extend({"doc_id": doc_id, "chunk_id": 0,
+                                 "n_chunks": nch, "seq": len(out) + i,
+                                 "dt_factor": 1, "series": None, **s}
+                                for i, s in enumerate(tail))
+                rows.append(_metrics_row(
+                    doc_id, cid, nch, {**metrics, "n_dms": len(out)},
+                    len(rows) - n0, (time.perf_counter() - t0) * 1e3,
+                    run_id, cfg, mh))
+            yield pd.DataFrame(rows, columns=_PART_SCHEMA.fieldNames())
 
-    raw = prepared.mapInPandas(proc, _RAW_SPAN_SCHEMA)
-    # JVM-side canonical base64 (Spark's is MIME-wrapped; strip the
-    # line breaks) — bit-identical to the Python encoding, proven by
-    # the span-equality tests and the chunked-path parity test.
-    return raw.select(
+    return chunks.mapInPandas(kernel, _PART_SCHEMA)
+
+
+def _span_text(parts: DataFrame) -> DataFrame:
+    """Part rows -> SPAN_ROW_SCHEMA rows.  A timeseries row's text is
+    the JVM-side canonical base64 of its ``series`` (Spark's base64 is
+    MIME-wrapped: strip the line breaks) — bit-identical to the Python
+    encoding, proven by the span-equality tests."""
+    return parts.select(
         "doc_id", "seq", "kind",
-        F.when(F.col("payload").isNotNull(),
-               F.regexp_replace(F.base64("payload"), "\r\n", ""))
+        F.when(F.col("series").isNotNull(),
+               F.regexp_replace(F.base64("series"), "\r\n", ""))
          .otherwise(F.col("text")).alias("text"),
         "media_ref", "offset")
+
+
+def run_pipeline(df: DataFrame, cfg: RunConfig,
+                 mask: MaskSpec | None = None, *,
+                 run_id: str = "run0") -> DataFrame:
+    """Per-document fused pipeline.  Input: (doc_id, spans) DataFrame.
+    Output: exploded span rows (SPAN_ROW_SCHEMA) in span-sequence order
+    (``seq``), plus one ``kind='metrics'`` row (``seq`` -1) per
+    document.  Every document is chunk 0 of 1 of the kernel stage: one
+    narrow stage, no Exchange."""
+    whole = prepare_documents(df).select(
+        "doc_id", F.lit(0).alias("chunk_id"), F.lit(1).alias("n_chunks"),
+        F.lit(0).cast("long").alias("chunk_start"), "header",
+        F.col("sample_offsets").alias("strip_offsets"),
+        F.col("sample_bins").alias("strip_bins"), "media")
+    return _span_text(kernel_rows(whole, cfg.to_json(),
+                                  mask.to_json() if mask else None,
+                                  run_id=run_id))
 
 
 # --------------------------------------------------------------------------
@@ -426,107 +479,21 @@ def process_chunk_rows(chunks: DataFrame, cfg_json: str,
                        mask_json: str | None, *,
                        run_id: str = "run0") -> DataFrame:
     """Chunk stage of the chunked path: halo-extended chunk rows (from
-    :func:`build_chunk_rows`) -> per-chunk part rows
-    (``_CHUNK_OUT_SCHEMA``: one timeseries row per (chunk, DM), plus
-    the doc-level inf/media rows on chunk 0 and one metrics row per
-    chunk).  A chunk's rows are emitted together by one task, so
-    whenever a task's output file commits, every row of its chunks is
-    visible — the metrics row is therefore a safe chunk-done marker
-    for chunk-granular resume (:func:`run_job`)."""
+    :func:`build_chunk_rows`), salted across the cluster, through the
+    kernel stage (:func:`kernel_rows`) -> per-chunk part rows."""
     # Explicit salting: giant documents' chunks spread across the cluster.
     nparts = chunks.sparkSession.sparkContext.defaultParallelism
-    chunks = chunks.repartition(nparts, "doc_id", "chunk_id")
-
-    def proc_chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cfg_l = RunConfig.from_json(cfg_json)
-        mask_l = MaskSpec.from_json(mask_json) if mask_json else None
-        mh = _mask_fingerprint(mask_l)   # fixed per task (hot loop)
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                t0 = time.perf_counter()
-                n_rows_before = len(rows)
-                doc_plan = _cached_plan(r.header, cfg_l, mask_l)
-                h = doc_plan.header
-                # Chunk-relative strips, already sliced at chunk edges
-                # JVM-side.
-                data = _decode_payload(r.strip_bins, r.strip_offsets, h)
-                sub_h = Header(**{**json.loads(r.header),
-                                  "nsamp": data.shape[0]})
-                sub_plan = _cached_plan(sub_h.to_json(), cfg_l, mask_l)
-                if sub_plan.blocksize != doc_plan.blocksize:
-                    # build_plan clamps blocksize to nsamp, so a final
-                    # chunk shorter than one block gets a smaller
-                    # sk_mint — but the doc path processes that same
-                    # region as a short block of the FULL-blocksize
-                    # grid, counting the past-the-end SK intervals
-                    # (mact=0 => masked, skz.c:464-466) into
-                    # n_sk_masked_intervals.  Carry the document grid
-                    # into the sub-plan so chunked metrics equal the
-                    # per-document metrics (series were already
-                    # identical either way).
-                    sub_plan = dataclasses.replace(
-                        sub_plan, blocksize=doc_plan.blocksize,
-                        sk_mint=doc_plan.sk_mint)
-                fvec = (doc_plan.dt_factors
-                        if cfg_l.use_dt and len(doc_plan.dt_factors) else None)
-                # The rfifind-mask interval lookup needs absolute
-                # document time (mask.c:690): offset0 shifts it.
-                out, metrics = process_document(
-                    data, sub_plan, offset0=int(r.chunk_start))
-                for d in range(out.shape[0]):
-                    rows.append({
-                        "doc_id": r.doc_id, "chunk_id": int(r.chunk_id),
-                        "n_chunks": int(r.n_chunks), "dm_index": d,
-                        "dt_factor": int(fvec[d]) if fvec is not None else 1,
-                        "series": np.ascontiguousarray(
-                            out[d], dtype="<f4").tobytes(),
-                        "kind": "timeseries", "text": None,
-                        "media_ref": "dm://%.3f" % float(sub_plan.dmlist[d]),
-                        "offset": d})
-                if int(r.chunk_id) == 0:
-                    ndm = len(sub_plan.dmlist)
-                    tail = inf_media_spans(
-                        sub_plan.dmlist, h, nsamp_dec=doc_plan.nsamp_dec,
-                        tsamp_dec=doc_plan.tsamp_dec,
-                        max_delay=doc_plan.max_delay, prefix=cfg_l.prefix,
-                        media=_media_list(r.media), dt_factors=fvec)
-                    for i, s in enumerate(tail):
-                        rows.append({
-                            "doc_id": r.doc_id, "chunk_id": 0,
-                            "n_chunks": int(r.n_chunks),
-                            "dm_index": ndm + i, "dt_factor": 1,
-                            "series": None, **s})
-                # n_spans_out: spans emitted for this chunk (matches
-                # the per-document path's len(spans) semantics).
-                n_emitted = len(rows) - n_rows_before
-                mrow = _metrics_row(r.doc_id,
-                                    {**metrics,
-                                     "n_dms": len(out)},
-                                    n_emitted,
-                                    (time.perf_counter() - t0) * 1e3,
-                                    run_id, cfg_l, int(r.chunk_id),
-                                    int(r.n_chunks),
-                                    mask_hash=mh)
-                rows.append({"doc_id": r.doc_id, "chunk_id": int(r.chunk_id),
-                             "n_chunks": int(r.n_chunks),
-                             "dm_index": 1 << 30, "dt_factor": 1,
-                             "series": None,
-                             "kind": "metrics", "text": mrow["text"],
-                             "media_ref": "", "offset": -1})
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in _CHUNK_OUT_SCHEMA])
-
-    return chunks.mapInPandas(proc_chunk, _CHUNK_OUT_SCHEMA)
+    return kernel_rows(chunks.repartition(nparts, "doc_id", "chunk_id"),
+                       cfg_json, mask_json, run_id=run_id)
 
 
 def reassemble_parts(parts: DataFrame, use_dt: bool) -> DataFrame:
     """Reassembly stage of the chunked path: per-chunk part rows ->
     canonical span rows.  Per (doc, dm) group, concat chunk series in
     chunk order with ONE linear-time ``b"".join`` — the only shuffle of
-    the chunked path.  With ``use_dt``, the per-DM scrunch (D5) runs
-    here on the full reassembled series, matching the per-document
-    path's operation order exactly."""
+    the chunked path.  With ``use_dt``, the per-DM scrunch (D5) of a
+    split document runs here on the full reassembled series, matching
+    the whole-document operation order exactly."""
 
     def reassemble(pdf: pd.DataFrame) -> pd.DataFrame:
         # Linear-time reassembly (r2 verdict: the previous JVM
@@ -535,33 +502,28 @@ def reassemble_parts(parts: DataFrame, use_dt: bool) -> DataFrame:
         # one b"".join pass: every byte is copied exactly once.
         pdf = pdf.sort_values("chunk_id")
         raw = b"".join(bytes(x) for x in pdf["series"])
-        if use_dt:
-            f = int(pdf["dt_factor"].iloc[0])
-            if f > 1:
-                x = np.frombuffer(raw, dtype="<f4")
-                raw = np.ascontiguousarray(scrunch_series(
-                    x[np.newaxis, :], np.array([f]))[0],
-                    dtype="<f4").tobytes()
+        f = int(pdf["dt_factor"].iloc[0])
+        if use_dt and f > 1:
+            x = np.frombuffer(raw, dtype="<f4")
+            raw = np.ascontiguousarray(scrunch_series(
+                x[np.newaxis, :], np.array([f]))[0],
+                dtype="<f4").tobytes()
         return pd.DataFrame([{
             "doc_id": pdf["doc_id"].iloc[0],
-            "dm_index": int(pdf["dm_index"].iloc[0]),
+            "seq": int(pdf["seq"].iloc[0]),
             "media_ref": pdf["media_ref"].iloc[0],
-            "raw": raw}])
+            "series": raw}])
 
     ts = (parts.where(F.col("kind") == "timeseries")
-          .groupBy("doc_id", "dm_index", "media_ref")
+          .groupBy("doc_id", "seq", "media_ref")
           .applyInPandas(reassemble, _REASSEMBLE_SCHEMA)
-          .select("doc_id", F.col("dm_index").cast("int").alias("seq"),
-                  F.lit("timeseries").alias("kind"),
-                  # Spark's base64 is MIME (76-char lines); canonical
-                  # base64 has no line breaks.
-                  F.regexp_replace(F.base64("raw"), "\r\n", "")
-                   .alias("text"), "media_ref",
-                  F.col("dm_index").cast("int").alias("offset")))
+          .select("doc_id", "seq", F.lit("timeseries").alias("kind"),
+                  "series", F.lit(None).cast("string").alias("text"),
+                  "media_ref", F.col("seq").alias("offset")))
     rest = (parts.where(F.col("kind") != "timeseries")
-            .select("doc_id", F.col("dm_index").cast("int").alias("seq"),
-                    "kind", "text", "media_ref", "offset"))
-    return ts.unionByName(rest)
+            .select("doc_id", "seq", "kind", "series", "text", "media_ref",
+                    "offset"))
+    return _span_text(ts.unionByName(rest))
 
 
 def run_pipeline_chunked(df: DataFrame, cfg: RunConfig,
@@ -615,12 +577,6 @@ def nest_spans(rows: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # Job runner: checkpoint / resume / lineage
 # --------------------------------------------------------------------------
-
-CHECKPOINT_COLS = ["run_id", "config_id", "doc_id", "chunk_id", "status",
-                   "n_blocks", "n_spans_out", "n_sk_masked_intervals",
-                   "n_clipped_samples", "wall_ms", "partition_id",
-                   "code_version"]
-
 
 def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
                      mask: MaskSpec | None, out_dir: str, *, run_id: str,

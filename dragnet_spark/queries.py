@@ -1662,13 +1662,13 @@ def q_pii_redact(spark, sf_dir):
 
 # Driver-gate registry.  The driver's correctness gate caps at 50
 # queries (CORRECTNESS_r04 silently dropped entries 51-55 — r4
-# verdict #1), so this dict is kept at <= 41 entries (40 today) and
-# __spark_entry__.queries() prepends the 9 flagship/metrics entries
-# FIRST; near-duplicate operator variants are merged into single
-# multi-column/tagged relations (token_counts, doc_fingerprint,
-# text_quality, channel_stats, robust_stats, ann_ivf_topk,
-# dedup_simhash) so every computation stays driver-checked under the
-# cap.
+# verdict #1), so this dict is kept at <= 42 entries (40 today) and
+# __spark_entry__.queries() prepends the 8 flagship/metrics entries
+# FIRST (gate = 8 + 40 = 48 today); near-duplicate operator variants
+# are merged into single multi-column/tagged relations (token_counts,
+# doc_fingerprint, text_quality, channel_stats, robust_stats,
+# ann_ivf_topk, dedup_simhash) so every computation stays
+# driver-checked under the cap.
 QUERIES = {
     "pricing_summary": q_pricing_summary,
     "revenue_by_nation": q_revenue_by_nation,

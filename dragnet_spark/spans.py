@@ -179,8 +179,7 @@ def writeinf_text(header: Header, outstem: str, dm: float, *,
 def build_output_spans(out, dmlist: np.ndarray, header: Header,
                        *, nsamp_dec: int, tsamp_dec: float, max_delay: int,
                        prefix: str, media: list[dict],
-                       dt_factors: np.ndarray | None = None,
-                       raw_series: bool = False) -> list[dict]:
+                       dt_factors: np.ndarray | None = None) -> list[dict]:
     """Per FIXTURES.md §4: per DM ascending a ``timeseries`` span
     (base64 float32-LE of the full concatenated series — the
     per-DM ``.dat`` file content, ``dragnet.cu:310-323``), then per DM
@@ -190,22 +189,13 @@ def build_output_spans(out, dmlist: np.ndarray, header: Header,
     ``out`` is a rectangular (ndm, n) array, or — on the adaptive-dt
     path (D5) — a list of per-DM series of differing lengths, with
     ``dt_factors`` giving each DM's scrunch factor (the per-DM ``.inf``
-    then carries the scrunched bin count and width).
-
-    ``raw_series=True`` emits the timeseries payload as raw bytes under
-    ``payload`` with ``text=None`` — the pipeline's Arrow-boundary
-    optimization: the JVM side base64-encodes (identical canonical
-    output, proven by the span-equality tests), so 25% fewer bytes
-    cross the Python->JVM socket."""
+    then carries the scrunched bin count and width)."""
     spans: list[dict] = []
     for d, dm in enumerate(dmlist):
-        series = np.ascontiguousarray(out[d], dtype="<f4")
-        raw = series.tobytes()
+        raw = np.ascontiguousarray(out[d], dtype="<f4").tobytes()
         spans.append({
             "kind": "timeseries",
-            "text": None if raw_series
-            else base64.b64encode(raw).decode("ascii"),
-            **({"payload": raw} if raw_series else {}),
+            "text": base64.b64encode(raw).decode("ascii"),
             "media_ref": "dm://%.3f" % float(np.float32(dm)),
             "offset": d,
         })
@@ -221,7 +211,7 @@ def inf_media_spans(dmlist: np.ndarray, header: Header, *, nsamp_dec: int,
                     dt_factors: np.ndarray | None = None) -> list[dict]:
     """The document-level tail of :func:`build_output_spans`: per DM an
     ``inf`` span (``dragnet.cu:325``), then the pass-through media
-    spans.  Shared with the chunked path, which emits it on chunk 0.
+    spans.  The pipeline's kernel stage emits it on chunk 0.
     A DM whose ``dt_factors`` entry f > 1 carries the bin count and
     width of its scrunched series: ``(nsamp_dec - max_delay) // f``
     bins (the length :func:`kernels.scrunch_series` leaves) of

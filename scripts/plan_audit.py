@@ -11,10 +11,13 @@ non-zero if any invariant fails.  Run: python scripts/plan_audit.py
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -162,7 +165,7 @@ def _audit(spark) -> int:
                 failures.append(f"{name}: unwanted /{pat}/")
         sections.append((name, plan))
 
-    # Per-document pipeline: no Exchange before the kernel stage.
+    # Per-document pipeline: exactly one kernel stage, no Exchange.
     from dragnet_spark.generate import make_corpus, scenario_configs
     from dragnet_spark.pipeline import docs_to_df, run_pipeline
     docs = docs_to_df(spark, make_corpus("tiny"))
@@ -179,28 +182,36 @@ def _audit(spark) -> int:
     if re.search(r"\(\d+\) Exchange\b", plan):
         failures.append("run_pipeline: unexpected shuffle Exchange in the "
                         "per-document path")
+    n_kernel = len(re.findall(r"\(\d+\) MapInPandas\b", plan))
+    if n_kernel != 1:
+        failures.append(f"run_pipeline: {n_kernel} MapInPandas nodes in the "
+                        "per-document path (want exactly 1)")
     sections.append(("run_pipeline (per-document fused path)", plan))
 
     # Per-DM partitioned sink: a single-DM read must be pruned to its
     # one dm= partition at the scan.
     from dragnet_spark.io import write_timeseries_partitioned
     perdm = "/tmp/dragnet_plan_audit_perdm.parquet"
-    write_timeseries_partitioned(rows, perdm)
-    rd = spark.read.parquet(perdm).where(F.col("dm") == "25.000")
-    plan = rd._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-             .fromString("formatted"))
+    try:
+        write_timeseries_partitioned(rows, perdm)
+        rd = spark.read.parquet(perdm).where(F.col("dm") == "25.000")
+        plan = rd._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode
+                 .fromString("formatted"))
+    finally:
+        shutil.rmtree(perdm, ignore_errors=True)
     if not re.search(r"PartitionFilters: \[[^\]]*dm", plan):
         failures.append("perdm sink: partition filter did not reach the scan")
     sections.append(("write_timeseries_partitioned (single-DM read)", plan))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("# PLANS.md — audited physical plans\n\n"
                 "Generated by `scripts/plan_audit.py` (sf0.01 inputs; "
                 "plans are scale-invariant).  Invariants checked:\n"
                 "broadcast joins for dims, partial aggregation before "
                 "exchanges, pushdown/pruning at the scan, and a "
-                "shuffle-free per-document pipeline.\n\n")
+                "shuffle-free per-document pipeline with one kernel "
+                "stage.\n\n")
         if failures:
             f.write("## FAILURES\n\n" +
                     "\n".join(f"- {x}" for x in failures) + "\n\n")

@@ -453,12 +453,32 @@ def test_chunked_accepts_clip_config_without_mask(spark):
     """A clip-enabled cfg with NO mask never clips (apply_mask is gated
     on use_mask AND a mask being present), so the chunked path must
     accept it and produce bit-identical output; WITH a mask it must
-    still refuse (the clipper EWMA is sequential per document)."""
+    still refuse (the clipper EWMA is sequential per document).
+
+    Every tiny document is one chunk, so both drivers run the same
+    kernel on the same plan: their metrics rows must be equal too,
+    apart from timing and placement, with ``seq`` -1 on both."""
+    import json
+
     docs, df = _docs_df(spark, "tiny")
     cfg = scenario_configs("tiny")["s2"]       # use_mask=True, clip>0
-    got = _collect_sequences(run_pipeline_chunked(df, cfg, None,
-                                                  blocks_per_chunk=2))
-    want = _collect_sequences(run_pipeline(df, cfg, None))
+    chunked = run_pipeline_chunked(df, cfg, None, blocks_per_chunk=2)
+    whole = run_pipeline(df, cfg, None)
+    assert _collect_sequences(chunked) == _collect_sequences(whole)
+
+    def metrics(rows):
+        out = []
+        for r in rows.where(F.col("kind") == "metrics").collect():
+            m = json.loads(r.text)
+            assert m["n_chunks"] == 1
+            del m["wall_ms"], m["partition_id"]
+            out.append((r.doc_id, r.seq, r.media_ref, r.offset,
+                        json.dumps(m, sort_keys=True)))
+        return sorted(out)
+
+    got, want = metrics(chunked), metrics(whole)
+    assert len(want) == len(docs)
+    assert {r[1] for r in got + want} == {-1}
     assert got == want
     with pytest.raises(ValueError, match="clip_sigma == 0"):
         run_pipeline_chunked(df, cfg, make_mask("tiny"))

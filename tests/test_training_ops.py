@@ -487,39 +487,6 @@ def test_quality_repetition_values(spark, tmp_path):
     assert r2.dup_word_frac == 0.0 and r2.top_bigram_frac == 0.5
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    """Co-located join via bucketing: both sides bucketed on their
-    join key with the same bucket count -> SortMergeJoin with ZERO
-    Exchange nodes (the 100 TB layout lever for the repeated
-    documents |x| embeddings join)."""
-    from pyspark.sql import functions as F
-
-    from dragnet_spark.io import write_bucketed
-    docs = spark.read.parquet(f"{SF}/documents.parquet") \
-                .select("doc_id", "lang")
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet") \
-               .select("vec_id", "label")
-    write_bucketed(docs, "bkt_docs", key="doc_id", n_buckets=8,
-                   path=f"{tmp_path}/bkt_docs")
-    write_bucketed(emb, "bkt_emb", key="vec_id", n_buckets=8,
-                   path=f"{tmp_path}/bkt_emb")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("bkt_docs").join(
-            spark.table("bkt_emb"),
-            F.col("doc_id") == F.col("vec_id"))
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        # and the join is still correct
-        assert j.count() == 500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bkt_docs")
-        spark.sql("DROP TABLE IF EXISTS bkt_emb")
-
-
 # --------------------------------------------------------------------------
 # Quantization / histogram quantiles / TF-IDF (constructed inputs)
 # --------------------------------------------------------------------------
