@@ -7,23 +7,16 @@ pipeline over ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``)
 on ``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1, ...}
+     "queries": {"q1": sec, ...}, "sf": 0.1,
+     "gate_s": <gate rows>, "flagship_s": <flagship rows>, ...}
 
-``--scaling`` mode: run the identical flagship job at every level of
-the host's N -> 4N chain (:func:`scaling_levels`: 1, 4 on 4 cores;
-2, 8, 32 on 32) and report each adjacent pair's median throughput and
-scaling efficiency eff = tput(4N)/(4*tput(N)) (target >= 0.8), writing
-``BENCH/BASELINE.md`` with the host's cores and MemTotal.  Each level
-is CPU-pinned (taskset) so local[N] really gets N cores, as N
-single-core executors would.  Scaling runs
-default to the 4096-doc ``scale`` corpus (identical input at every
-level is what the efficiency ratio requires; the 4x work per run
-amortizes fixed per-run overhead the way a real long job does — see
-``SCALING_CORPUS``); pass ``--corpus bench`` for the small variant.
-
-``--flagship-only --cores N`` is the subprocess worker for --scaling
-(separate process per parallelism level so each JVM gets a clean
-``local[N]`` master).
+``--scaling`` mode: at every level of the host's N -> 4N chain
+(:func:`scaling_levels`: 1, 4 on 4 cores; 2, 8, 32 on 32) run the
+repository benchmark's traced flagship workload
+(``perfbench/run.py --workload flagship_s3 --trace 1``) pinned to N
+CPUs, and write ``BENCH/BASELINE.md``: each level's docs/s and layer
+times, and each N -> 4N pair's efficiency eff = docs/s(4N) /
+(4 * docs/s(N)) (target >= 0.8) and per-layer speed-ups.
 """
 
 from __future__ import annotations
@@ -31,7 +24,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import subprocess
 import sys
 import time
@@ -41,18 +33,6 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 BENCH_CORPUS = "bench"      # driver bench: 1024 docs, ~1.4 GB
-SCALING_CORPUS = "scale"    # --scaling: 4096 docs, ~5.3 GB.  The 4x
-# work per run amortizes the ~2 s parallelism-independent per-run cost
-# (driver planning/scheduling/result-agg sharing the pinned cores)
-# that dominates a 6-second local[8] run on the 1024-doc corpus but is
-# noise on a real multi-hour job — the large corpus is the faithful
-# regime for the N->4N efficiency ratio.
-
-
-def get_session(cores: int):
-    from dragnet_spark.session import get_spark
-    return get_spark(app_name=f"bench-{cores}", cores=cores,
-                     shuffle_partitions=max(cores, 8))
 
 
 def corpus_cache(corpus: str) -> str:
@@ -90,24 +70,6 @@ def run_flagship(spark, corpus: str = BENCH_CORPUS) -> float:
     return elapsed
 
 
-def flagship_only(cores: int, runs: int, corpus: str = BENCH_CORPUS,
-                  warmups: int = 2) -> None:
-    spark = get_session(cores)
-    ndocs = ensure_corpus(spark, corpus)
-    for _ in range(warmups):  # warm-up (JIT of generated code, Arrow)
-        run_flagship(spark, corpus)
-    times = [run_flagship(spark, corpus) for _ in range(runs)]
-    spark.stop()
-    st = sorted(times)
-    # True median (even run counts averaged the protocol used the
-    # upper-middle element, biasing docs_per_sec for --runs 4 etc.;
-    # odd counts — the documented 7/3-run protocol — are unchanged).
-    med = (st[len(st) // 2] if len(st) % 2
-           else (st[len(st) // 2 - 1] + st[len(st) // 2]) / 2.0)
-    print(json.dumps({"cores": cores, "ndocs": ndocs, "runs": times,
-                      "median_sec": med, "docs_per_sec": ndocs / med}))
-
-
 HISTORY_HEADER = "## Sweep history"
 
 
@@ -142,8 +104,52 @@ def scaling_levels(cores: int) -> list[int]:
     return [cores // 4 ** k * 4 ** i for i in range(k + 1)]
 
 
-def scaling(runs: int, corpus: str = BENCH_CORPUS, warmups: int = 4) -> None:
-    from dragnet_spark.generate import CORPORA
+# Each sweep level is one traced perfbench run of the flagship workload.
+PERFBENCH = ["perfbench/run.py", "--workload", "flagship_s3", "--seed", "1",
+             "--trace", "1"]
+# (column, perfbench metric) of the layers each level reports.
+LAYERS = (("scan", "scan.s"), ("prepare", "prepare.s"), ("arrow", "arrow.s"),
+          ("kernel", "kernel.busy_s"), ("base64", "output.base64_s"),
+          ("full", "ladder.full_s"))
+
+
+def level_result(n: int, returncode: int, stdout: str) -> dict:
+    """One sweep level from the stdout of its perfbench run: docs/s,
+    each layer's seconds (the kernel's busy seconds divided by ``n``,
+    its wall share on ``n`` cores), system CPU seconds, the pass count
+    and the corpus size.  Raises ValueError when the level cannot count:
+    the run failed or its output was wrong, or it saw other than ``n``
+    cores (the pinning did not hold)."""
+    lines = [json.loads(ln) for ln in stdout.splitlines()
+             if ln.startswith("{")]
+    result = lines[-1] if lines else {}
+    if returncode or result.get("correct") is not True:
+        raise ValueError(f"level {n}: perfbench exited {returncode} with "
+                         f"correct={result.get('correct')}")
+    detail = next((d["perfbench"] for d in lines if "perfbench" in d), {})
+    got = detail.get("host", {}).get("cores")
+    if got != n:
+        raise ValueError(f"level {n}: perfbench ran on {got} cores")
+    m = {k: v["value"] for k, v in result["metrics"].items()}
+    out = {name: m[key] for name, key in LAYERS}
+    out["kernel"] /= n
+    return {**out, "docs_per_s": m["trace.untraced_docs_per_s"],
+            "sys_cpu_s": m["host.sys_cpu_s"], "ndocs": detail["ndocs"],
+            "runs": detail["metrics"]["trace.untraced_docs_per_s"]["n"]}
+
+
+def pair_row(lo: dict, hi: dict) -> dict:
+    """An N -> 4N pair from its two :func:`level_result` levels:
+    eff = docs/s(4N) / (4 * docs/s(N)) and each layer's speed-up
+    t(N) / t(4N).  prepare, arrow and base64 are differences of ladder
+    rungs, so a layer whose time is not positive at both levels has no
+    speed-up (None)."""
+    return {"eff": hi["docs_per_s"] / (4.0 * lo["docs_per_s"]),
+            **{name: lo[name] / hi[name] if lo[name] > 0 and hi[name] > 0
+               else None for name, _ in LAYERS}}
+
+
+def scaling() -> None:
     from dragnet_spark.session import host_cores, mem_total_kb
 
     cores = host_cores()
@@ -153,116 +159,80 @@ def scaling(runs: int, corpus: str = BENCH_CORPUS, warmups: int = 4) -> None:
         sys.exit(str(exc))
     mem_gib = mem_total_kb() / 2 ** 20
     cpus = sorted(os.sched_getaffinity(0))
-    results = {}
+    res = {}
     for n in levels:
-        # Pin the whole process tree (JVM + Python workers) to exactly
-        # n CPUs: plain local[N] lets the Python workers overflow onto
-        # the host's idle cores, inflating the N-core baseline — a real
-        # N-core executor has no spare cores.
-        cmd = [sys.executable, __file__, "--flagship-only",
-               "--cores", str(n), "--runs", str(runs),
-               "--corpus", corpus, "--warmups", str(warmups)]
-        if shutil.which("taskset"):
-            cmd = ["taskset", "-c", ",".join(map(str, cpus[:n]))] + cmd
-        out = subprocess.run(cmd, capture_output=True, text=True,
-                             check=True, cwd=REPO)
-        results[n] = json.loads(out.stdout.strip().splitlines()[-1])
-    tput = {n: results[n]["docs_per_sec"] for n in levels}
-    eff = {(n, 4 * n): tput[4 * n] / (4.0 * tput[n]) for n in levels[:-1]}
-    bench_dir = REPO / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
-    history = _carry_history(bench_dir / "BASELINE.md")
+        # Pin the whole process tree to n CPUs: the JVM and the Python
+        # workers inherit the affinity, and perfbench sizes its
+        # local[n] session from it, as n single-core executors would be.
+        run = subprocess.run(
+            [sys.executable, *PERFBENCH], capture_output=True, text=True,
+            cwd=REPO, preexec_fn=lambda: os.sched_setaffinity(0, cpus[:n]))
+        try:
+            res[n] = level_result(n, run.returncode, run.stdout)
+        except ValueError as exc:
+            sys.stderr.write(run.stderr[-4000:])
+            sys.exit(f"--scaling refused {exc}; BENCH/BASELINE.md is "
+                     "unchanged")
+    pairs = {(n, 4 * n): pair_row(res[n], res[4 * n]) for n in levels[:-1]}
+    names = [name for name, _ in LAYERS]
+    rows = [f"| local[{n}] | {r['docs_per_s']:.1f} | "
+            + " | ".join(f"{r[k]:.2f}" for k in names + ["sys_cpu_s"])
+            + " |" for n, r in res.items()]
+    rows += [f"| {n} -> {m} | **{p['eff']:.3f}** | "
+             + " | ".join("—" if p[k] is None else f"{p[k]:.2f}x"
+                          for k in names) + " | |"
+             for (n, m), p in pairs.items()]
+    path = REPO / "BENCH" / "BASELINE.md"
+    path.parent.mkdir(exist_ok=True)
     host = f"{cores} cores, {mem_gib:.1f} GiB"
-    new_row = (f"| {time.strftime('%Y-%m-%d')} ({host}) | {corpus} "
-               f"| {runs} | "
-               + " | ".join(f"{n}->{m}: {e:.3f}" for (n, m), e in eff.items())
-               + " |")
-    level_rows = "\n".join(
-        f"| local[{n}] ({f'{4 ** i}N' if i else 'N'}) "
-        f"| {', '.join(f'{t:.2f}' for t in results[n]['runs'])} "
-        f"| {results[n]['median_sec']:.2f} | {tput[n]:.1f} |"
-        for i, n in enumerate(levels))
-    pair_rows = "\n".join(
-        f"| N={n} -> 4N={m} | **{e:.3f}** "
-        f"| {'MET' if e >= 0.8 else 'NOT MET'} |"
-        for (n, m), e in eff.items())
-    ndocs, nchan, nsamp, _ = CORPORA[corpus]
+    ndocs, runs = res[levels[0]]["ndocs"], res[levels[0]]["runs"]
+    history = _carry_history(path) + [
+        f"| {time.strftime('%Y-%m-%d')} ({host}) | perfbench flagship_s3 "
+        f"({ndocs} docs) | {runs} | "
+        + " | ".join(f"{n}->{m}: {p['eff']:.3f}"
+                     for (n, m), p in pairs.items()) + " |"]
+    path.write_text(f"""\
+# BENCH/BASELINE.md — flagship scaling efficiency, by layer
 
-    md = f"""# BENCH/BASELINE.md — measured throughput & scaling efficiency
+Each level runs `python3 {' '.join(PERFBENCH)}`
+pinned to the host's first N CPUs: the flagship pipeline (scenario
+`s3`) over perfbench's seeded {ndocs}-doc corpus.  Host: {host}
+MemTotal.  Regime: session start and the cold pass are excluded, each
+pass's fixed costs (planning, scheduling, collecting the result) are
+included.  docs/s is the median of {runs} untraced passes; layer
+seconds are medians of the traced ladder (perfbench/README.md), kernel
+is busy seconds / N.  A pair row gives eff = docs/s(4N) / (4 x
+docs/s(N)) (target >= 0.8) and each layer's speed-up t(N) / t(4N),
+ideally 4x (— where a rung difference was not positive).
 
-Flagship job: fused dedispersion pipeline (zap -> SK zap -> decimate ->
-dedisperse, scenario `s3`) over the deterministic `{corpus}` corpus
-({ndocs} documents x {nchan} chan x {nsamp} samples,
-seed 42; `dragnet_spark/generate.py`), identical input at every
-parallelism level.  Host: {host} MemTotal.
-Pinned local[N] levels on this one host are the sandbox proxy for
-N-executor clusters: each run is CPU-pinned (`taskset -c`) so the JVM
-+ Python workers of a local[N] job really share N cores, exactly as N
-single-core executors would.  The levels are c x 4^i for i = 0..k,
-where 4^k is the largest power of four <= the host's cores and
-c = cores // 4^k, so each adjacent pair is an N -> 4N pair.  {runs}
-timed runs per level after {warmups} JIT/Arrow warm-up runs; median
-reported.
+| level or pair | docs/s or eff | {' | '.join(names)} | sys CPU s |
+|---|---|---|---|---|---|---|---|---|
+{chr(10).join(rows)}
 
-| parallelism | runs (sec) | median sec | docs/sec |
-|---|---|---|---|
-{level_rows}
-
-**Scaling efficiency** (eff = docs_per_sec(4N) / (4 x docs_per_sec(N))),
-from the per-level medians:
-
-| pair | eff (median) | target >= 0.8 |
-|---|---|---|
-{pair_rows}
-
-Cross-session context: on a 32-core host the same committed code
-measured 2->8 medians from 0.73 to 1.05 on different days (run-to-run
-VM jitter, see the history below); single-session values near the 0.8
-boundary should be read with that spread in mind.
-
-Corpus-size note: the sweep defaults to the 4096-doc `scale` corpus
-because a ~2 s parallelism-independent per-run cost (driver planning,
-scheduling and result aggregation sharing the pinned cores) was ~31%
-of a local[8] run on the 1024-doc corpus on the 32-core host —
-mechanically capping the measurable 2->8 ratio at ~0.77 — but only
-~5% at 4x the work.  A real job over the north rule's 10^12-document
-table runs for hours, so the amortized regime is the faithful one.
-
-Single-box caveat: all local[N] levels share ONE kernel, one loopback
-network and one memory bus.  On the 32-core host, profiling showed the
-per-document Arrow boundary (JVM <-> Python worker sockets + page
-management) saturating kernel-side well before 32 threads — vmstat
-recorded 50-95% *system* CPU at local[32] while user time stayed under
-10%, and raw CPU scaling of pure user-space work there was 0.93
-(8 -> 32 spinning processes).  A real 4N-executor cluster multiplies
-kernels, NICs and memory buses along with the cores, so the lower
-pairs (where the shared-kernel contention is not yet binding) are the
-faithful proxy for executor scaling; the top pair is reported
-unvarnished with this confound.  JVM mitigations applied for all
-levels (see session.py): Xms=Xmx pinned heap + 32m G1 regions (stops
-heap uncommit page churn), glibc MALLOC_MMAP_THRESHOLD_ raised so MB
-strip buffers stop mmap/munmap-ing per document.
+Single-box caveat: all levels share one kernel, one loopback network
+and one memory bus.  On a 32-core host the 8->32 pair fell to 0.235
+with 50-95% system CPU at local[32].  A real 4N-executor cluster
+multiplies kernels, NICs and memory buses with the cores, so the lower
+pairs are the faithful proxy; the top pair carries this confound.
 
 Reproduce: `python bench.py --scaling`.
 
 {HISTORY_HEADER} (auto-appended; every `--scaling` run adds one row)
 
-Per-run timings of past sweeps live in git history of this file.
-The same committed flagship code produced every row; the spread is
-VM-condition jitter, which is why the verdict reads the whole table,
-not one day's sweep.  The first nine rows were all taken on one
-32-core host at levels 2, 8 and 32: their last two cells are the
-2->8 and 8->32 efficiencies.  Later rows name their host's cores and
-MemTotal after the date, and each efficiency cell names its pair.
+The first nine rows were taken on one 32-core host at levels 2, 8 and
+32 by bench.py's own flagship worker over the 4096-doc `scale` or
+1024-doc `bench` corpus; their cells are the 2->8 and 8->32
+efficiencies.  Later rows name their host and pairs.
 
 | date | corpus | runs/level | eff N->4N (median) | eff, next pair (median) |
 |---|---|---|---|---|
-{chr(10).join(history + [new_row])}
-"""
-    (bench_dir / "BASELINE.md").write_text(md)
+{chr(10).join(history)}
+""")
     print(json.dumps({"cores": cores, "mem_total_gib": round(mem_gib, 1),
-                      "docs_per_sec": tput,
-                      **{f"eff_{n}_to_{m}": e for (n, m), e in eff.items()}}))
+                      "docs_per_sec": {n: r["docs_per_s"]
+                                       for n, r in res.items()},
+                      **{f"eff_{n}_to_{m}": p["eff"]
+                         for (n, m), p in pairs.items()}}))
 
 
 def _bench_partitioned_sink(spark, corpus: str = BENCH_CORPUS) -> float:
@@ -297,7 +267,7 @@ def _bench_partitioned_sink(spark, corpus: str = BENCH_CORPUS) -> float:
 
 
 def driver_bench() -> None:
-    from dragnet_spark.session import host_cores
+    from dragnet_spark.session import get_spark, host_cores
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = host_cores()
@@ -310,14 +280,11 @@ def driver_bench() -> None:
 
     import __spark_entry__ as entry_mod
 
-    spark = get_session(cores)
+    spark = get_spark(app_name="bench", cores=cores)
     ndocs = ensure_corpus(spark)
 
     timings: dict[str, float] = {}
     qs = entry_mod.queries()
-    # dedisperse_tiny stays in the per-query table (r3 verdict cosmetic:
-    # every green CORRECTNESS row should have a bench row); the at-scale
-    # flagship number is dedisperse_bench below.
 
     # Session warm-up: JIT the scan/agg/window/Arrow code paths once so
     # per-query numbers measure the query, not first-use compilation.
@@ -333,17 +300,10 @@ def driver_bench() -> None:
                          "props string").count()
     except Exception as exc:  # noqa: BLE001
         errors["_warmup"] = f"{type(exc).__name__}: {exc}"[:200]
-    # WARM-UP CONTRACT (r4 verdict #2 — the driver's r4 bench flagged
-    # four phantom regressions traced entirely to first-use costs):
-    # every one-time fixture build the query bodies trigger lazily is
-    # paid HERE, before any timing starts —
-    #   * the flagship oracle's /tmp sample-decomposition exports,
-    #   * the tiny/skew corpus parquet caches,
-    #   * one full UNTIMED run of each flagship-shaped query (pipeline
-    #     codegen + Arrow/JIT for the mapInPandas kernels; the first
-    #     run of the chunked skew query measured 15.1 s vs 2.8 s warm).
-    # The timed best-of-2 below then measures the query, as the
-    # protocol claims.
+    # Every one-time cost the query bodies trigger lazily is paid here,
+    # untimed: the oracle's sample exports, the tiny/skew corpus caches
+    # and one run of each flagship query (the first chunked skew run
+    # measured 15.1 s vs 2.8 s warm).
     try:
         from dragnet_spark.flagship_oracle import (FLAGSHIP_QUERIES,
                                                    export_samples)
@@ -357,15 +317,9 @@ def driver_bench() -> None:
                 fn(spark, sf_dir).collect()
     except Exception as exc:  # noqa: BLE001
         errors["_flagship_warmup"] = f"{type(exc).__name__}: {exc}"[:200]
-    # Best-of-2 per query: single-shot numbers on this Firecracker VM
-    # can land 2-6x over their true cost (the r2 round saw a 15-row
-    # dimension lookup jump 1.1 -> 6.8 s on unchanged code); the second
-    # run of an identical plan is the cheapest honest deflake — same
-    # treatment the flagship gets below.  The flagship-shaped rows get
-    # best-of-3: the mapInPandas block loop is the most
-    # kernel-jitter-prone path in the repo, and one extra sample per
-    # heavy query is the cheapest way to keep the minimum — the only
-    # stable observable here — honest.
+    # Best-of-2 per query (single shots on a VM land 2-6x over their
+    # true cost), best-of-3 for the jitter-prone flagship rows: the
+    # minimum is the only stable observable.
     try:
         flagship_names = set(FLAGSHIP_QUERIES)
     except NameError:  # flagship import failed above
@@ -382,21 +336,16 @@ def driver_bench() -> None:
         except Exception as exc:  # noqa: BLE001 — one bad query must not
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]  # kill bench
 
-    # Flagship at bench scale (1024 docs, 1 GiB raw spectra).
-    # 3 warm-ups + best-of-3 timed: identical code measures anywhere in
-    # a 4x band on this Firecracker VM within ONE session (e.g.
-    # 22.5/11.7/5.3/9.2 s consecutively, 2026-08-17) — the minimum is
-    # the only stable observable (kernel-side jitter, see
-    # BENCH/BASELINE.md caveat).
+    gate_s = sum(timings.values())
+    # Flagship at bench scale (1024 docs, 1 GiB raw spectra): 3
+    # warm-ups, best-of-3 timed.
     for _ in range(3):  # warm-up (JIT of generated code, Arrow paths)
         run_flagship(spark)
     fl = min(run_flagship(spark) for _ in range(3))
     timings["dedisperse_bench"] = round(fl, 3)
 
-    # Per-DM partitioned sink (S9 at file scale): flagship output
-    # written partitionBy(dm) + a pruned single-DM read-back.
-    # Best-of-2 like every other row — it runs the whole pipeline, the
-    # shape this VM jitters hardest on (single shots ran 2x the best).
+    # Per-DM partitioned sink: flagship output written partitionBy(dm)
+    # plus a pruned single-DM read-back, best-of-2.
     timings["partitioned_sink"] = round(
         min(_bench_partitioned_sink(spark) for _ in range(2)), 3)
     spark.stop()
@@ -407,6 +356,8 @@ def driver_bench() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "gate_s": round(gate_s, 3),
+        "flagship_s": round(sum(timings.values()) - gate_s, 3),
         "flagship_docs_per_sec": round(ndocs / fl, 1),
         "cores": cores,
         # Failed queries are excluded from `value`; flag so a partial
@@ -416,24 +367,12 @@ def driver_bench() -> None:
 
 
 def main() -> None:
-    from dragnet_spark.session import host_cores
     p = argparse.ArgumentParser()
-    p.add_argument("--scaling", action="store_true")
-    p.add_argument("--flagship-only", action="store_true")
-    p.add_argument("--cores", type=int, default=host_cores())
-    p.add_argument("--runs", type=int, default=3)
-    p.add_argument("--corpus", default=None,
-                   help="corpus name (default: bench for the driver "
-                        "bench / --flagship-only, scale for --scaling "
-                        "— the 4x-work corpus that amortizes per-run "
-                        "fixed overhead the way a real long job does)")
-    p.add_argument("--warmups", type=int, default=2)
-    a = p.parse_args()
-    if a.flagship_only:
-        flagship_only(a.cores, a.runs, a.corpus or BENCH_CORPUS,
-                      a.warmups)
-    elif a.scaling:
-        scaling(a.runs, a.corpus or SCALING_CORPUS, a.warmups)
+    p.add_argument("--scaling", action="store_true",
+                   help="sweep the host's N -> 4N levels and rewrite "
+                        "BENCH/BASELINE.md")
+    if p.parse_args().scaling:
+        scaling()
     else:
         driver_bench()
 

@@ -40,6 +40,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
@@ -53,9 +54,9 @@ from .spans import inf_media_spans
 
 class LedgerValidationError(RuntimeError):
     """Raised when the chunked resume ledger exists but cannot prove
-    series completeness (e.g. metrics rows predate the n_dms field);
-    distinguished from "spans path does not exist yet", which resume
-    treats as a fresh out_dir."""
+    series completeness (e.g. metrics rows predate the n_dms field) or
+    holds part rows of another schema; distinguished from "spans path
+    does not exist yet", which resume treats as a fresh out_dir."""
 
 # The mandated input table shape (input_hint): doc_id + spans array.
 DOCS_SCHEMA = StructType([
@@ -612,27 +613,38 @@ def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
     chunk_rows = build_chunk_rows(prepared, cfg_json, mask_json,
                                   blocks_per_chunk)
     todo, n_todo, n_chunks_skipped = chunk_rows, None, 0
+    ledger = None
     if resume:
         try:
-            done = (spark.read.parquet(chunks_path)
-                    .where(F.col("kind") == "metrics")
-                    .select("doc_id", "chunk_id").distinct())
-            # Counters run on the KEY-ONLY plan (headers -> bounds ->
-            # chunk ids, :func:`chunk_keys`): counting chunk_rows
-            # itself would execute the heavy substr split of every
-            # sample strip once per count, tripling the most expensive
-            # pre-shuffle stage of a resumed job just to fill two
-            # numbers.
-            keys = chunk_keys(prepared, cfg_json, mask_json,
-                              blocks_per_chunk)
-            n_total = keys.count()
-            n_chunks_skipped = keys.join(
-                done, ["doc_id", "chunk_id"], "left_semi").count()
-            n_todo = n_total - n_chunks_skipped
-            todo = chunk_rows.join(done, ["doc_id", "chunk_id"],
-                                   "left_anti")
-        except Exception:
+            ledger = spark.read.parquet(chunks_path)
+        except AnalysisException:
             pass                        # no chunks table yet: compute all
+    if ledger is not None:
+        # A ledger of another part schema (e.g. pre-`seq` `dm_index`
+        # rows) must fail before any append mixes two schemas in it.
+        if ({(f.name, f.dataType) for f in ledger.schema}
+                != {(f.name, f.dataType) for f in _PART_SCHEMA}):
+            raise LedgerValidationError(
+                f"chunk ledger {chunks_path} has columns "
+                f"{ledger.columns}, not {_PART_SCHEMA.fieldNames()} "
+                "(written by an older version).  Use a fresh --out "
+                "directory.")
+        done = (ledger.where(F.col("kind") == "metrics")
+                .select("doc_id", "chunk_id").distinct())
+        # Counters run on the KEY-ONLY plan (headers -> bounds ->
+        # chunk ids, :func:`chunk_keys`): counting chunk_rows
+        # itself would execute the heavy substr split of every
+        # sample strip once per count, tripling the most expensive
+        # pre-shuffle stage of a resumed job just to fill two
+        # numbers.
+        keys = chunk_keys(prepared, cfg_json, mask_json,
+                          blocks_per_chunk)
+        n_total = keys.count()
+        n_chunks_skipped = keys.join(
+            done, ["doc_id", "chunk_id"], "left_semi").count()
+        n_todo = n_total - n_chunks_skipped
+        todo = chunk_rows.join(done, ["doc_id", "chunk_id"],
+                               "left_anti")
     if n_todo is None or n_todo > 0:
         parts_new = process_chunk_rows(todo, cfg_json, mask_json,
                                        run_id=run_id)

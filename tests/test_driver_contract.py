@@ -84,3 +84,110 @@ def test_scaling_levels_follow_host():
     assert bench.scaling_levels(6) == [1, 4]
     with pytest.raises(ValueError, match="at least 4 cores"):
         bench.scaling_levels(3)
+
+
+def _perfbench_stdout(cores, docs_per_s, layers, correct=True):
+    """The tail of a traced ``perfbench/run.py`` run: its detail line
+    and its result line."""
+    import json
+    detail = {"host": {"cores": cores, "mem_total_kb": 16 * 2 ** 20},
+              "ndocs": 96, "metrics": {"trace.untraced_docs_per_s": {
+                  "value": docs_per_s, "unit": "docs/s", "n": 3}}}
+    metrics = {k: {"value": v, "unit": "s"} for k, v in layers.items()}
+    metrics["trace.untraced_docs_per_s"] = {"value": docs_per_s,
+                                            "unit": "docs/s"}
+    return "\n".join([
+        f"# flagship_s3 seed=1 trace=1 cores={cores}",
+        json.dumps({"perfbench": detail}),
+        json.dumps({"correct": correct, "attempted": 400,
+                    "failed": 0 if correct else 1, "metrics": metrics})])
+
+
+_ONE_CORE = _perfbench_stdout(1, 15.0, {
+    "scan.s": 1.2, "prepare.s": 0.8, "arrow.s": 1.1, "kernel.busy_s": 1.76,
+    "output.base64_s": 1.6, "ladder.full_s": 6.4, "host.sys_cpu_s": 0.5})
+_FOUR_CORES = _perfbench_stdout(4, 57.0, {
+    "scan.s": 0.4, "prepare.s": 0.2, "arrow.s": 0.32, "kernel.busy_s": 1.76,
+    "output.base64_s": -0.01, "ladder.full_s": 1.6, "host.sys_cpu_s": 0.7})
+
+
+def test_scaling_pair_row_from_perfbench_lines():
+    """A sweep level is read from its perfbench run's last lines; a pair
+    gives eff = docs/s(4N) / (4 docs/s(N)) and each layer's t(N)/t(4N),
+    with the kernel's busy seconds taken per core."""
+    import bench
+    lo = bench.level_result(1, 0, _ONE_CORE)
+    hi = bench.level_result(4, 0, _FOUR_CORES)
+    assert hi["kernel"] == pytest.approx(0.44)
+    assert (lo["docs_per_s"], lo["sys_cpu_s"], lo["ndocs"], lo["runs"]) \
+        == (15.0, 0.5, 96, 3)
+    row = bench.pair_row(lo, hi)
+    assert row["eff"] == pytest.approx(0.95)
+    assert row["scan"] == pytest.approx(3.0)
+    assert row["prepare"] == pytest.approx(4.0)
+    assert row["arrow"] == pytest.approx(1.1 / 0.32)
+    assert row["kernel"] == pytest.approx(4.0)
+    assert row["full"] == pytest.approx(4.0)
+    # base64 is a difference of two rungs; a non-positive one has no
+    # speed-up rather than a negative or infinite one.
+    assert row["base64"] is None
+
+
+@pytest.mark.parametrize("n, returncode, stdout, why", [
+    (1, 1, _ONE_CORE.replace('"correct": true', '"correct": false'),
+     "correct=False"),
+    (1, 1, _ONE_CORE, "exited 1"),
+    (1, 3, "", "exited 3"),
+    (4, 0, _ONE_CORE, "ran on 1 cores"),
+])
+def test_scaling_refuses_failed_or_unpinned_level(n, returncode, stdout, why):
+    """A level counts only if its perfbench run exited 0 with correct
+    output and saw exactly its n cores (otherwise the pinning failed)."""
+    import bench
+    with pytest.raises(ValueError, match=why):
+        bench.level_result(n, returncode, stdout)
+
+
+def test_scaling_sweep_writes_or_keeps_baseline(tmp_path, monkeypatch):
+    """One sweep on a 4-core host runs levels 1 and 4 and rewrites
+    BASELINE.md with the 1 -> 4 row and the carried history; a refused
+    level aborts the sweep and leaves the file as it was."""
+    import subprocess
+
+    import bench
+    import dragnet_spark.session as session
+
+    (tmp_path / "BENCH").mkdir()
+    path = tmp_path / "BENCH" / "BASELINE.md"
+    old = (f"# old\n\n{bench.HISTORY_HEADER}\n\n"
+           "| 2026-08-21 | scale | 3 | 0.848 | 0.235 |\n")
+    path.write_text(old)
+    monkeypatch.setattr(bench, "REPO", tmp_path)
+    monkeypatch.setattr(session, "host_cores", lambda: 4)
+    calls = []
+
+    def fake_run(outputs):
+        def run(cmd, **kw):
+            calls.append(cmd)
+            rc, out = outputs[len(calls) - 1]
+            return subprocess.CompletedProcess(cmd, rc, out, "")
+        return run
+
+    monkeypatch.setattr(bench.subprocess, "run",
+                        fake_run([(0, _ONE_CORE), (0, _ONE_CORE)]))
+    with pytest.raises(SystemExit, match="ran on 1 cores"):
+        bench.scaling()
+    assert path.read_text() == old
+
+    calls.clear()
+    monkeypatch.setattr(bench.subprocess, "run",
+                        fake_run([(0, _ONE_CORE), (0, _FOUR_CORES)]))
+    bench.scaling()
+    assert all(c[1:] == bench.PERFBENCH for c in calls) and len(calls) == 2
+    text = path.read_text()
+    assert "| 1 -> 4 | **0.950** | 3.00x | 4.00x | 3.44x | 4.00x | — " \
+        "| 4.00x | |" in text
+    assert bench._carry_history(path)[0] == \
+        "| 2026-08-21 | scale | 3 | 0.848 | 0.235 |"
+    assert bench._carry_history(path)[1].endswith(
+        "| perfbench flagship_s3 (96 docs) | 3 | 1->4: 0.950 |")

@@ -449,6 +449,39 @@ def test_chunked_resume_rejects_pre_n_dms_ledger(spark, tmp_path):
                 blocks_per_chunk=1)
 
 
+def test_chunked_resume_rejects_other_part_schema_ledger(spark, tmp_path):
+    """A chunk ledger written with another part schema (before ``seq``
+    its rows carried ``dm_index``) must fail resume with
+    LedgerValidationError before anything is appended to it, even when
+    some of its chunks are missing and would be recomputed."""
+    import os
+
+    from dragnet_spark.pipeline import LedgerValidationError
+
+    docs, df = _docs_df(spark, "tiny")
+    cfg = scenario_configs("tiny")["s6"]
+    cfg.blocksize = 192
+    out = str(tmp_path / "out")
+    run_job(spark, df, cfg, None, out, run_id="r1", resume=False,
+            chunked=True, blocks_per_chunk=1)
+
+    # Rewrite the ledger in the old schema, one chunk short, and drop
+    # the spans so resume reaches the ledger.
+    ledger = f"{out}/chunks/r1/{cfg.config_id}"
+    legacy = str(tmp_path / "legacy")
+    (spark.read.parquet(ledger).withColumnRenamed("seq", "dm_index")
+     .where(F.col("chunk_id") != 0).write.parquet(legacy))
+    shutil.rmtree(ledger)
+    shutil.move(legacy, ledger)
+    shutil.rmtree(f"{out}/spans")
+    files = sorted(os.listdir(ledger))
+
+    with pytest.raises(LedgerValidationError, match="fresh --out"):
+        run_job(spark, df, cfg, None, out, run_id="r1", chunked=True,
+                blocks_per_chunk=1)
+    assert sorted(os.listdir(ledger)) == files
+
+
 def test_chunked_accepts_clip_config_without_mask(spark):
     """A clip-enabled cfg with NO mask never clips (apply_mask is gated
     on use_mask AND a mask being present), so the chunked path must
