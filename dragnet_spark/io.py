@@ -74,10 +74,10 @@ def write_timeseries_partitioned(rows: DataFrame, sink: str,
                    .alias("dm"),
                   "text"))
     if dedupe:
-        # A resumed spans table can hold a doc's series twice (a full
-        # re-append over a partially-committed earlier attempt);
-        # duplicates are bit-identical by determinism
-        # (one-out_dir-per-(config, mask)) — collapse by identity.
+        # A resumed spans partition can hold a doc's series twice (a
+        # full re-append over a partially-committed earlier attempt);
+        # within one run's partition duplicates are bit-identical by
+        # determinism — collapse by identity.
         # Opt-in because it adds the ONLY exchange of this sink (a
         # hash shuffle of every series byte): pass True when feeding
         # from a resumed run_job output, leave False for a fresh

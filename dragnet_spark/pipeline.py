@@ -53,10 +53,11 @@ from .spans import inf_media_spans
 
 
 class LedgerValidationError(RuntimeError):
-    """Raised when the chunked resume ledger exists but cannot prove
-    series completeness (e.g. metrics rows predate the n_dms field) or
-    holds part rows of another schema; distinguished from "spans path
-    does not exist yet", which resume treats as a fresh out_dir."""
+    """Raised when an out_dir holds output that resume cannot trust:
+    another mask's results, chunked metrics without the n_dms field, a
+    chunk ledger of another part schema, or a spans dir of the flat
+    (pre-partition) layout.  Distinguished from "this run's partition
+    does not exist yet", which resume treats as a fresh run."""
 
 # The mandated input table shape (input_hint): doc_id + spans array.
 DOCS_SCHEMA = StructType([
@@ -185,6 +186,15 @@ def _mask_fingerprint(mask: MaskSpec | None) -> str:
     if mask is None:
         return "none"
     return hashlib.md5(mask.to_json().encode()).hexdigest()[:12]
+
+
+# Every key of a metrics row's JSON ``text`` (:func:`_metrics_row`),
+# parsed once with ``from_json`` wherever the metrics are read.
+METRICS_SCHEMA = (
+    "run_id STRING, config_id STRING, status STRING, chunk_id INT, "
+    "n_chunks INT, n_dms INT, n_blocks INT, n_sk_masked_intervals INT, "
+    "n_clipped_samples INT, n_spans_out INT, wall_ms DOUBLE, "
+    "partition_id INT, code_version STRING, mask_hash STRING")
 
 
 def _metrics_row(doc_id: str, chunk_id: int, n_chunks: int, metrics: dict,
@@ -444,7 +454,7 @@ def build_chunk_rows(prepared: DataFrame, cfg_json: str,
     per halo-extended chunk, entirely JVM-side (see
     :func:`_chunk_split_exprs`).  The only Python in this stage is the
     bounds UDF (:func:`_bounds_udf`)."""
-    nchan = F.get_json_object("header", "$.nchan").cast("long")
+    nchan = F.from_json("header", "nchan BIGINT")["nchan"]
     return (prepared
             .withColumn("bounds", _bounds_udf(
                 cfg_json, mask_json, blocks_per_chunk)(F.col("header")))
@@ -559,10 +569,10 @@ def nest_spans(rows: DataFrame) -> DataFrame:
     Duplicate-resilient: resume can legitimately re-append a
     document's full span set on top of a partially-committed earlier
     attempt (the metrics/series rows of one doc come from different
-    tasks under a task-commit committer), and the duplicates are
-    bit-identical by determinism under the one-out_dir-per-(config,
-    mask) contract — ``collect_set`` collapses them INSIDE the one
-    existing aggregation exchange (a ``dropDuplicates`` first would
+    tasks under a task-commit committer), and within one run's spans
+    partition (:func:`spans_partition`; resume refuses a second mask)
+    the duplicates are bit-identical by determinism — ``collect_set``
+    collapses them INSIDE the one existing aggregation exchange (a ``dropDuplicates`` first would
     add a second full shuffle of the series bytes just to feed this
     group-by)."""
     return (rows.where(F.col("kind") != "metrics")
@@ -601,8 +611,8 @@ def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
     survives a driver kill, which is what makes resume sub-job-level
     at scale).  The SPANS append from reassembly is NOT task-atomic
     per document (a doc's metrics rows and its per-(doc, dm) series
-    rows come from different tasks), which is why :func:`run_job`'s
-    doc-level resume anti-join additionally validates series
+    rows come from different tasks), which is why resume's done rule
+    (:func:`_done_docs`) additionally validates series
     completeness (all-chunks metrics + >= n_dms distinct timeseries
     offsets) before trusting a metrics row as a doc-done marker."""
     _require_chunkable(cfg, mask)
@@ -670,132 +680,123 @@ def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
             "n_chunks_processed": n_todo}
 
 
+def spans_partition(out_dir: str, run_id: str, config_id: str) -> str:
+    """The one spans partition a run writes and resumes from,
+    ``{out_dir}/spans/run_id=<run_id>/config_id=<config_id>``: every
+    row under it is tagged by its path, so runs and configs sharing an
+    out_dir never mix.  Each id must be one safe path segment."""
+    for name, v in (("run_id", run_id), ("config_id", config_id)):
+        if v in ("", ".", "..") or any(c in v for c in "/\\="):
+            raise ValueError(f"{name} {v!r} is not a safe path segment")
+    return f"{out_dir}/spans/run_id={run_id}/config_id={config_id}"
+
+
+def _refuse_flat_spans(spark: SparkSession, spans_root: str) -> None:
+    """Part files directly under ``{out_dir}/spans`` are the flat layout
+    written before the per-run partitions; Spark cannot read both
+    layouts under one root, so refuse before any work is done."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(spans_root)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(path) and any(
+            st.isFile() and not st.getPath().getName().startswith(("_", "."))
+            for st in fs.listStatus(path)):
+        raise LedgerValidationError(
+            f"{spans_root} holds part files of the flat pre-partition "
+            "layout; use a fresh --out directory.")
+
+
+def _done_docs(prior: DataFrame, spans_path: str, mask: MaskSpec | None,
+               chunked: bool) -> DataFrame:
+    """Doc ids the run's partition ``prior`` already holds complete."""
+    meta = (prior.where(F.col("kind") == "metrics")
+            .select("doc_id", F.from_json("text", METRICS_SCHEMA).alias("m")))
+    # The run's path cannot prove the prior results were computed under
+    # THIS mask: a rerun with a different mask file would silently skip
+    # old-mask docs and mix two masks' series in one partition.  Any
+    # metrics row with a different — or missing, pre-field — mask
+    # fingerprint fails loudly instead.
+    if (meta.where(F.coalesce("m.mask_hash", F.lit("<missing>"))
+                   != _mask_fingerprint(mask)).limit(1).count()):
+        raise LedgerValidationError(
+            f"{spans_path} already holds results computed under a "
+            "DIFFERENT mask (or by a pre-mask_hash version).  Use another "
+            "--run-id or a fresh --out directory.")
+    if not chunked:
+        # Per-document path: one task emits a doc's spans AND its
+        # metrics row, so the metrics row alone is an atomic done marker.
+        return meta.select("doc_id").distinct()
+    # Chunked reassembly is NOT task-atomic per document: a doc's chunk
+    # metrics rows and its reassembled series rows come from different
+    # tasks, so under a task-commit committer a driver kill can land
+    # metrics without series.  A doc counts done only when its metrics
+    # cover every chunk AND the partition holds all n_dms of its
+    # timeseries offsets.
+    md = (meta.groupBy("doc_id")
+          .agg(F.countDistinct("m.chunk_id").alias("nc"),
+               F.max("m.n_chunks").alias("n_chunks"),
+               F.max("m.n_dms").alias("n_dms")))
+    # Metrics rows written before the n_dms field cannot prove series
+    # completeness; treating them as not-done would re-append a full
+    # duplicate span set on EVERY resume (never converging).
+    if md.where(F.col("n_dms").isNull()).limit(1).count():
+        raise LedgerValidationError(
+            "chunked resume found ledger metrics without the n_dms field "
+            "(written by a pre-n_dms version); series completeness cannot "
+            "be validated.  Start a fresh --out directory (or finish the "
+            "run with the old version).")
+    ts = (prior.where(F.col("kind") == "timeseries")
+          .groupBy("doc_id").agg(F.countDistinct("offset").alias("n_ts")))
+    return (md.join(ts, "doc_id", "left")
+            .where((F.col("nc") == F.col("n_chunks"))
+                   & (F.coalesce(F.col("n_ts"), F.lit(0)) >= F.col("n_dms")))
+            .select("doc_id"))
+
+
 def run_job(spark: SparkSession, docs: DataFrame | str, cfg: RunConfig,
             mask: MaskSpec | None, out_dir: str, *, run_id: str = "run0",
             resume: bool = True, chunked: bool = False,
             blocks_per_chunk: int = 4) -> dict:
     """Execute the pipeline with resume semantics.
 
-    Output layout: ``{out_dir}/spans`` parquet (span rows + inline
-    metrics rows, appended), ``{out_dir}/checkpoint`` parquet (derived,
-    overwritten), and — chunked runs only —
-    ``{out_dir}/chunks/{run_id}/{config_id}`` (per-chunk part rows,
-    appended; the chunk-granular resume ledger).  Resume anti-joins the
-    input against documents whose metrics row is already present for
-    (run_id, config_id) — only incomplete documents are recomputed —
-    and, on the chunked path, against the chunk table at
-    ``(doc_id, chunk_id)`` so partially-done giant documents recompute
-    only their missing chunks.
+    Output layout: the run's spans partition (:func:`spans_partition`,
+    span rows + inline metrics rows, appended), ``{out_dir}/checkpoint``
+    parquet (derived from every partition's metrics, overwritten), and
+    — chunked runs only — ``{out_dir}/chunks/{run_id}/{config_id}``
+    (per-chunk part rows, appended; the chunk-granular resume ledger).
+    Resume reads only the run's partition and anti-joins the input
+    against the documents it already holds complete — only incomplete
+    documents are recomputed — and, on the chunked path, against the
+    chunk table at ``(doc_id, chunk_id)`` so partially-done giant
+    documents recompute only their missing chunks.
 
     With ``resume=False`` no input count runs (the pipeline write is
     the only pass over the source — r3 verdict: the unconditional
     ``docs.count()`` was an extra job per submission); the returned
     ``n_input``/``n_processed`` are then None.
     """
+    spans_path = spans_partition(out_dir, run_id, cfg.config_id)
+    _refuse_flat_spans(spark, f"{out_dir}/spans")
     if isinstance(docs, str):
         docs = spark.read.parquet(docs)
-    spans_path = f"{out_dir}/spans"
-    ckpt_path = f"{out_dir}/checkpoint"
 
     n_input, n_skipped, n_remaining = None, 0, None
-    spans_readable = False
     if resume:
         n_input = docs.count()          # only the resume path needs counts
         try:
-            meta = (spark.read.parquet(spans_path)
-                    .where(F.col("kind") == "metrics")
-                    .where(F.get_json_object("text", "$.run_id") == run_id)
-                    .where(F.get_json_object("text", "$.config_id")
-                           == cfg.config_id))
-            spans_readable = True
-            # (run_id, config_id) alone cannot prove the prior results
-            # were computed under THIS mask: a rerun with a different
-            # mask file would silently skip old-mask docs and mix two
-            # masks' series in one table (series rows carry no tag).
-            # Any same-ids metrics row with a different — or missing,
-            # pre-field — mask fingerprint fails loudly instead.
-            mh = _mask_fingerprint(mask)
-            if (meta.where(F.coalesce(
-                    F.get_json_object("text", "$.mask_hash"),
-                    F.lit("<missing>")) != mh).limit(1).count()):
-                raise LedgerValidationError(
-                    f"out_dir already holds results for run_id="
-                    f"{run_id!r}, config_id={cfg.config_id!r} computed "
-                    "under a DIFFERENT mask (or by a pre-mask_hash "
-                    "version).  Use a fresh --out directory (one "
-                    "out_dir per (config, mask)).")
-            if chunked:
-                # Chunked reassembly is NOT task-atomic per document: a
-                # doc's chunk metrics rows and its reassembled series
-                # rows come from different tasks, so under a
-                # task-commit committer a driver kill can land metrics
-                # without series.  A doc counts done only when its
-                # metrics cover every chunk AND the spans table holds
-                # all n_dms of its timeseries offsets (n_dms is
-                # recorded in the metrics JSON).  Caveat: series rows
-                # carry no run/config tag, so chunked resume REQUIRES
-                # one out_dir per config — shared across configs,
-                # another config's series could satisfy the count with
-                # values computed under different processing (the
-                # offset < n_dms scoping below narrows, but cannot
-                # close, that hole).  Same-config reruns are safe:
-                # their series are identical by determinism.
-                m = meta.select(
-                    "doc_id",
-                    F.get_json_object("text", "$.chunk_id").cast("int")
-                     .alias("chunk_id"),
-                    F.get_json_object("text", "$.n_chunks").cast("int")
-                     .alias("n_chunks"),
-                    F.get_json_object("text", "$.n_dms").cast("int")
-                     .alias("n_dms"))
-                md = (m.groupBy("doc_id")
-                      .agg(F.countDistinct("chunk_id").alias("nc"),
-                           F.max("n_chunks").alias("n_chunks"),
-                           F.max("n_dms").alias("n_dms")))
-                # Metrics rows written before the n_dms field cannot
-                # prove series completeness; treating them as not-done
-                # would re-append a full duplicate span set on EVERY
-                # resume (never converging) — fail loudly instead.
-                if md.where(F.col("n_dms").isNull()).limit(1).count():
-                    raise LedgerValidationError(
-                        "chunked resume found ledger metrics without "
-                        "the n_dms field (written by a pre-n_dms "
-                        "version); series completeness cannot be "
-                        "validated.  Start a fresh --out directory "
-                        "(or finish the run with the old version).")
-                ts = (spark.read.parquet(spans_path)
-                      .where(F.col("kind") == "timeseries")
-                      .select("doc_id", "offset")
-                      .join(md.select("doc_id", "n_dms"), "doc_id")
-                      .where(F.col("offset") < F.col("n_dms"))
-                      .groupBy("doc_id")
-                      .agg(F.countDistinct("offset").alias("n_ts")))
-                done = (md.join(ts, "doc_id", "left")
-                        .where((F.col("nc") == F.col("n_chunks"))
-                               & (F.coalesce(F.col("n_ts"), F.lit(0))
-                                  >= F.col("n_dms")))
-                        .select("doc_id"))
-            else:
-                # Per-document path: one task emits a doc's spans AND
-                # its metrics row, so the metrics row alone is an
-                # atomic done marker.
-                done = meta.select("doc_id").distinct()
+            prior = spark.read.parquet(spans_path)
+        except AnalysisException:       # no partition yet: compute all
+            if n_input == 0:
+                # Nothing to do and nothing written for this run: return
+                # before the checkpoint read.  A readable partition
+                # still refreshes the checkpoint below, even with no
+                # remaining work.
+                return {"n_input": 0, "n_skipped": 0, "n_processed": 0}
+            n_remaining = n_input
+        else:
+            done = _done_docs(prior, spans_path, mask, chunked)
             docs = docs.join(done, "doc_id", "left_anti")
             n_remaining = docs.count()
             n_skipped = n_input - n_remaining
-        except LedgerValidationError:
-            raise           # a broken ledger must not look like a
-        except Exception:   # fresh out_dir (the catch below is for
-            n_remaining = n_input   # "spans path does not exist yet")
-        if n_remaining == 0 and not spans_readable:
-            # Nothing ever written for this out_dir (the spans read
-            # failed) and no input: return cleanly instead of crashing
-            # on the missing spans path below.  When spans ARE readable
-            # the checkpoint derivation below still runs even with no
-            # remaining work, so a rerun refreshes a stale/missing
-            # checkpoint table regardless of _SUCCESS markers.
-            return {"n_input": n_input, "n_skipped": n_skipped,
-                    "n_processed": 0}
 
     stats: dict = {}
     if n_remaining is None or n_remaining > 0:
@@ -808,38 +809,22 @@ def run_job(spark: SparkSession, docs: DataFrame | str, cfg: RunConfig,
             rows = run_pipeline(docs, cfg, mask, run_id=run_id)
             rows.write.mode("append").parquet(spans_path)
 
-    # Derived checkpoint table (FIXTURES.md §5) from the written metrics
-    # rows — reads only matching row groups via parquet predicate pushdown.
-    all_rows = spark.read.parquet(spans_path)
-    ckpt = (all_rows.where(F.col("kind") == "metrics")
-            .select("doc_id", F.col("text").alias("m"))
-            .select(
-                F.get_json_object("m", "$.run_id").alias("run_id"),
-                F.get_json_object("m", "$.config_id").alias("config_id"),
-                "doc_id",
-                F.get_json_object("m", "$.chunk_id").cast("int")
-                 .alias("chunk_id"),
-                F.get_json_object("m", "$.status").alias("status"),
-                F.get_json_object("m", "$.n_blocks").cast("int")
-                 .alias("n_blocks"),
-                F.get_json_object("m", "$.n_spans_out").cast("int")
-                 .alias("n_spans_out"),
-                F.get_json_object("m", "$.n_sk_masked_intervals").cast("int")
-                 .alias("n_sk_masked_intervals"),
-                F.get_json_object("m", "$.n_clipped_samples").cast("int")
-                 .alias("n_clipped_samples"),
-                F.get_json_object("m", "$.wall_ms").cast("double")
-                 .alias("wall_ms"),
-                F.get_json_object("m", "$.partition_id").cast("int")
-                 .alias("partition_id"),
-                F.get_json_object("m", "$.code_version")
-                 .alias("code_version")))
+    # Derived checkpoint table (FIXTURES.md §5) from the metrics rows of
+    # every run in the out_dir — reads only matching row groups via
+    # parquet predicate pushdown.
+    m = (spark.read.parquet(f"{out_dir}/spans")
+         .where(F.col("kind") == "metrics")
+         .select("doc_id", F.from_json("text", METRICS_SCHEMA).alias("m")))
+    ckpt = m.select("m.run_id", "m.config_id", "doc_id", "m.chunk_id",
+                    "m.status", "m.n_blocks", "m.n_spans_out",
+                    "m.n_sk_masked_intervals", "m.n_clipped_samples",
+                    "m.wall_ms", "m.partition_id", "m.code_version")
     # A crash-resume cycle can append a second metrics row for the same
     # (doc, chunk) — identical but for wall_ms/partition_id.  The
     # checkpoint is a status table, not an attempt log: one row per
     # unit of work.
     ckpt = ckpt.dropDuplicates(["run_id", "config_id", "doc_id",
                                 "chunk_id"])
-    ckpt.write.mode("overwrite").parquet(ckpt_path)
+    ckpt.write.mode("overwrite").parquet(f"{out_dir}/checkpoint")
     return {"n_input": n_input, "n_skipped": n_skipped,
             "n_processed": n_remaining, **stats}

@@ -62,7 +62,7 @@ def main() -> None:
     from dragnet_spark.generate import (make_corpus, make_mask,
                                         scenario_configs,
                                         write_corpus_parquet_spark)
-    from dragnet_spark.pipeline import docs_to_df, run_job
+    from dragnet_spark.pipeline import docs_to_df, run_job, spans_partition
 
     corpus_for_cfg = args.corpus or "small"
     cfg = scenario_configs(corpus_for_cfg)[args.config]
@@ -99,19 +99,19 @@ def main() -> None:
 
     stats = run_job(spark, docs, cfg, mask, args.out, run_id=args.run_id,
                     resume=not args.no_resume, chunked=args.chunked)
+    # The exports read only this run's partition, never other configs'.
+    spans = spans_partition(args.out, args.run_id, cfg.config_id)
     if args.export_presto:
         from dragnet_spark.presto_io import export_presto_files
         # export_presto_files filters kinds and dedupes internally.
         stats["n_presto_files"] = export_presto_files(
-            spark.read.parquet(f"{args.out}/spans"), args.export_presto,
-            prefix=cfg.prefix)
+            spark.read.parquet(spans), args.export_presto, prefix=cfg.prefix)
     if args.export_perdm:
         from dragnet_spark.io import write_timeseries_partitioned
         # dedupe=True: this feeds from a RESUMED run_job output, which
         # can legitimately hold a doc's series twice (io.py contract).
-        write_timeseries_partitioned(
-            spark.read.parquet(f"{args.out}/spans"), args.export_perdm,
-            dedupe=True)
+        write_timeseries_partitioned(spark.read.parquet(spans),
+                                     args.export_perdm, dedupe=True)
         stats["perdm_sink"] = args.export_perdm
     print(json.dumps(stats))
     spark.stop()

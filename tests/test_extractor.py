@@ -12,7 +12,8 @@ from dragnet_spark.generate import (make_corpus, make_mask, scenario_configs,
                                     write_corpus_parquet)
 from dragnet_spark.oracle import run_corpus
 from dragnet_spark.pipeline import (docs_to_df, nest_spans, run_job,
-                                    run_pipeline, run_pipeline_chunked)
+                                    run_pipeline, run_pipeline_chunked,
+                                    spans_partition)
 
 
 def _docs_df(spark, corpus):
@@ -428,9 +429,11 @@ def test_chunked_resume_rejects_pre_n_dms_ledger(spark, tmp_path):
     run_job(spark, df, cfg, None, out, run_id="r1", resume=False,
             chunked=True, blocks_per_chunk=1)
 
-    # Simulate a pre-n_dms ledger: strip the field from every spans
-    # metrics row (python-side JSON round-trip keeps the rest intact).
-    spans = spark.read.parquet(f"{out}/spans").toPandas()
+    # Simulate a pre-n_dms ledger: strip the field from every metrics
+    # row of the run's partition (python-side JSON round-trip keeps the
+    # rest intact).
+    part = spans_partition(out, "r1", cfg.config_id)
+    spans = spark.read.parquet(part).toPandas()
 
     def strip(t):
         d = _json.loads(t)
@@ -439,10 +442,9 @@ def test_chunked_resume_rejects_pre_n_dms_ledger(spark, tmp_path):
 
     m = spans["kind"] == "metrics"
     spans.loc[m, "text"] = spans.loc[m, "text"].map(strip)
-    legacy = spark.createDataFrame(
-        spans, spark.read.parquet(f"{out}/spans").schema)
-    shutil.rmtree(f"{out}/spans")
-    legacy.write.parquet(f"{out}/spans")
+    legacy = spark.createDataFrame(spans, spark.read.parquet(part).schema)
+    shutil.rmtree(part)
+    legacy.write.parquet(part)
 
     with pytest.raises(LedgerValidationError, match="n_dms"):
         run_job(spark, df, cfg, None, out, run_id="r1", chunked=True,
@@ -480,6 +482,103 @@ def test_chunked_resume_rejects_other_part_schema_ledger(spark, tmp_path):
         run_job(spark, df, cfg, None, out, run_id="r1", chunked=True,
                 blocks_per_chunk=1)
     assert sorted(os.listdir(ledger)) == files
+
+
+def test_run_job_resume_query_failure_raises(spark, tmp_path):
+    """Only a missing partition means "fresh run": a resume query that
+    fails on the partition's contents must raise, not silently
+    recompute and re-append every document already done."""
+    import os
+
+    import pandas as pd
+
+    _, df = _docs_df(spark, "tiny")
+    cfg = scenario_configs("tiny")["s0"]
+    out = str(tmp_path / "out")
+    run_job(spark, df, cfg, None, out, run_id="r1")
+    part = spans_partition(out, "r1", cfg.config_id)
+    pd.DataFrame({"doc_id": ["x"], "seq": [-1], "kind": ["metrics"],
+                  "text": [7], "media_ref": [""], "offset": [-1]}) \
+        .to_parquet(f"{part}/part-99999-planted.parquet")
+    files = sorted(os.listdir(part))
+    with pytest.raises(Exception):
+        run_job(spark, df, cfg, None, out, run_id="r1")
+    assert sorted(os.listdir(part)) == files
+
+
+def test_run_job_refuses_flat_spans_layout(spark, tmp_path):
+    """A spans dir of the flat pre-partition layout is refused before
+    anything is written (Spark cannot read both layouts under one
+    root, so the job would otherwise fail only after computing)."""
+    import os
+
+    from dragnet_spark.pipeline import LedgerValidationError
+
+    _, df = _docs_df(spark, "tiny")
+    cfg = scenario_configs("tiny")["s0"]
+    out = str(tmp_path / "out")
+    run_pipeline(df, cfg, None).write.parquet(f"{out}/spans")
+    files = sorted(os.listdir(f"{out}/spans"))
+    with pytest.raises(LedgerValidationError, match="fresh --out"):
+        run_job(spark, df, cfg, None, out, run_id="r1")
+    assert os.listdir(out) == ["spans"]
+    assert sorted(os.listdir(f"{out}/spans")) == files
+
+
+@pytest.mark.parametrize("run_id", ["", ".", "..", "a/b", "a\\b", "a=b"])
+def test_run_job_rejects_unsafe_run_id(spark, tmp_path, run_id):
+    """run_id names a directory of the spans layout: anything but one
+    safe path segment is refused before any read or write."""
+    import os
+
+    _, df = _docs_df(spark, "tiny")
+    cfg = scenario_configs("tiny")["s0"]
+    with pytest.raises(ValueError, match="safe path segment"):
+        run_job(spark, df, cfg, None, str(tmp_path / "out"), run_id=run_id)
+    assert not os.path.exists(tmp_path / "out")
+
+
+def test_chunked_resume_two_configs_share_out_dir(spark, tmp_path):
+    """Two configs on the same DM grid run chunked into ONE out_dir;
+    B is killed during reassembly (its metrics and ledger committed,
+    its series not).  Resuming B recomputes no chunk, rewrites B's
+    series from its own ledger — A's series, on the same offsets, must
+    not count as B's — and leaves A's partition untouched."""
+    import dataclasses
+    import os
+
+    docs, df = _docs_df(spark, "tiny")
+    cfg_a = scenario_configs("tiny")["s6"]
+    cfg_a.blocksize = 192
+    cfg_b = dataclasses.replace(cfg_a, config_id="s6z", zapchan="2:4")
+    out = str(tmp_path / "out")
+    for cfg in (cfg_a, cfg_b):
+        run_job(spark, df, cfg, None, out, run_id="r1", chunked=True,
+                blocks_per_chunk=1)
+    part_a = spans_partition(out, "r1", cfg_a.config_id)
+    part_b = spans_partition(out, "r1", cfg_b.config_id)
+    files_a = sorted(os.listdir(part_a))
+
+    rows_b = spark.read.parquet(part_b)
+    kept = spark.createDataFrame(
+        rows_b.where(F.col("kind") != "timeseries").toPandas(),
+        rows_b.schema)
+    shutil.rmtree(part_b)
+    kept.write.parquet(part_b)
+
+    r = run_job(spark, df, cfg_b, None, out, run_id="r1", chunked=True,
+                blocks_per_chunk=1)
+    assert r["n_chunks_processed"] == 0
+    assert r["n_processed"] == len(docs)
+    want_b = _oracle_sequences(docs, cfg_b, None)
+    assert want_b != _oracle_sequences(docs, cfg_a, None)
+    got_b = _collect_sequences(
+        spark.read.parquet(part_b).where(F.col("kind") != "metrics")
+        .select("doc_id", "seq", "kind", "text", "media_ref").distinct())
+    assert got_b == want_b
+    assert sorted(os.listdir(part_a)) == files_a
+    assert (_collect_sequences(spark.read.parquet(part_a))
+            == _oracle_sequences(docs, cfg_a, None))
 
 
 def test_chunked_accepts_clip_config_without_mask(spark):
