@@ -35,38 +35,25 @@ sys.path.insert(0, str(REPO))
 BENCH_CORPUS = "bench"      # driver bench: 1024 docs, ~1.4 GB
 
 
-def corpus_cache(corpus: str) -> str:
-    from dragnet_spark.generate import generator_fingerprint
-    return (f"/tmp/dragnet_corpus_{corpus}_"
-            f"{generator_fingerprint()}.parquet")
-
-
-def ensure_corpus(spark, corpus: str = BENCH_CORPUS) -> int:
-    """Materialize a corpus once (cached across runs); returns the
-    document count."""
-    from dragnet_spark.generate import CORPORA, corpus_df
-    corpus_df(spark, corpus)          # writes the /tmp cache if absent
-    return CORPORA[corpus][0]
-
-
 def run_flagship(spark, corpus: str = BENCH_CORPUS) -> float:
     """One timed flagship run: read the spans corpus -> fused
     zap/SK/decimate/dedisperse kernel -> force materialization.
     Returns wall seconds."""
     from pyspark.sql import functions as F
 
-    from dragnet_spark.generate import scenario_configs
+    from dragnet_spark.generate import corpus_df, scenario_configs
     from dragnet_spark.pipeline import run_pipeline
 
     cfg = scenario_configs(corpus)["s3"]  # SKZ on: real cleaning load
-    docs = spark.read.parquet(corpus_cache(corpus))
+    docs = corpus_df(spark, corpus)
     t0 = time.perf_counter()
     rows = run_pipeline(docs, cfg, None)
     # Force every span (length touches the decoded series text).
     n = (rows.where(F.col("kind") != "metrics")
          .agg(F.count(F.lit(1)), F.sum(F.length("text"))).collect())
     elapsed = time.perf_counter() - t0
-    assert n[0][0] > 0
+    if not n[0][0]:
+        raise RuntimeError(f"flagship run over {corpus!r} emitted no spans")
     return elapsed
 
 
@@ -243,12 +230,12 @@ def _bench_partitioned_sink(spark, corpus: str = BENCH_CORPUS) -> float:
 
     from pyspark.sql import functions as F
 
-    from dragnet_spark.generate import scenario_configs
+    from dragnet_spark.generate import corpus_df, scenario_configs
     from dragnet_spark.io import write_timeseries_partitioned
     from dragnet_spark.pipeline import run_pipeline
 
     cfg = scenario_configs(corpus)["s3"]
-    docs = spark.read.parquet(corpus_cache(corpus))
+    docs = corpus_df(spark, corpus)
     # App-id-unique path: concurrent sessions benching cannot race on
     # one directory (same treatment as the CC checkpoint dirs).
     out = (f"/tmp/dragnet_perdm_bench/"
@@ -259,7 +246,8 @@ def _bench_partitioned_sink(spark, corpus: str = BENCH_CORPUS) -> float:
     n = (spark.read.parquet(out).where(F.col("dm") == "25.000")
          .agg(F.count(F.lit(1)), F.sum(F.length("text"))).collect())
     elapsed = time.perf_counter() - t0
-    assert n[0][0] > 0
+    if not n[0][0]:
+        raise RuntimeError("partitioned sink read back no DM 25 rows")
     # Untimed cleanup: app-id-unique paths would otherwise accumulate
     # ~0.5 GB per benching session in /tmp.
     _shutil.rmtree(out, ignore_errors=True)
@@ -267,6 +255,7 @@ def _bench_partitioned_sink(spark, corpus: str = BENCH_CORPUS) -> float:
 
 
 def driver_bench() -> None:
+    from dragnet_spark.generate import CORPORA, corpus_df
     from dragnet_spark.session import get_spark, host_cores
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -281,7 +270,8 @@ def driver_bench() -> None:
     import __spark_entry__ as entry_mod
 
     spark = get_spark(app_name="bench", cores=cores)
-    ndocs = ensure_corpus(spark)
+    corpus_df(spark, BENCH_CORPUS)      # writes the /tmp cache if absent
+    ndocs = CORPORA[BENCH_CORPUS][0]
 
     timings: dict[str, float] = {}
     qs = entry_mod.queries()
@@ -307,7 +297,6 @@ def driver_bench() -> None:
     try:
         from dragnet_spark.flagship_oracle import (FLAGSHIP_QUERIES,
                                                    export_samples)
-        from dragnet_spark.generate import corpus_df
         export_samples("tiny")
         export_samples("skew")
         corpus_df(spark, "tiny")

@@ -52,22 +52,6 @@ from .spans import decode_document
 
 EXPORT_DIR = "/tmp/dragnet_oracle_export"
 
-# The chunked flagship entry uses a real multi-block, multi-chunk
-# config (scenario_configs gives the skew corpus blocksize=0 = whole
-# document, which would collapse chunking to one chunk per doc).
-# Block-size choice is a halo-overhead tradeoff: each block advances
-# blocksize - max_delay samples, so with max_delay 1124 a 1536-sample
-# block recomputes 73% of its samples (measured 17.4s in the bench)
-# while 4096 recomputes 27% — the giant doc still splits into ~6
-# halo-extended chunks, each running an internal multi-block loop.
-SKEW_BLOCKSIZE = 4096
-
-
-def _skew_cfg() -> RunConfig:
-    cfg = scenario_configs("skew")["s0"]
-    return RunConfig(**{**cfg.__dict__, "config_id": "s0_chunked",
-                        "blocksize": SKEW_BLOCKSIZE})
-
 
 def _assert_round_safe(nchan: int, tsamp: float, h: Header) -> None:
     dml = linear_dm_list(0.0, 50.0, 5.0)
@@ -1274,7 +1258,8 @@ def q_dedisperse_skew_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import run_pipeline_chunked
 
     export_samples("skew")
-    rows = run_pipeline_chunked(corpus_df(spark, "skew"), _skew_cfg(), None)
+    rows = run_pipeline_chunked(corpus_df(spark, "skew"),
+                                scenario_configs("skew")["s6"], None)
     return _checksum_series(rows)
 
 

@@ -108,7 +108,11 @@ def scenario_configs(corpus: str) -> dict[str, RunConfig]:
     sized per corpus so blocksize/ndec > max_delay holds."""
     base = dict(prefix="test", dm_start=0.0, dm_end=50.0, dm_step=5.0)
     mskz = 64 if corpus == "tiny" else 1024
-    bs = 1536 if corpus in ("small",) else 0
+    # Multi-block sizes (s4/s5/s6).  The skew corpus's giant document
+    # splits into ~6 halo-extended chunks at 4096; each block advances
+    # blocksize - max_delay samples, so with max_delay 1124 a 4096
+    # block recomputes 27% of its samples where 1536 recomputes 73%.
+    bs = {"small": 1536, "skew": 4096}.get(corpus, 0)
     cfgs = {
         "s0": RunConfig(config_id="s0", **base),
         "s1": RunConfig(config_id="s1", zapchan="0,3:5", **base),

@@ -125,8 +125,7 @@ def _cached_plan(header_json: str, cfg: RunConfig,
     if plan is None:
         if len(_PLAN_CACHE) >= 128:
             # Bounded: real corpora give every document a distinct
-            # header (tstart/source differ per observation) and the
-            # chunked path adds per-chunk-length sub-plans, so on a
+            # header (tstart/source differ per observation), so on a
             # long-lived executor an unbounded cache accumulates one
             # (ndm x nchan) delay table per distinct key — gigabytes
             # over 10^5+ docs.  Wholesale clear: far above any
@@ -135,6 +134,19 @@ def _cached_plan(header_json: str, cfg: RunConfig,
         plan = build_plan(Header.from_json(header_json), cfg, mask)
         _PLAN_CACHE[key] = plan
     return plan
+
+
+def _chunk_plan(doc_plan: DedispPlan, nsamp: int) -> DedispPlan:
+    """The plan of an ``nsamp``-sample chunk of ``doc_plan``'s document:
+    only the sample counts change.  The chunk keeps the document's
+    block grid (``blocksize``, ``sk_mint``), so a final chunk shorter
+    than one block runs as the whole document's short last block does
+    and counts the same past-the-end SK intervals (mact=0 => masked,
+    skz.c:464-466) into n_sk_masked_intervals."""
+    nsamp_dec = nsamp // doc_plan.cfg.ndec
+    return dataclasses.replace(
+        doc_plan, header=dataclasses.replace(doc_plan.header, nsamp=nsamp),
+        nsamp_dec=nsamp_dec, nsamp_computed=nsamp_dec - doc_plan.max_delay)
 
 
 def prepare_documents(df: DataFrame) -> DataFrame:
@@ -256,23 +268,7 @@ def kernel_rows(chunks: DataFrame, cfg_json: str, mask_json: str | None, *,
                 doc_plan = plan = _cached_plan(hjson, cfg, mask)
                 data = _decode_payload(bins, offsets, doc_plan.header)
                 if nch > 1:
-                    plan = _cached_plan(dataclasses.replace(
-                        doc_plan.header, nsamp=data.shape[0]).to_json(),
-                        cfg, mask)
-                    if plan.blocksize != doc_plan.blocksize:
-                        # build_plan clamps blocksize to nsamp, so a
-                        # final chunk shorter than one block gets a
-                        # smaller sk_mint — but the whole document
-                        # processes that same region as a short block
-                        # of the FULL-blocksize grid, counting the
-                        # past-the-end SK intervals (mact=0 => masked,
-                        # skz.c:464-466) into n_sk_masked_intervals.
-                        # Carry the document grid into the chunk plan
-                        # so split metrics equal whole-document
-                        # metrics (series are identical either way).
-                        plan = dataclasses.replace(
-                            plan, blocksize=doc_plan.blocksize,
-                            sk_mint=doc_plan.sk_mint)
+                    plan = _chunk_plan(doc_plan, data.shape[0])
                 # The rfifind-mask interval lookup needs absolute
                 # document time (mask.c:690): offset0 shifts it.
                 out, metrics = process_document(data, plan,
@@ -348,12 +344,18 @@ def run_pipeline(df: DataFrame, cfg: RunConfig,
 # Chunked path for giant documents (explicit skew handling)
 # --------------------------------------------------------------------------
 
+# Whole blocks per chunk.  Chunk ids in a chunk ledger assume this
+# geometry (FIXTURES.md §5): changing it needs a fresh out_dir.
+BLOCKS_PER_CHUNK = 4
+
+
 def _chunk_bounds(nsamp: int, blocksize: int, shift_back: int,
-                  blocks_per_chunk: int) -> list[tuple[int, int]]:
-    """Chunk [start, end) raw-sample ranges.  Each chunk covers K whole
-    blocks plus the halo (``shift_back`` samples) so its internal block
-    loop reproduces the full-document block boundaries exactly."""
-    step = blocks_per_chunk * (blocksize - shift_back)
+                  nblocks: int) -> list[tuple[int, int]]:
+    """Chunk [start, end) raw-sample ranges.  Each chunk covers
+    ``nblocks`` whole blocks plus the halo (``shift_back`` samples) so
+    its internal block loop reproduces the full-document block
+    boundaries exactly."""
+    step = nblocks * (blocksize - shift_back)
     bounds = []
     start = 0
     while start < nsamp - shift_back:
@@ -404,60 +406,33 @@ def _chunk_split_exprs(bounds_col, nchan_col):
     return F.transform(bounds_col, per_bound)
 
 
-def _bounds_udf(cfg_json: str, mask_json: str | None,
-                blocks_per_chunk: int):
-    """Pandas UDF computing each document's chunk [start, end) bounds
-    from the header JSON alone — a few hundred bytes per document,
-    never the sample payload.  Shared by :func:`build_chunk_rows`
-    (the real split) and :func:`chunk_keys` (the key-only plan the
-    resume counters run on)."""
+def build_chunk_rows(prepared: DataFrame, cfg_json: str,
+                     mask_json: str | None) -> DataFrame:
+    """Split stage of the chunked path: prepared documents -> one row
+    per halo-extended chunk of :data:`BLOCKS_PER_CHUNK` blocks, entirely
+    JVM-side (see :func:`_chunk_split_exprs`).  The only Python in this
+    stage is the bounds UDF, which reads the header JSON alone — a few
+    hundred bytes per document, never the sample payload."""
+    nblocks = BLOCKS_PER_CHUNK      # read here; the UDF closure ships it
 
     @F.pandas_udf(ArrayType(ArrayType(LongType())))
     def bounds_of(headers: pd.Series) -> pd.Series:
-        cfg_l = RunConfig.from_json(cfg_json)
-        mask_l = MaskSpec.from_json(mask_json) if mask_json else None
+        cfg = RunConfig.from_json(cfg_json)
+        mask = MaskSpec.from_json(mask_json) if mask_json else None
 
         def one(hjson: str) -> list[list[int]]:
             if hjson is None:
                 raise ValueError("document has no header span")
-            plan = _cached_plan(hjson, cfg_l, mask_l)
-            sbr = plan.max_delay * cfg_l.ndec
+            plan = _cached_plan(hjson, cfg, mask)
             return [[int(s), int(e)] for s, e in _chunk_bounds(
-                plan.header.nsamp, plan.blocksize, sbr, blocks_per_chunk)]
+                plan.header.nsamp, plan.blocksize,
+                plan.max_delay * cfg.ndec, nblocks)]
 
         return headers.map(one)
 
-    return bounds_of
-
-
-def chunk_keys(prepared: DataFrame, cfg_json: str, mask_json: str | None,
-               blocks_per_chunk: int) -> DataFrame:
-    """The (doc_id, chunk_id) key set of the chunked split WITHOUT the
-    payload slicing: headers only, so Catalyst prunes the sample
-    columns from the scan and counting the keys costs a metadata-scale
-    pass instead of a full substr split of every sample strip."""
-    b = _bounds_udf(cfg_json, mask_json, blocks_per_chunk)
-    return (prepared
-            .withColumn("bounds", b(F.col("header")))
-            .select("doc_id",
-                    F.explode(F.sequence(
-                        F.lit(0), F.size("bounds") - 1))
-                     .alias("chunk_id"))
-            .select("doc_id",
-                    F.col("chunk_id").cast("int").alias("chunk_id")))
-
-
-def build_chunk_rows(prepared: DataFrame, cfg_json: str,
-                     mask_json: str | None,
-                     blocks_per_chunk: int) -> DataFrame:
-    """Split stage of the chunked path: prepared documents -> one row
-    per halo-extended chunk, entirely JVM-side (see
-    :func:`_chunk_split_exprs`).  The only Python in this stage is the
-    bounds UDF (:func:`_bounds_udf`)."""
     nchan = F.from_json("header", "nchan BIGINT")["nchan"]
     return (prepared
-            .withColumn("bounds", _bounds_udf(
-                cfg_json, mask_json, blocks_per_chunk)(F.col("header")))
+            .withColumn("bounds", bounds_of(F.col("header")))
             .select("doc_id", "header", "media",
                     F.size("bounds").cast("int").alias("n_chunks"),
                     F.explode(_chunk_split_exprs(F.col("bounds"), nchan))
@@ -539,8 +514,7 @@ def reassemble_parts(parts: DataFrame, use_dt: bool) -> DataFrame:
 
 def run_pipeline_chunked(df: DataFrame, cfg: RunConfig,
                          mask: MaskSpec | None = None, *,
-                         run_id: str = "run0",
-                         blocks_per_chunk: int = 4) -> DataFrame:
+                         run_id: str = "run0") -> DataFrame:
     """Skew-safe pipeline: split each document into halo-extended chunk
     rows (JVM-side strip slicing — Python never sees a whole giant
     document, :func:`build_chunk_rows`), process chunks independently
@@ -555,8 +529,7 @@ def run_pipeline_chunked(df: DataFrame, cfg: RunConfig,
     _require_chunkable(cfg, mask)
     cfg_json = cfg.to_json()
     mask_json = mask.to_json() if mask else None
-    chunks = build_chunk_rows(prepare_documents(df), cfg_json, mask_json,
-                              blocks_per_chunk)
+    chunks = build_chunk_rows(prepare_documents(df), cfg_json, mask_json)
     parts = process_chunk_rows(chunks, cfg_json, mask_json, run_id=run_id)
     return reassemble_parts(parts, cfg.use_dt)
 
@@ -591,8 +564,7 @@ def nest_spans(rows: DataFrame) -> DataFrame:
 
 def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
                      mask: MaskSpec | None, out_dir: str, *, run_id: str,
-                     resume: bool, blocks_per_chunk: int,
-                     spans_path: str) -> dict:
+                     resume: bool, spans_path: str) -> dict:
     """Chunk-granular execution of the chunked path for :func:`run_job`.
 
     The chunk stage materializes its part rows into
@@ -600,12 +572,12 @@ def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
     resume, the chunk rows to compute are anti-joined at
     ``(doc_id, chunk_id)`` against the metrics rows already in that
     table, so a killed run of a giant document recomputes ONLY its
-    missing chunks (r3 verdict top item) — ``build_chunk_rows`` is
-    deterministic for a given config, so chunk ids line up across
-    runs.  Reassembly then reads ALL the doc's chunks (old + new) back
-    from the table.  Durability granularity is the task commit: a
-    chunk's rows are emitted together by one task, so any metrics row
-    visible in the CHUNK table implies its chunk's series rows are too
+    missing chunks — the split is deterministic for a given config and
+    :data:`BLOCKS_PER_CHUNK`, so chunk ids line up across runs.
+    Reassembly then reads ALL the doc's chunks (old + new) back from
+    the table.  Durability granularity is the task commit: a chunk's
+    rows are emitted together by one task, so any metrics row visible
+    in the CHUNK table implies its chunk's series rows are too
     (Spark's committer exposes only committed task files; with a
     task-commit committer — v2 / Iceberg — partial-job output
     survives a driver kill, which is what makes resume sub-job-level
@@ -614,21 +586,32 @@ def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
     rows come from different tasks), which is why resume's done rule
     (:func:`_done_docs`) additionally validates series
     completeness (all-chunks metrics + >= n_dms distinct timeseries
-    offsets) before trusting a metrics row as a doc-done marker."""
+    offsets) before trusting a metrics row as a doc-done marker.
+
+    The chunk counters are read from the ledger itself: the distinct
+    ``(doc_id, chunk_id)`` metrics keys of the documents being
+    (re)computed, before and after the append."""
     _require_chunkable(cfg, mask)
     cfg_json = cfg.to_json()
     mask_json = mask.to_json() if mask else None
     chunks_path = f"{out_dir}/chunks/{run_id}/{cfg.config_id}"
-    prepared = prepare_documents(docs)
-    chunk_rows = build_chunk_rows(prepared, cfg_json, mask_json,
-                                  blocks_per_chunk)
-    todo, n_todo, n_chunks_skipped = chunk_rows, None, 0
+    doc_ids = docs.select("doc_id").distinct()
+
+    def done_keys(table: DataFrame) -> DataFrame:
+        return (table.where(F.col("kind") == "metrics")
+                .select("doc_id", "chunk_id").distinct())
+
+    def n_keys(table: DataFrame) -> int:
+        return done_keys(table).join(doc_ids, "doc_id", "left_semi").count()
+
+    todo = build_chunk_rows(prepare_documents(docs), cfg_json, mask_json)
     ledger = None
     if resume:
         try:
             ledger = spark.read.parquet(chunks_path)
         except AnalysisException:
             pass                        # no chunks table yet: compute all
+    n_chunks_skipped, n_chunks_processed = 0, None
     if ledger is not None:
         # A ledger of another part schema (e.g. pre-`seq` `dm_index`
         # rows) must fail before any append mixes two schemas in it.
@@ -639,45 +622,32 @@ def _run_job_chunked(spark: SparkSession, docs: DataFrame, cfg: RunConfig,
                 f"{ledger.columns}, not {_PART_SCHEMA.fieldNames()} "
                 "(written by an older version).  Use a fresh --out "
                 "directory.")
-        done = (ledger.where(F.col("kind") == "metrics")
-                .select("doc_id", "chunk_id").distinct())
-        # Counters run on the KEY-ONLY plan (headers -> bounds ->
-        # chunk ids, :func:`chunk_keys`): counting chunk_rows
-        # itself would execute the heavy substr split of every
-        # sample strip once per count, tripling the most expensive
-        # pre-shuffle stage of a resumed job just to fill two
-        # numbers.
-        keys = chunk_keys(prepared, cfg_json, mask_json,
-                          blocks_per_chunk)
-        n_total = keys.count()
-        n_chunks_skipped = keys.join(
-            done, ["doc_id", "chunk_id"], "left_semi").count()
-        n_todo = n_total - n_chunks_skipped
-        todo = chunk_rows.join(done, ["doc_id", "chunk_id"],
-                               "left_anti")
-    if n_todo is None or n_todo > 0:
-        parts_new = process_chunk_rows(todo, cfg_json, mask_json,
-                                       run_id=run_id)
-        # Append extends the ledger ONLY when it was actually read and
-        # anti-joined above (n_todo set).  Otherwise — resume=False, or
-        # a resume whose ledger read failed — the full chunk set is
-        # being recomputed, and appending onto a leftover table from a
-        # previous run of the same (run_id, config_id) would duplicate
-        # chunk rows; reassemble_parts would then b''.join the
-        # duplicates into silently doubled-length series.  Overwrite
-        # makes the rerun idempotent.
-        mode = "append" if n_todo is not None else "overwrite"
-        parts_new.write.mode(mode).parquet(chunks_path)
+        n_chunks_skipped = n_keys(ledger)
+        todo = todo.join(done_keys(ledger), ["doc_id", "chunk_id"],
+                         "left_anti")
+    # Append extends the ledger ONLY when it was actually read and
+    # anti-joined above.  Otherwise — resume=False, or a resume whose
+    # ledger read failed — the full chunk set is being recomputed, and
+    # appending onto a leftover table from a previous run of the same
+    # (run_id, config_id) would duplicate chunk rows; reassemble_parts
+    # would then b''.join the duplicates into silently doubled-length
+    # series.  Overwrite makes the rerun idempotent.
+    process_chunk_rows(todo, cfg_json, mask_json, run_id=run_id) \
+        .write.mode("overwrite" if ledger is None else "append") \
+        .parquet(chunks_path)
+    if ledger is not None:
+        n_chunks_processed = (n_keys(spark.read.parquet(chunks_path))
+                              - n_chunks_skipped)
     # Reassemble every chunk of the docs being (re)computed — the done
     # chunks come back from the table, not from recomputation.  `docs`
     # was already doc-level anti-joined, so docs whose spans are
     # complete are not re-reassembled (no duplicate spans).
     parts = (spark.read.parquet(chunks_path)
-             .join(docs.select("doc_id").distinct(), "doc_id", "left_semi"))
+             .join(doc_ids, "doc_id", "left_semi"))
     reassemble_parts(parts, cfg.use_dt).write.mode("append") \
         .parquet(spans_path)
     return {"n_chunks_skipped": n_chunks_skipped,
-            "n_chunks_processed": n_todo}
+            "n_chunks_processed": n_chunks_processed}
 
 
 def spans_partition(out_dir: str, run_id: str, config_id: str) -> str:
@@ -754,8 +724,7 @@ def _done_docs(prior: DataFrame, spans_path: str, mask: MaskSpec | None,
 
 def run_job(spark: SparkSession, docs: DataFrame | str, cfg: RunConfig,
             mask: MaskSpec | None, out_dir: str, *, run_id: str = "run0",
-            resume: bool = True, chunked: bool = False,
-            blocks_per_chunk: int = 4) -> dict:
+            resume: bool = True, chunked: bool = False) -> dict:
     """Execute the pipeline with resume semantics.
 
     Output layout: the run's spans partition (:func:`spans_partition`,
@@ -803,8 +772,7 @@ def run_job(spark: SparkSession, docs: DataFrame | str, cfg: RunConfig,
         if chunked:
             stats.update(_run_job_chunked(
                 spark, docs, cfg, mask, out_dir, run_id=run_id,
-                resume=resume, blocks_per_chunk=blocks_per_chunk,
-                spans_path=spans_path))
+                resume=resume, spans_path=spans_path))
         else:
             rows = run_pipeline(docs, cfg, mask, run_id=run_id)
             rows.write.mode("append").parquet(spans_path)

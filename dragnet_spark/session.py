@@ -15,6 +15,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+# The engine's fixed SQL settings, applied by :func:`get_spark` and by
+# the spark-submit job (``job.py``) alike.
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Documents are wide rows (MBs of base64); keep Arrow batches
+    # small so a batch of giant documents fits executor memory.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
+    # Same wide-row concern on the scan side: the vectorized parquet
+    # reader's default 4096-row columnar batch is multi-GB when one
+    # document row is ~1.4 MB of span text — cap it.
+    "spark.sql.parquet.columnarReaderBatchSize": "8",
+    # And bound scan partitions to ~64 MB of wide rows per task.
+    "spark.sql.files.maxPartitionBytes": str(64 * 1024 * 1024),
+}
+
+
 def find_iceberg_jar() -> str | None:
     """Locate an Iceberg Spark runtime jar, if one is present: an
     explicit ``$SPARK_GRAFT_ICEBERG_JAR``, else any
@@ -86,21 +105,9 @@ def get_spark(app_name: str = "dragnet-spark", cores: int | None = None,
         SparkSession.builder
         .master(f"local[{cores}]")
         .appName(app_name)
+        .config(map=SQL_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Documents are wide rows (MBs of base64); keep Arrow batches
-        # small so a batch of giant documents fits executor memory.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-        # Same wide-row concern on the scan side: the vectorized parquet
-        # reader's default 4096-row columnar batch is multi-GB when one
-        # document row is ~1.4 MB of span text — cap it.
-        .config("spark.sql.parquet.columnarReaderBatchSize", "8")
-        # And bound scan partitions to ~64 MB of wide rows per task.
-        .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
         .config("spark.driver.memory", mem)
         # MB-sized span arrays are humongous objects for G1's default
         # region size; 32m regions keep them in normal allocation.

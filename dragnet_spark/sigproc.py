@@ -221,8 +221,11 @@ def ingest_filterbank(spark, path: str):
     parsing is pure byte slicing, the payload is never copied more than
     once.  Observation files big enough to skew a partition should be
     ingested whole here and then split by the pipeline's halo-aware
-    chunker (``run_pipeline_chunked``), which is the engine's giant-doc
-    story — the ingest itself stays one-file-one-task.
+    chunker (``run_pipeline_chunked``, ``job.py --chunked``), which is
+    the engine's giant-doc story — the ingest itself stays
+    one-file-one-task.  The chunker cuts ``pipeline.BLOCKS_PER_CHUNK``
+    blocks per chunk, so only a config with a ``blocksize`` splits a
+    file (whole-document blocks run as one chunk).
     """
     import pandas as pd
     from pyspark.sql import functions as F

@@ -25,6 +25,16 @@ import json
 from pyspark.sql import SparkSession
 
 
+def session() -> SparkSession:
+    """The job's session: master and driver memory come from
+    spark-submit (``local[*]`` under plain ``python job.py``), the
+    engine's fixed SQL settings from ``session.SQL_CONF``, the ones
+    ``get_spark`` applies."""
+    from dragnet_spark.session import SQL_CONF
+    return (SparkSession.builder.appName("dragnet-job")
+            .config(map=SQL_CONF).getOrCreate())
+
+
 def main() -> None:
     p = argparse.ArgumentParser()
     src = p.add_mutually_exclusive_group(required=True)
@@ -55,9 +65,7 @@ def main() -> None:
                    help="apply the corpus rfifind-mask fixture")
     args = p.parse_args()
 
-    # Session comes from spark-submit; fall back to a local one so the
-    # script also runs under plain `python job.py`.
-    spark = SparkSession.builder.appName("dragnet-job").getOrCreate()
+    spark = session()
 
     from dragnet_spark.generate import (make_corpus, make_mask,
                                         scenario_configs,

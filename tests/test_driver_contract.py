@@ -191,3 +191,29 @@ def test_scaling_sweep_writes_or_keeps_baseline(tmp_path, monkeypatch):
         "| 2026-08-21 | scale | 3 | 0.848 | 0.235 |"
     assert bench._carry_history(path)[1].endswith(
         "| perfbench flagship_s3 (96 docs) | 3 | 1->4: 0.950 |")
+
+
+def test_job_session_carries_engine_sql_conf(spark):
+    """The spark-submit job (job.py) runs with the engine's fixed SQL
+    settings, the ones get_spark applies: a session that starts with
+    Spark's stock values (10,000-row Arrow batches, 4,096-row parquet
+    reader batches, 128 MB file splits) carries the engine's after
+    job.session()."""
+    import job
+    from dragnet_spark.session import SQL_CONF
+
+    want = {"spark.sql.execution.arrow.maxRecordsPerBatch": "64",
+            "spark.sql.parquet.columnarReaderBatchSize": "8",
+            "spark.sql.files.maxPartitionBytes": str(64 * 1024 * 1024)}
+    assert want.items() <= SQL_CONF.items()
+    saved = {k: spark.conf.get(k) for k in SQL_CONF}
+    try:
+        for k in SQL_CONF:
+            spark.conf.unset(k)
+        assert spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch") == "10000"
+        assert job.session() is spark
+        assert {k: spark.conf.get(k) for k in SQL_CONF} == SQL_CONF
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -8,6 +8,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from dragnet_spark import pipeline
 from dragnet_spark.generate import (make_corpus, make_mask, scenario_configs,
                                     write_corpus_parquet)
 from dragnet_spark.oracle import run_corpus
@@ -58,42 +59,45 @@ def test_pipeline_matches_oracle_small_multiblock(spark):
     assert got == want
 
 
-def test_chunked_path_bitexact_on_skew_corpus(spark):
+def test_chunked_path_bitexact_on_skew_corpus(spark, monkeypatch):
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 3)
     docs, df = _docs_df(spark, "skew")
     cfg = scenario_configs("skew")["s6"]       # multi-block, no clip
     cfg.blocksize = 1536
     got = _collect_sequences(
-        run_pipeline_chunked(df, cfg, None, blocks_per_chunk=3))
+        run_pipeline_chunked(df, cfg, None))
     want = _oracle_sequences(docs, cfg, None)
     assert got.keys() == want.keys()
     for doc_id in want:
         assert got[doc_id] == want[doc_id], f"chunked mismatch in {doc_id}"
 
 
-def test_chunked_path_with_mask_absolute_offsets(spark):
+def test_chunked_path_with_mask_absolute_offsets(spark, monkeypatch):
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 2)
     docs, df = _docs_df(spark, "skew")
     cfg = scenario_configs("skew")["s2"]       # mask on
     cfg.clip_sigma = 0.0                       # chunked requires no clip
     cfg.blocksize = 1536
     mask = make_mask("skew")
     got = _collect_sequences(
-        run_pipeline_chunked(df, cfg, mask, blocks_per_chunk=2))
+        run_pipeline_chunked(df, cfg, mask))
     want = _oracle_sequences(docs, cfg, mask)
     for doc_id in want:
         assert got[doc_id] == want[doc_id]
 
 
-def test_chunked_many_chunks_parity(spark):
-    """blocks_per_chunk=1 on the giant skew doc => >=20 chunks; parity
+def test_chunked_many_chunks_parity(spark, monkeypatch):
+    """BLOCKS_PER_CHUNK=1 on the giant skew doc => >=20 chunks; parity
     must still hold.  Reassembly is a single linear b''.join per
     (doc, dm) group (the r2 verdict's O(chunks^2) JVM concat is gone),
     so chunk count no longer has a superlinear cost term."""
     import json
 
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 1)
     docs, df = _docs_df(spark, "skew")
     cfg = scenario_configs("skew")["s6"]
     cfg.blocksize = 1536
-    rows = run_pipeline_chunked(df, cfg, None, blocks_per_chunk=1)
+    rows = run_pipeline_chunked(df, cfg, None)
     rows = rows.cache()
     got = _collect_sequences(rows)
     want = _oracle_sequences(docs, cfg, None)
@@ -106,7 +110,7 @@ def test_chunked_many_chunks_parity(spark):
     assert max_chunks >= 20, max_chunks
 
 
-def test_chunked_use_dt_parity(spark):
+def test_chunked_use_dt_parity(spark, monkeypatch):
     """use_dt on the chunked path: the per-DM scrunch (D5) runs after
     reassembly, so results equal the per-document path (itself
     oracle-verified by test_adaptive_dt_pipeline_equals_oracle)."""
@@ -115,6 +119,7 @@ def test_chunked_use_dt_parity(spark):
 
     from dragnet_spark.pipeline import docs_to_df
 
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 2)
     docs = [d for d in make_corpus("skew")
             if d["doc_id"] == "doc-skew-000000"]   # the giant doc
     df = docs_to_df(spark, docs)
@@ -122,7 +127,7 @@ def test_chunked_use_dt_parity(spark):
                     dm_end=120.0, dm_step=20.0, use_dt=True,
                     blocksize=8192)            # > max_delay 2697; 6 chunks
     got = _collect_sequences(
-        run_pipeline_chunked(df, cfg, None, blocks_per_chunk=2))
+        run_pipeline_chunked(df, cfg, None))
     want = _collect_sequences(run_pipeline(df, cfg, None))
     assert got.keys() == want.keys()
     for doc_id in want:
@@ -133,7 +138,7 @@ def test_chunked_use_dt_parity(spark):
     assert len(lens) > 1
 
 
-def test_chunked_split_stage_bounded(spark):
+def test_chunked_split_stage_bounded(spark, monkeypatch):
     """The split stage slices strips JVM-side: every chunk row's strip
     bytes are exactly (chunk span)*nchan — bounded by chunk+halo, never
     the whole giant document — and the only Python eval in the split
@@ -143,10 +148,11 @@ def test_chunked_split_stage_bounded(spark):
                                         prepare_documents)
     from dragnet_spark.plan import build_plan
 
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 1)
     docs, df = _docs_df(spark, "skew")
     cfg = scenario_configs("skew")["s6"]
     cfg.blocksize = 1536
-    chunks = build_chunk_rows(prepare_documents(df), cfg.to_json(), None, 1)
+    chunks = build_chunk_rows(prepare_documents(df), cfg.to_json(), None)
     sizes = chunks.select(
         "doc_id", "chunk_id",
         F.aggregate(F.transform("strip_bins", lambda b: F.length(b)),
@@ -209,7 +215,7 @@ def test_run_job_resume_skips_done(spark, tmp_path):
     assert r3["n_processed"] == 0
 
 
-def test_run_job_chunk_granular_resume(spark, tmp_path):
+def test_run_job_chunk_granular_resume(spark, tmp_path, monkeypatch):
     """A killed chunked run resumes at (doc_id, chunk_id) granularity:
     only the missing chunks of the partially-done giant document
     recompute, and the final spans equal the oracle bit-for-bit (r4:
@@ -217,6 +223,7 @@ def test_run_job_chunk_granular_resume(spark, tmp_path):
     from dragnet_spark.pipeline import (build_chunk_rows, prepare_documents,
                                         process_chunk_rows)
 
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 3)
     docs, df = _docs_df(spark, "skew")
     cfg = scenario_configs("skew")["s6"]
     cfg.blocksize = 1536
@@ -225,8 +232,7 @@ def test_run_job_chunk_granular_resume(spark, tmp_path):
 
     # Simulate the kill: only chunks with chunk_id < 2 were committed
     # to the chunk table before the run died (giant doc has many more).
-    all_chunks = build_chunk_rows(prepare_documents(df), cfg.to_json(),
-                                  None, 3)
+    all_chunks = build_chunk_rows(prepare_documents(df), cfg.to_json(), None)
     n_total = all_chunks.count()
     pre = all_chunks.where("chunk_id < 2")
     n_pre = pre.count()
@@ -234,8 +240,7 @@ def test_run_job_chunk_granular_resume(spark, tmp_path):
     process_chunk_rows(pre, cfg.to_json(), None, run_id="r1") \
         .write.mode("append").parquet(chunks_path)
 
-    r = run_job(spark, df, cfg, None, out, run_id="r1", chunked=True,
-                blocks_per_chunk=3)
+    r = run_job(spark, df, cfg, None, out, run_id="r1", chunked=True)
     assert r["n_chunks_skipped"] == n_pre
     assert r["n_chunks_processed"] == n_total - n_pre
     # nothing recomputed twice: one metrics row per (doc, chunk)
@@ -248,17 +253,18 @@ def test_run_job_chunk_granular_resume(spark, tmp_path):
     for doc_id in want:
         assert got[doc_id] == want[doc_id], f"resume mismatch in {doc_id}"
     # idempotent: a second resume skips every doc
-    r2 = run_job(spark, df, cfg, None, out, run_id="r1", chunked=True,
-                 blocks_per_chunk=3)
+    r2 = run_job(spark, df, cfg, None, out, run_id="r1", chunked=True)
     assert r2["n_processed"] == 0 and r2["n_skipped"] == len(docs)
 
 
-def test_run_job_chunked_rerun_no_duplicate_chunks(spark, tmp_path):
+def test_run_job_chunked_rerun_no_duplicate_chunks(spark, tmp_path,
+                                                   monkeypatch):
     """Re-running a chunked job with resume=False into the SAME
     out_dir/run_id must overwrite the chunk ledger, not append to it:
     an appended rerun duplicated every chunk row and reassemble_parts
     b''.join-ed the duplicates into doubled-length series (r4 advice,
     medium)."""
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 1)
     docs, df = _docs_df(spark, "tiny")
     cfg = scenario_configs("tiny")["s6"]
     cfg.blocksize = 192                       # 512 samples -> 3+ chunks
@@ -266,7 +272,7 @@ def test_run_job_chunked_rerun_no_duplicate_chunks(spark, tmp_path):
     chunks_path = f"{out}/chunks/rr/{cfg.config_id}"
     for _ in range(2):                        # retry after a "failed" run
         run_job(spark, df, cfg, None, out, run_id="rr", resume=False,
-                chunked=True, blocks_per_chunk=1)
+                chunked=True)
     dup = (spark.read.parquet(chunks_path).where("kind = 'metrics'")
            .groupBy("doc_id", "chunk_id").count()
            .where("count > 1").count())
@@ -398,22 +404,23 @@ def test_adaptive_dt_pipeline_equals_oracle(spark):
     assert len(lens) > 1
 
 
-def test_chunked_path_with_decimation(spark):
+def test_chunked_path_with_decimation(spark, monkeypatch):
     """JVM strip slicing + chunk bounds under ndec=2 (all bounds must
     stay multiples of ndec; the decimated block loop then reproduces
     the whole-document boundaries)."""
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 2)
     docs, df = _docs_df(spark, "skew")
     cfg = scenario_configs("skew")["s4"]       # ndec=2
     cfg.blocksize = 1536                       # 768 decimated > max_delay
     got = _collect_sequences(
-        run_pipeline_chunked(df, cfg, None, blocks_per_chunk=2))
+        run_pipeline_chunked(df, cfg, None))
     want = _oracle_sequences(docs, cfg, None)
     assert got.keys() == want.keys()
     for doc_id in want:
         assert got[doc_id] == want[doc_id], f"ndec chunked mismatch {doc_id}"
 
 
-def test_chunked_resume_rejects_pre_n_dms_ledger(spark, tmp_path):
+def test_chunked_resume_rejects_pre_n_dms_ledger(spark, tmp_path, monkeypatch):
     """Ledger metrics written before the n_dms field cannot prove
     series completeness; treating them as not-done would re-append a
     full duplicate span set on EVERY resume (never converging), so
@@ -422,12 +429,13 @@ def test_chunked_resume_rejects_pre_n_dms_ledger(spark, tmp_path):
 
     from dragnet_spark.pipeline import LedgerValidationError
 
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 1)
     docs, df = _docs_df(spark, "tiny")
     cfg = scenario_configs("tiny")["s6"]
     cfg.blocksize = 192
     out = str(tmp_path / "out")
     run_job(spark, df, cfg, None, out, run_id="r1", resume=False,
-            chunked=True, blocks_per_chunk=1)
+            chunked=True)
 
     # Simulate a pre-n_dms ledger: strip the field from every metrics
     # row of the run's partition (python-side JSON round-trip keeps the
@@ -447,11 +455,11 @@ def test_chunked_resume_rejects_pre_n_dms_ledger(spark, tmp_path):
     legacy.write.parquet(part)
 
     with pytest.raises(LedgerValidationError, match="n_dms"):
-        run_job(spark, df, cfg, None, out, run_id="r1", chunked=True,
-                blocks_per_chunk=1)
+        run_job(spark, df, cfg, None, out, run_id="r1", chunked=True)
 
 
-def test_chunked_resume_rejects_other_part_schema_ledger(spark, tmp_path):
+def test_chunked_resume_rejects_other_part_schema_ledger(spark, tmp_path,
+                                                         monkeypatch):
     """A chunk ledger written with another part schema (before ``seq``
     its rows carried ``dm_index``) must fail resume with
     LedgerValidationError before anything is appended to it, even when
@@ -460,12 +468,13 @@ def test_chunked_resume_rejects_other_part_schema_ledger(spark, tmp_path):
 
     from dragnet_spark.pipeline import LedgerValidationError
 
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 1)
     docs, df = _docs_df(spark, "tiny")
     cfg = scenario_configs("tiny")["s6"]
     cfg.blocksize = 192
     out = str(tmp_path / "out")
     run_job(spark, df, cfg, None, out, run_id="r1", resume=False,
-            chunked=True, blocks_per_chunk=1)
+            chunked=True)
 
     # Rewrite the ledger in the old schema, one chunk short, and drop
     # the spans so resume reaches the ledger.
@@ -479,8 +488,7 @@ def test_chunked_resume_rejects_other_part_schema_ledger(spark, tmp_path):
     files = sorted(os.listdir(ledger))
 
     with pytest.raises(LedgerValidationError, match="fresh --out"):
-        run_job(spark, df, cfg, None, out, run_id="r1", chunked=True,
-                blocks_per_chunk=1)
+        run_job(spark, df, cfg, None, out, run_id="r1", chunked=True)
     assert sorted(os.listdir(ledger)) == files
 
 
@@ -538,7 +546,8 @@ def test_run_job_rejects_unsafe_run_id(spark, tmp_path, run_id):
     assert not os.path.exists(tmp_path / "out")
 
 
-def test_chunked_resume_two_configs_share_out_dir(spark, tmp_path):
+def test_chunked_resume_two_configs_share_out_dir(spark, tmp_path,
+                                                  monkeypatch):
     """Two configs on the same DM grid run chunked into ONE out_dir;
     B is killed during reassembly (its metrics and ledger committed,
     its series not).  Resuming B recomputes no chunk, rewrites B's
@@ -547,14 +556,14 @@ def test_chunked_resume_two_configs_share_out_dir(spark, tmp_path):
     import dataclasses
     import os
 
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 1)
     docs, df = _docs_df(spark, "tiny")
     cfg_a = scenario_configs("tiny")["s6"]
     cfg_a.blocksize = 192
     cfg_b = dataclasses.replace(cfg_a, config_id="s6z", zapchan="2:4")
     out = str(tmp_path / "out")
     for cfg in (cfg_a, cfg_b):
-        run_job(spark, df, cfg, None, out, run_id="r1", chunked=True,
-                blocks_per_chunk=1)
+        run_job(spark, df, cfg, None, out, run_id="r1", chunked=True)
     part_a = spans_partition(out, "r1", cfg_a.config_id)
     part_b = spans_partition(out, "r1", cfg_b.config_id)
     files_a = sorted(os.listdir(part_a))
@@ -566,8 +575,7 @@ def test_chunked_resume_two_configs_share_out_dir(spark, tmp_path):
     shutil.rmtree(part_b)
     kept.write.parquet(part_b)
 
-    r = run_job(spark, df, cfg_b, None, out, run_id="r1", chunked=True,
-                blocks_per_chunk=1)
+    r = run_job(spark, df, cfg_b, None, out, run_id="r1", chunked=True)
     assert r["n_chunks_processed"] == 0
     assert r["n_processed"] == len(docs)
     want_b = _oracle_sequences(docs, cfg_b, None)
@@ -581,7 +589,7 @@ def test_chunked_resume_two_configs_share_out_dir(spark, tmp_path):
             == _oracle_sequences(docs, cfg_a, None))
 
 
-def test_chunked_accepts_clip_config_without_mask(spark):
+def test_chunked_accepts_clip_config_without_mask(spark, monkeypatch):
     """A clip-enabled cfg with NO mask never clips (apply_mask is gated
     on use_mask AND a mask being present), so the chunked path must
     accept it and produce bit-identical output; WITH a mask it must
@@ -592,9 +600,10 @@ def test_chunked_accepts_clip_config_without_mask(spark):
     apart from timing and placement, with ``seq`` -1 on both."""
     import json
 
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 2)
     docs, df = _docs_df(spark, "tiny")
     cfg = scenario_configs("tiny")["s2"]       # use_mask=True, clip>0
-    chunked = run_pipeline_chunked(df, cfg, None, blocks_per_chunk=2)
+    chunked = run_pipeline_chunked(df, cfg, None)
     whole = run_pipeline(df, cfg, None)
     assert _collect_sequences(chunked) == _collect_sequences(whole)
 
@@ -616,7 +625,7 @@ def test_chunked_accepts_clip_config_without_mask(spark):
         run_pipeline_chunked(df, cfg, make_mask("tiny"))
 
 
-def test_chunked_short_final_chunk_sk_metrics_parity(spark):
+def test_chunked_short_final_chunk_sk_metrics_parity(spark, monkeypatch):
     """A final chunk shorter than one blocksize used to get a CLAMPED
     sub-plan (blocksize -> chunk nsamp, smaller sk_mint), so the
     past-the-end SK intervals the per-document path counts as masked
@@ -629,6 +638,7 @@ def test_chunked_short_final_chunk_sk_metrics_parity(spark):
     from dragnet_spark.params import Header
     from dragnet_spark.spans import decode_document, encode_document
 
+    monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", 1)
     docs, _ = _docs_df(spark, "tiny")
     header, data, _media = decode_document(docs[0]["spans"])
     data = data[:400]
@@ -644,9 +654,68 @@ def test_chunked_short_final_chunk_sk_metrics_parity(spark):
                    for r in rows.where(F.col("kind") == "metrics")
                    .collect())
 
-    assert (sk_total(run_pipeline_chunked(df, cfg, None,
-                                          blocks_per_chunk=1))
+    assert (sk_total(run_pipeline_chunked(df, cfg, None))
             == sk_total(run_pipeline(df, cfg, None)))
+
+
+def _assert_plans_equal(got, want, label):
+    import dataclasses
+
+    import numpy as np
+
+    for f in dataclasses.fields(want):
+        a, b = getattr(got, f.name), getattr(want, f.name)
+        if isinstance(b, np.ndarray):
+            ok = a.dtype == b.dtype and np.array_equal(a, b)
+        elif isinstance(b, list):
+            ok = len(a) == len(b) and all(
+                np.array_equal(x, y) for x, y in zip(a, b))
+        else:
+            ok = a == b
+        assert ok, f"{label}: {f.name} {a!r} != {b!r}"
+
+
+def test_chunk_plan_equals_build_plan_on_chunk(monkeypatch):
+    """A split document's chunk runs on its document's plan with only
+    the sample counts changed (``pipeline._chunk_plan``).  For every
+    chunk of tiny, skew and small under s1/s3/s4/s6 and s5 (clip off),
+    at 1 to 4 blocks per chunk, that plan must equal ``build_plan`` on
+    the chunk's own samples with the document's block grid
+    (``blocksize``, ``sk_mint``) carried over, field by field — and it
+    must derive nothing through the plan cache."""
+    import dataclasses
+
+    from dragnet_spark.generate import CORPORA, SKEW_GIANT_T, corpus_header
+    from dragnet_spark.plan import build_plan
+
+    monkeypatch.setattr(pipeline, "_PLAN_CACHE", {})
+    n_plans = n_split = 0
+    for corpus in ("tiny", "skew", "small"):
+        cfgs = scenario_configs(corpus)
+        mask = make_mask(corpus)
+        nsamps = {CORPORA[corpus][2]}
+        if corpus == "skew":
+            nsamps.add(SKEW_GIANT_T)
+        for cfg in (cfgs["s1"], cfgs["s3"], cfgs["s4"], cfgs["s6"],
+                    dataclasses.replace(cfgs["s5"], clip_sigma=0.0)):
+            for nsamp in sorted(nsamps):
+                doc = build_plan(corpus_header(corpus, nsamp), cfg, mask)
+                for k in range(1, 5):
+                    bounds = pipeline._chunk_bounds(
+                        nsamp, doc.blocksize, doc.max_delay * cfg.ndec, k)
+                    for s, e in bounds:
+                        want = dataclasses.replace(
+                            build_plan(dataclasses.replace(
+                                doc.header, nsamp=e - s), cfg, mask),
+                            blocksize=doc.blocksize, sk_mint=doc.sk_mint)
+                        _assert_plans_equal(
+                            pipeline._chunk_plan(doc, e - s), want,
+                            f"{corpus} {cfg.config_id} nsamp={nsamp} "
+                            f"k={k} chunk [{s}, {e})")
+                        n_plans += 1
+                        n_split += len(bounds) > 1
+    assert pipeline._PLAN_CACHE == {}
+    assert n_split > 100 and n_plans > n_split, (n_plans, n_split)
 
 
 def test_run_job_resume_refuses_different_mask(spark, tmp_path):
@@ -688,33 +757,7 @@ def test_nest_spans_collapses_resume_duplicates(spark):
     assert doubled == clean
 
 
-def test_chunk_keys_plan_skips_payload_slicing(spark):
-    """The resume counters run on chunk_keys, a header-only plan: its
-    optimized plan must not contain the substr payload slicing that
-    makes build_chunk_rows expensive (counting THAT plan executed the
-    full split once per counter)."""
-    from dragnet_spark.pipeline import (build_chunk_rows, chunk_keys,
-                                        prepare_documents)
-
-    _docs, df = _docs_df(spark, "tiny")
-    cfg = scenario_configs("tiny")["s0"]
-    prepared = prepare_documents(df)
-    old = spark.conf.get("spark.sql.debug.maxToStringFields", "25")
-    spark.conf.set("spark.sql.debug.maxToStringFields", "10000")
-    try:
-        keys_plan = chunk_keys(prepared, cfg.to_json(), None, 2) \
-            ._jdf.queryExecution().optimizedPlan().toString()
-        rows_plan = build_chunk_rows(prepared, cfg.to_json(), None, 2) \
-            ._jdf.queryExecution().optimizedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.debug.maxToStringFields", old)
-    assert "substr(" in rows_plan          # the heavy payload slicing
-    assert "sample_bins" in rows_plan
-    assert "substr(" not in keys_plan      # keys: header bounds only
-    assert "sample_bins" not in keys_plan
-
-
-def test_run_job_resume_random_partial_states(spark, tmp_path):
+def test_run_job_resume_random_partial_states(spark, tmp_path, monkeypatch):
     """Randomized resume fuzz: a chunked job is killed at an ARBITRARY
     point — some documents fully committed (spans + ledger), some with
     a random subset of their chunks in the ledger (including the
@@ -729,8 +772,7 @@ def test_run_job_resume_random_partial_states(spark, tmp_path):
 
     from dragnet_spark.generate import corpus_header
     from dragnet_spark.params import RunConfig
-    from dragnet_spark.pipeline import (build_chunk_rows, chunk_keys,
-                                        prepare_documents,
+    from dragnet_spark.pipeline import (build_chunk_rows, prepare_documents,
                                         process_chunk_rows)
     from dragnet_spark.plan import build_plan
 
@@ -754,6 +796,7 @@ def test_run_job_resume_random_partial_states(spark, tmp_path):
         except ValueError:              # blocksize//ndec <= max_delay
             continue
         bpc = int(rng.integers(1, 4))
+        monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", bpc)
         cfg_json, mask_json = cfg.to_json(), (mask.to_json() if mask
                                               else None)
         out = str(tmp_path / f"rf{seed}")
@@ -767,26 +810,24 @@ def test_run_job_resume_random_partial_states(spark, tmp_path):
         if done_ids:                    # fully committed documents
             run_job(spark, docs_to_df(
                 spark, [d for d in docs if d["doc_id"] in done_ids]),
-                cfg, mask, out, run_id="rf", chunked=True,
-                blocks_per_chunk=bpc)
+                cfg, mask, out, run_id="rf", chunked=True)
         rest = df.where(~F.col("doc_id").isin(*done_ids) if done_ids
                         else F.lit(True))
+        chunk_rows = build_chunk_rows(prepare_documents(rest), cfg_json,
+                                      mask_json)
         keys = [(r.doc_id, r.chunk_id) for r in
-                chunk_keys(prepare_documents(rest), cfg_json, mask_json,
-                           bpc).collect()]
+                chunk_rows.select("doc_id", "chunk_id").collect()]
         frac = float(rng.uniform(0.0, 1.0))
         picked = {k for k in keys if rng.random() < frac}
         if picked:                      # partially committed ledger rows
-            pre = (build_chunk_rows(prepare_documents(rest), cfg_json,
-                                    mask_json, bpc)
+            pre = (chunk_rows
                    .where(F.concat_ws("#", "doc_id", "chunk_id").isin(
                        *[f"{d}#{c}" for d, c in picked])))
             process_chunk_rows(pre, cfg_json, mask_json, run_id="rf") \
                 .write.mode("append").parquet(chunks_path)
 
         # --- Resume ------------------------------------------------
-        r = run_job(spark, df, cfg, mask, out, run_id="rf", chunked=True,
-                    blocks_per_chunk=bpc)
+        r = run_job(spark, df, cfg, mask, out, run_id="rf", chunked=True)
         assert r["n_skipped"] == len(done_ids), label
         if picked:
             assert r["n_chunks_skipped"] == len(picked), label
@@ -805,8 +846,7 @@ def test_run_job_resume_random_partial_states(spark, tmp_path):
         for doc_id in want:
             assert got[doc_id] == want[doc_id], \
                 f"resume mismatch in {doc_id}: {label}"
-        r2 = run_job(spark, df, cfg, mask, out, run_id="rf", chunked=True,
-                     blocks_per_chunk=bpc)
+        r2 = run_job(spark, df, cfg, mask, out, run_id="rf", chunked=True)
         assert r2["n_processed"] == 0 and r2["n_skipped"] == len(docs), label
         executed += 1
     assert executed >= 5, \

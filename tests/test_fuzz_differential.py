@@ -34,6 +34,7 @@ import duckdb
 import numpy as np
 import pytest
 
+from dragnet_spark import pipeline
 from dragnet_spark.flagship_oracle import (_samples_path, export_samples,
                                            fuzz_oracle_sql, _decode_series,
                                            masked_oracle_sql,
@@ -141,7 +142,7 @@ def _compare(got, want, label: str, nan_equal: bool = False) -> None:
                 f"(key={g.loc[i, key].tolist()})")
 
 
-def test_random_configs_match_duckdb(spark):
+def test_random_configs_match_duckdb(spark, monkeypatch):
     export_samples(CORPUS)
     con = duckdb.connect()
     docs = corpus_df(spark, CORPUS)
@@ -164,8 +165,9 @@ def test_random_configs_match_duckdb(spark):
             # every drawn geometry, not just the fixed s6 scenario —
             # same oracle, halo-extended chunk split + reassembly.
             bpc = 1 + seed % 3
+            monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", bpc)
             got_c = (_decode_series(run_pipeline_chunked(
-                docs, cfg, None, blocks_per_chunk=bpc)).toPandas())
+                docs, cfg, None)).toPandas())
             _compare(got_c, want, f"{label} CHUNKED bpc={bpc}")
         executed += 1
     assert executed >= MIN_EXECUTED, \
@@ -248,7 +250,7 @@ def _draw_mask(seed: int):
                            pulse_width=pulse_width, dm_tol=dm_tol)
 
 
-def test_random_masks_match_duckdb(spark):
+def test_random_masks_match_duckdb(spark, monkeypatch):
     export_samples(CORPUS)
     con = duckdb.connect()
     docs = corpus_df(spark, CORPUS)
@@ -271,8 +273,9 @@ def test_random_masks_match_duckdb(spark):
         # chunked contract holds): chunk halos must re-mask exactly
         # like block halos.
         bpc = 1 + seed % 3
+        monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", bpc)
         got_c = (_decode_series(run_pipeline_chunked(
-            docs, cfg, mask, blocks_per_chunk=bpc)).toPandas())
+            docs, cfg, mask)).toPandas())
         _compare(got_c, want, f"{label} CHUNKED bpc={bpc}")
         executed += 1
     assert executed >= MIN_MASK_EXECUTED, \
@@ -495,7 +498,7 @@ def _draw_composition(seed: int):
     zap x rfifind mask (random ptsperint / per-interval channel lists /
     float padvals) x SK x ndec x D5 adaptive scrunch x DM-list kind
     (incl. the Levin optimal list, dm_step=0) x blocksize x
-    blocks_per_chunk, all drawn together.
+    BLOCKS_PER_CHUNK, all drawn together.
 
     Truth is the plain ``run_pipeline`` path — itself
     differential-tested against DuckDB above and against the NumPy
@@ -563,7 +566,7 @@ def _draw_composition(seed: int):
     return cfg, mask, 1 + seed % 3
 
 
-def test_random_compositions_chunked_parity(spark):
+def test_random_compositions_chunked_parity(spark, monkeypatch):
     """Differential fuzz of the CHUNKED pipeline plumbing (the
     production giant-document path: JVM strip slicing, halo-extended
     chunks, per-chunk block loops, JVM reassembly, metrics
@@ -595,8 +598,8 @@ def test_random_compositions_chunked_parity(spark):
             return out
 
         want = seqs(run_pipeline(docs, cfg, mask))
-        got = seqs(run_pipeline_chunked(docs, cfg, mask,
-                                        blocks_per_chunk=bpc))
+        monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", bpc)
+        got = seqs(run_pipeline_chunked(docs, cfg, mask))
         assert got.keys() == want.keys(), label
         for doc_id in want:
             assert got[doc_id] == want[doc_id], \
@@ -628,7 +631,7 @@ N_RESUME_SEEDS = int(os.environ.get("DRAGNET_FUZZ_RESUME_SEEDS", "5"))
 RESUME_BASE = int(os.environ.get("DRAGNET_FUZZ_RESUME_BASE", "0"))
 
 
-def test_random_resume_states_chunked(spark, tmp_path):
+def test_random_resume_states_chunked(spark, tmp_path, monkeypatch):
     """Resume-contract fuzz (north rule: 'resumable from checkpoint'):
     for random full-stage compositions, a RANDOM subset of the chunk
     ledger is pre-committed — simulating a driver kill after an
@@ -643,8 +646,7 @@ def test_random_resume_states_chunked(spark, tmp_path):
     test_extractor (chunk_id < 2 at one geometry); this sweep
     randomizes the composition, the chunk geometry AND the committed
     set together.  Knobs: DRAGNET_FUZZ_RESUME_SEEDS / _BASE."""
-    from dragnet_spark.pipeline import (build_chunk_rows, chunk_keys,
-                                        prepare_documents,
+    from dragnet_spark.pipeline import (build_chunk_rows, prepare_documents,
                                         process_chunk_rows, run_job)
     docs = corpus_df(spark, CORPUS)
     ndocs = CORPORA[CORPUS][0]
@@ -661,10 +663,11 @@ def test_random_resume_states_chunked(spark, tmp_path):
         out = str(tmp_path / f"out{seed}")
         chunks_path = f"{out}/chunks/rz/{cfg.config_id}"
 
-        prepared = prepare_documents(docs)
+        monkeypatch.setattr(pipeline, "BLOCKS_PER_CHUNK", bpc)
+        chunk_rows = build_chunk_rows(prepare_documents(docs), cfg_json,
+                                      mask_json)
         keys = sorted((r.doc_id, r.chunk_id) for r in
-                      chunk_keys(prepared, cfg_json, mask_json,
-                                 bpc).collect())
+                      chunk_rows.select("doc_id", "chunk_id").collect())
         n_total = len(keys)
         rng = np.random.default_rng([20260819, seed])
         if seed == RESUME_BASE:     # kill DURING reassembly: all committed
@@ -676,13 +679,13 @@ def test_random_resume_states_chunked(spark, tmp_path):
         if pre_keys:
             pre_df = spark.createDataFrame(
                 pre_keys, "doc_id string, chunk_id int")
-            pre = (build_chunk_rows(prepared, cfg_json, mask_json, bpc)
+            pre = (chunk_rows
                    .join(pre_df, ["doc_id", "chunk_id"], "left_semi"))
             process_chunk_rows(pre, cfg_json, mask_json, run_id="rz") \
                 .write.mode("append").parquet(chunks_path)
 
         r = run_job(spark, docs, cfg, mask, out, run_id="rz",
-                    chunked=True, blocks_per_chunk=bpc)
+                    chunked=True)
         if pre_keys:
             assert r["n_chunks_skipped"] == n_pre, label
             assert r["n_chunks_processed"] == n_total - n_pre, label
@@ -712,7 +715,7 @@ def test_random_resume_states_chunked(spark, tmp_path):
                 f"{label}: resumed spans diverged for {doc_id}"
         # idempotent: a further resume skips every doc
         r2 = run_job(spark, docs, cfg, mask, out, run_id="rz",
-                     chunked=True, blocks_per_chunk=bpc)
+                     chunked=True)
         assert r2["n_processed"] == 0 and r2["n_skipped"] == ndocs, label
         executed += 1
     assert executed >= max(1, (N_RESUME_SEEDS * 7) // 12), \
